@@ -92,6 +92,14 @@ def with_hilbert(
     template-equivalent."""
     if bits < 1 or 2 * bits > 62:
         raise ValueError(f"bits={bits} out of range for int64 d")
+    braced = [c for c in (x_col, y_col, out) if "{" in c or "}" in c]
+    if braced:
+        # spark.sql(..., src=df) formats the whole statement, so a brace
+        # in a column name would be read as a template field
+        raise ValueError(
+            f"with_hilbert: column name(s) {braced} contain '{{' or '}}', "
+            f"which the SQL template cannot carry; rename them first"
+        )
     clash = {out, "__h_x", "__h_y", "__h_d", "__h_rx", "__h_ry"} & set(
         df.columns
     )

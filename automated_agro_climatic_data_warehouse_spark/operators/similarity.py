@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, ShortType
 from pyspark.sql.window import Window as W
 
+from ..session import local_frame
+
 # Scores are rounded to this many decimals before ranking so that
 # near-tied-but-unequal cosines (einsum vs fold summation order differs in
 # the last ulps) rank identically in Spark and the DuckDB oracle; exact
@@ -154,7 +156,7 @@ def brute_force_topk(
         )
     spark = corpus.sparkSession
     if not q_rows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     q_ids = np.array([r[0] for r in q_rows], dtype=np_id)
     q_mat = np.stack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     q_norm = np.sqrt(np.einsum("ij,ij->i", q_mat, q_mat))

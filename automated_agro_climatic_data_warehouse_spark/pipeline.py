@@ -18,6 +18,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .session import local_frame
+
 
 def mint_batch_id(pipeline: str, now: float | None = None) -> str:
     """`{pipeline}_{YYYYmmdd_HHMMSS}_{8-hex}` (reference
@@ -88,10 +90,16 @@ class PipelineRunner:
 
     def flush_audit(self) -> None:
         """Append the buffered audit rows (one tiny file per run — the
-        audit table is negligible next to fact data)."""
+        audit table is negligible next to fact data).
+
+        `records_processed` is whatever each phase's sink returned (by
+        default the phase frame's count), so the flush itself counts
+        nothing. The rows are driver-local, so they become a DataFrame
+        through `local_frame` (Arrow): the flush is one JVM-only write
+        job with no pickled-RDD Python-worker round trip."""
         if not self._audit_rows:
             return
-        df = self.spark.createDataFrame(self._audit_rows, AUDIT_SCHEMA)
+        df = local_frame(self.spark, self._audit_rows, AUDIT_SCHEMA)
         df.coalesce(1).write.mode("append").parquet(self.audit_path)
         self._audit_rows = []
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import DAVG_SQL, DSUM_SQL, davg, dsum
+from ..session import local_frame
 from ..sources import load_table
 from ..sources.date_dim import date_dimension
 from .registry import query
@@ -32,7 +33,7 @@ BANDS_SQL = (
 
 
 def bands_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(BANDS, "band_name string, lo double, hi double")
+    return local_frame(spark, BANDS, "band_name string, lo double, hi double")
 
 
 @query(

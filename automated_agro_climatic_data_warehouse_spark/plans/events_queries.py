@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import dsum
+from ..session import local_frame
 from ..sources import load_table
 from .registry import query
 
@@ -4296,7 +4297,7 @@ def ev_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         for tag, removed in variants
         for s in ["__START__"] + [c for c in _ATTR_CHANNELS if c != removed]
     ]
-    st = spark.createDataFrame(st_rows, "v string, state string")
+    st = local_frame(spark, st_rows, "v string, state string")
     p = st.select("v", "state", F.lit(0).cast("bigint").alias("p"))
     for _ in range(_ATTR_K):
         sumleg = (
@@ -4438,7 +4439,7 @@ def ev_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("B")
         .alias("arm"),
     ).distinct()
-    periods = spark.createDataFrame([(0,), (1,)], "post int")
+    periods = local_frame(spark, [(0,), (1,)], "post int")
     grid = (
         users.crossJoin(F.broadcast(periods))
         .join(cell, ["user_id", "post"], "left")

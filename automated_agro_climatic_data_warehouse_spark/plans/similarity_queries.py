@@ -23,6 +23,7 @@ from ..operators.similarity import (
     nearest_centroids,
     sign_bucket,
 )
+from ..session import local_frame
 from ..sources import fan_out, load_table
 from .registry import query
 
@@ -2835,7 +2836,7 @@ def emb_jl_projection_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i in range(_JL_DIM)
         for j in range(_JL_K)
     ]
-    r = spark.createDataFrame(sign_rows, "i int, j int, sgn int")
+    r = local_frame(spark, sign_rows, "i int, j int, sgn int")
     # fan_out: the GEMM-by-join (explode × 16 sign columns + decimal
     # partial aggregation) is CPU-dense on a 1-split scan — measured
     # as a 2.1s single-task stage without the spread

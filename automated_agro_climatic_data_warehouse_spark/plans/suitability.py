@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..session import local_frame
 from ..sources import load_table
 from .registry import query
 
@@ -104,7 +105,8 @@ def crop_suitability(spark: SparkSession, sf_dir: str) -> DataFrame:
         (1 + F.col("c_custkey") % 15).cast("double").alias("water_mm_day"),
         (4.0 + (F.col("c_custkey") % 50).cast("double") / 10.0).alias("ph"),
     )
-    crops = spark.createDataFrame(
+    crops = local_frame(
+        spark,
         CROPS,
         "crop_name string, t_lo double, t_hi double, w_lo double, w_hi double, "
         "p_lo double, p_hi double",

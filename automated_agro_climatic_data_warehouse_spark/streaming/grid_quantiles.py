@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..session import local_frame
 from .state_chain import chain_drain, commit_state
 
 
@@ -98,7 +99,7 @@ def quantile_bounds(hist: DataFrame, width: float, qs: list[float]) -> DataFrame
             W.orderBy("bin").rowsBetween(W.unboundedPreceding, W.currentRow)
         ),
     )
-    qdf = spark.createDataFrame([(float(q),) for q in qs], "q double")
+    qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     hit = (
         cum.crossJoin(F.broadcast(tot))
         .join(

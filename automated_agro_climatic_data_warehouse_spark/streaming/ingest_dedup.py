@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_lsh_dedup, minhash_lsh_incremental
 from ..operators.graph import connected_components
+from ..session import local_frame
 
 
 def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
@@ -61,10 +62,17 @@ def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
     and 3, losing a unique doc). Dup components are small by nature
     (groups of near-copies), so the exact solve runs component-local:
     connected components label the groups, one Arrow batch per
-    component replays the greedy scan in memory."""
+    component replays the greedy scan in memory.
+
+    The id pairs are checkpointed once and shared by the CC loop and the
+    component join; otherwise both would re-run the LSH verify chain
+    that produced them."""
     import pandas as pd
 
-    labels = connected_components(pairs, src="doc_a", dst="doc_b")
+    pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    labels = connected_components(
+        pairs, src="doc_a", dst="doc_b", edges_materialized=True
+    )
     comp_pairs = pairs.join(
         labels.select(
             F.col("node").alias("doc_a"), F.col("component")
@@ -159,7 +167,10 @@ def dedup_gate_batch(
     )
     rejected = _greedy_reject_by_id(intra)
     survivors = survivors.join(rejected, "doc_id", "left_anti")
-    survivors = survivors.localCheckpoint(eager=True)
+    # no checkpoint before the write: it is the plan's only consumer, and
+    # the plan reads only committed paths — never the flat files this
+    # append adds (they land on job commit) nor the `batch-<id>` subdir
+    # an overwrite replaces (excluded until its _SUCCESS exists)
     if out_dir is None:
         survivors.write.mode("append").parquet(accepted_dir)
     else:
@@ -214,5 +225,5 @@ def dedup_ingest_drain(
     # parquet parts behind — an empty corpus, not an error
     paths = _committed_parquet_paths(accepted_dir)
     if not paths:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     return spark.read.parquet(*paths)

@@ -22,6 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.upsert import upsert
+from ..session import local_frame
 
 
 def upsert_sink_drain(
@@ -44,7 +45,7 @@ def upsert_sink_drain(
         ):
             target = s.read.parquet(target_dir)
         else:
-            target = s.createDataFrame([], batch.schema)
+            target = local_frame(s, [], batch.schema)
         merged = upsert(target, batch, keys=keys, order_by=order_by)
         # materialize BEFORE overwriting the directory being read
         # (localCheckpoint truncates the lineage that references the old

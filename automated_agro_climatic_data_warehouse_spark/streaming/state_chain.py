@@ -26,6 +26,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 def drain_token(checkpoint_dir: str) -> str:
     """Stable drain id: md5 of the absolute checkpoint path.
@@ -137,5 +139,5 @@ def chain_drain(
     q.awaitTermination()
     states = committed_states(state_dir, token)
     if not states:
-        return spark.createDataFrame([], empty_schema)
+        return local_frame(spark, [], empty_schema)
     return spark.read.parquet(states[-1][1])

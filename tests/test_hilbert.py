@@ -73,3 +73,17 @@ def test_hilbert_plan_is_one_codegen_scan(spark, sf_dir):
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
     assert plan.count("FileScan parquet") <= 2  # events + broadcast anchor
+
+
+def test_with_hilbert_rejects_braced_column_names(spark):
+    """`{` / `}` in a column name would reach the `{src}`-bound SQL
+    template as a format field; the boundary rejects them before any
+    SQL is built, for the input columns and the output name alike."""
+    import pytest
+
+    df = spark.range(4).selectExpr("id AS x", "id AS y", "id AS `a{b}`")
+    for args in (("a{b}", "y", "h"), ("x", "c}", "h"), ("x", "y", "{src}")):
+        with pytest.raises(ValueError, match="contain"):
+            with_hilbert(df, args[0], args[1], 4, out=args[2])
+    # plain names still work on the same frame
+    assert with_hilbert(df, "x", "y", 4).count() == 4

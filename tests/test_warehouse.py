@@ -179,3 +179,28 @@ def test_compact_recovers_from_crashed_prior_run(spark, tmp_path):
     os.rename(path, path + ".old")
     stats = compact_parquet_dir(spark, path)
     assert spark.read.parquet(path).count() == 100
+
+
+def test_write_warehouse_counts_from_the_write_and_caller_job_group(spark, sf_dir):
+    """The counts come from Observations inside the five concurrent
+    write jobs; each must equal what is on disk, and every job those
+    threads launch must carry the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    with tempfile.TemporaryDirectory() as d:
+        try:
+            sc.setJobGroup("write_warehouse_caller", "counts test: write")
+            counts = write_warehouse(spark, sf_dir, d)
+            sc.setJobGroup("write_warehouse_readback", "counts test: read back")
+            on_disk = {t: spark.read.parquet(f"{d}/{t}").count() for t in counts}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    assert set(counts) == {
+        "dim_location", "dim_crop", "dim_soil", "dim_date", "fact_weather"
+    }
+    assert counts == on_disk
+    # at least one write job per table, and none escaped the group
+    assert len(tracker.getJobIdsForGroup("write_warehouse_caller")) >= len(counts)
+    assert set(tracker.getJobIdsForGroup(None)) <= ungrouped_before

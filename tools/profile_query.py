@@ -23,51 +23,32 @@ EVDIR = "/tmp/spark-events-profile"
 
 
 def get_profiling_spark():
+    """The bench's own session (`session.get_spark`, so every planner conf
+    matches, e.g. `spark.sql.join.preferSortMergeJoin=false`) plus only
+    the event-log confs. Those go in through PYSPARK_SUBMIT_ARGS, which
+    the JVM reads at launch, the same way perfbench/run.py traces; hence
+    this must run before anything in the process starts Spark."""
     import shutil
 
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
     os.environ.setdefault("SPARK_GRAFT_DEDUP_HASH", "xxhash64")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [
+            "--conf spark.eventLog.enabled=true",
+            f"--conf spark.eventLog.dir=file://{EVDIR}",
+            # plain text, so report() needs no zstd decoder to read it back
+            "--conf spark.eventLog.compress=false",
+            "pyspark-shell",
+        ]
+    )
     from automated_agro_climatic_data_warehouse_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
-    from pyspark.sql import SparkSession
-
-    builder_patch = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": EVDIR,
-    }
-    # reuse the factory's config by building through it, then asserting the
-    # event log landed (getOrCreate would ignore new confs on a live session)
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()
-    os.environ["_PROFILE_EXTRA"] = json.dumps(builder_patch)
-    import automated_agro_climatic_data_warehouse_spark.session as sess
-
-    orig = sess.get_spark
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", EVDIR)
-        # this box has no zstd binary/module to read a compressed log back
-        .config("spark.eventLog.compress", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    _ = orig  # keep the factory import alive for parity of confs
+    spark = get_spark("profile")
+    if spark.sparkContext.getConf().get("spark.eventLog.enabled", "false") != "true":
+        raise RuntimeError(
+            "a Spark JVM was already running; the event-log confs did not apply"
+        )
     return spark
 
 
