@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import materialize
+
 _MERGE_FOLD = """
 aggregate(
   syms,
@@ -112,13 +114,13 @@ def bpe_train_state(
         )
         best = counts.orderBy(F.desc("n"), "s1", "s2").limit(1)
         if need_merges:
-            best = best.localCheckpoint(eager=True)
+            best = materialize(best, "bpe_train_state.best")
             rounds.append(
                 best.select(
                     F.lit(r).cast("bigint").alias("round"), "s1", "s2", "n"
                 )
             )
-        syms = (
+        syms = materialize(
             syms.crossJoin(
                 F.broadcast(
                     best.select(
@@ -126,8 +128,8 @@ def bpe_train_state(
                     )
                 )
             )
-            .select(*keep_cols, "freq", F.expr(_MERGE_FOLD).alias("syms"))
-            .localCheckpoint(eager=True)
+            .select(*keep_cols, "freq", F.expr(_MERGE_FOLD).alias("syms")),
+            "bpe_train_state.syms",
         )
     if not need_merges:
         return None, syms

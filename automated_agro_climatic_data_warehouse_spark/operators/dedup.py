@@ -33,9 +33,23 @@ All Jaccards are ratios of ints regardless of backend.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+
+from ..session import materialize
+
+
+def dedup_hash_backend() -> str:
+    """The hash backend the SPARK_GRAFT_DEDUP_HASH env var names: "md5"
+    (the default) or "xxhash64". Any other value raises, so a typo
+    cannot silently run the md5 path."""
+    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    if backend not in ("md5", "xxhash64"):
+        raise ValueError(f"SPARK_GRAFT_DEDUP_HASH must be md5 or xxhash64: {backend!r}")
+    return backend
 
 
 def hash32(c: Column, seed: int | None = None) -> Column:
@@ -311,9 +325,9 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str = "doc_id",
     # MUST be eager: a lazy checkpoint only caches after the first job over
     # it completes, so the self-join's two stages would each re-run the
     # whole shingle+md5 lineage (measured 3.3× slower at sf0.1).
-    mh = mh.localCheckpoint(eager=True)
+    mh = materialize(mh, "minhash_lsh_dedup.mh")
     cand = lsh_candidate_pairs(lsh_band_signatures(mh, id_col, backend=backend), id_col)
-    cand = cand.localCheckpoint(eager=True)
+    cand = materialize(cand, "minhash_lsh_dedup.cand")
     # no distinct: the left-semi join below dedupes its build side —
     # the distinct was one redundant exchange over the candidate ids
     cand_ids = cand.select(F.col("doc_a").alias(id_col)).unionByName(
@@ -350,25 +364,31 @@ def minhash_lsh_incremental(new_docs: DataFrame, indexed_docs: DataFrame,
     is a parquet read of the persisted index — the localCheckpoint here
     stands in for it), ONE bipartite equi-join on (band_id, sig), and
     the exact-Jaccard verify over shingles of candidate docs only."""
-    mh_new = minhash_signatures(
-        shingle_docs(new_docs, id_col, text_col, distinct=False),
-        id_col, backend=backend,
-    ).localCheckpoint(eager=True)
-    mh_idx = minhash_signatures(
-        shingle_docs(indexed_docs, id_col, text_col, distinct=False),
-        id_col, backend=backend,
-    ).localCheckpoint(eager=True)
+    mh_new = materialize(
+        minhash_signatures(
+            shingle_docs(new_docs, id_col, text_col, distinct=False),
+            id_col, backend=backend,
+        ),
+        "minhash_lsh_incremental.mh_new",
+    )
+    mh_idx = materialize(
+        minhash_signatures(
+            shingle_docs(indexed_docs, id_col, text_col, distinct=False),
+            id_col, backend=backend,
+        ),
+        "minhash_lsh_incremental.mh_idx",
+    )
     bands_new = lsh_band_signatures(mh_new, id_col, backend=backend).select(
         F.col(id_col).alias("doc_a"), "band_id", "sig"
     )
     bands_idx = lsh_band_signatures(mh_idx, id_col, backend=backend).select(
         F.col(id_col).alias("doc_b"), "band_id", "sig"
     )
-    cand = (
+    cand = materialize(
         bands_new.join(bands_idx, ["band_id", "sig"])
         .select("doc_a", "doc_b")
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "minhash_lsh_incremental.cand",
     )
     # no distinct: left-semi joins dedupe their build sides
     a_ids = cand.select(F.col("doc_a").alias(id_col))
@@ -505,7 +525,7 @@ def containment_pairs(
     """Near-containment pairs via the df-capped inverted-index candidate
     join (identical bounded-blowup guard to ngram_jaccard_pairs) +
     exact containment verify over FULL shingle sets."""
-    sh = shingle_docs(docs, id_col, text_col).localCheckpoint(eager=True)
+    sh = materialize(shingle_docs(docs, id_col, text_col), "containment_pairs.sh")
     rare = sh.join(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -555,7 +575,7 @@ def simhash_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
             f"for hamming <= {k - 1}, got max_hamming={max_hamming}"
         )
     mask = (1 << band_bits) - 1
-    fp = fp.localCheckpoint(eager=True)  # feeds both sides of the join
+    fp = materialize(fp, "simhash_hamming_pairs.fp")  # feeds both sides of the join
     bands = fp.select(
         id_col,
         "simhash",
@@ -613,7 +633,7 @@ def ngram_jaccard_pairs(
     Jaccard verify still scores FULL shingle sets, so emitted values are
     exact. tests/test_dedup_backends.py pins the bounded-blowup property
     on a worst-case corpus where every document shares one shingle."""
-    sh = shingle_docs(docs, id_col, text_col).localCheckpoint(eager=True)
+    sh = materialize(shingle_docs(docs, id_col, text_col), "ngram_jaccard_pairs.sh")
     rare = sh.join(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -621,7 +641,7 @@ def ngram_jaccard_pairs(
         .select("shingle"),
         "shingle",
     ).select(id_col, "shingle")
-    pairs = (
+    pairs = materialize(
         rare.alias("sa")
         .join(
             rare.alias("sb"),
@@ -643,8 +663,8 @@ def ngram_jaccard_pairs(
             "doc_a",
             "doc_b",
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "ngram_jaccard_pairs.pairs",
     )
     return jaccard_verify(pairs, sh, id_col, threshold)
 
@@ -884,12 +904,13 @@ def ppjoin_audit(
     groups = members.groupBy("rid").agg(F.first("mult").alias("mult"))
     rep_ids = groups.select(F.col("rid").alias(id_col))
     rtok = tok.join(rep_ids, id_col)
-    cand = _ppjoin_candidates(
-        rtok, id_col, token_col, tn, td
-    ).localCheckpoint(eager=True)
-    rep_pairs = _ppjoin_verify(
-        cand, rtok, id_col, token_col, tn, td
-    ).localCheckpoint(eager=True)
+    cand = materialize(
+        _ppjoin_candidates(rtok, id_col, token_col, tn, td), "ppjoin_audit.cand"
+    )
+    rep_pairs = materialize(
+        _ppjoin_verify(cand, rtok, id_col, token_col, tn, td),
+        "ppjoin_audit.rep_pairs",
+    )
     doc_stats = members.groupBy().agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.count_distinct("fp").cast("bigint").alias("n_sets"),

@@ -36,6 +36,9 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window as W
+
+from ..session import materialize
 
 
 def lsh_pair_graph(
@@ -50,11 +53,11 @@ def lsh_pair_graph(
     graph_jaccard_links (the r10-verdict item-3 hoist) and backs the
     whole link-prediction trio: one definition, one cost envelope
     (|edges| = 2·|pairs|, both collision-bounded by the LSH bands)."""
-    edges = (
+    edges = materialize(
         pairs.select(F.col(a).alias("a"), F.col(b).alias("b"))
         .union(pairs.select(F.col(b).alias("a"), F.col(a).alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "lsh_pair_graph.edges",
     )
     deg = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
@@ -130,7 +133,7 @@ def connected_components(
     # the loop never reads — no reason to materialize those bytes.
     edges = edges.select(src, dst)
     if not edges_materialized:
-        edges = edges.localCheckpoint(eager=True)
+        edges = materialize(edges, "connected_components.edges")
     if algorithm == "propagation":
         return _cc_propagation(edges, src, dst, max_iter, stats)
     if algorithm == "star":
@@ -163,47 +166,32 @@ def _cc_propagation(
     self_loops = fwd.select("node", F.col("node").alias("nbr")).unionByName(
         rev.select("node", F.col("node").alias("nbr"))
     )
-    adj = (
+    adj = materialize(
         fwd.unionByName(rev)
         .unionByName(self_loops)
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "_cc_propagation.adj",
     )
-
-    labels = adj.groupBy("node").agg(F.min("nbr").alias("component"))
-    labels = labels.localCheckpoint(eager=True)
-
-    def label_sum(df: DataFrame):
-        # exact decimal sum — overflow-safe at any node count / id range
-        return df.agg(
-            F.sum(F.col("component").cast("decimal(38,0)"))
-        ).collect()[0][0]
-
-    def dual_label_sum(a: DataFrame, b: DataFrame):
-        # both sums in ONE job (tagged union of two checkpointed frames)
-        # — the init-labels probe folds into round 1's probe instead of
-        # being its own collect barrier.
-        rows = (
-            a.select(F.lit(0).alias("__k"), "component")
-            .unionByName(b.select(F.lit(1).alias("__k"), "component"))
-            .groupBy("__k")
-            .agg(F.sum(F.col("component").cast("decimal(38,0)")).alias("s"))
-        ).collect()
-        m = {r["__k"]: r["s"] for r in rows}
-        return m.get(0), m.get(1)
 
     # Convergence probe: the self-loop in `adj` makes each propagation
     # pointwise monotone non-increasing (new(u) = min over N(u) ∪ {u} of
     # old labels ≤ old(u)), so the label sum strictly decreases iff ANY
-    # node changed — an unchanged sum IS the fixpoint. One single-row
-    # aggregate over the just-materialized labels replaces the
-    # labels⋈propagated diff join, saving a full shuffle join per round;
-    # round 1 reads the init sum and its own sum in one dual probe.
-    prev_sum = None
+    # node changed — an unchanged sum IS the fixpoint. The sum (exact
+    # decimal — overflow-safe at any node count / id range) rides each
+    # labels checkpoint as a probe, so the test costs neither the
+    # labels⋈propagated diff join nor a job of its own; round 1 compares
+    # against the init-labels checkpoint's sum.
+    label_sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+    labels, probe = materialize(
+        adj.groupBy("node").agg(F.min("nbr").alias("component")),
+        "_cc_propagation.labels",
+        label_sum,
+    )
+    prev_sum = probe["s"]
     rounds, converged = 0, False
     for _ in range(max_iter):
         rounds += 1
-        propagated = (
+        labels, probe = materialize(
             adj.join(
                 labels.select(
                     F.col("node").alias("nbr"), F.col("component").alias("nbr_comp")
@@ -211,18 +199,14 @@ def _cc_propagation(
                 "nbr",
             )
             .groupBy("node")
-            .agg(F.min("nbr_comp").alias("component"))
+            .agg(F.min("nbr_comp").alias("component")),
+            "_cc_propagation.labels",
+            label_sum,
         )
-        propagated = propagated.localCheckpoint(eager=True)
-        if rounds == 1:
-            prev_sum, cur_sum = dual_label_sum(labels, propagated)
-        else:
-            cur_sum = label_sum(propagated)
-        labels = propagated
-        if cur_sum == prev_sum:
+        if probe["s"] == prev_sum:
             converged = True
             break
-        prev_sum = cur_sum
+        prev_sum = probe["s"]
     _finish(stats, rounds, converged, "propagation")
     return labels
 
@@ -239,14 +223,19 @@ def _cc_star(
     id keys; per-round localCheckpoint truncates lineage exactly like the
     propagation loop."""
     raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    all_nodes = (
+    all_nodes = materialize(
         raw.select(F.col("u").alias("node"))
         .unionByName(raw.select(F.col("v").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "_cc_star.all_nodes",
     )
-    # normalized undirected edge set, self-loops dropped
-    e = raw.filter(F.col("u") != F.col("v")).distinct().localCheckpoint(eager=True)
+    # normalized undirected edge set, self-loops dropped; each edge-set
+    # checkpoint carries its row count as a probe for the fixpoint test
+    n_rows = F.count(F.lit(1)).alias("n")
+    e, probe = materialize(
+        raw.filter(F.col("u") != F.col("v")).distinct(), "_cc_star.e", n_rows
+    )
+    e_n = probe["n"]
 
     def symmetric(df: DataFrame) -> DataFrame:
         return df.unionByName(
@@ -276,19 +265,20 @@ def _cc_star(
         nbrs2 = symmetric(large)
         small_side = nbrs2.filter(F.col("v") < F.col("u"))
         mins2 = small_side.groupBy("u").agg(F.min("v").alias("m"))
-        small = (
+        small, probe = materialize(
             small_side.join(mins2, "u")
             .select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(mins2.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
+            .distinct(),
+            "_cc_star.small",
+            n_rows,
         )
         # fixpoint when the edge set is unchanged (stars already minimal):
         # small ⊆ e (no new edges in the union) and |small| == |e| → equal
         union_n = small.unionByName(e).distinct().count()
-        same = union_n == e.count() == small.count()
-        e = small
+        same = union_n == e_n == probe["n"]
+        e, e_n = small, probe["n"]
         if same:
             converged = True
             break
@@ -315,7 +305,6 @@ def pagerank_loop(
     damp_num: int = 17,
     damp_den: int = 20,
     init_ranks: DataFrame | None = None,
-    checkpoint_every: int = 0,
 ) -> DataFrame:
     """Fixed-k PageRank power iterations on an integer rank grid —
     the converged-loop extension of the single-step query family
@@ -340,25 +329,24 @@ def pagerank_loop(
     Scale shape: each round is ONE shuffle join (ranks × adjacency on
     the source key) + one groupBy-sum on the destination key — the
     same per-round cost envelope as _cc_propagation, uniform id keys.
-    `localCheckpoint` per round truncates lineage (without it round k
-    replays rounds 1..k-1). k is fixed — PageRank convergence is
-    governed by the damping factor, and a fixed small k is the
-    production norm (resumable: any round's checkpoint is a valid
-    restart state, pinned by tests/test_round4_ops.py's resume test
-    for the one-step form)."""
-    from pyspark.sql.window import Window as W
-
-    edges = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    Only the final round is checkpointed (see the loop). k is fixed —
+    PageRank convergence is governed by the damping factor, and a
+    fixed small k is the production norm (resumable: any round's
+    output is a valid restart state, pinned by tests/test_round4_ops.py's
+    resume test for the one-step form)."""
+    edges = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")),
+        "pagerank_loop.edges",
+    )
     # degree via a count window on the source key: ONE exchange builds
     # the (u, v, d) adjacency, where the groupBy-deg + edges⋈deg join
     # shape paid the same exchange plus a join subtree (interleaved
     # best-of-8 on the k=10 chain: trimmed 4.04 s -> 3.28 s, ranks
     # bit-identical)
-    adj = edges.withColumn(
-        "d", F.count(F.lit(1)).over(W.partitionBy("u"))
-    ).localCheckpoint(eager=True)
+    adj = materialize(
+        edges.withColumn("d", F.count(F.lit(1)).over(W.partitionBy("u"))),
+        "pagerank_loop.adj",
+    )
     teleport = total * (damp_den - damp_num) // damp_den
     if init_ranks is None:
         ranks = (
@@ -383,19 +371,13 @@ def pagerank_loop(
             .cast("bigint")
             .alias("r")
         )
-        # checkpoint every `checkpoint_every` rounds plus the final one
-        # (checkpoint_every <= 0 = final-only, the default):
-        # the intermediate rounds have a single consumer, so the deeper
-        # lineage re-executes nothing — it only defers materialization,
-        # and each materialization is a full job barrier. Measured at
-        # sf0.1 for k=10: every-round 7.6 s → every-5 4.9 s →
-        # final-only 4.1 s (in-process best-of-3). A checkpoint is also
-        # a restart state; pass checkpoint_every=5 when bounding
-        # recovery depth matters more than the per-barrier cost.
-        if (
-            checkpoint_every > 0 and (i + 1) % checkpoint_every == 0
-        ) or i == k - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        # final-only checkpoint: the intermediate rounds have a single
+        # consumer, so the deeper lineage re-executes nothing — it only
+        # defers materialization, and each materialization is a full job
+        # barrier. Measured at sf0.1 for k=10: every-round 7.6 s →
+        # every-5 4.9 s → final-only 4.1 s (in-process best-of-3).
+        if i == k - 1:
+            ranks = materialize(ranks, "pagerank_loop.ranks")
     return ranks
 
 
@@ -427,17 +409,15 @@ def label_propagation(
     oracle reproduces it bit-for-bit)."""
     fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
     rev = edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
-    adj = fwd.unionByName(rev).distinct().localCheckpoint(eager=True)
+    adj = materialize(fwd.unionByName(rev).distinct(), "label_propagation.adj")
     nodes = adj.select("node").distinct()
     seeds = seeds.select("node", F.col("label").alias("__seed"))
     # the (node, seed-label) base is static across rounds — join it once
     # and checkpoint, instead of re-running nodes-distinct + seed join
     # inside every round's materialization (it replaces the former
     # nodes checkpoint: same barrier count, one join fewer per round)
-    base = nodes.join(seeds, "node", "left").localCheckpoint(eager=True)
+    base = materialize(nodes.join(seeds, "node", "left"), "label_propagation.base")
     lab = base.select("node", F.col("__seed").alias("label"))
-    from pyspark.sql.window import Window as W
-
     for _ in range(rounds):
         votes = (
             adj.join(
@@ -457,12 +437,12 @@ def label_propagation(
             .filter(F.col("__rn") == 1)
             .select("node", F.col("nbr_label").alias("__maj"))
         )
-        lab = (
+        lab = materialize(
             base.join(best, "node", "left")
             .select(
                 "node", F.coalesce("__seed", "__maj").alias("label")
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "label_propagation.lab",
         )
     return lab
 
@@ -492,27 +472,22 @@ def hits_loop(
     Requires k >= 1 — the authority side only exists after a round.
     All operands are nonnegative, so truncating div replays on any
     engine. Scale shape per round: two shuffle joins (scores ×
-    adjacency) + two groupBy-sums + two 1-row max readouts;
-    localCheckpoint per round truncates lineage. Returns the round-k
-    frame: (side 'hub'|'auth', node, score_q).
+    adjacency) + two groupBy-sums, one checkpoint job per half-round.
+    Returns the round-k frame: (side 'hub'|'auth', node, score_q).
 
-    The RAW sum frame is what checkpoints each half-round, and the
-    1-row L-inf max is collected to a driver literal: the previous
-    crossJoin(broadcast(max-agg)) shape executed the join+groupBy
-    subtree twice per half-round (once building the broadcast, once
-    materializing the normalized frame — ReuseExchange does not fire
-    across a broadcast boundary), so each half-round paid its shuffle
-    join double. Same jobs per round (one materialization + one 1-row
-    readout), each subtree now executed once; the normalized frame is
-    a free projection over the checkpoint. Integer results identical
-    (the literal IS the broadcast value)."""
-    from pyspark.sql import functions as F
-
+    The RAW sum frame is what checkpoints each half-round, and its
+    L-inf max is a probe of that checkpoint, read as a driver literal:
+    the previous crossJoin(broadcast(max-agg)) shape executed the
+    join+groupBy subtree twice per half-round (ReuseExchange does not
+    fire across a broadcast boundary), and a separate 1-row max
+    readout cost a job per half-round. The normalized frame is a free
+    projection over the checkpoint. Integer results identical (the
+    literal IS the broadcast value)."""
     if k < 1:
         raise ValueError(f"hits_loop needs k >= 1 rounds, got {k}")
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    e = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "hits_loop.e"
+    )
     h = (
         e.select("u")
         .distinct()
@@ -522,32 +497,27 @@ def hits_loop(
         )
     )
 
-    a = None
+    def half_round(scores: DataFrame, join_key: str, out_key: str) -> DataFrame:
+        raw, probe = materialize(
+            e.join(scores.withColumnRenamed("node", join_key), join_key)
+            .groupBy(out_key)
+            .agg(F.sum("s").alias("raw")),
+            f"hits_loop.{out_key}_raw",
+            F.max("raw").alias("mx"),
+        )
+        # The max is NULL only on the empty graph, whose frames are all
+        # empty, so any divisor works there. It is never 0: the previous
+        # round's top node is normalized to `total` and has an edge, so
+        # any non-empty round has a max of at least `total`.
+        mx = 1 if probe["mx"] is None else probe["mx"]
+        return raw.select(
+            F.col(out_key).alias("node"),
+            F.expr(f"cast((raw * {total}) div {mx} as bigint)").alias("s"),
+        )
+
     for _ in range(k):
-        a_raw = (
-            e.join(h.withColumnRenamed("node", "u"), "u")
-            .groupBy("v")
-            .agg(F.sum("s").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        # empty-graph guard: max over an empty frame is NULL; any
-        # divisor works because the projected frame is empty too
-        amax = a_raw.agg(F.max("raw")).collect()[0][0] or 1
-        a = a_raw.select(
-            F.col("v").alias("node"),
-            F.expr(f"cast((raw * {total}) div {amax} as bigint)").alias("s"),
-        )
-        h_raw = (
-            e.join(a.withColumnRenamed("node", "v"), "v")
-            .groupBy("u")
-            .agg(F.sum("s").alias("raw"))
-            .localCheckpoint(eager=True)
-        )
-        hmax = h_raw.agg(F.max("raw")).collect()[0][0] or 1
-        h = h_raw.select(
-            F.col("u").alias("node"),
-            F.expr(f"cast((raw * {total}) div {hmax} as bigint)").alias("s"),
-        )
+        a = half_round(h, "u", "v")
+        h = half_round(a, "v", "u")
     hubs = h.select(
         F.lit("hub").alias("side"), "node", F.col("s").alias("score_q")
     )
@@ -598,13 +568,11 @@ def katz_loop(
     pagerank_loop cost envelope; localCheckpoint per round truncates
     lineage. Requires k >= 1. Returns the round-k frame
     (node, score_q)."""
-    from pyspark.sql import functions as F
-
     if k < 1:
         raise ValueError(f"katz_loop needs k >= 1 rounds, got {k}")
-    e = edges.select(
-        F.col(src).alias("u"), F.col(dst).alias("v")
-    ).localCheckpoint(eager=True)
+    e = materialize(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "katz_loop.e"
+    )
     if in_covered:
         nodes = None
         x = (
@@ -613,12 +581,12 @@ def katz_loop(
             .select("node", F.lit(total).cast("bigint").alias("s"))
         )
     else:
-        nodes = (
+        nodes = materialize(
             e.select("u")
             .unionByName(e.select(F.col("v").alias("u")))
             .distinct()
-            .select(F.col("u").alias("node"))
-            .localCheckpoint(eager=True)
+            .select(F.col("u").alias("node")),
+            "katz_loop.nodes",
         )
         x = nodes.select("node", F.lit(total).cast("bigint").alias("s"))
     # final-only localCheckpoint (same rationale as pagerank_loop):
@@ -651,5 +619,5 @@ def katz_loop(
                 .alias("s"),
             )
         if i == k - 1:
-            x = x.localCheckpoint(eager=True)
+            x = materialize(x, "katz_loop.x")
     return x.select("node", F.col("s").alias("score_q"))

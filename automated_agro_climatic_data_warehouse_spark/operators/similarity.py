@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, ShortType
 from pyspark.sql.window import Window as W
 
-from ..session import local_frame
+from ..session import local_frame, materialize
 
 # Scores are rounded to this many decimals before ranking so that
 # near-tied-but-unequal cosines (einsum vs fold summation order differs in
@@ -485,7 +485,7 @@ def train_centroids(
             corpus, centroids.withColumnRenamed("centroid_id", id_col), 1,
             id_col, vec_col,
         )
-        centroids = (
+        centroids = materialize(
             assigned.select(
                 "centroid_id", F.posexplode(F.col(vec_col)).alias("__dim", "__val")
             )
@@ -497,7 +497,7 @@ def train_centroids(
                     F.array_sort(F.collect_list(F.struct("__dim", "__m"))),
                     lambda s: s["__m"].cast("float"),
                 ).alias(vec_col)
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "train_centroids.centroids",
         )
     return centroids

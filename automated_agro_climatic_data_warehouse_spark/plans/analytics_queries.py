@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import DSUM_SQL, dsum
+from ..operators.dedup import dedup_hash_backend, hash32
 from ..operators.skew import salted_join
 from ..sources import load_table
 from .registry import query
@@ -674,10 +675,6 @@ def j12_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench.py and production run — hashing 100 TB of fact keys through
     a Python-built md5-hex-conv chain would dominate the saved
     shuffle)."""
-    import os
-
-    from ..operators.dedup import hash32
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
@@ -686,7 +683,7 @@ def j12_bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n), F.col("n_nationkey") == F.col("c_nationkey"))
         .select("o_orderkey", "o_orderpriority")
     )
-    if os.environ.get("SPARK_GRAFT_DEDUP_HASH") == "xxhash64":
+    if dedup_hash_backend() == "xxhash64":
         bucket = lambda col: F.pmod(F.xxhash64(col), F.lit(4096))  # noqa: E731
     else:
         bucket = lambda col: hash32(col.cast("string")) % 4096  # noqa: E731

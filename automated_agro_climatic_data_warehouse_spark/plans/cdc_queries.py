@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.cdc import ROW_FINGERPRINT_SQL, snapshot_diff
+from ..operators.dedup import dedup_hash_backend
+from ..session import materialize
 from ..sources import load_table
 from .registry import query
 
@@ -76,9 +78,7 @@ def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     row fingerprint. Feeds SCD2 and partition-selective rewrites.
     Fingerprint backend: same SPARK_GRAFT_DEDUP_HASH switch as the dedup
     family — md5 (default, oracle parity) or xxhash64 (production)."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     old = load_table(spark, sf_dir, "orders")
     new = _new_snapshot(spark, sf_dir)
     return snapshot_diff(old, new, keys=["o_orderkey"], backend=backend)
@@ -228,10 +228,10 @@ def cdc_apply_changelog(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Spark shares no cross-branch scans — without this checkpoint the
     # parquet is read five times (the docstring's one-scan cost claim
     # would be false)
-    o = (
+    o = materialize(
         load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .localCheckpoint(eager=True)
+        .select("o_orderkey", "o_totalprice"),
+        "cdc_apply_changelog.o",
     )
     waves = [
         (1, "U", F.col("o_orderkey") % 7 == 0,
@@ -302,10 +302,10 @@ def cdc_scd2_rebuild(spark: SparkSession, sf_dir: str) -> DataFrame:
     valid_to, is_current) audit columns. At 100 TB this is the
     changelog-sized backfill pattern: partition by key, window, write —
     no join against the dimension at all."""
-    o = (
+    o = materialize(
         load_table(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .localCheckpoint(eager=True)
+        .select("o_orderkey", "o_totalprice"),
+        "cdc_scd2_rebuild.o",
     )
     base = o.select(
         F.lit(0).alias("seq"),

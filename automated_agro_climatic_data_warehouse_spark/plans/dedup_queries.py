@@ -11,6 +11,24 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import keys as K
+from ..operators.dedup import (
+    containment_pairs,
+    dedup_hash_backend,
+    hash32,
+    jaccard_verify,
+    lsh_band_signatures,
+    lsh_candidate_pairs,
+    minhash_lsh_dedup,
+    minhash_lsh_incremental,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+    ppjoin_audit,
+    ppjoin_pairs,
+    shingle_docs,
+    simhash_fingerprints,
+    simhash_hamming_pairs,
+)
+from ..session import materialize
 from ..sources import fan_out, load_table
 from .registry import query
 
@@ -233,11 +251,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     "xxhash64" (native codegen'd production path, ~10× cheaper hashing;
     bench.py selects it). The driver's correctness run never sets the
     var, so the oracle always compares against the md5 path."""
-    import os
-
-    from ..operators.dedup import minhash_lsh_dedup
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     return minhash_lsh_dedup(
         _expanded_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
@@ -291,8 +305,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (checkpointed shingle index feeding all plan branches, df-capped
     self-join, full-set verify) so its bounded-blowup property is
     unit-testable on synthetic worst-case corpora."""
-    from ..operators.dedup import ngram_jaccard_pairs
-
     return ngram_jaccard_pairs(
         _expanded_docs(spark, sf_dir),
         threshold=0.5,
@@ -339,8 +351,6 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ngram_jaccard (bounded blowup); the verify counts full shingle
     sets, so emitted containments are exact integer ratios
     (operators/dedup.py containment_pairs)."""
-    from ..operators.dedup import containment_pairs
-
     return containment_pairs(
         _expanded_docs(spark, sf_dir),
         threshold=0.8,
@@ -379,8 +389,6 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-bit SimHash fingerprints (token bit-votes). Near-dups land at
     small hamming distance; fingerprinting is one explode + one groupBy —
     linear, shuffle on doc_id only (operators/dedup.py)."""
-    from ..operators.dedup import simhash_fingerprints
-
     return simhash_fingerprints(_expanded_docs(spark, sf_dir), bits=16)
 
 
@@ -406,8 +414,6 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     tractable; the production path is dedup_simhash64_hamming's 64-bit /
     16-bit-band geometry (4 × 65,536 keys, cardinality grows with the
     corpus)."""
-    from ..operators.dedup import simhash_fingerprints, simhash_hamming_pairs
-
     fp = simhash_fingerprints(_expanded_docs(spark, sf_dir), bits=16)
     return simhash_hamming_pairs(fp, bits=16, band_bits=4, max_hamming=3)
 
@@ -479,8 +485,6 @@ def dedup_simhash64_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB and checks pairs all-pairs. Copies get a one-token tail so
     true near-dups sit at hamming 1-3, exercising the non-trivial band
     geometry."""
-    from ..operators.dedup import simhash_fingerprints, simhash_hamming_pairs
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mutated = docs.filter(F.col("doc_id") % 10 == 0).select(
         (-(F.col("doc_id") + 1)).alias("doc_id"),
@@ -592,11 +596,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs — provably the same set, since ids are sign-disjoint and the
     band/verify chains are identical. Backend flag as in
     dedup_minhash_lsh."""
-    import os
-
-    from ..operators.dedup import minhash_lsh_incremental
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     new_batch = fan_out(
         docs.filter(F.col("doc_id") % 10 == 0).select(
@@ -658,23 +658,17 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary grid at the ROW level so the per-bucket sums are exact
     int64 — no decimal casts of arbitrary doubles, no float summation
     order anywhere."""
-    import os
-
-    from ..operators.dedup import (
-        jaccard_verify,
-        lsh_band_signatures,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        shingle_docs,
-    )
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     docs = _expanded_docs(spark, sf_dir)
     sh = shingle_docs(docs, distinct=False)
-    mh = minhash_signatures(sh, backend=backend).localCheckpoint(eager=True)
-    cand = lsh_candidate_pairs(
-        lsh_band_signatures(mh, backend=backend)
-    ).localCheckpoint(eager=True)
+    mh = materialize(
+        minhash_signatures(sh, backend=backend),
+        "dedup_minhash_calibration.mh",
+    )
+    cand = materialize(
+        lsh_candidate_pairs(lsh_band_signatures(mh, backend=backend)),
+        "dedup_minhash_calibration.cand",
+    )
     # no distinct: the left-semi join dedupes its build side anyway
     cand_ids = cand.select(F.col("doc_a").alias("doc_id")).unionByName(
         cand.select(F.col("doc_b").alias("doc_id"))
@@ -808,8 +802,6 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition for this query, the fixed-corpus losslessness pin, and
     the hypothesis property test on random set corpora); its overshoot
     instrumentation is dedup_ppjoin_audit."""
-    from ..operators.dedup import ppjoin_pairs
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -904,8 +896,6 @@ def dedup_ppjoin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_ppjoin_prefix invocation: cand_rep_pairs/true_rep_pairs
     drifting up is the early signal that df ordering has degraded and
     the join needs re-tuning before it falls over at scale."""
-    from ..operators.dedup import ppjoin_audit
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -990,15 +980,6 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample; the readout is four 1-row aggregates. Recall measured on a
     sample is an unbiased estimate of corpus recall (band collisions
     are per-pair independent of the sampling)."""
-    from ..operators.dedup import (
-        hash32,
-        lsh_band_signatures,
-        lsh_candidate_pairs,
-        minhash_signatures,
-        ngram_jaccard_pairs,
-        shingle_docs,
-    )
-
     sample = _expanded_docs(spark, sf_dir).filter(
         hash32(F.concat(F.lit("rc:"), F.col("doc_id").cast("string"))) % 4
         == 0
@@ -1189,8 +1170,6 @@ def _fs_pairs(u: DataFrame, block_cols: tuple[str, ...]) -> DataFrame:
     comparator vector, the injected-copy truth label, and the 'fs:'
     pair-sampling hash. Shared by both FS queries — the blocking key
     is the ONLY thing that differs between them."""
-    from ..operators.dedup import hash32
-
     a = u.alias("a")
     b = u.alias("b")
     cond = F.col("a.key") < F.col("b.key")
@@ -1232,17 +1211,18 @@ def _fs_band_histogram(pairs: DataFrame) -> DataFrame:
     # self-join (the query's only superlinear stage) executed three
     # times per run (ReuseExchange does not cross broadcast
     # boundaries, the hits_loop r12 finding).
-    pairs = pairs.localCheckpoint(eager=True)
-    # ... and fuse both 1-row estimates into ONE conditional
-    # aggregation read to driver literals: the agree/disagree weights
-    # are then plan-time CONSTANTS built from the very same Spark
-    # ln/round expressions over the very same exact integer
-    # cross-products (Catalyst constant-folds them with the engine's
-    # own Math.log, so the grid values are bit-identical to the
-    # broadcast form).
+    # The m- and u-estimates are ONE conditional aggregation, probed
+    # off that same checkpoint job and read as driver literals: the
+    # agree/disagree weights are then plan-time CONSTANTS built from
+    # the very same Spark ln/round expressions over the very same
+    # exact integer cross-products (Catalyst constant-folds them with
+    # the engine's own Math.log, so the grid values are bit-identical
+    # to the broadcast form).
     mt = F.when(F.col("is_true") == 1, 1).otherwise(0)
     ut = F.when((F.col("is_true") == 0) & (F.col("h") < 20), 1).otherwise(0)
-    est = pairs.agg(
+    pairs, est = materialize(
+        pairs,
+        "_fs_band_histogram.pairs",
         F.sum(mt).cast("bigint").alias("nm"),
         F.sum(ut).cast("bigint").alias("nu"),
         *[
@@ -1253,7 +1233,7 @@ def _fs_band_histogram(pairs: DataFrame) -> DataFrame:
             F.sum(ut * F.col(f"g{i}")).cast("bigint").alias(f"u{i}")
             for i in range(1, 5)
         ],
-    ).collect()[0]
+    )
     nm, nu = est["nm"] or 0, est["nu"] or 0
     lnq = lambda c: F.round(  # noqa: E731
         F.log(c.cast("double")) * F.lit(_FS_GRID)

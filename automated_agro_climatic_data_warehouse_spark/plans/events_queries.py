@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import dsum
-from ..session import local_frame
+from ..session import local_frame, materialize
 from ..sources import load_table
 from .registry import query
 
@@ -2057,17 +2057,17 @@ def ev_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame per stage is the same discipline (and honest cost) as the
     # connected-components loop.
     m = exact_ntile(
-        m.localCheckpoint(eager=True),
+        materialize(m, "ev_rfm_scores.recency"),
         "recency_days", "user_id", 5, "r_raw",
         bucket=F.expr("recency_days div 7"),
     )
     m = exact_ntile(
-        m.localCheckpoint(eager=True),
+        materialize(m, "ev_rfm_scores.frequency"),
         "frequency", "user_id", 5, "f_score",
         bucket=F.expr("frequency div 10"),
     )
     m = exact_ntile(
-        m.localCheckpoint(eager=True),
+        materialize(m, "ev_rfm_scores.monetary"),
         "monetary_cents", "user_id", 5, "m_score",
         bucket=F.expr("monetary_cents div 10000"),
         broadcast_offsets=False,
@@ -2389,15 +2389,15 @@ def ev_peak_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     day partitioning generalizes to (day, hour) with hour carry-ins —
     the same two-level shape. All integers end-to-end."""
     ev = load_table(spark, sf_dir, "events")
-    sessions = (
+    sessions = materialize(
         ev.groupBy(
             F.session_window("ts", "30 minutes").alias("w"), "user_id"
         )
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("s"), F.col("w.end").alias("e")
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "ev_peak_concurrency_daily.sessions",
     )
     covered = sessions.select(
         "s",
@@ -3930,7 +3930,7 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = pair.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_src")
     )
-    tm = (
+    tm = materialize(
         pair.groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("n"))
         .join(F.broadcast(tot), "src")
@@ -3940,8 +3940,8 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast((1000000 * n) div n_src as bigint)").alias(
                 "t_e6"
             ),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "ev_markov_stationary.tm",
     )
     states = tm.select(F.col("src").alias("state")).distinct()
     ns = states.groupBy().agg(F.count(F.lit(1)).cast("bigint").alias("s"))
@@ -4259,7 +4259,7 @@ def ev_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = counts.groupBy("src").agg(
         F.sum("n").cast("bigint").alias("n_src")
     )
-    tm = (
+    tm = materialize(
         counts.join(F.broadcast(tot), "src")
         .select(
             "src",
@@ -4267,8 +4267,8 @@ def ev_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("cast((1000000 * n) div n_src as bigint)").alias(
                 "t_e6"
             ),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "ev_attribution_removal.tm",
     )
 
     # ONE fused value iteration over ALL variants: tag each variant's
@@ -4285,7 +4285,7 @@ def ev_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         leg = leg.select(F.lit(tag).alias("v"), "src", "dst", "t_e6")
         tmv = leg if tmv is None else tmv.unionByName(leg)
-    tmv = tmv.localCheckpoint(eager=True)
+    tmv = materialize(tmv, "ev_attribution_removal.tmv")
     direct = tmv.filter(F.col("dst") == "purchase").select(
         "v",
         F.col("src").alias("state"),

@@ -18,8 +18,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..operators.dedup import minhash_lsh_dedup
+from ..operators.dedup import (
+    dedup_hash_backend,
+    hash32,
+    minhash_lsh_dedup,
+)
 from ..operators.graph import connected_components, label_propagation
+from ..session import materialize
 from ..sources import fan_out, load_table
 from .dedup_queries import minhash_pairs_with_list
 from .registry import query
@@ -81,12 +86,11 @@ def _lsh_chain_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared entry stage of the link-prediction trio (checkpoint so
     the symmetric edge union's two branches run the LSH pipeline once,
     the connected_components rationale in operators/graph.py)."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
-    return minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
-    ).localCheckpoint(eager=True)
+    backend = dedup_hash_backend()
+    return materialize(
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        "_lsh_chain_pairs",
+    )
 
 
 _CC_ORACLE = (
@@ -116,10 +120,8 @@ def dedup_cc_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rows a training pipeline drops. Components via iterative
     min-label propagation (operators/graph.py; O(diameter) rounds,
     fixpoint-terminated); the oracle uses a recursive closure instead."""
-    import os
-
     # same parity-vs-production hash switch as dedup_minhash_lsh
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
@@ -166,9 +168,7 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH → connected-components lineage as dedup_cc_purge, reduced to
     {cluster_size → n_clusters, n_docs}; the reduction keys are tiny, so
     both final aggregations are uniform single shuffles."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
@@ -286,11 +286,7 @@ def split_cluster_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain split: the LSH+CC chain, which a dedup-ing pipeline has
     already run — the labels here would be READ from that stage's
     output, making the leakage guard nearly free."""
-    import os
-
-    from ..operators.dedup import hash32
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     corpus = _chain_docs(spark, sf_dir)
     pairs = minhash_lsh_dedup(corpus, threshold=0.6, backend=backend)
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
@@ -360,9 +356,7 @@ def dedup_keeper_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     group size, never corpus-partitioned). Swapping the ORDER BY swaps
     the policy (recency, source trust rank, quality_logit score) with
     no other plan change — survivorship is a one-line strategy knob."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     corpus = _chain_docs(spark, sf_dir)
     pairs = minhash_lsh_dedup(corpus, threshold=0.6, backend=backend)
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
@@ -505,15 +499,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     (d·(d−1) div 2, exact ints). The pair list is checkpointed once
     and fanned to all three legs (the connected_components discipline:
     Spark does no cross-branch subplan sharing)."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
-    e = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).localCheckpoint(eager=True)
+    e = materialize(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        "graph_triangle_count.e",
+    )
     sym = e.unionByName(
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
@@ -612,32 +605,32 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components iteration discipline, uniform id keys
     throughout. The oracle unrolls the identical 8 rounds into chained
     CTEs. Output: every node of the pair graph with its in_core flag."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
-    e = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).localCheckpoint(eager=True)
-    sym = e.unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).localCheckpoint(eager=True)
+    e = materialize(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        "graph_kcore_membership.e",
+    )
+    sym = materialize(
+        e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b"))),
+        "graph_kcore_membership.sym",
+    )
     allnodes = sym.select(F.col("a").alias("node")).distinct()
     cur = sym
     keep = None
     for _ in range(8):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
         keep = deg.filter(F.col("d") >= 2).select("a")
-        cur = (
+        cur = materialize(
             cur.join(keep, "a", "semi")
             .join(
                 keep.select(F.col("a").alias("b")),
                 "b",
                 "semi",
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "graph_kcore_membership.cur",
         )
     return allnodes.join(
         keep.select(F.col("a").alias("node")).withColumn(
@@ -705,21 +698,20 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps only the newly-improved frontier per round (anti-join on
     dist — same plan, smaller propagate side). Unreached nodes carry
     no row (distance ∞), matching the oracle's propagation closure."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     # the symmetric union consumes `pairs` on two branches; checkpoint
     # so the LSH pipeline runs once, not once per branch
-    pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
-    ).localCheckpoint(eager=True)
-    edges = (
+    pairs = materialize(
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        "graph_bfs_hops.pairs",
+    )
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .union(
             pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "graph_bfs_hops.edges",
     )
     dist = (
         edges.select(F.col("a").alias("node"))
@@ -731,11 +723,11 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         prop = dist.join(edges, dist["node"] == edges["a"]).select(
             F.col("b").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        dist = (
+        dist = materialize(
             dist.unionByName(prop)
             .groupBy("node")
-            .agg(F.min("dist").cast("bigint").alias("dist"))
-            .localCheckpoint(eager=True)
+            .agg(F.min("dist").cast("bigint").alias("dist")),
+            "graph_bfs_hops.dist",
         )
     return dist.select(
         F.col("node").alias("doc_id"), F.col("dist").alias("hops")
@@ -866,27 +858,26 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_c² over the common denominator (2m)² — one double division at
     the end, Σ Q_c = the partition's modularity. All frames are
     node/cluster-sized after the one edge-labeling join."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     # two consumers fan out from `pairs` (CC labels + the edge union);
     # checkpoint so the LSH pipeline runs once, not once per branch
-    pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
-    ).localCheckpoint(eager=True)
+    pairs = materialize(
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        "graph_modularity.pairs",
+    )
     # edges_materialized: pairs are checkpointed right above (for the
     # edge-union fan-out) — the loop's internal re-checkpoint would
     # copy an already-materialized frame
     labels = connected_components(
         pairs, src="doc_a", dst="doc_b", edges_materialized=True
     ).select(F.col("node"), F.col("component").alias("cluster_id"))
-    edges = (
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .union(
             pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b"))
         )
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "graph_modularity.edges",
     )
     m2 = edges.agg(F.count(F.lit(1)).cast("bigint").alias("m2"))
     deg = edges.groupBy(F.col("a").alias("node")).agg(
@@ -973,15 +964,14 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost Σ d² on ordered degrees), then fan each triangle to its three
     corners — a 3× union of the (tiny) triangle set, never of the
     graph. cc is one double division of exact ints per node."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
-    e = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).localCheckpoint(eager=True)
+    e = materialize(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        "graph_clustering_coefficient.e",
+    )
     sym = e.unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = sym.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).alias("d")
@@ -1082,12 +1072,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     vote count + a per-node top-1 window — |E|-bounded, uniform keys,
     per-round checkpoint. The oracle unrolls the same two rounds
     (fixed-iteration contract, as PageRank/k-core)."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
-    pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
-    ).localCheckpoint(eager=True)
+    backend = dedup_hash_backend()
+    pairs = materialize(
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        "graph_label_propagation.pairs",
+    )
     nodes = (
         pairs.select(F.col("doc_a").alias("node"))
         .unionByName(pairs.select(F.col("doc_b").alias("node")))
@@ -1149,15 +1138,14 @@ def graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     three ordered edges (3× the tiny triangle set), then one
     groupBy-count and a left join back to the edge list — |E|-bounded
     throughout."""
-    import os
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     )
-    e = pairs.select(
-        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-    ).localCheckpoint(eager=True)
+    e = materialize(
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
+        "graph_edge_support.e",
+    )
     wedges2 = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e2.a") == F.col("e1.b"))
@@ -1315,11 +1303,7 @@ def sample_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the fold map is a projection; the audit is two stacked
     bounded aggregations (clusters, then 5 folds)."""
-    import os
-
-    from ..operators.dedup import hash32
-
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     corpus = _chain_docs(spark, sf_dir)
     pairs = minhash_lsh_dedup(corpus, threshold=0.6, backend=backend)
     labels = connected_components(pairs, src="doc_a", dst="doc_b")

@@ -36,13 +36,12 @@ anyway.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..operators.dedup import hash32, minhash_lsh_dedup
+from ..operators.dedup import dedup_hash_backend, hash32, minhash_lsh_dedup
+from ..session import materialize
 from ..sources import fan_out, load_table
 from .dedup_queries import minhash_pairs_with_list
 from .registry import query
@@ -123,7 +122,7 @@ def pipe_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate → quality gate → exact dedup → LSH near-dup purge → hash split.
     Hash backend for the LSH stage: SPARK_GRAFT_DEDUP_HASH (md5 parity /
     xxhash64 production, operators/dedup.py docstring)."""
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     mutated = docs.filter(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"),
@@ -168,7 +167,7 @@ def pipe_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate-doc shingling) and the final anti-join — materialize once
     # (same lesson as connected_components / dedup_ngram_jaccard); this is
     # also where a production build persists the cleaned corpus
-    uniq = fan_out(uniq).localCheckpoint(eager=True)
+    uniq = materialize(fan_out(uniq), "pipe_training_prep.uniq")
     pairs = minhash_lsh_dedup(uniq, threshold=0.6, backend=backend)
     purge = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     final = uniq.join(purge, "doc_id", "left_anti")

@@ -11,6 +11,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions import dsum
 from ..operators.quality import DEFAULT_RULES, run_rules
+from ..session import materialize
 from ..sources import load_table, load_tables
 from .registry import query
 
@@ -814,7 +815,7 @@ def dq_id_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64; the oracle states the same set logic with NOT EXISTS."""
     ev = load_table(spark, sf_dir, "events")
     ids = ev.select(F.col("event_id").alias("id")).distinct()
-    ids = ids.localCheckpoint(eager=True)
+    ids = materialize(ids, "dq_id_gap_audit.ids")
     bounds = ids.agg(
         F.min("id").cast("bigint").alias("lo"),
         F.max("id").cast("bigint").alias("hi"),
@@ -1408,18 +1409,19 @@ def dq_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # ONE corpus scan (was two: a 1-row min-date aggregate + a second
     # full scan cross-joined against it): the (cents, day) histogram is
-    # value-domain x day-domain bounded, d0 reads off IT as a 1-row
-    # collect, and the period split happens histogram-side.
-    hist2 = (
+    # value-domain x day-domain bounded, d0 is a probe of ITS checkpoint,
+    # and the period split happens histogram-side.
+    hist2, probe = materialize(
         ev.select(
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
             F.col("ts").cast("date").alias("day"),
         )
         .groupBy("cents", "day")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n")),
+        "dq_psi_drift.hist2",
+        F.min("day").alias("d0"),
     )
-    d0 = hist2.agg(F.min("day")).collect()[0][0]
+    d0 = probe["d0"]
     # no per-cents re-aggregation: psi_between's bucket pool sums the
     # (cents, n) rows anyway, so the period sides are plain filters of
     # the checkpointed histogram (two exchanges fewer)

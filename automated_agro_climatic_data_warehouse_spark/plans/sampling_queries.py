@@ -23,6 +23,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions import dsum
 from ..operators.dedup import hash32
+from ..session import materialize
 from ..sources import load_table
 from .registry import query
 
@@ -301,7 +302,10 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding"),
         lambda x: F.round(x.cast("double") * _KC_GRID, 0).cast("bigint"),
     )
-    cur = emb.select("vec_id", qarr.alias("qv")).localCheckpoint(eager=True)
+    cur = materialize(
+        emb.select("vec_id", qarr.alias("qv")),
+        "sample_kcenter_coreset.cur",
+    )
 
     def d2(a, b):
         return F.aggregate(
@@ -322,10 +326,10 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected = seed.select(
         F.lit(1).cast("bigint").alias("rank"), "cid", "sel_d2"
     )
-    scored = (
+    scored = materialize(
         cur.crossJoin(F.broadcast(seed.select("cqv")))
-        .select("vec_id", "qv", d2(F.col("qv"), F.col("cqv")).alias("mind2"))
-        .localCheckpoint(eager=True)
+        .select("vec_id", "qv", d2(F.col("qv"), F.col("cqv")).alias("mind2")),
+        "sample_kcenter_coreset.scored",
     )
     for i in range(2, 9):
         nxt = (
@@ -336,16 +340,19 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("mind2").alias("sel_d2"),
             )
         )
-        nxt_full = nxt.join(
-            cur.select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv")),
-            "cid",
-        ).localCheckpoint(eager=True)
+        nxt_full = materialize(
+            nxt.join(
+                cur.select(F.col("vec_id").alias("cid"), F.col("qv").alias("cqv")),
+                "cid",
+            ),
+            "sample_kcenter_coreset.nxt_full",
+        )
         selected = selected.unionByName(
             nxt_full.select(
                 F.lit(i).cast("bigint").alias("rank"), "cid", "sel_d2"
             )
         )
-        scored = (
+        scored = materialize(
             scored.crossJoin(F.broadcast(nxt_full.select("cqv")))
             .select(
                 "vec_id",
@@ -353,8 +360,8 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.least(
                     F.col("mind2"), d2(F.col("qv"), F.col("cqv"))
                 ).alias("mind2"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            "sample_kcenter_coreset.scored",
         )
     return selected.select(
         "rank", F.col("cid").cast("bigint").alias("center_id"), "sel_d2"

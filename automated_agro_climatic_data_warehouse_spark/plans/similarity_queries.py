@@ -23,7 +23,7 @@ from ..operators.similarity import (
     nearest_centroids,
     sign_bucket,
 )
-from ..session import local_frame
+from ..session import local_frame, materialize
 from ..sources import fan_out, load_table
 from .registry import query
 
@@ -694,7 +694,7 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor id. Note dists is computed ONCE and reused for both the
     assignment argmin and the query LUT."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dists = _pq_dists(emb).localCheckpoint(eager=True)
+    dists = materialize(_pq_dists(emb), "ann_pq_adc_topk.dists")
     wa = W.partitionBy("vec_id", "subspace").orderBy("qdist", "code")
     assign = (
         dists.withColumn("rk", F.row_number().over(wa))
@@ -963,15 +963,16 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(dc).alias("cdist"))
     )
     wc = W.partitionBy("vec_id").orderBy("cdist", "cell")
-    cranked = cd.withColumn("rk", F.row_number().over(wc)).localCheckpoint(
-        eager=True
+    cranked = materialize(
+        cd.withColumn("rk", F.row_number().over(wc)),
+        "ann_ivfpq_topk.cranked",
     )
     cassign = cranked.filter(F.col("rk") == 1).select("vec_id", "cell")
     probes = (
         cranked.filter((F.col("rk") <= 2) & (F.col("vec_id") < 20))
         .select(F.col("vec_id").alias("query_id"), "cell")
     )
-    rx = (
+    rx = materialize(
         vx.join(cassign, "vec_id")
         .join(
             F.broadcast(ccb),
@@ -984,8 +985,8 @@ def ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos",
             "subspace",
             (F.col("qx") - F.col("qcc")).alias("r"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "ann_ivfpq_topk.rx",
     )
     rcb = rx.filter(F.col("vec_id") < _PQ_CODES).select(
         F.col("vec_id").alias("code"),
@@ -1114,7 +1115,7 @@ def emb_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pos").alias("qpos"),
         F.col("qx").alias("qq"),
     )
-    sc = (
+    sc = materialize(
         vx.join(
             F.broadcast(qx2),
             (F.col("qpos") == F.col("pos"))
@@ -1128,8 +1129,8 @@ def emb_matryoshka_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.lit(0)
                 )
             ).alias("dot16_q"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "emb_matryoshka_overlap.sc",
     )
     wf = W.partitionBy("query_id").orderBy(F.desc("dot_full_q"), "vec_id")
     w16 = W.partitionBy("query_id").orderBy(F.desc("dot16_q"), "vec_id")
@@ -1598,7 +1599,7 @@ def _power_iteration_direction(spark, sf_dir):
             )
         ).alias("pos0", "qx"),
     ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "qx")
-    gram = (
+    gram = materialize(
         q.alias("a")
         .join(q.alias("b"), "vec_id")
         .groupBy(
@@ -1611,8 +1612,8 @@ def _power_iteration_direction(spark, sf_dir):
         # the whole iterate loop below runs as narrow exchange-free
         # plans (the coalesce sits above the agg's exchange, so the
         # corpus-sized partial aggregation keeps full parallelism)
-        .coalesce(1)
-        .localCheckpoint(eager=True)
+        .coalesce(1),
+        "_power_iteration_direction.gram",
     )
     v = gram.select(F.col("i").alias("pos")).distinct().select(
         "pos", F.lit(_PI_VGRID).cast("bigint").alias("v")
@@ -1648,7 +1649,7 @@ def _power_iteration_direction(spark, sf_dir):
             .alias("v"),
         )
         if i == 4:
-            v = v.localCheckpoint(eager=True)
+            v = materialize(v, "_power_iteration_direction.v")
     return gram, v
 
 
@@ -1915,7 +1916,7 @@ def emb_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("x"),
         )
         if i == 4:
-            x = x.localCheckpoint(eager=True)
+            x = materialize(x, "emb_pca_deflation.x")
     return x.select(
         F.col("pos").cast("bigint").alias("pos"),
         F.col("x").alias("v2_q"),
@@ -1983,7 +1984,7 @@ def ann_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     never runs corpus-wide. All arithmetic on the 2^-12 grid int64
     rail; both rank stages tie-break on neighbor id."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dists = _pq_dists(emb).localCheckpoint(eager=True)
+    dists = materialize(_pq_dists(emb), "ann_two_stage_rerank.dists")
     wa = W.partitionBy("vec_id", "subspace").orderBy("qdist", "code")
     assign = (
         dists.withColumn("rk", F.row_number().over(wa))
@@ -3345,15 +3346,15 @@ def emb_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     wrk = W.partitionBy("pid").orderBy(F.desc("rel_q"), F.asc("cid"))
-    c8 = (
+    c8 = materialize(
         rel.withColumn("rk", F.row_number().over(wrk))
         .filter(F.col("rk") <= 8)
-        .select("pid", "cid", "rel_q")
-        .localCheckpoint(eager=True)
+        .select("pid", "cid", "rel_q"),
+        "emb_mmr_diversified_topk.c8",
     )
     cset = c8.select("cid").distinct()
     cq = cset.join(emb, cset.cid == emb.vec_id).select("cid", "qv")
-    pd_ = (
+    pd_ = materialize(
         cq.crossJoin(
             F.broadcast(
                 cq.select(
@@ -3366,14 +3367,14 @@ def emb_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cid").alias("a"),
             "b",
             qdot(F.col("qv"), F.col("bqv")).alias("d"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "emb_mmr_diversified_topk.pd_",
     )
-    s1 = (
+    s1 = materialize(
         c8.withColumn("rr", F.row_number().over(wrk))
         .filter(F.col("rr") == 1)
-        .select("pid", F.col("cid").alias("s1"), F.col("rel_q").alias("m1"))
-        .localCheckpoint(eager=True)
+        .select("pid", F.col("cid").alias("s1"), F.col("rel_q").alias("m1")),
+        "emb_mmr_diversified_topk.s1",
     )
 
     def _round(prev_sel: list, n: int) -> DataFrame:
@@ -3400,7 +3401,7 @@ def emb_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             pens[0] if len(pens) == 1 else F.greatest(*pens)
         )
         wsc = W.partitionBy("pid").orderBy(F.desc(score), F.asc("cid"))
-        return (
+        return materialize(
             cur.withColumn("_score", score)
             .withColumn("rr", F.row_number().over(wsc))
             .filter(F.col("rr") == 1)
@@ -3409,8 +3410,8 @@ def emb_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cid").alias(f"s{n}"),
                 F.col("rel_q").alias(f"rel{n}"),
                 F.col("_score").alias(f"m{n}"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            f"emb_mmr_diversified_topk.s{n}",
         )
 
     s2 = _round([(s1, "s1")], 2)

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import local_frame
+from ..session import local_frame, materialize
 from ..sources import load_table
 from .registry import query
 
@@ -705,7 +705,7 @@ def agro_station_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("y")
     )
-    daily = daily.localCheckpoint(eager=True)
+    daily = materialize(daily, "agro_station_correlation.daily")
     top50 = (
         daily.groupBy("station_id")
         .agg(F.count(F.lit(1)).alias("nd"))

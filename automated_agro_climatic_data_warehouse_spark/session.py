@@ -14,7 +14,7 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -100,3 +100,26 @@ def drop_checkpoint_blocks(spark: SparkSession) -> None:
     jsc = spark.sparkContext._jsc
     for rdd_id in list(jsc.getPersistentRDDs().keySet()):
         jsc.sc().unpersistRDD(rdd_id, True)
+
+
+def materialize(df: DataFrame, name: str, *probes: Column):
+    """Eager local checkpoint of `df`; its jobs are described `name`,
+    after the caller's description (restored afterwards).
+
+    Rule: every eager checkpoint goes through here, and a scalar read
+    right after a checkpoint is a probe, not a collect. `probes` (named
+    aggregate columns) ride the checkpoint job as one `Observation`, so
+    they cost no job of their own (statistics as a by-product of a
+    materialization already paid for, Shark SIGMOD 2013); over an empty
+    frame they read NULL for sum/max/min and 0 for count. Returns the
+    frame, or `(frame, {probe name: value})` when probes are given."""
+    sc = df.sparkSession.sparkContext
+    outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"{outer} > {name}" if outer else name)
+    try:
+        if not probes:
+            return df.localCheckpoint(eager=True)
+        obs = Observation()
+        return df.observe(obs, *probes).localCheckpoint(eager=True), obs.get
+    finally:
+        sc.setLocalProperty("spark.job.description", outer)

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import minhash_lsh_dedup, minhash_lsh_incremental
 from ..operators.graph import connected_components
-from ..session import local_frame
+from ..session import local_frame, materialize
 
 
 def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
@@ -69,7 +69,7 @@ def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
     that produced them."""
     import pandas as pd
 
-    pairs = pairs.select("doc_a", "doc_b").localCheckpoint(eager=True)
+    pairs = materialize(pairs.select("doc_a", "doc_b"), "_greedy_reject_by_id.pairs")
     labels = connected_components(
         pairs, src="doc_a", dst="doc_b", edges_materialized=True
     )
@@ -196,7 +196,7 @@ def dedup_ingest_drain(
     ties commit ids to THIS checkpoint, so successive drains with fresh
     checkpoints (new data into the same corpus) never collide on
     batch_id 0."""
-    from .state_chain import drain_token
+    from .state_chain import drain_token, foreach_batch_drain
 
     token = drain_token(checkpoint_dir)
     stream = (
@@ -214,13 +214,7 @@ def dedup_ingest_drain(
             commit_id=f"{token}-{batch_id:06d}",
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    foreach_batch_drain(stream, checkpoint_dir, apply_batch)
     # an empty source (or an all-rejected drain) may leave no readable
     # parquet parts behind — an empty corpus, not an error
     paths = _committed_parquet_paths(accepted_dir)

@@ -22,7 +22,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.upsert import upsert
-from ..session import local_frame
+from ..session import local_frame, materialize
+from .state_chain import foreach_batch_drain
 
 
 def upsert_sink_drain(
@@ -50,14 +51,8 @@ def upsert_sink_drain(
         # materialize BEFORE overwriting the directory being read
         # (localCheckpoint truncates the lineage that references the old
         # files; a direct overwrite would read-while-truncating)
-        merged = merged.localCheckpoint(eager=True)
+        merged = materialize(merged, "upsert_sink_drain.merged")
         merged.write.mode("overwrite").parquet(target_dir)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    foreach_batch_drain(stream, checkpoint_dir, apply_batch)
     return spark.read.parquet(target_dir)

@@ -42,6 +42,33 @@ def drain_token(checkpoint_dir: str) -> str:
     ).hexdigest()[:16]
 
 
+def foreach_batch_drain(
+    stream: DataFrame, checkpoint_dir: str, apply_batch: Callable[[DataFrame, int], None]
+) -> None:
+    """Drain `stream` availableNow through `foreachBatch(apply_batch)`.
+
+    `apply_batch` runs on the stream's own thread (job group: the run
+    id), under the caller's local properties laid over that thread's,
+    so its jobs join the caller's job group; the thread is reused, so
+    its own properties are restored after each batch."""
+    jsc = stream.sparkSession.sparkContext._jsc.sc()
+    caller = jsc.getLocalProperties().clone()
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        own = jsc.getLocalProperties()
+        props = own.clone()
+        props.putAll(caller)
+        jsc.setLocalProperties(props)
+        try:
+            apply_batch(batch, batch_id)
+        finally:
+            jsc.setLocalProperties(own)
+
+    stream.writeStream.foreachBatch(run).option(
+        "checkpointLocation", checkpoint_dir
+    ).trigger(availableNow=True).start().awaitTermination()
+
+
 def committed_states(state_dir: str, token: str) -> list[tuple[int, str]]:
     """(batch_id, path) of every _SUCCESS-committed state of THIS
     token's chain, ascending by batch id."""
@@ -130,13 +157,7 @@ def chain_drain(
             batch.sparkSession,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    foreach_batch_drain(stream, checkpoint_dir, apply_batch)
     states = committed_states(state_dir, token)
     if not states:
         return local_frame(spark, [], empty_schema)

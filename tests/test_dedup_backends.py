@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import pytest
 
-from automated_agro_climatic_data_warehouse_spark.operators.dedup import minhash_lsh_dedup
+from automated_agro_climatic_data_warehouse_spark.operators.dedup import (
+    dedup_hash_backend,
+    minhash_lsh_dedup,
+)
 from automated_agro_climatic_data_warehouse_spark.plans.dedup_queries import _expanded_docs
 
 
@@ -37,6 +40,24 @@ def test_unknown_backend_raises(spark, sf_dir):
     docs = _expanded_docs(spark, sf_dir)
     with pytest.raises(ValueError, match="backend"):
         minhash_lsh_dedup(docs, backend="sha1").collect()
+
+
+def test_dedup_hash_env_rejects_unknown_value(spark, sf_dir, monkeypatch):
+    """SPARK_GRAFT_DEDUP_HASH has one reader: md5 by default, xxhash64 on
+    request, and a loud error naming the variable for anything else —
+    including at plan build of the bloom-prefilter join, which once ran
+    md5 on any value but "xxhash64"."""
+    from automated_agro_climatic_data_warehouse_spark.plans import QUERIES
+
+    monkeypatch.delenv("SPARK_GRAFT_DEDUP_HASH", raising=False)
+    assert dedup_hash_backend() == "md5"
+    monkeypatch.setenv("SPARK_GRAFT_DEDUP_HASH", "xxhash64")
+    assert dedup_hash_backend() == "xxhash64"
+    monkeypatch.setenv("SPARK_GRAFT_DEDUP_HASH", "xxhash")
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DEDUP_HASH"):
+        dedup_hash_backend()
+    with pytest.raises(ValueError, match="SPARK_GRAFT_DEDUP_HASH"):
+        QUERIES["j12_bloom_prefilter_join"].spark_fn(spark, sf_dir)
 
 
 def test_ngram_hot_shingle_candidates_bounded(spark):

@@ -418,16 +418,15 @@ def test_jaccard_links_matches_python(spark, sf_dir):
     """Brute-force replica from the same LSH edge list: adjacency sets
     in python, 2-hop candidate pairs, jaccard via inclusion-exclusion,
     direct edges excluded — every output row must match."""
-    import os
-
     from automated_agro_climatic_data_warehouse_spark.operators.dedup import (
+        dedup_hash_backend,
         minhash_lsh_dedup,
     )
     from automated_agro_climatic_data_warehouse_spark.plans.graph_queries import (
         _chain_docs,
     )
 
-    backend = os.environ.get("SPARK_GRAFT_DEDUP_HASH", "md5")
+    backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
         _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
     ).collect()

@@ -233,16 +233,3 @@ def test_weighted_ntile_histogram_bucket_path_matches_default(spark):
         ).collect()
     }
     assert a == b
-
-
-def test_pagerank_checkpoint_cadence_does_not_change_results(spark):
-    """checkpoint_every is a materialization knob only: every-round,
-    every-2, and final-only (<=0) must produce identical ranks."""
-    e = _edges(spark)
-    base = {(r.node, r.r) for r in pagerank_loop(e, k=4).collect()}
-    for ce in (1, 2, 0):
-        got = {
-            (r.node, r.r)
-            for r in pagerank_loop(e, k=4, checkpoint_every=ce).collect()
-        }
-        assert got == base, f"checkpoint_every={ce} diverged"

@@ -63,3 +63,50 @@ def test_upsert_sink_equals_batch_and_is_exactly_once(spark, tmp_path):
     )
     got2 = {r.k: (r.v, r.seq) for r in again.collect()}
     assert got2 == got
+
+
+def test_drain_batch_jobs_belong_to_the_callers_job_group(spark, tmp_path):
+    """Each drain's batch jobs run under the job group its caller had,
+    not under the stream's own run-id group: two drains under two
+    groups each own their own batch jobs and none of the other's."""
+    from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import (
+        foreach_batch_drain,
+    )
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    stage = _stage(
+        tmp_path,
+        [pd.DataFrame({"k": [1, 2]}), pd.DataFrame({"k": [3]})],
+    )
+    batch_jobs: dict[str, set[int]] = {}
+
+    def drain(group):
+        seen = batch_jobs.setdefault(group, set())
+
+        def apply_batch(batch, batch_id):
+            before = set(tracker.getJobIdsForGroup(group))
+            batch.count()
+            seen.update(set(tracker.getJobIdsForGroup(group)) - before)
+
+        stream = (
+            spark.readStream.schema("k long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(stage)
+        )
+        sc.setJobGroup(group, f"drain under {group}")
+        try:
+            foreach_batch_drain(stream, str(tmp_path / group), apply_batch)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    drain("drain_a")
+    drain("drain_b")
+    a, b = batch_jobs["drain_a"], batch_jobs["drain_b"]
+    # one count job per micro-batch at least, two batches each
+    assert len(a) >= 2 and len(b) >= 2
+    assert a <= set(tracker.getJobIdsForGroup("drain_a"))
+    assert b <= set(tracker.getJobIdsForGroup("drain_b"))
+    assert not a & set(tracker.getJobIdsForGroup("drain_b"))
+    assert not b & set(tracker.getJobIdsForGroup("drain_a"))
