@@ -896,9 +896,9 @@ def ppjoin_audit(
     Σ mult·(mult−1)/2 within groups). At 100 TB this is the frame to
     alert on: cand_rep_pairs/true_rep_pairs drifting up means the
     prefix ordering has degraded (e.g. df skew) long before the join
-    itself falls over. All five numbers are 1-row aggregates composed
-    by crossJoin — the documented-safe crossJoin shape — so the audit
-    is one job, no driver-side collect loop."""
+    itself falls over. All five numbers are global aggregates: the
+    doc-stats row carries the other four as scalar subqueries, so there
+    is no driver-side collect loop."""
     tn, td = tau_num, tau_den
     members = ppjoin_set_groups(tok, id_col, token_col)
     groups = members.groupBy("rid").agg(F.first("mult").alias("mult"))
@@ -911,17 +911,11 @@ def ppjoin_audit(
         _ppjoin_verify(cand, rtok, id_col, token_col, tn, td),
         "ppjoin_audit.rep_pairs",
     )
-    doc_stats = members.groupBy().agg(
+    doc_stats = members.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.count_distinct("fp").cast("bigint").alias("n_sets"),
     )
-    cand_n = cand.groupBy().agg(
-        F.count(F.lit(1)).cast("bigint").alias("cand_rep_pairs")
-    )
-    rep_n = rep_pairs.groupBy().agg(
-        F.count(F.lit(1)).cast("bigint").alias("true_rep_pairs")
-    )
-    cross_n = (
+    cross_pairs = (
         rep_pairs.join(
             groups.select(
                 F.col("rid").alias("da"), F.col("mult").alias("ma")
@@ -934,37 +928,26 @@ def ppjoin_audit(
             ),
             "db",
         )
-        .groupBy()
         .agg(
-            F.coalesce(F.sum(F.col("ma") * F.col("mb")), F.lit(0))
-            .cast("bigint")
-            .alias("cross_pairs")
+            F.coalesce(F.sum(F.col("ma") * F.col("mb")), F.lit(0)).cast("bigint")
         )
+        .scalar()
     )
     within_mult = 1 if tn <= td else 0  # τ > 1: identical sets fail too
-    within_n = groups.groupBy().agg(
+    within_pairs = groups.agg(
         (
             F.coalesce(
                 F.sum(F.col("mult") * (F.col("mult") - 1)), F.lit(0)
             )
             / 2
             * within_mult
-        )
-        .cast("bigint")
-        .alias("within_pairs")
-    )
-    return (
-        doc_stats.crossJoin(cand_n)
-        .crossJoin(rep_n)
-        .crossJoin(cross_n)
-        .crossJoin(within_n)
-        .select(
-            "n_docs",
-            "n_sets",
-            "cand_rep_pairs",
-            "true_rep_pairs",
-            (F.col("cross_pairs") + F.col("within_pairs"))
-            .cast("bigint")
-            .alias("true_pairs"),
-        )
+        ).cast("bigint")
+    ).scalar()
+    n_rows = F.count(F.lit(1)).cast("bigint")
+    return doc_stats.select(
+        "n_docs",
+        "n_sets",
+        cand.agg(n_rows).scalar().alias("cand_rep_pairs"),
+        rep_pairs.agg(n_rows).scalar().alias("true_rep_pairs"),
+        (cross_pairs + within_pairs).cast("bigint").alias("true_pairs"),
     )

@@ -477,12 +477,11 @@ def hits_loop(
 
     The RAW sum frame is what checkpoints each half-round, and its
     L-inf max is a probe of that checkpoint, read as a driver literal:
-    the previous crossJoin(broadcast(max-agg)) shape executed the
-    join+groupBy subtree twice per half-round (ReuseExchange does not
-    fire across a broadcast boundary), and a separate 1-row max
-    readout cost a job per half-round. The normalized frame is a free
-    projection over the checkpoint. Integer results identical (the
-    literal IS the broadcast value)."""
+    a crossJoin of the max aggregate executes the join+groupBy subtree
+    twice per half-round (ReuseExchange does not fire across a
+    broadcast boundary), and a separate max readout (a collect or a
+    scalar subquery) costs a job per half-round. The normalized frame
+    is a free projection over the checkpoint."""
     if k < 1:
         raise ValueError(f"hits_loop needs k >= 1 rounds, got {k}")
     e = materialize(

@@ -478,11 +478,11 @@ def cramers_v_readout(cells: DataFrame) -> DataFrame:
         F.sum("o").cast("bigint").alias("n"),
         F.countDistinct("event_type").cast("bigint").alias("k_r"),
         F.countDistinct("dow").cast("bigint").alias("k_c"),
-    )
+    ).select(F.struct("*")).scalar()
     terms = (
         grid.join(F.broadcast(rowt), "event_type")
         .join(F.broadcast(colt), "dow")
-        .crossJoin(F.broadcast(tot))
+        .withColumn("n", tot["n"])
         .select(
             F.expr(
                 "cast(o as decimal(38,0)) * n"
@@ -494,7 +494,7 @@ def cramers_v_readout(cells: DataFrame) -> DataFrame:
     chi = terms.filter(F.col("rc") > 0).agg(
         F.sum(F.expr("dev * dev * 1000000 div rc")).alias("s_q")
     )
-    return chi.crossJoin(F.broadcast(tot)).select(
+    return chi.withColumn("tot", tot).select("s_q", "tot.*").select(
         "n",
         "k_r",
         "k_c",
@@ -798,7 +798,7 @@ def kw_readout(gh: DataFrame) -> DataFrame:
         " / cast(cast(n as decimal(38,0)) * (n + 1) as double)"
         " - 3.0 * (n + 1)"
     )
-    return agg.crossJoin(F.broadcast(tie)).select(
+    return agg.withColumn("tie_term", tie.scalar()).select(
         "k",
         "n",
         "tie_term",

@@ -135,8 +135,7 @@ def exact_ntile(
         n_df = df.groupBy(*part).agg(F.count(F.lit(1)).alias("_n_total"))
         ranked = ranked.join(F.broadcast(n_df), part)
     else:
-        n_df = df.agg(F.count(F.lit(1)).alias("_n_total"))
-        ranked = ranked.crossJoin(F.broadcast(n_df))
+        ranked = ranked.withColumn("_n_total", df.agg(F.count(F.lit(1))).scalar())
     ranked = (
         ranked.withColumn("_rank", F.col("_cum_before") + F.col("_rk_in"))
         .withColumn("_q", F.expr(f"_n_total div {n}"))
@@ -209,7 +208,6 @@ def weighted_ntile_histogram(
         hist = hist.join(F.broadcast(bcum), "_vbkt").withColumn(
             "_c0", F.col("_bb") + F.col("_cin")
         )
-    n_df = df.agg(F.count(F.lit(1)).alias("_nt"))
     tile_of = (
         "CASE WHEN {r} <= _rem * (_q + 1) "
         "THEN ({r} + _q) div (_q + 1) "
@@ -217,7 +215,7 @@ def weighted_ntile_histogram(
         "     div greatest(_q, 1) END"
     )
     staged = (
-        hist.crossJoin(F.broadcast(n_df))
+        hist.withColumn("_nt", df.agg(F.count(F.lit(1))).scalar())
         .withColumn("_q", F.expr(f"_nt div {n}"))
         .withColumn("_rem", F.col("_nt") % n)
         .withColumn("_t_lo", F.expr(tile_of.format(r="_c0 + 1")))
@@ -381,28 +379,28 @@ def largest_remainder_quota(
     catalog-bounded — callers aggregate to key grain first). Output:
     (key_col, cnt_col, base_quota, rem_num, quota); Σquota = budget
     and quota ∈ {base, base+1} are pinned in tests."""
-    tot = counts.agg(F.sum(cnt_col).cast("bigint").alias("total"))
-    base = counts.crossJoin(F.broadcast(tot)).select(
+    total = counts.agg(F.sum(cnt_col).cast("bigint")).scalar()
+    base = counts.withColumn("total", total).select(
         key_col,
         cnt_col,
         F.expr(f"({budget} * {cnt_col}) div total").alias("base_quota"),
         F.expr(f"({budget} * {cnt_col}) % total").alias("rem_num"),
     )
     leftover = base.agg(
-        (F.lit(budget) - F.sum("base_quota")).cast("bigint").alias("k")
-    )
+        (F.lit(budget) - F.sum("base_quota")).cast("bigint")
+    ).scalar()
     ranked = base.withColumn(
         "rk",
         F.row_number().over(W.orderBy(F.desc("rem_num"), F.asc(key_col))),
     )
-    return ranked.crossJoin(F.broadcast(leftover)).select(
+    return ranked.select(
         key_col,
         cnt_col,
         F.col("base_quota").cast("bigint").alias("base_quota"),
         F.col("rem_num").cast("bigint").alias("rem_num"),
         (
             F.col("base_quota")
-            + F.when(F.col("rk") <= F.col("k"), 1).otherwise(0)
+            + F.when(F.col("rk") <= leftover, 1).otherwise(0)
         )
         .cast("bigint")
         .alias("quota"),

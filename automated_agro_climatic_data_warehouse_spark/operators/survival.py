@@ -55,10 +55,10 @@ def km_subjects(ev: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
         F.min(F.unix_micros("ts")).alias("t0"),
         F.max(F.unix_micros("ts")).alias("t1"),
     )
-    bounds = per_sess.groupBy().agg(F.max("t1").alias("tmax"))
-    return per_sess.crossJoin(F.broadcast(bounds)).select(
+    tmax = per_sess.agg(F.max("t1")).scalar()
+    return per_sess.select(
         F.expr("cast((t1 - t0) div 60000000 as bigint)").alias("dur"),
-        F.when(F.col("t1") >= F.col("tmax") - F.lit(gap_us), 1)
+        F.when(F.col("t1") >= tmax - F.lit(gap_us), 1)
         .otherwise(0)
         .alias("censored"),
     )

@@ -305,8 +305,8 @@ def a13_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue aggregates with map-side partials; the top-10 plans as
     TakeOrderedAndProject (per-partition heaps — NEVER a global sort,
     the trap a rank()-based percentile formulation would hit on the
-    customer-cardinality table); totals are a 1-row aggregate
-    broadcast. Revenue accumulates in exact DECIMAL(28,6) everywhere;
+    customer-cardinality table); the top-10 sum is a scalar subquery
+    on the totals row. Revenue accumulates in exact DECIMAL(28,6) everywhere;
     the share is one IEEE division of two exact decimal-cast doubles.
     Tie-break on custkey keeps the LIMIT deterministic."""
     orders = load_table(spark, sf_dir, "orders")
@@ -316,21 +316,16 @@ def a13_revenue_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("r")
     )
     top10 = rev.orderBy(F.desc("r"), F.asc("o_custkey")).limit(10)
-    tops = top10.agg(
-        F.sum("r").cast("decimal(28,6)").cast("double").alias("top10_revenue")
-    )
+    top10_revenue = top10.agg(
+        F.sum("r").cast("decimal(28,6)").cast("double")
+    ).scalar()
     tot = rev.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_customers"),
         F.sum("r").cast("decimal(28,6)").cast("double").alias("total_revenue"),
-    )
-    return (
-        tot.crossJoin(F.broadcast(tops))
-        .select(
-            "n_customers",
-            "top10_revenue",
-            "total_revenue",
-            (F.col("top10_revenue") / F.col("total_revenue")).alias(
-                "top10_share"
-            ),
-        )
+    ).withColumn("top10_revenue", top10_revenue)
+    return tot.select(
+        "n_customers",
+        "top10_revenue",
+        "total_revenue",
+        (F.col("top10_revenue") / F.col("total_revenue")).alias("top10_share"),
     )

@@ -440,13 +440,12 @@ def w7_ntile_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("bkt_before") + F.col("cum_in_bkt")).alias("cum_before"),
         )
     )
-    n_df = c.agg(F.count(F.lit(1)).alias("n_total"))
     w_ties = W.partitionBy("c_acctbal").orderBy("c_custkey")
     ranked = (
         c.select("c_acctbal", "c_custkey")
         .withColumn("rk_in", F.row_number().over(w_ties))
         .join(F.broadcast(offsets), "c_acctbal")
-        .crossJoin(F.broadcast(n_df))
+        .withColumn("n_total", c.agg(F.count(F.lit(1))).scalar())
         .withColumn("rank", F.col("cum_before") + F.col("rk_in"))
         .withColumn("q", F.expr("n_total div 10"))
         .withColumn("rem", F.col("n_total") % 10)
@@ -901,7 +900,7 @@ def layout_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     means size-based compaction targets, not count-based.
 
     Scale: one groupBy to the per-month frame (calendar-bounded), then
-    1-row aggregates; the tie-break filter joins two tiny frames."""
+    global aggregates over it, read back as scalar subqueries."""
     li = load_table(spark, sf_dir, "lineitem")
     parts = li.groupBy(
         F.date_format("l_shipdate", "yyyy-MM").alias("part_month")
@@ -909,21 +908,18 @@ def layout_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("rows_n"),
         F.count_distinct("l_orderkey").cast("bigint").alias("orders_n"),
     )
-    agg = parts.groupBy().agg(
+    agg = parts.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_partitions"),
         F.sum("rows_n").cast("bigint").alias("total_rows"),
         F.max("rows_n").cast("bigint").alias("max_rows"),
         F.min("rows_n").cast("bigint").alias("min_rows"),
     )
     hottest = (
-        parts.join(
-            F.broadcast(agg.select("max_rows")),
-            F.col("rows_n") == F.col("max_rows"),
-        )
-        .groupBy()
-        .agg(F.min("part_month").alias("hottest_month"))
+        parts.filter(F.col("rows_n") == agg.select("max_rows").scalar())
+        .agg(F.min("part_month"))
+        .scalar()
     )
-    return agg.crossJoin(F.broadcast(hottest)).select(
+    return agg.select(
         "n_partitions",
         "total_rows",
         "max_rows",
@@ -932,5 +928,5 @@ def layout_partition_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast((10000 * max_rows * n_partitions) div total_rows"
             " as bigint)"
         ).alias("skew_e4"),
-        "hottest_month",
+        hottest.alias("hottest_month"),
     )

@@ -1000,24 +1000,16 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             minhash_signatures(sh, num_hashes=8, backend="md5")
         )
     )
-    n_docs = sample.groupBy().agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_docs")
-    )
-    n_truth = truth.groupBy().agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_truth")
-    )
-    n_cand = cand.groupBy().agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_cand")
-    )
-    n_hit = (
-        truth.join(cand, ["doc_a", "doc_b"])
-        .groupBy()
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_hit"))
-    )
+    n_rows = F.count(F.lit(1)).cast("bigint")
     return (
-        n_docs.crossJoin(n_truth)
-        .crossJoin(n_cand)
-        .crossJoin(n_hit)
+        sample.agg(n_rows.alias("n_docs"))
+        .withColumns(
+            {
+                "n_truth": truth.agg(n_rows).scalar(),
+                "n_cand": cand.agg(n_rows).scalar(),
+                "n_hit": truth.join(cand, ["doc_a", "doc_b"]).agg(n_rows).scalar(),
+            }
+        )
         .select(
             "n_docs",
             F.expr("cast(n_docs * (n_docs - 1) div 2 as bigint)").alias(
@@ -1405,7 +1397,7 @@ def dedup_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers (all-nonnegative truncating divisions). Plan: one scan
     stacked 4x [generate], groupBy(strategy, bkey) then
     groupBy(strategy) [both map-side combinable], the coverage join is
-    key-equi on ~|copies| rows, two 1-row broadcasts assemble the
+    key-equi on ~|copies| rows, and scalar subqueries assemble the
     readout. Same evidence shape as dedup_lsh_recall_eval gives the
     MinHash path."""
     cents_block = (
@@ -1462,8 +1454,9 @@ def dedup_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).cast("int")
             ).cast("bigint").alias("cov_cents"),
         )
+        .select(F.struct("*"))
+        .scalar()
     )
-    tot = u.agg(F.count(F.lit(1)).cast("bigint").alias("n_rec"))
     covered = F.expr(
         "case strategy when 'nation' then cov_nation"
         " when 'segment' then cov_segment"
@@ -1471,8 +1464,9 @@ def dedup_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         " else cov_cents end"
     )
     return (
-        stats.crossJoin(F.broadcast(cov))
-        .crossJoin(F.broadcast(tot))
+        stats.withColumn("cov", cov)
+        .select("*", "cov.*")
+        .withColumn("n_rec", u.agg(F.count(F.lit(1)).cast("bigint")).scalar())
         .select(
             "strategy",
             "n_blocks",

@@ -329,8 +329,8 @@ def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage event strictly follows their previous stage's first event.
     Three shuffles on user_id (one per stage aggregation) — each stage's
     frontier shrinks, so downstream joins run on ever-smaller sides; the
-    final counts are single-row partial aggregates crossed together
-    (1-row frames, broadcast by construction)."""
+    final counts are global aggregates read as scalar subqueries onto
+    the user-count row."""
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts"
     )
@@ -353,11 +353,11 @@ def ev_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_purchase"))
     )
-    return (
-        ev.agg(F.countDistinct("user_id").alias("n_users"))
-        .crossJoin(v.agg(F.count(F.lit(1)).alias("n_view")))
-        .crossJoin(c.agg(F.count(F.lit(1)).alias("n_view_click")))
-        .crossJoin(p.agg(F.count(F.lit(1)).alias("n_full_funnel")))
+    return ev.agg(F.countDistinct("user_id").alias("n_users")).select(
+        "n_users",
+        v.agg(F.count(F.lit(1))).scalar().alias("n_view"),
+        c.agg(F.count(F.lit(1))).scalar().alias("n_view_click"),
+        p.agg(F.count(F.lit(1))).scalar().alias("n_full_funnel"),
     )
 
 
@@ -1728,22 +1728,16 @@ def ev_activity_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user, day-offset) rows fold with bit_or, membership counts with
     bit_count — both engine-exact integer ops, and any later cohort
     intersection is a bitwise AND of two masks instead of a join. The
-    window anchor (corpus min date) is a 1-row broadcast; offsets fold
+    window anchor (corpus min date) is a scalar subquery; offsets fold
     modulo 63 so the mask is well-defined at any observation span
     (documented wraparound — a >63-day deployment shards masks by
     63-day epoch, same plan keyed on (user, epoch))."""
     ev = load_table(spark, sf_dir, "events")
-    span = ev.agg(F.min(F.col("ts").cast("date")).alias("d0"))
-    days = (
-        ev.crossJoin(F.broadcast(span))
-        .select(
-            "user_id",
-            F.datediff(F.col("ts").cast("date"), F.col("d0")).alias(
-                "day_off"
-            ),
-        )
-        .distinct()
-    )
+    d0 = ev.agg(F.min(F.col("ts").cast("date"))).scalar()
+    days = ev.select(
+        "user_id",
+        F.datediff(F.col("ts").cast("date"), d0).alias("day_off"),
+    ).distinct()
     # shiftleft's Python wrapper wants a literal bit count; the SQL
     # function takes a column — go through expr for the per-row shift
     mask = F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), day_off % 63)"))
@@ -2020,7 +2014,7 @@ def ev_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ranking import exact_ntile
 
     ev = load_table(spark, sf_dir, "events")
-    anchor = ev.agg(F.max(F.col("ts").cast("date")).alias("a"))
+    anchor = ev.agg(F.max(F.col("ts").cast("date"))).scalar()
     m = (
         ev.groupBy("user_id")
         .agg(
@@ -2041,10 +2035,9 @@ def ev_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("monetary_cents"),
         )
-        .crossJoin(F.broadcast(anchor))
         .select(
             "user_id",
-            F.datediff("a", "last_day").cast("bigint").alias("recency_days"),
+            F.datediff(anchor, "last_day").cast("bigint").alias("recency_days"),
             "frequency",
             "monetary_cents",
         )
@@ -2227,13 +2220,12 @@ def ev_window_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("user_id")
         .distinct()
     )
-    n1 = v.agg(
+    return v.agg(
         F.countDistinct("user_id").cast("bigint").alias("n_level1")
-    )
-    n2 = l2.agg(F.count(F.lit(1)).cast("bigint").alias("n_level2"))
-    n3 = l3.agg(F.count(F.lit(1)).cast("bigint").alias("n_level3"))
-    return (
-        n1.crossJoin(F.broadcast(n2)).crossJoin(F.broadcast(n3))
+    ).select(
+        "n_level1",
+        l2.agg(F.count(F.lit(1)).cast("bigint")).scalar().alias("n_level2"),
+        l3.agg(F.count(F.lit(1)).cast("bigint")).scalar().alias("n_level3"),
     )
 
 
@@ -2286,11 +2278,11 @@ def layout_zorder_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     repartitionByRange / sortWithinPartitions key at write time; this
     query IS the layout audit a table-format OPTIMIZE job reports."""
     ev = load_table(spark, sf_dir, "events")
-    anchor = ev.agg(F.min("ts").alias("t0"))
-    base = ev.crossJoin(F.broadcast(anchor)).select(
+    t0 = ev.agg(F.min("ts")).scalar()
+    base = ev.select(
         (F.col("user_id") % 1024).alias("x"),
         (
-            (F.unix_micros("ts") - F.unix_micros("t0"))
+            (F.unix_micros("ts") - F.unix_micros(t0))
             / F.lit(60_000_000)
         ).cast("bigint").alias("ymin"),
     ).select("x", (F.col("ymin") % 1024).alias("y"))
@@ -2959,22 +2951,14 @@ def ev_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_false_pos"),
     )
-    n_members = members.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_members")
-    )
-    n_bits = bits.agg(F.count(F.lit(1)).cast("bigint").alias("n_bits_set"))
-    return (
-        counts.crossJoin(F.broadcast(n_members))
-        .crossJoin(F.broadcast(n_bits))
-        .select(
-            "n_members",
-            "n_bits_set",
-            "n_probes",
-            "n_false_pos",
-            F.when(F.col("n_probes") == 0, F.lit(0).cast("bigint"))
-            .otherwise(F.expr("(1000000 * n_false_pos) div n_probes"))
-            .alias("fpr_e6"),
-        )
+    return counts.select(
+        members.agg(F.count(F.lit(1)).cast("bigint")).scalar().alias("n_members"),
+        bits.agg(F.count(F.lit(1)).cast("bigint")).scalar().alias("n_bits_set"),
+        "n_probes",
+        "n_false_pos",
+        F.when(F.col("n_probes") == 0, F.lit(0).cast("bigint"))
+        .otherwise(F.expr("(1000000 * n_false_pos) div n_probes"))
+        .alias("fpr_e6"),
     )
 
 
@@ -3113,22 +3097,24 @@ def ev_cuped_adjusted_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import hash32
 
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.agg(
-        F.min(F.unix_micros("ts")).alias("mn"),
-        F.max(F.unix_micros("ts")).alias("mx"),
-    ).select(F.expr("(mn + mx) div 2").cast("bigint").alias("mid"))
+    mid = (
+        ev.agg(
+            F.min(F.unix_micros("ts")).alias("mn"),
+            F.max(F.unix_micros("ts")).alias("mx"),
+        )
+        .select(F.expr("(mn + mx) div 2").cast("bigint"))
+        .scalar()
+    )
     arm = F.when(
         hash32(F.concat(F.lit("ab1:"), F.col("user_id").cast("string"))) % 2
         == 0,
         "A",
     ).otherwise("B")
     per_user = (
-        ev.crossJoin(F.broadcast(bounds))
-        .groupBy("user_id", "mid")
+        ev.withColumn("mid", mid)
+        .groupBy("user_id")
         .agg(
-            F.sum(
-                F.when(F.unix_micros("ts") < F.col("mid"), 1).otherwise(0)
-            )
+            F.sum(F.when(F.unix_micros("ts") < F.col("mid"), 1).otherwise(0))
             .cast("bigint")
             .alias("x"),
             F.sum(
@@ -3312,25 +3298,16 @@ def ev_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hv")
     ).distinct()
     bot = hs.orderBy("hv").limit(64)
-    agg = bot.groupBy().agg(F.max("hv").alias("hk"))
-    tot = hs.groupBy().agg(F.count(F.lit(1)).cast("bigint").alias("nh"))
-    exact = ev.groupBy().agg(
-        F.count_distinct("user_id").cast("bigint").alias("exact_distinct")
-    )
-    return (
-        agg.crossJoin(tot)
-        .crossJoin(exact)
-        .select(
-            F.lit(64).cast("bigint").alias("k"),
-            F.when(
-                F.col("nh") >= 64,
-                F.expr("(63 * 4294967296) div greatest(hk, 1)"),
-            )
-            .otherwise(F.col("nh"))
-            .cast("bigint")
-            .alias("est_distinct"),
-            "exact_distinct",
-        )
+    nh = hs.agg(F.count(F.lit(1)).cast("bigint")).scalar()
+    return bot.agg(F.max("hv").alias("hk")).withColumn("nh", nh).select(
+        F.lit(64).cast("bigint").alias("k"),
+        F.when(F.col("nh") >= 64, F.expr("(63 * 4294967296) div greatest(hk, 1)"))
+        .otherwise(F.col("nh"))
+        .cast("bigint")
+        .alias("est_distinct"),
+        ev.agg(F.count_distinct("user_id").cast("bigint"))
+        .scalar()
+        .alias("exact_distinct"),
     )
 
 
@@ -3562,14 +3539,15 @@ def ev_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("u").over(wc).cast("bigint").alias("cum_u"),
         F.sum("e").over(wc).cast("bigint").alias("cum_e"),
     )
-    tot = hist.groupBy().agg(
+    tot = hist.agg(
         F.sum("u").cast("bigint").alias("big_n"),
         F.sum("e").cast("bigint").alias("big_e"),
-    )
+    ).select(F.struct("*")).scalar()
     spine = (
         spark.range(1, 11)
         .select((F.col("id") * 10).cast("bigint").alias("p"))
-        .crossJoin(F.broadcast(tot))
+        .withColumn("tot", tot)
+        .select("*", "tot.*")
         .select(
             "p",
             F.expr("cast((p * big_n) div 100 as bigint)").alias("u_p"),
@@ -3799,17 +3777,17 @@ def ev_kmv_jaccard_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sketches import kmv_flags_bottomk
 
     bot = kmv_flags_bottomk(flagged, 128)
-    sk = bot.groupBy().agg(
+    sk = bot.agg(
         F.count(F.lit(1)).cast("bigint").alias("k_eff"),
         F.sum(F.col("in_a") * F.col("in_b")).cast("bigint").alias("inter_k"),
     )
-    ex = flagged.groupBy().agg(
+    ex = flagged.agg(
         F.sum("in_a").cast("bigint").alias("n_a"),
         F.sum("in_b").cast("bigint").alias("n_b"),
         F.sum(F.col("in_a") * F.col("in_b")).cast("bigint").alias("n_inter"),
         F.count(F.lit(1)).cast("bigint").alias("n_union"),
-    )
-    return sk.crossJoin(ex).select(
+    ).select(F.struct("*")).scalar()
+    return sk.withColumn("ex", ex).select("*", "ex.*").select(
         F.lit(128).cast("bigint").alias("k"),
         "k_eff",
         F.expr("cast((10000 * inter_k) div k_eff as bigint)").alias(
@@ -3944,8 +3922,8 @@ def ev_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ev_markov_stationary.tm",
     )
     states = tm.select(F.col("src").alias("state")).distinct()
-    ns = states.groupBy().agg(F.count(F.lit(1)).cast("bigint").alias("s"))
-    pi = states.crossJoin(F.broadcast(ns)).select(
+    ns = states.agg(F.count(F.lit(1)).cast("bigint")).scalar()
+    pi = states.withColumn("s", ns).select(
         "state", F.expr("cast(1000000000000 div s as bigint)").alias("p")
     )
     for _ in range(8):
@@ -4411,16 +4389,12 @@ def ev_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import hash32
 
     ev = load_table(spark, sf_dir, "events")
-    bounds = ev.groupBy().agg(
-        F.min(F.col("ts").cast("date")).alias("d0")
-    )
+    d0 = ev.agg(F.min(F.col("ts").cast("date"))).scalar()
     cell = (
-        ev.crossJoin(F.broadcast(bounds))
-        .groupBy(
+        ev.groupBy(
             "user_id",
             F.when(
-                F.col("ts").cast("date")
-                < F.date_add(F.col("d0"), 15),
+                F.col("ts").cast("date") < F.date_add(d0, 15),
                 0,
             )
             .otherwise(1)
@@ -4968,13 +4942,12 @@ def layout_hilbert_vs_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.zorder import zvalue
 
     ev = load_table(spark, sf_dir, "events")
-    anchor = ev.agg(F.min("ts").alias("t0"))
+    t0 = ev.agg(F.min("ts")).scalar()
     base = (
-        ev.crossJoin(F.broadcast(anchor))
-        .select(
+        ev.select(
             (F.col("user_id") % 1024).alias("x"),
             (
-                (F.unix_micros("ts") - F.unix_micros("t0"))
+                (F.unix_micros("ts") - F.unix_micros(t0))
                 / F.lit(60_000_000)
             ).cast("bigint").alias("ymin"),
         )
@@ -5599,10 +5572,10 @@ def ev_competing_risks_cif(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("converted"),
     )
-    bounds = per_sess.groupBy().agg(F.max("t1").alias("tmax"))
-    subj = per_sess.crossJoin(F.broadcast(bounds)).select(
+    tmax = per_sess.agg(F.max("t1")).scalar()
+    subj = per_sess.select(
         F.expr("cast((t1 - t0) div 60000000 as bigint)").alias("dur"),
-        F.when(F.col("t1") >= F.col("tmax") - F.lit(1_800_000_000), 1)
+        F.when(F.col("t1") >= tmax - F.lit(1_800_000_000), 1)
         .otherwise(0)
         .alias("censored"),
         "converted",
@@ -5951,10 +5924,10 @@ def ev_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("event_type") == "purchase", 1).otherwise(0)
         ).alias("grp1"),
     )
-    bounds = per_sess.groupBy().agg(F.max("t1").alias("tmax"))
-    subj = per_sess.crossJoin(F.broadcast(bounds)).select(
+    tmax = per_sess.agg(F.max("t1")).scalar()
+    subj = per_sess.select(
         F.expr("cast((t1 - t0) div 60000000 as bigint)").alias("dur"),
-        F.when(F.col("t1") >= F.col("tmax") - F.lit(1_800_000_000), 1)
+        F.when(F.col("t1") >= tmax - F.lit(1_800_000_000), 1)
         .otherwise(0)
         .alias("censored"),
         "grp1",
@@ -5994,10 +5967,9 @@ def ev_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = subj.agg(
         F.sum("grp1").cast("bigint").alias("n_converted"),
         F.sum(F.lit(1) - F.col("grp1")).cast("bigint").alias("n_other"),
-    )
-    return sums.crossJoin(F.broadcast(base)).select(
-        "n_converted",
-        "n_other",
+    ).select(F.struct("*")).scalar()
+    return sums.withColumn("base", base).select(
+        "base.*",
         "o1",
         "e1_q",
         "v_q",
@@ -6198,7 +6170,7 @@ def ev_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     nonnegative products staged on HUGEINT/decimal(38,0) (x*N passes
     int64 once cohorts and corpus jointly exceed ~3e9 events at e6 —
     real at 100 TB). Plan: ONE map-side-combinable groupBy(cohort) +
-    a broadcast 1-row total — the cheapest possible per-segment
+    the totals as scalar subqueries — the cheapest possible per-segment
     readout."""
     base = (
         load_table(spark, sf_dir, "events")
@@ -6214,8 +6186,8 @@ def ev_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = base.agg(
         F.sum("n").cast("bigint").alias("nn"),
         F.sum("x").cast("bigint").alias("xx"),
-    )
-    return base.crossJoin(F.broadcast(tot)).select(
+    ).select(F.struct("*")).scalar()
+    return base.withColumn("tot", tot).select("*", "tot.*").select(
         F.col("cohort").cast("bigint").alias("cohort"),
         "n",
         "x",

@@ -511,13 +511,9 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
     deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-    wed = deg.agg(
-        F.coalesce(
-            F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("n_wedges")
-    )
+    n_wedges = deg.agg(
+        F.coalesce(F.sum(F.expr("(d * (d - 1)) div 2")), F.lit(0)).cast("bigint")
+    ).scalar()
     wedges2 = (
         e.alias("e1")
         .join(e.alias("e2"), F.col("e2.a") == F.col("e1.b"))
@@ -527,17 +523,17 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("e2.b").alias("z"),
         )
     )
-    tri = (
+    n_triangles = (
         wedges2.join(
             e.alias("e3"),
             (F.col("e3.a") == F.col("x")) & (F.col("e3.b") == F.col("z")),
         )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_triangles"))
+        .agg(F.count(F.lit(1)).cast("bigint"))
+        .scalar()
     )
-    edg = e.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
     return (
-        edg.crossJoin(F.broadcast(wed))
-        .crossJoin(F.broadcast(tri))
+        e.agg(F.count(F.lit(1)).cast("bigint").alias("n_edges"))
+        .withColumns({"n_wedges": n_wedges, "n_triangles": n_triangles})
         .select(
             "n_edges",
             "n_wedges",
@@ -879,7 +875,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct(),
         "graph_modularity.edges",
     )
-    m2 = edges.agg(F.count(F.lit(1)).cast("bigint").alias("m2"))
+    m2 = edges.agg(F.count(F.lit(1)).cast("bigint")).scalar()
     deg = edges.groupBy(F.col("a").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("d")
     )
@@ -906,7 +902,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("e2", F.lit(0)).cast("bigint").alias("intra_2e"),
             F.col("dc").alias("degree_sum"),
         )
-        .crossJoin(F.broadcast(m2))
+        .withColumn("m2", m2)
     )
     q_num = F.col("intra_2e") * F.col("m2") - F.col("degree_sum") * F.col(
         "degree_sum"

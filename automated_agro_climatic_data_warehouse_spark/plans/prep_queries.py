@@ -643,10 +643,11 @@ def pipe_sgd_linear_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     resid = pred.join(
         docs.select("doc_id", "n_chars"), "doc_id"
     ).withColumn("resid", (F.col("pred") - F.col("n_chars")).cast("bigint"))
-    n = (
+    n_docs = (
         tfb.groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("_k"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
+        .agg(F.count(F.lit(1)).cast("bigint"))
+        .scalar()
     )
     grad = resid.groupBy("bucket", "w0").agg(
         F.sum(F.col("tf") * F.col("resid")).cast("bigint").alias("grad_sum")
@@ -657,7 +658,7 @@ def pipe_sgd_linear_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         " else -((-grad_sum * 1024) div n_docs) end) as bigint)"
     )
     return (
-        grad.crossJoin(F.broadcast(n))
+        grad.withColumn("n_docs", n_docs)
         .withColumn("w1_q", upd)
         .select(
             "bucket",
@@ -742,17 +743,15 @@ def pipe_token_budget_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quality_q"
         ),
     )
-    tot = src.agg(
-        F.expr("cast((sum(tokens) * 2) div 5 as bigint)").alias("budget")
-    )
+    budget = src.agg(F.expr("cast((sum(tokens) * 2) div 5 as bigint)")).scalar()
     wq = W.orderBy(F.desc("quality_q"), F.asc("source"))
     wcum = wq.rowsBetween(W.unboundedPreceding, -1)
-    ordered = src.crossJoin(F.broadcast(tot)).select(
+    ordered = src.select(
         "source",
         "tokens",
         "n_docs",
         "quality_q",
-        "budget",
+        budget.alias("budget"),
         F.row_number().over(wq).cast("bigint").alias("fill_order"),
         F.coalesce(F.sum("tokens").over(wcum), F.lit(0))
         .cast("bigint")

@@ -465,7 +465,7 @@ def dq_mix_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
     overall = cell.groupBy(F.col("event_type").alias("t2")).agg(
         F.sum("o").cast("bigint").alias("n_type")
     )
-    total = cell.agg(F.sum("o").cast("bigint").alias("n"))
+    n = cell.agg(F.sum("o").cast("bigint")).scalar()
     grid = day_n.crossJoin(overall)
     o0 = F.coalesce(F.col("o"), F.lit(0))
     e = F.col("n_day") * (F.col("n_type").cast("double") / F.col("n"))
@@ -479,7 +479,7 @@ def dq_mix_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("t2") == F.col("event_type")),
             "left",
         )
-        .crossJoin(F.broadcast(total))
+        .withColumn("n", n)
         .select(F.col("d2").alias("day"), qterm.alias("qterm"))
     )
     return terms.groupBy("day").agg(
@@ -574,11 +574,9 @@ def dq_cusum_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    k = daily.agg(
-        F.expr("sum(n) div count(1)").cast("bigint").alias("k")
-    )
+    k = daily.agg(F.expr("sum(n) div count(1)").cast("bigint")).scalar()
     wcum = W.orderBy("day").rowsBetween(W.unboundedPreceding, W.currentRow)
-    cum = daily.crossJoin(F.broadcast(k)).select(
+    cum = daily.withColumn("k", k).select(
         "day",
         "n",
         "k",
@@ -751,7 +749,7 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     is character one of the integer's decimal string — int→string is
     exact everywhere, unlike floor(log10(double)) whose libm rounding
     is engine-specific. One scan + a 9-key groupBy (map-side partial,
-    tiny exchange) + a broadcast 1-row total for the fraction: the
+    tiny exchange) + the total as a scalar subquery for the fraction: the
     cheapest possible shape, which is the point — this audit should be
     free enough to run on every ingest batch."""
     o = load_table(spark, sf_dir, "orders")
@@ -763,15 +761,14 @@ def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("first_digit")
     )
-    total = digits.agg(F.count(F.lit(1)).alias("_t"))
+    total = digits.agg(F.count(F.lit(1))).scalar()
     return (
         digits.groupBy("first_digit")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-        .crossJoin(F.broadcast(total))
         .select(
             "first_digit",
             "n",
-            (F.col("n").cast("double") / F.col("_t")).alias("frac"),
+            (F.col("n").cast("double") / total).alias("frac"),
         )
     )
 
@@ -822,20 +819,20 @@ def dq_id_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_ids"),
     )
     succ = ids.select((F.col("id") - 1).alias("id"))
-    gap_starts = (
+    n_gaps = (
         ids.join(succ, "id", "left_anti")
-        .crossJoin(F.broadcast(bounds.select("hi")))
-        .filter(F.col("id") < F.col("hi"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_gaps"))
+        .filter(F.col("id") < bounds.select("hi").scalar())
+        .agg(F.count(F.lit(1)).cast("bigint"))
+        .scalar()
     )
-    return bounds.crossJoin(F.broadcast(gap_starts)).select(
+    return bounds.select(
         "lo",
         "hi",
         "n_ids",
         (F.col("hi") - F.col("lo") + 1 - F.col("n_ids"))
         .cast("bigint")
         .alias("n_missing"),
-        "n_gaps",
+        n_gaps.alias("n_gaps"),
     )
 
 
@@ -968,7 +965,7 @@ def dq_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source histogram is the only corpus-sized aggregate; everything
     after is value-domain-sized."""
     docs = load_table(spark, sf_dir, "documents").select("source", "n_chars")
-    total = docs.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"))
+    n_total = docs.agg(F.count(F.lit(1)).cast("bigint")).scalar()
     vals = docs.select("n_chars").distinct()
     srcs = docs.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_s")
@@ -992,7 +989,7 @@ def dq_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("call").over(w).cast("bigint").alias("cum_all"),
     )
     stat = (
-        ecdf.crossJoin(F.broadcast(total))
+        ecdf.withColumn("n_total", n_total)
         .groupBy("source", "n_s", "n_total")
         .agg(
             F.max(
@@ -1155,8 +1152,8 @@ def dq_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("j")
         .agg(F.sum(F.col("cell") * F.col("cell_s")).cast("bigint").alias("dot"))
     )
-    bound = per_depth.agg(F.min("dot").cast("bigint").alias("cms_upper_bound"))
-    return exact.crossJoin(F.broadcast(bound)).select(
+    bound = per_depth.agg(F.min("dot").cast("bigint")).scalar()
+    return exact.withColumn("cms_upper_bound", bound).select(
         "exact_rows",
         "cms_upper_bound",
         (F.col("cms_upper_bound") - F.col("exact_rows"))
@@ -1912,7 +1909,7 @@ def dq_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 only to n1*n2 ~ 9e18 — real at 100 TB), divided once at the
     end: w1_e6 = (num * 1e6) div (n1*n2), i.e. W1 in cents on the e6
     grid. The early/late split point is the corpus time midpoint (one
-    1-row broadcast — deterministic, no sampling). Plan: one
+    scalar subquery — deterministic, no sampling). Plan: one
     map-side-combinable groupBy(type, cents), per-type cumsum windows
     on the VALUE-DOMAIN histogram (partitioned by type — bounded,
     never corpus-sized), one k-row reduction. The readout is the
@@ -1932,11 +1929,9 @@ def dq_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("ts").alias("us"),
         )
     )
-    bounds = ev.agg(
-        F.expr("(min(us) + max(us)) div 2").alias("mid")
-    )
+    mid = ev.agg(F.expr("(min(us) + max(us)) div 2")).scalar()
     hist = (
-        ev.crossJoin(F.broadcast(bounds))
+        ev.withColumn("mid", mid)
         .groupBy("event_type", "cents")
         .agg(
             F.sum(F.when(F.col("us") <= F.col("mid"), 1).otherwise(0))

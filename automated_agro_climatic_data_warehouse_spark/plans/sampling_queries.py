@@ -161,12 +161,12 @@ def sample_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = docs.groupBy(F.col("source").alias("cs")).agg(
         F.count(F.lit(1)).alias("n_s")
     )
-    m = counts.agg(F.min("n_s").alias("min_n"))
-    rates = counts.crossJoin(F.broadcast(m)).select(
+    min_n = counts.agg(F.min("n_s")).scalar()
+    rates = counts.select(
         "cs",
         "n_s",
         F.floor(
-            F.sqrt(F.col("min_n").cast("double") / F.col("n_s"))
+            F.sqrt(min_n.cast("double") / F.col("n_s"))
             * F.lit(1048576)
         )
         .cast("bigint")
@@ -421,13 +421,9 @@ def sample_balanced_class_downsample(
     counts = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_class")
     )
-    k = counts.agg(F.min("n_class").alias("k"))
+    k = counts.agg(F.min("n_class")).scalar()
     w = W.partitionBy("event_type").orderBy("hkey", "event_id")
-    sel = (
-        ev.withColumn("rn", F.row_number().over(w))
-        .crossJoin(F.broadcast(k))
-        .filter(F.col("rn") <= F.col("k"))
-    )
+    sel = ev.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
     return (
         sel.groupBy("event_type")
         .agg(
@@ -476,7 +472,7 @@ def sample_epoch_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer floor-division against the weight sum, so shards
     planned on different engines or partitionings agree to the token;
     the two ratios are single IEEE divisions of exact ints. One
-    low-cardinality groupBy + a 1-row total broadcast — flat at any
+    low-cardinality groupBy + the totals as scalar subqueries — flat at any
     corpus size."""
     docs = load_table(spark, sf_dir, "documents")
     wc = F.size(F.split(F.trim(F.col("text")), "\\s+"))
@@ -494,9 +490,9 @@ def sample_epoch_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = per_source.agg(
         F.sum("n_tokens").cast("bigint").alias("b"),
         F.sum("weight").cast("bigint").alias("wsum"),
-    )
+    ).select(F.struct("*")).scalar()
     planned = F.expr("(b * weight) div wsum").cast("bigint")
-    return per_source.crossJoin(F.broadcast(tot)).select(
+    return per_source.withColumn("tot", tot).select("*", "tot.*").select(
         "source",
         "n_tokens",
         "weight",
@@ -1258,7 +1254,7 @@ def sample_pareto_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("okey"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("w_cents"),
     )
-    tot = w.agg(F.sum("w_cents").cast("bigint").alias("d"))
+    d = w.agg(F.sum("w_cents").cast("bigint")).scalar()
     keyed = w.select(
         "okey",
         "w_cents",
@@ -1268,7 +1264,7 @@ def sample_pareto_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 1
         ).alias("u_q"),
     )
-    ranked = keyed.crossJoin(F.broadcast(tot)).select(
+    ranked = keyed.withColumn("d", d).select(
         "okey",
         "w_cents",
         F.expr(
@@ -1335,7 +1331,7 @@ def sample_seq_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderkey").alias("okey"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("w_cents"),
     )
-    tot = w.agg(F.sum("w_cents").cast("bigint").alias("d"))
+    d = w.agg(F.sum("w_cents").cast("bigint")).scalar()
     keyed = w.select(
         "okey",
         "w_cents",
@@ -1345,7 +1341,7 @@ def sample_seq_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
             + 1
         ).alias("u_q"),
     )
-    ranked = keyed.crossJoin(F.broadcast(tot)).select(
+    ranked = keyed.withColumn("d", d).select(
         "okey",
         "w_cents",
         F.expr(

@@ -10,7 +10,7 @@ SCORE_DECIMALS before ranking — near-ties collapse to the id tiebreak.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
@@ -753,7 +753,7 @@ def emb_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors. Norms quantize to a 2^-20 binary grid and both flags are
     CROSS-MULTIPLIED integer comparisons (qnorm·2·n vs k·Σq) — no
     float thresholds, so the verdict is engine- and retry-exact. One
-    map-side pass + a 1-row broadcast of the corpus stats; the dot
+    map-side pass + the corpus stats as scalar subqueries; the dot
     fold is the same bit-reproducible left-to-right chain every
     similarity query uses."""
     from ..operators.similarity import dot
@@ -766,13 +766,13 @@ def emb_norm_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = n.agg(
         F.sum("qnorm").cast("bigint").alias("qsum"),
         F.count(F.lit(1)).alias("cnt"),
-    )
-    return n.crossJoin(F.broadcast(s)).select(
+    ).select(F.struct("*")).scalar()
+    return n.withColumn("s", s).select(
         "vec_id",
         "qnorm",
         (F.col("qnorm").cast("double") / F.lit(1048576.0)).alias("norm"),
-        (F.col("qnorm") * 2 * F.col("cnt") < F.col("qsum")).alias("flag_low"),
-        (F.col("qnorm") * 2 * F.col("cnt") > 3 * F.col("qsum")).alias(
+        (F.col("qnorm") * 2 * F.col("s.cnt") < F.col("s.qsum")).alias("flag_low"),
+        (F.col("qnorm") * 2 * F.col("s.cnt") > 3 * F.col("s.qsum")).alias(
             "flag_high"
         ),
     )
@@ -1755,24 +1755,16 @@ def emb_variance_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("utgu")
         )
     )
-    utu = u.agg(F.sum(F.col("u") * F.col("u")).cast("bigint").alias("utu"))
-    tr = gram.filter(F.col("i") == F.col("j")).agg(
-        F.sum("g").cast("bigint").alias("trace_q")
+    utu = u.agg(F.sum(F.col("u") * F.col("u")).cast("bigint")).scalar()
+    trace_q = (
+        gram.filter(F.col("i") == F.col("j")).agg(F.sum("g").cast("bigint")).scalar()
     )
-    return (
-        quad.crossJoin(F.broadcast(utu))
-        .crossJoin(F.broadcast(tr))
-        .select(
-            (F.col("utgu").cast("double") / F.col("utu")).alias(
-                "lambda1_q"
-            ),
-            "trace_q",
-            (
-                F.col("utgu").cast("double")
-                / F.col("utu")
-                / F.col("trace_q")
-            ).alias("variance_explained"),
-        )
+    return quad.withColumns({"utu": utu, "trace_q": trace_q}).select(
+        (F.col("utgu").cast("double") / F.col("utu")).alias("lambda1_q"),
+        "trace_q",
+        (
+            F.col("utgu").cast("double") / F.col("utu") / F.col("trace_q")
+        ).alias("variance_explained"),
     )
 
 
@@ -2331,8 +2323,8 @@ def emb_ivf_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n")
     )
-    tot = cells.agg(F.sum("n").alias("t"))
-    return cells.crossJoin(F.broadcast(tot)).select(
+    t = cells.agg(F.sum("n")).scalar()
+    return cells.withColumn("t", t).select(
         "centroid_id",
         F.col("n").cast("bigint").alias("n_vectors"),
         (F.col("n").cast("double") / F.col("t")).alias("share"),
@@ -4007,7 +3999,7 @@ def ann_ivf_recall_matched(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent = emb.filter(F.col("vec_id") < 16)
 
-    def traffic(nlist: int, nprobe: int) -> DataFrame:
+    def traffic(nlist: int, nprobe: int) -> Column:
         lists = nearest_centroids(emb, cent, nlist).select(
             F.col("vec_id").alias("neighbor_id"), "centroid_id"
         )
@@ -4017,10 +4009,11 @@ def ann_ivf_recall_matched(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             probes.join(lists, "centroid_id")
             .filter(F.col("query_id") != F.col("neighbor_id"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("candidate_rows"))
+            .agg(F.count(F.lit(1)).cast("bigint"))
+            .scalar()
         )
 
-    def leg(variant: str, approx: DataFrame, tr: DataFrame) -> DataFrame:
+    def leg(variant: str, approx: DataFrame, candidate_rows: Column) -> DataFrame:
         hits = (
             truth.join(
                 approx.select("query_id", "neighbor_id").withColumn(
@@ -4032,23 +4025,18 @@ def ann_ivf_recall_matched(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("query_id")
             .agg(F.count("hit").alias("n_hit"))
         )
-        return (
-            hits.agg(
-                F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-                F.sum("n_hit").cast("bigint").alias("n_hits"),
-                (
-                    F.sum("n_hit").cast("double")
-                    / (F.count(F.lit(1)) * 5)
-                ).alias("recall_at_5"),
-            )
-            .crossJoin(F.broadcast(tr))
-            .select(
-                F.lit(variant).alias("variant"),
-                "n_queries",
-                "n_hits",
-                "recall_at_5",
-                "candidate_rows",
-            )
+        return hits.agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
+            F.sum("n_hit").cast("bigint").alias("n_hits"),
+            (F.sum("n_hit").cast("double") / (F.count(F.lit(1)) * 5)).alias(
+                "recall_at_5"
+            ),
+        ).select(
+            F.lit(variant).alias("variant"),
+            "n_queries",
+            "n_hits",
+            "recall_at_5",
+            candidate_rows.alias("candidate_rows"),
         )
 
     spill = ivf_spill_topk(emb, qpred, k=5, n_centroids=16, spill=2)

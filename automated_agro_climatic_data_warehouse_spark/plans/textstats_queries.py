@@ -426,7 +426,7 @@ def ts_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc re-aggregation); the count table joins back onto tokens by word —
     skew-safe because Zipf-head words are a handful of HOT KEYS whose
     rows AQE splits, and the per-row payload is one double. The corpus
-    totals are a 1-row broadcast. Decimal accumulation + fixed ln inputs
+    totals are scalar subqueries. Decimal accumulation + fixed ln inputs
     keep the doc means bit-identical across engines."""
     docs = load_table(spark, sf_dir, "documents")
     tok = (
@@ -439,16 +439,16 @@ def ts_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
     totals = counts.agg(
         F.sum("c").alias("n"), F.count(F.lit(1)).alias("v")
-    )
+    ).select(F.struct("*")).scalar()
     scored = (
         tok.join(counts, "w")
-        .crossJoin(F.broadcast(totals))
+        .withColumn("totals", totals)
         .select(
             "doc_id",
             (
                 -F.log(
                     (F.col("c") + 1)
-                    / (F.col("n").cast("double") + F.col("v"))
+                    / (F.col("totals.n").cast("double") + F.col("totals.v"))
                 )
             ).alias("nll"),
         )
@@ -577,7 +577,7 @@ def ts_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     come from a positional self-join ON (doc, i+1) — at corpus scale
     this is the posexplode+shift pattern, one shuffle keyed by doc;
     unigram counts re-join by word (Zipf-head keys are AQE-splittable),
-    totals broadcast as one row, and the final top-50 is
+    the total is a scalar subquery, and the final top-50 is
     TakeOrderedAndProject, never a global sort."""
     docs = load_table(spark, sf_dir, "documents")
     tok = (
@@ -588,7 +588,7 @@ def ts_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("w") != "")
     )
     uni = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    tot = uni.agg(F.sum("c").alias("n"))
+    n = uni.agg(F.sum("c")).scalar()
     a = tok.select("doc_id", "i", F.col("w").alias("w1"))
     b = tok.select(
         "doc_id", (F.col("i") - 1).alias("i"), F.col("w").alias("w2")
@@ -602,14 +602,13 @@ def ts_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     pmi = (
         big.join(uni.select(F.col("w").alias("w1"), F.col("c").alias("c1")), "w1")
         .join(uni.select(F.col("w").alias("w2"), F.col("c").alias("c2")), "w2")
-        .crossJoin(F.broadcast(tot))
         .select(
             "w1",
             "w2",
             "c12",
             F.round(
                 F.log(
-                    (F.col("c12") * F.col("n"))
+                    (F.col("c12") * n)
                     / (F.col("c1").cast("double") * F.col("c2"))
                 ),
                 8,
@@ -801,14 +800,10 @@ def ts_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = tf.groupBy(F.col("token").alias("df_token")).agg(
         F.count(F.lit(1)).alias("df")
     )
-    n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    qidf = F.round(
-        F.log(F.col("n_docs") / F.col("df")) * F.lit(_IDF_GRID)
-    ).cast("bigint")
-    scored = (
-        tf.join(F.broadcast(df), F.col("df_token") == F.col("token"))
-        .crossJoin(F.broadcast(n))
-        .select("doc_id", "token", "tf", (F.col("tf") * qidf).alias("score_q"))
+    n_docs = docs.agg(F.count(F.lit(1))).scalar()
+    qidf = F.round(F.log(n_docs / F.col("df")) * F.lit(_IDF_GRID)).cast("bigint")
+    scored = tf.join(F.broadcast(df), F.col("df_token") == F.col("token")).select(
+        "doc_id", "token", "tf", (F.col("tf") * qidf).alias("score_q")
     )
     w = W.partitionBy("doc_id").orderBy(F.desc("score_q"), F.asc("token"))
     return (
@@ -981,7 +976,7 @@ def ts_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ROW level, so every downstream aggregate (per-doc sums, the
     corpus total) is exact int64 arithmetic and the bucket boundaries
     are two IEEE ops on identically-derived doubles — no decimal casts,
-    no global percentile window (the corpus mean is a 1-row broadcast;
+    no global percentile window (the corpus mean is a scalar subquery;
     compare w7's boundary-broadcast pattern for exact quantiles).
     Shuffles: word counts, doc re-aggregation — same two as
     ts_unigram_logprob."""
@@ -990,14 +985,19 @@ def ts_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split(F.lower("text"), "\\s+")).alias("w")
     ).filter(F.col("w") != "")
     counts = tok.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
-    totals = counts.agg(F.sum("c").alias("n"), F.count(F.lit(1)).alias("v"))
+    totals = counts.agg(
+        F.sum("c").alias("n"), F.count(F.lit(1)).alias("v")
+    ).select(F.struct("*")).scalar()
     qnll = F.round(
-        -F.log((F.col("c") + 1) / (F.col("n").cast("double") + F.col("v")))
+        -F.log(
+            (F.col("c") + 1)
+            / (F.col("totals.n").cast("double") + F.col("totals.v"))
+        )
         * F.lit(1048576)
     ).cast("bigint")
     per_doc = (
         tok.join(counts, "w")
-        .crossJoin(F.broadcast(totals))
+        .withColumn("totals", totals)
         .select("doc_id", qnll.alias("qnll"))
         .groupBy("doc_id")
         .agg(
@@ -1008,10 +1008,10 @@ def ts_ppl_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = per_doc.agg(
         F.sum("qsum").cast("bigint").alias("s"),
         F.sum("n_tokens").cast("bigint").alias("nt"),
-    )
+    ).select(F.struct("*")).scalar()
     dm = F.col("qsum").cast("double") / F.col("n_tokens")
-    cm = F.col("s").cast("double") / F.col("nt")
-    return per_doc.crossJoin(F.broadcast(corpus)).select(
+    cm = F.col("corpus.s").cast("double") / F.col("corpus.nt")
+    return per_doc.withColumn("corpus", corpus).select(
         "doc_id",
         "qsum",
         "n_tokens",
@@ -1153,11 +1153,11 @@ def ts_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     bi = pairs.groupBy(
         F.col("prev").alias("b_p"), F.col("cur").alias("b_c")
     ).agg(F.count(F.lit(1)).alias("bc"))
-    vocab = uni_all.agg(F.count(F.lit(1)).alias("v"))
+    v = uni_all.agg(F.count(F.lit(1))).scalar()
     qnll = F.round(
         -F.log(
             (F.coalesce(F.col("bc"), F.lit(0)) + 1)
-            / (F.col("uc").cast("double") + F.col("v"))
+            / (F.col("uc").cast("double") + v)
         )
         * F.lit(1048576)
     ).cast("bigint")
@@ -1168,7 +1168,6 @@ def ts_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("b_p") == F.col("prev")) & (F.col("b_c") == F.col("cur")),
             "left",
         )
-        .crossJoin(F.broadcast(vocab))
         .select("doc_id", qnll.alias("qnll"))
     )
     return scored.groupBy("doc_id").agg(
@@ -1290,15 +1289,11 @@ def ts_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(F.split(F.lower(F.col("text")), "\\s+")).alias("token")
     ).filter(F.col("token") != "")
     cand = mg_candidates(tok, "token", 512).distinct()
-    total = tok.agg(F.count(F.lit(1)).alias("total"))
+    total = tok.agg(F.count(F.lit(1))).scalar()
     exact = tok.join(F.broadcast(cand), "token", "left_semi").groupBy(
         "token"
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    return (
-        exact.crossJoin(F.broadcast(total))
-        .filter(F.col("cnt") * 400 > F.col("total"))
-        .select("token", "cnt")
-    )
+    return exact.filter(F.col("cnt") * 400 > total).select("token", "cnt")
 
 
 @query(
@@ -1913,8 +1908,8 @@ def ts_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             "toks"
         ),
     )
-    mx = docs.agg(F.max("doc_id").alias("m"))
-    per_doc = docs.crossJoin(F.broadcast(mx)).select(
+    m = docs.agg(F.max("doc_id")).scalar()
+    per_doc = docs.withColumn("m", m).select(
         "doc_id",
         F.size("toks").cast("bigint").alias("c"),
         F.greatest(
@@ -1928,7 +1923,7 @@ def ts_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("fd"))
     )
     first_ck = (
-        firsts.crossJoin(F.broadcast(mx))
+        firsts.withColumn("m", m)
         .select(
             F.greatest(
                 F.expr("(10 * fd + m - 1) div m").cast("bigint"), F.lit(1)
@@ -1946,7 +1941,7 @@ def ts_vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spine.join(doc_ck, "ck", "left")
         .join(first_ck, "ck", "left")
-        .crossJoin(F.broadcast(mx))
+        .withColumn("m", m)
         .select(
             F.col("ck").alias("cp_k"),
             F.expr("(m * ck) div 10").cast("bigint").alias("cp_doc_id"),
@@ -2131,18 +2126,16 @@ def ts_bpe_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
     )
     _, final_syms = bpe_train_state(words, _BPE_K, need_merges=False)
-    before = words.groupBy().agg(
+    before = words.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_words"),
         F.sum(F.col("freq") * F.length("w"))
         .cast("bigint")
         .alias("tokens_before"),
     )
-    after = final_syms.groupBy().agg(
-        F.sum(F.col("freq") * F.size("syms"))
-        .cast("bigint")
-        .alias("tokens_after")
-    )
-    return before.crossJoin(after).select(
+    tokens_after = final_syms.agg(
+        F.sum(F.col("freq") * F.size("syms")).cast("bigint")
+    ).scalar()
+    return before.withColumn("tokens_after", tokens_after).select(
         "n_words",
         "tokens_before",
         "tokens_after",
@@ -2752,7 +2745,7 @@ def ts_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream). Spark-first: scoring happens at BIGRAM-TYPE granularity —
     tokens collapse to (source, prev, cur, count) FIRST, then one join
     chain against the type-level stat tables (context totals,
-    continuation fan-ins, two 1-row scalars broadcast), so the join
+    continuation fan-ins, two scalar subqueries), so the join
     volume is bounded by observed-bigram vocabulary (Heaps-sublinear),
     never token volume. Per-type NLL quantizes to the 2^-20 grid
     (bigram_logprob discipline) so all aggregates are exact int64."""
@@ -2779,26 +2772,18 @@ def ts_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("bc").alias("cp"), F.count(F.lit(1)).alias("n1p")
     )
     cont = bt.groupBy("c").agg(F.count(F.lit(1)).alias("n1w"))
-    tots = bt.agg(F.count(F.lit(1)).alias("t"))
-    vocab = tok.agg(F.countDistinct("cur").alias("v"))
+    t = bt.agg(F.count(F.lit(1))).scalar()
+    v = tok.agg(F.countDistinct("cur")).scalar()
     sb = big.groupBy(
         "source", F.col("prev").alias("p"), F.col("cur").alias("c")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    joined = (
-        sb.join(bt, ["p", "c"])
-        .join(ctx, "p")
-        .join(cont, "c")
-        .crossJoin(F.broadcast(tots))
-        .crossJoin(F.broadcast(vocab))
-    )
+    joined = sb.join(bt, ["p", "c"]).join(ctx, "p").join(cont, "c")
     p_kn = (F.col("bc") - F.lit(0.75)) / F.col("cp").cast("double") + F.lit(
         0.75
     ) * F.col("n1p").cast("double") / F.col("cp").cast("double") * (
-        F.col("n1w").cast("double") / F.col("t").cast("double")
+        F.col("n1w").cast("double") / t.cast("double")
     )
-    p_a1 = (F.col("bc") + F.lit(1)) / (
-        F.col("cp").cast("double") + F.col("v")
-    )
+    p_a1 = (F.col("bc") + F.lit(1)) / (F.col("cp").cast("double") + v)
     scored = joined.select(
         "source",
         "cnt",
@@ -3002,9 +2987,10 @@ def ts_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups on (doc,token); dl is a window sum over doc_id (reused by
     the final per-doc top-3 window, which therefore sorts WITHOUT a new
     exchange since the broadcast idf join preserves partitioning); df
-    re-groups tf's output on the vocabulary. Corpus scalars are 1-row
-    aggs broadcast into the vocabulary-sized idf frame — a vocabulary
-    fits any executor; at web scale a min-df prune caps it."""
+    re-groups tf's output on the vocabulary. Corpus scalars are scalar
+    subqueries projected onto the vocabulary-sized idf frame, which is
+    broadcast — a vocabulary fits any executor; at web scale a min-df
+    prune caps it."""
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id",
@@ -3021,11 +3007,13 @@ def ts_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("dl").cast("bigint").alias("sl"),
         )
+        .select(F.struct("*"))
+        .scalar()
     )
     dfreq = tf.groupBy(F.col("token").alias("df_token")).agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )
-    idf = dfreq.crossJoin(F.broadcast(corpus)).select(
+    idf = dfreq.withColumn("corpus", corpus).select("*", "corpus.*").select(
         "df_token",
         F.round(
             F.log(
@@ -3180,7 +3168,7 @@ def ts_jsd_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     na = mapped.groupBy("source").agg(
         F.sum("a").cast("bigint").alias("n_src")
     )
-    nb = csym.agg(F.sum("b").cast("bigint").alias("n_all"))
+    n_all = csym.agg(F.sum("b").cast("bigint")).scalar()
     msrc = mapped.select(
         F.col("source").alias("msrc"),
         F.col("sym").alias("msym"),
@@ -3196,7 +3184,7 @@ def ts_jsd_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .drop("msrc", "msym")
         .withColumn("a", F.coalesce(F.col("a"), F.lit(0)).cast("bigint"))
-        .crossJoin(F.broadcast(nb))
+        .withColumn("n_all", n_all)
     )
     lnq = lambda c: F.round(F.log(c) * F.lit(_JSD_GRID)).cast(  # noqa: E731
         "bigint"

@@ -284,7 +284,7 @@ def q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top supplier(s) by quarterly revenue (TPC-H Q15 shape). The max
-    rides back as a 1-row broadcast crossJoin + equality filter — no
+    rides back as a scalar subquery in an equality filter — no
     window at all, so no single-partition sort and exact-decimal
     equality keeps multi-winner ties correct."""
     l = load_table(spark, sf_dir, "lineitem").filter(
@@ -295,10 +295,9 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     srev = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         dsum(_rev()).alias("total_revenue")
     )
-    mx = srev.agg(F.max("total_revenue").alias("mx"))
+    mx = srev.agg(F.max("total_revenue")).scalar()
     return (
-        srev.crossJoin(F.broadcast(mx))
-        .filter(F.col("total_revenue") == F.col("mx"))
+        srev.filter(F.col("total_revenue") == mx)
         .join(F.broadcast(s), F.col("s_suppkey") == F.col("supplier_no"))
         .select("s_suppkey", "s_name", "total_revenue")
     )
@@ -573,9 +572,8 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parts representing a significant fraction of one nation's traded
     value (TPC-H Q11 shape; ps_supplycost*ps_availqty proxied by traded
-    extendedprice*quantity). The scalar total-value subquery DECORRELATES
-    into a 1-row aggregate broadcast back via crossJoin — no second scan
-    of the base join, no window. Threshold compare is double*(constant)
+    extendedprice*quantity). The total value is a scalar subquery, as in
+    the SQL — no window. Threshold compare is double*(constant)
     on identically-derived decimal sums, bit-stable cross-engine.
     Oracle sums the already-exact per-part doubles (each an exact
     decimal(38,6) rendered to double); DuckDB's plain sum over ~2000 such
@@ -591,12 +589,10 @@ def q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum(F.col("l_extendedprice") * F.col("l_quantity")).alias("value"))
     )
     total = per_part.agg(
-        F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("total")
-    )
-    return (
-        per_part.crossJoin(F.broadcast(total))
-        .filter(F.col("value") > 0.001 * F.col("total"))
-        .select(F.col("pk").alias("p_partkey"), "value")
+        F.sum(F.col("value").cast("decimal(38,6)")).cast("double")
+    ).scalar()
+    return per_part.filter(F.col("value") > 0.001 * total).select(
+        F.col("pk").alias("p_partkey"), "value"
     )
 
 
@@ -841,18 +837,16 @@ def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wealthy-but-lapsed customers per country (TPC-H Q22 shape; the
     phone country code is proxied by c_nationkey and 'no orders' by 'no
     orders since 2000' — every testdata customer has SOME order). The
-    scalar avg subquery decorrelates to a 1-row broadcast (exact decimal
+    avg is a scalar subquery, as in the SQL (exact decimal
     sum / count, one IEEE division both engines); the NOT IN becomes a
     LEFT ANTI join against the distinct recent-buyer set (safe:
     o_custkey non-null by schema). acctbal sums at decimal scale 2 —
     the column's native scale."""
     c = load_table(spark, sf_dir, "customer")
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
-        (
-            F.sum(F.col("c_acctbal").cast("decimal(28,2)")).cast("double")
-            / F.count(F.lit(1))
-        ).alias("ab")
-    )
+        F.sum(F.col("c_acctbal").cast("decimal(28,2)")).cast("double")
+        / F.count(F.lit(1))
+    ).scalar()
     active = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= "2000-01-01")
@@ -860,8 +854,7 @@ def q22_global_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     return (
-        c.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("ab"))
+        c.filter(F.col("c_acctbal") > avg_bal)
         .join(active, F.col("o_custkey") == F.col("c_custkey"), "left_anti")
         .groupBy(F.col("c_nationkey").alias("cntrycode"))
         .agg(

@@ -47,11 +47,7 @@ def get_spark(app_name: str = "agro_dwh_spark", cpus: int | None = None) -> Spar
         # scale-safe. Interleaved best-of-3 A/B at sf0.1 on the 10
         # heaviest join-shaped queries: -14% total (pagerank -32%,
         # modularity -33%, ivfpq -25%), no confirmed regression.
-        # SPARK_GRAFT_PREFER_SMJ=true restores the Spark default.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "false"),
-        )
+        .config("spark.sql.join.preferSortMergeJoin", "false")
         # bucketed managed tables (warehouse.write_bucketed) land here;
         # session-scoped in-memory catalog, parquet files on disk
         .config(

@@ -40,7 +40,6 @@ def anova_moments_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "group string, x bigint",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (group, x) as an
     availableNow stream through the additive moment merge; returns the
@@ -54,5 +53,4 @@ def anova_moments_drain(
         checkpoint_dir,
         anova_moments_merge,
         empty_schema="group string, n bigint, s1 bigint, s2 bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -77,7 +77,6 @@ def capture_recapture_drain(
     checkpoint_dir: str,
     id_col: str = "doc_id",
     source_col: str = "source",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
     the additive capture-counter merge; returns the final per-source
@@ -93,5 +92,4 @@ def capture_recapture_drain(
         empty_schema=(
             "source string, n_true bigint, n1 bigint, n2 bigint, m bigint"
         ),
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -39,7 +39,6 @@ def cdc_apply_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s changelog parquet files (CHANGELOG_SCHEMA; seq
     unique per key — the CDC-log contract) as an availableNow stream;
@@ -60,7 +59,6 @@ def cdc_apply_drain(
         checkpoint_dir,
         merge,
         empty_schema=CHANGELOG_SCHEMA,
-        max_files_per_trigger=max_files_per_trigger,
     )
 
 

@@ -54,7 +54,6 @@ def cms_drain(
     state_dir: str,
     checkpoint_dir: str,
     key_col: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
     the cell-wise CMS sum; returns the final (j, bucket, cell) state.
@@ -67,5 +66,4 @@ def cms_drain(
         checkpoint_dir,
         lambda batch, prev: _cms_merge(batch, prev, F.col(key_col)),
         empty_schema="j int, bucket bigint, cell bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

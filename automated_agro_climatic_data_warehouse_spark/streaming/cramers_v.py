@@ -31,7 +31,6 @@ def ct_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "event_type string, dow bigint",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (event_type, dow)
     as an availableNow stream through the additive cell merge; returns
@@ -46,5 +45,4 @@ def ct_drain(
         checkpoint_dir,
         ct_merge,
         empty_schema="event_type string, dow bigint, o bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

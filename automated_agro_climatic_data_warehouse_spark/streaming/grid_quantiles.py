@@ -90,9 +90,8 @@ def quantile_bounds(hist: DataFrame, width: float, qs: list[float]) -> DataFrame
     """(q, lo, hi) per requested quantile: the true q-quantile of the
     sketched data lies in [lo, hi) — one bin width apart. Runs on the
     bins-sized frame: a cumulative window over bins (the state, never
-    the data) + one broadcast of the 1-row total."""
+    the data) + the total as a scalar subquery."""
     spark = hist.sparkSession
-    tot = hist.agg(F.sum("c").cast("bigint").alias("n"))
     cum = hist.withColumn(
         "cum",
         F.sum("c").over(
@@ -101,7 +100,7 @@ def quantile_bounds(hist: DataFrame, width: float, qs: list[float]) -> DataFrame
     )
     qdf = local_frame(spark, [(float(q),) for q in qs], "q double")
     hit = (
-        cum.crossJoin(F.broadcast(tot))
+        cum.withColumn("n", hist.agg(F.sum("c").cast("bigint")).scalar())
         .join(
             F.broadcast(qdf),
             F.col("cum") >= F.ceil(F.col("q") * F.col("n")),
@@ -124,7 +123,6 @@ def grid_quantiles_drain(
     checkpoint_dir: str,
     value_col: str,
     width: float = 1.0,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir` parquet as an availableNow stream into the grid
     histogram; returns the final (bin, c) state — bit-identical to the
@@ -138,5 +136,4 @@ def grid_quantiles_drain(
         checkpoint_dir,
         lambda batch, prev: _grid_merge(batch, prev, value_col, width),
         empty_schema="bin long, c long",
-        max_files_per_trigger=max_files_per_trigger,
     )

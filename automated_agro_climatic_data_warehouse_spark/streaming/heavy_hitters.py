@@ -64,10 +64,10 @@ def _mg_merge(
         F.row_number().over(W.orderBy(F.desc("c"), F.asc("key"))),
     )
     m = ranked.filter(F.col("__rn") == k + 1).agg(
-        F.coalesce(F.max("c"), F.lit(0)).cast("bigint").alias("m")
-    )
+        F.coalesce(F.max("c"), F.lit(0)).cast("bigint")
+    ).scalar()
     return (
-        ranked.crossJoin(F.broadcast(m))
+        ranked.withColumn("m", m)
         .filter(F.col("c") > F.col("m"))
         .select("key", (F.col("c") - F.col("m")).cast("bigint").alias("c"))
     )
@@ -103,7 +103,6 @@ def heavy_hitters_drain(
     checkpoint_dir: str,
     key_col: str,
     k: int = 32,
-    max_files_per_trigger: int = 1,
     key_type: str = "long",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
@@ -120,5 +119,4 @@ def heavy_hitters_drain(
         checkpoint_dir,
         lambda batch, prev: _mg_merge(batch, prev, key_col, k),
         empty_schema=f"key {key_type}, c long",
-        max_files_per_trigger=max_files_per_trigger,
     )

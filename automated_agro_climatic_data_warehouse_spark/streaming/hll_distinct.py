@@ -59,7 +59,6 @@ def hll_distinct_drain(
     checkpoint_dir: str,
     key_col,
     item_col: str,
-    max_files_per_trigger: int = 1,
     key_type: str = "string",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
@@ -77,7 +76,6 @@ def hll_distinct_drain(
         # key_type mirrors heavy_hitters_drain: an empty drain must
         # return the same key type a non-empty drain carries.
         empty_schema=f"key {key_type}, sk binary",
-        max_files_per_trigger=max_files_per_trigger,
     )
     return final.select(
         "key",

@@ -100,21 +100,19 @@ def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
 
 
 def _committed_parquet_paths(accepted_dir: str) -> list[str]:
-    """Durably committed corpus paths: flat part-files (legacy/direct
-    batch appends) plus every `batch-*` subdir whose Spark `_SUCCESS`
-    marker exists AND that holds at least one part file (an all-rejected
-    batch commits an empty subdir — it counts for replay-skip but there
-    is nothing to read). A subdir WITHOUT the marker is a crashed
-    half-write: excluded here so a replay can never reject a document
-    against its own partial output, then idempotently overwritten."""
+    """Durably committed corpus paths: every `batch-*` subdir whose Spark
+    `_SUCCESS` marker exists AND that holds at least one part file (an
+    all-rejected batch commits an empty subdir — it counts for
+    replay-skip but there is nothing to read). A subdir WITHOUT the
+    marker is a crashed half-write: excluded here so a replay can never
+    reject a document against its own partial output, then
+    idempotently overwritten."""
     if not os.path.isdir(accepted_dir):
         return []
     paths: list[str] = []
     for name in os.listdir(accepted_dir):
         p = os.path.join(accepted_dir, name)
-        if name.endswith(".parquet") and os.path.isfile(p):
-            paths.append(p)
-        elif (
+        if (
             os.path.isdir(p)
             and name.startswith("batch-")
             and os.path.isfile(os.path.join(p, "_SUCCESS"))
@@ -127,9 +125,9 @@ def _committed_parquet_paths(accepted_dir: str) -> list[str]:
 def dedup_gate_batch(
     batch: DataFrame,
     accepted_dir: str,
+    commit_id: str,
     threshold: float = 0.6,
     backend: str = "md5",
-    commit_id: str | None = None,
 ) -> None:
     """Accept the non-duplicate subset of `batch` into `accepted_dir`.
 
@@ -140,18 +138,14 @@ def dedup_gate_batch(
     (component-local solve — see _greedy_reject_by_id; a doc whose only
     near-dups were themselves rejected is KEPT).
 
-    With `commit_id` set (the streaming drain path), survivors write to
-    the `batch-<commit_id>` subdir with overwrite semantics and the call
-    is IDEMPOTENT: a replay of an already-committed id returns without
-    touching anything, and a replay over a crashed half-write recomputes
-    against the committed-only index and overwrites the partial subdir.
-    Without it (direct batch use), survivors append flat — callers own
-    replay semantics."""
-    out_dir = None
-    if commit_id is not None:
-        out_dir = os.path.join(accepted_dir, f"batch-{commit_id}")
-        if os.path.isfile(os.path.join(out_dir, "_SUCCESS")):
-            return  # replay of a committed batch — nothing to redo
+    Survivors write to the `batch-<commit_id>` subdir with overwrite
+    semantics and the call is IDEMPOTENT: a replay of an
+    already-committed id returns without touching anything, and a
+    replay over a crashed half-write recomputes against the
+    committed-only index and overwrites the partial subdir."""
+    out_dir = os.path.join(accepted_dir, f"batch-{commit_id}")
+    if os.path.isfile(os.path.join(out_dir, "_SUCCESS")):
+        return  # replay of a committed batch — nothing to redo
     s = batch.sparkSession
     survivors = batch
     index_paths = _committed_parquet_paths(accepted_dir)
@@ -168,13 +162,9 @@ def dedup_gate_batch(
     rejected = _greedy_reject_by_id(intra)
     survivors = survivors.join(rejected, "doc_id", "left_anti")
     # no checkpoint before the write: it is the plan's only consumer, and
-    # the plan reads only committed paths — never the flat files this
-    # append adds (they land on job commit) nor the `batch-<id>` subdir
-    # an overwrite replaces (excluded until its _SUCCESS exists)
-    if out_dir is None:
-        survivors.write.mode("append").parquet(accepted_dir)
-    else:
-        survivors.write.mode("overwrite").parquet(out_dir)
+    # the plan reads only committed paths — never the `batch-<id>` subdir
+    # this overwrite replaces (excluded until its _SUCCESS exists)
+    survivors.write.mode("overwrite").parquet(out_dir)
 
 
 def dedup_ingest_drain(
@@ -185,11 +175,10 @@ def dedup_ingest_drain(
     checkpoint_dir: str,
     threshold: float = 0.6,
     backend: str = "md5",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain the parquet files in `src_dir` as a stream (availableNow,
-    `max_files_per_trigger` files per micro-batch) through the dedup
-    gate; returns the accepted corpus. Exactly-once per checkpoint:
+    one file per micro-batch) through the dedup gate; returns the
+    accepted corpus. Exactly-once per checkpoint:
     re-draining the same checkpoint appends nothing (the stream replays
     no batch), and a crash-replay of an in-flight batch is absorbed by
     the per-batch commit subdir (see module docstring). The drain token
@@ -201,7 +190,8 @@ def dedup_ingest_drain(
     token = drain_token(checkpoint_dir)
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        # one file per micro-batch: the batch-twin contract the stream≡batch tests pin
+        .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
 

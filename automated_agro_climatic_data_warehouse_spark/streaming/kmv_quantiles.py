@@ -58,7 +58,6 @@ def kmv_quantiles_drain(
     id_col: str,
     value_col: str,
     k: int = 1024,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
     the bottom-k semilattice merge; returns the final (h, id, value)
@@ -72,5 +71,4 @@ def kmv_quantiles_drain(
         checkpoint_dir,
         lambda batch, prev: _kmv_merge(batch, prev, id_col, value_col, k),
         empty_schema="h bigint, id bigint, value double",
-        max_files_per_trigger=max_files_per_trigger,
     )

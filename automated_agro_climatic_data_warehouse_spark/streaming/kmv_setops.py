@@ -45,7 +45,6 @@ def kmv_setops_drain(
     checkpoint_dir: str,
     flags_fn,
     k: int = 128,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream
     through the OR-merged bottom-k; `flags_fn(batch_df)` maps a raw
@@ -60,5 +59,4 @@ def kmv_setops_drain(
         checkpoint_dir,
         lambda batch, prev: _setops_merge(flags_fn(batch), prev, k),
         empty_schema="hv bigint, in_a int, in_b int",
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -32,7 +32,6 @@ def kw_histogram_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "grp string, cents bigint",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (grp, cents) as an
     availableNow stream through the additive histogram merge; returns
@@ -46,5 +45,4 @@ def kw_histogram_drain(
         checkpoint_dir,
         kw_histogram_merge,
         empty_schema="grp string, cents bigint, tg bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -34,7 +34,6 @@ def lb_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "day date",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (day) as an
     availableNow stream through the additive daily-volume merge;
@@ -48,5 +47,4 @@ def lb_drain(
         checkpoint_dir,
         lb_daily_merge,
         empty_schema="day date, x bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -35,7 +35,6 @@ def mw_histogram_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "cents bigint, g1 int",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (cents, g1) as an
     availableNow stream through the additive histogram merge; returns
@@ -49,5 +48,4 @@ def mw_histogram_drain(
         checkpoint_dir,
         mw_histogram_merge,
         empty_schema="cents bigint, t bigint, t1 bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

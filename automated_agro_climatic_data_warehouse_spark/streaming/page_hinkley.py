@@ -195,7 +195,6 @@ def page_hinkley_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "event_type string, day date, x bigint",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s DAY-ORDERED parquet daily-rollup files as an
     availableNow stream through the ordered fold; returns the final
@@ -209,5 +208,4 @@ def page_hinkley_drain(
         checkpoint_dir,
         ph_fold,
         empty_schema=_STATE_SCHEMA,
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -96,7 +96,6 @@ def sprt_drain(
     checkpoint_dir: str,
     arm_col: Column,
     success_col: Column,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """availableNow drain of `src_dir` parquet through the per-arm
     counter chain; returns the final (arm, n, k) state. Exactly-once
@@ -110,5 +109,4 @@ def sprt_drain(
         checkpoint_dir,
         lambda batch, prev: _sprt_merge(batch, prev, arm_col, success_col),
         empty_schema="arm string, n bigint, k bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -31,7 +31,6 @@ def srm_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "day date, in_a int",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet assignment files (day, in_a) as an
     availableNow stream through the additive counter merge; returns
@@ -45,5 +44,4 @@ def srm_drain(
         checkpoint_dir,
         srm_daily_merge,
         empty_schema="day date, n_a bigint, n_b bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

@@ -135,7 +135,6 @@ def chain_drain(
     checkpoint_dir: str,
     build: Callable[[DataFrame, DataFrame | None], DataFrame],
     empty_schema: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """availableNow drain of `src_dir` parquet through the chain:
     per micro-batch, `build(batch_df, prev_state_df_or_None)` produces
@@ -144,7 +143,8 @@ def chain_drain(
     token = drain_token(checkpoint_dir)
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        # one file per micro-batch: the batch-twin contract the stream≡batch tests pin
+        .option("maxFilesPerTrigger", 1)
         .parquet(src_dir)
     )
 

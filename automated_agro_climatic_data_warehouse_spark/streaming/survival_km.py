@@ -53,7 +53,6 @@ def survival_km_drain(
     schema: str,
     state_dir: str,
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet subject files (dur bigint, censored
     int) as an availableNow stream through the additive histogram
@@ -69,5 +68,4 @@ def survival_km_drain(
         checkpoint_dir,
         km_histogram_merge,
         empty_schema="dur bigint, churned bigint, censored_n bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

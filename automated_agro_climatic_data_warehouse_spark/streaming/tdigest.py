@@ -98,7 +98,6 @@ def tdigest_drain(
     delta: int = 16,
     delta2: int = 32,
     max_state_rows: int | None = None,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files (must carry columns `id`, `qv`,
     and `shard_col`; shard values must not straddle micro-batch
@@ -134,7 +133,6 @@ def tdigest_drain(
         checkpoint_dir,
         merge,
         empty_schema=STATE_SCHEMA,
-        max_files_per_trigger=max_files_per_trigger,
     )
 
 

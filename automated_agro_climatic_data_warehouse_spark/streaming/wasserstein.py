@@ -48,7 +48,6 @@ def vhist_drain(
     state_dir: str,
     checkpoint_dir: str,
     schema: str = "event_type string, cents bigint",
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (event_type, cents)
     as an availableNow stream through the additive histogram merge;
@@ -63,5 +62,4 @@ def vhist_drain(
         checkpoint_dir,
         vhist_merge,
         empty_schema="event_type string, cents bigint, n bigint",
-        max_files_per_trigger=max_files_per_trigger,
     )

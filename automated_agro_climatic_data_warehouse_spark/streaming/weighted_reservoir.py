@@ -50,7 +50,6 @@ def weighted_reservoir_drain(
     id_col: str,
     weight_col: str,
     k: int = 256,
-    max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
     the top-k semilattice merge; returns the final (id, weight, lnu_q,
@@ -64,5 +63,4 @@ def weighted_reservoir_drain(
         checkpoint_dir,
         lambda batch, prev: _wres_merge(batch, prev, id_col, weight_col, k),
         empty_schema="id bigint, weight double, lnu_q bigint, res_key double",
-        max_files_per_trigger=max_files_per_trigger,
     )

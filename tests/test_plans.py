@@ -226,8 +226,7 @@ def test_zscore_stats_broadcast_back(spark):
 
 def test_funnel_stage_joins_shrink(spark):
     """Funnel stages must join on user_id as hash joins (no nested
-    loops); the three single-row stage counts cross-join as broadcast
-    nested loops over 1-row sides, which is the only NL allowed."""
+    loops); the three single-row stage counts are scalar subqueries."""
     plan = _plan(spark, "ev_funnel_conversion")
     assert "CartesianProduct" not in plan
 
@@ -241,12 +240,13 @@ def test_markov_totals_broadcast(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_unigram_totals_broadcast_and_single_tokenize(spark):
-    """Corpus totals ride a 1-row broadcast into the scoring join; the
+def test_unigram_totals_are_scalar_subqueries(spark):
+    """Corpus totals are scalar subqueries, not a nested-loop join; the
     word-count join stays a hash join on the token."""
     plan = _plan(spark, "ts_unigram_logprob")
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
+    assert "Subquery" in plan
+    assert "BroadcastHashJoin" in plan
+    assert "NestedLoop" not in plan and "CartesianProduct" not in plan
 
 
 def test_dedup_lines_single_doc_shuffle(spark):
@@ -269,8 +269,8 @@ def test_skew_profile_is_two_level_aggregate(spark):
 
 
 def test_pmi_topk_and_broadcast_totals(spark):
-    """PMI top-50 must plan as TakeOrderedAndProject; the 1-row corpus
-    total is the only nested-loop broadcast allowed; no cartesian."""
+    """PMI top-50 must plan as TakeOrderedAndProject; the corpus total
+    is a scalar subquery; no cartesian."""
     plan = _plan(spark, "ts_pmi_bigrams")
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -323,12 +323,13 @@ def test_q10_topk_and_broadcast_dims(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_q15_max_rides_broadcast_no_window(spark):
-    """Q15: the max-revenue filter is a 1-row broadcast crossJoin, not a
-    window — zero Window nodes in the plan."""
+def test_q15_max_is_a_scalar_subquery_no_window(spark):
+    """Q15: the max-revenue filter compares against a scalar subquery,
+    not a window — zero Window nodes in the plan."""
     plan = _plan(spark, "q15_top_supplier")
     assert "Window" not in plan
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
+    assert "Subquery" in plan
 
 
 def test_q19_part_side_prunes_before_broadcast(spark):

@@ -64,7 +64,6 @@ def test_stream_cells_equal_batch_cells(spark, tmp_path, n_files):
         str(tmp_path / f"state{n_files}"),
         str(tmp_path / f"ckpt{n_files}"),
         key_col="user_id",
-        max_files_per_trigger=1,
     )
     batch = cms_cells(
         spark.createDataFrame(rows, SCHEMA), F.col("user_id")
@@ -83,7 +82,6 @@ def test_estimates_match_batch_and_never_undercount(spark, tmp_path):
         str(tmp_path / "state_e"),
         str(tmp_path / "ckpt_e"),
         key_col="user_id",
-        max_files_per_trigger=1,
     )
     true = collections.Counter(u for _, u in rows)
     keys = spark.createDataFrame(

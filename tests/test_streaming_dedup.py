@@ -71,9 +71,7 @@ def test_streaming_dedup_gate_contract(spark, tmp_path, staged):
     src, rows = staged
     accepted_dir = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
-    accepted = dedup_ingest_drain(
-        spark, src, SCHEMA, accepted_dir, ckpt, max_files_per_trigger=1
-    )
+    accepted = dedup_ingest_drain(spark, src, SCHEMA, accepted_dir, ckpt)
     acc_ids = {r.doc_id for r in accepted.select("doc_id").collect()}
     all_ids = {i for i, _ in rows}
     rej_ids = all_ids - acc_ids
@@ -102,13 +100,9 @@ def test_streaming_dedup_redrain_is_noop(spark, tmp_path, staged):
     src, _ = staged
     accepted_dir = str(tmp_path / "accepted")
     ckpt = str(tmp_path / "ckpt")
-    first = dedup_ingest_drain(
-        spark, src, SCHEMA, accepted_dir, ckpt, max_files_per_trigger=1
-    )
+    first = dedup_ingest_drain(spark, src, SCHEMA, accepted_dir, ckpt)
     n1 = first.count()
-    again = dedup_ingest_drain(
-        spark, src, SCHEMA, accepted_dir, ckpt, max_files_per_trigger=1
-    )
+    again = dedup_ingest_drain(spark, src, SCHEMA, accepted_dir, ckpt)
     assert again.count() == n1, "re-drain over the same checkpoint appended"
 
 
@@ -147,7 +141,6 @@ def test_intra_batch_chain_keeps_endpoints(spark, tmp_path):
         SCHEMA,
         str(tmp_path / "acc"),
         str(tmp_path / "ck"),
-        max_files_per_trigger=1,
     )
     assert {r.doc_id for r in accepted.collect()} == {1, 3}
 
@@ -199,7 +192,6 @@ def test_gate_contract_holds_on_production_hash_backend(spark, tmp_path):
         str(tmp_path / "acc"),
         str(tmp_path / "ck"),
         backend="xxhash64",
-        max_files_per_trigger=1,
     )
     acc_ids = {r.doc_id for r in accepted.select("doc_id").collect()}
     rej_ids = {i for i, _ in rows} - acc_ids

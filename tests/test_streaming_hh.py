@@ -75,7 +75,6 @@ def test_mg_guarantees_any_partitioning(spark, tmp_path, n_files):
         str(tmp_path / f"ckpt{n_files}"),
         key_col="user_id",
         k=K,
-        max_files_per_trigger=1,
     )
     summary = {r.key: r.c for r in out.collect()}
     true = _true_counts(rows)
@@ -103,15 +102,11 @@ def test_redrain_same_checkpoint_is_noop(spark, tmp_path):
     )
     first = {
         r.key: r.c
-        for r in heavy_hitters_drain(
-            *args, key_col="user_id", k=K, max_files_per_trigger=1
-        ).collect()
+        for r in heavy_hitters_drain(*args, key_col="user_id", k=K).collect()
     }
     again = {
         r.key: r.c
-        for r in heavy_hitters_drain(
-            *args, key_col="user_id", k=K, max_files_per_trigger=1
-        ).collect()
+        for r in heavy_hitters_drain(*args, key_col="user_id", k=K).collect()
     }
     assert first == again
 

@@ -81,7 +81,6 @@ def test_stream_equals_batch_any_partitioning(spark, tmp_path, n_files):
         str(tmp_path / f"ckpt{n_files}"),
         key_col=F.col("week"),
         item_col="user_id",
-        max_files_per_trigger=1,
     )
     streamed = {r.key: r.n_distinct_est for r in out.collect()}
     assert streamed == _batch_estimates(spark, rows)

@@ -53,7 +53,6 @@ def test_stream_state_equals_batch_histogram(spark, tmp_path, n_files):
         str(tmp_path / f"qckpt{n_files}"),
         value_col="value",
         width=WIDTH,
-        max_files_per_trigger=1,
     )
     stream_hist = {r.bin: r.c for r in out.collect()}
     batch = spark.createDataFrame(rows, SCHEMA)
@@ -73,7 +72,6 @@ def test_quantile_bounds_bracket_truth(spark, tmp_path):
         str(tmp_path / "qckpt_b"),
         value_col="value",
         width=WIDTH,
-        max_files_per_trigger=1,
     )
     qs = [0.5, 0.9, 0.99]
     bounds = {r.q: (r.lo, r.hi) for r in quantile_bounds(hist, WIDTH, qs).collect()}
