@@ -44,14 +44,6 @@ def fahrenheit_to_celsius_if_needed(t: Column) -> Column:
     return F.when(t > 60.0, (t - 32.0) * 5.0 / 9.0).otherwise(t)
 
 
-def fraction_to_percent(c: Column) -> Column:
-    """0-1-scale fractions → 0-100 percents (reference cleaners.py:375-386).
-    Values ≤ 1 are fraction-scaled; the 0/1 ambiguity resolves to percent
-    only when any sibling column exceeds 1 — callers decide; this is the
-    per-value rule."""
-    return F.when((c >= 0.0) & (c <= 1.0), c * 100.0).otherwise(c)
-
-
 def normalize_water_mm_day(v: Column) -> Column:
     """Water-requirement normalization to mm/day (reference
     cleaners.py:428-443): values < 2 are cm/day (×10); values > 20 are
@@ -248,14 +240,6 @@ def number_word_steps() -> list[tuple[str, str]]:
     return [(_word_pattern(w), d) for w, d in NUMBER_WORDS]
 
 
-def number_words_to_digits(text: Column) -> Column:
-    """Word→digit replacement chain (reference cleaners.py:145-158)."""
-    out = text
-    for pat, repl in number_word_steps():
-        out = F.regexp_replace(out, pat, repl)
-    return out
-
-
 def clean_pipeline_steps() -> list[tuple[str, str]]:
     """The full TextCleaner.clean(aggressive=True) regex chain
     (reference cleaners.py:78-103), one (pattern, replacement) list that
@@ -274,14 +258,14 @@ def collapse_whitespace(text: Column) -> Column:
 SENTENCE_SEP = "\u0001"  # boundary sentinel; never occurs in real text
 
 
-def split_sentences(text: Column, min_len: int = 10) -> Column:
+def split_sentences(text: Column) -> Column:
     """Sentence split keeping terminal punctuation, dropping fragments
-    ≤ min_len chars (reference cleaners.py:177-183).
+    ≤ 10 chars (reference cleaners.py:177-183).
 
     RE2 (DuckDB) has no lookbehind, so instead of the reference's
     `(?<=[.!?])\\s+` we mark boundaries with a sentinel — identical
     semantics, portable dialect."""
     marked = F.regexp_replace(text, "([.!?])\\s+", "$1" + SENTENCE_SEP)
     return F.filter(
-        F.split(marked, SENTENCE_SEP), lambda s: F.length(s) > min_len
+        F.split(marked, SENTENCE_SEP), lambda s: F.length(s) > 10
     )

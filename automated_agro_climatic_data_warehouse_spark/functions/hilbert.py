@@ -29,8 +29,7 @@ extension surface alongside functions/zorder.py.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 def xy2d_py(bits: int, x: int, y: int) -> int:
@@ -50,18 +49,6 @@ def xy2d_py(bits: int, x: int, y: int) -> int:
             x, y = y, x
         s >>= 1
     return d
-
-
-def _quadrant(rx: Column, ry: Column) -> Column:
-    """(3*rx) XOR ry for rx, ry in {0, 1} — written as a CASE so the
-    same arithmetic-only form works verbatim in the SQL twin."""
-    return (
-        F.when(ry == 0, 3 * rx)
-        .when(rx == 0, F.lit(1))
-        .otherwise(F.lit(2))
-    )
-
-
 
 
 def with_hilbert(
@@ -151,17 +138,17 @@ def with_hilbert(
     return spark.sql(sql, src=df)
 
 
-def hilbert_sql_chain(bits: int, base: str, first_cte: str = "hlvl") -> str:
+def hilbert_sql_chain(bits: int, base: str) -> str:
     """The DuckDB twin: chained CTE bodies replaying the identical
     recurrence level by level. `base` must expose columns (hx, hy, hd)
     plus any carried columns referenced downstream via `* EXCLUDE`.
-    Returns text of the form `name0 AS (...), name1 AS (...), ...`;
-    the final CTE is `{first_cte}{bits - 1}` with hd complete."""
+    Returns text of the form `hlvl0 AS (...), hlvl1 AS (...), ...`;
+    the final CTE is `hlvl{bits - 1}` with hd complete."""
     ctes = []
     prev = base
     for i, b in enumerate(range(bits - 1, -1, -1)):
         s = 1 << b
-        name = f"{first_cte}{i}"
+        name = f"hlvl{i}"
         ctes.append(
             f"""{name} AS (
       SELECT * EXCLUDE (hx, hy, hd, rx, ry),
@@ -183,23 +170,3 @@ def hilbert_sql_chain(bits: int, base: str, first_cte: str = "hlvl") -> str:
         prev = name
     return ", ".join(ctes)
 
-
-def write_hilbert_clustered(
-    df: DataFrame,
-    path: str,
-    x_col: str,
-    y_col: str,
-    bits: int = 16,
-    num_files: int = 8,
-) -> None:
-    """Write `df` as parquet clustered on the Hilbert index of two
-    pre-ranked integer columns — the write-time twin of
-    zorder.write_zordered with the tighter curve."""
-    staged = with_hilbert(df, x_col, y_col, bits, out="__h")
-    (
-        staged.repartitionByRange(num_files, "__h")
-        .sortWithinPartitions("__h")
-        .drop("__h")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

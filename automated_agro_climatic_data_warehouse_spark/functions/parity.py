@@ -42,19 +42,16 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_DEC = "decimal(28,6)"
-
-
 def dsum(col: Column | str, scale: int = 6) -> Column:
     """Order-insensitive exact sum of a double column, returned as double."""
     c = F.col(col) if isinstance(col, str) else col
     return F.sum(c.cast(f"decimal(28,{scale})")).cast("double")
 
 
-def davg(col: Column | str, scale: int = 6) -> Column:
+def davg(col: Column | str) -> Column:
     """Order-insensitive average: exact decimal sum / count, as double."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(28,{scale})")).cast("double") / F.count(c)
+    return F.sum(c.cast("decimal(28,6)")).cast("double") / F.count(c)
 
 
 def DSUM_SQL(expr: str, scale: int = 6) -> str:
@@ -62,8 +59,6 @@ def DSUM_SQL(expr: str, scale: int = 6) -> str:
     return f"CAST(sum(CAST({expr} AS DECIMAL(28,{scale}))) AS DOUBLE)"
 
 
-def DAVG_SQL(expr: str, scale: int = 6) -> str:
+def DAVG_SQL(expr: str) -> str:
     """DuckDB twin of davg()."""
-    return (
-        f"CAST(sum(CAST({expr} AS DECIMAL(28,{scale}))) AS DOUBLE) / count({expr})"
-    )
+    return f"CAST(sum(CAST({expr} AS DECIMAL(28,6))) AS DOUBLE) / count({expr})"

@@ -62,9 +62,8 @@ def write_zordered(
     cols: Sequence[str],
     bounds: dict[str, tuple[float, float]],
     bits: int = 16,
-    num_files: int = 8,
 ) -> None:
-    """Write `df` as parquet clustered on the z-order of `cols`.
+    """Write `df` as parquet in 8 files clustered on the z-order of `cols`.
 
     `bounds[col] = (lo, hi)` for each clustering column (from stats).
     repartitionByRange on the z-value gives each output file a contiguous
@@ -75,7 +74,7 @@ def write_zordered(
     ]
     staged = df.withColumn("__z", zvalue(ranks, bits=bits))
     (
-        staged.repartitionByRange(num_files, "__z")
+        staged.repartitionByRange(8, "__z")
         .sortWithinPartitions("__z")
         .drop("__z")
         .write.mode("overwrite")

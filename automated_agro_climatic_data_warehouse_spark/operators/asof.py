@@ -46,14 +46,13 @@ def asof_join(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str],
-    ts_col: str = "ts",
     value_cols: Sequence[str] | None = None,
     direction: str = "backward",
     tolerance_sec: float | None = None,
 ) -> DataFrame:
     """Left rows + latest right `value_cols` as of each left row's ts
     (null when no prior observation exists). `on` is the equi-key set;
-    both inputs must carry `ts_col`.
+    both inputs must carry a `ts` column.
 
     `direction`: "backward" (default — most recent right.ts <= left.ts)
     or "forward" (NEAREST FUTURE right.ts >= left.ts — the lookup a
@@ -73,30 +72,30 @@ def asof_join(
         raise ValueError(f"unknown asof direction: {direction!r}")
     on = list(on)
     value_cols = list(value_cols or [c for c in right.columns
-                                     if c not in (*on, ts_col)])
-    left_payload = [c for c in left.columns if c not in (*on, ts_col)]
+                                     if c not in (*on, "ts")])
+    left_payload = [c for c in left.columns if c not in (*on, "ts")]
 
     pack_type = StructType(
-        [StructField("__rts", right.schema[ts_col].dataType)]
+        [StructField("__rts", right.schema["ts"].dataType)]
         + [StructField(c, right.schema[c].dataType) for c in value_cols]
     )
     r = right.select(
-        *on, ts_col, F.lit(0).alias("__side"),
+        *on, "ts", F.lit(0).alias("__side"),
         F.struct(
-            F.col(ts_col).alias("__rts"), *[F.col(c) for c in value_cols]
+            F.col("ts").alias("__rts"), *[F.col(c) for c in value_cols]
         ).alias("__pack"),
         *[F.lit(None).cast(left.schema[c].dataType).alias(c)
           for c in left_payload],
     )
     lft = left.select(
-        *on, ts_col, F.lit(1).alias("__side"),
+        *on, "ts", F.lit(1).alias("__side"),
         F.lit(None).cast(pack_type).alias("__pack"),
         *[F.col(c) for c in left_payload],
     )
     order = (
-        [F.col(ts_col).asc(), F.col("__side").asc()]
+        [F.col("ts").asc(), F.col("__side").asc()]
         if direction == "backward"
-        else [F.col(ts_col).desc(), F.col("__side").asc()]
+        else [F.col("ts").desc(), F.col("__side").asc()]
     )
     w = (
         W.partitionBy(*on)
@@ -104,7 +103,7 @@ def asof_join(
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     carried = r.unionByName(lft).select(
-        *on, ts_col, "__side", *left_payload,
+        *on, "ts", "__side", *left_payload,
         F.last("__pack", ignorenulls=True).over(w).alias("__pack"),
     )
     if tolerance_sec is None:
@@ -112,13 +111,13 @@ def asof_join(
     else:
         from pyspark.sql.types import TimestampType
 
-        if isinstance(right.schema[ts_col].dataType, TimestampType):
-            gap = F.unix_micros(F.col(ts_col)) - F.unix_micros(
+        if isinstance(right.schema["ts"].dataType, TimestampType):
+            gap = F.unix_micros(F.col("ts")) - F.unix_micros(
                 F.col("__pack.__rts")
             )
             bound = F.lit(int(tolerance_sec * 1_000_000))
         else:
-            gap = F.col(ts_col) - F.col("__pack.__rts")
+            gap = F.col("ts") - F.col("__pack.__rts")
             bound = F.lit(tolerance_sec)
         if direction == "forward":
             gap = -gap
@@ -128,5 +127,5 @@ def asof_join(
         ]
     return (
         carried.filter(F.col("__side") == 1)
-        .select(*on, ts_col, *left_payload, *vals)
+        .select(*on, "ts", *left_payload, *vals)
     )

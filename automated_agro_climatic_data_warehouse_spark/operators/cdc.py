@@ -80,10 +80,8 @@ def snapshot_diff(
     )
 
 
-def changelog_latest(
-    changelog: DataFrame, key: str = "k", seq: str = "seq"
-) -> DataFrame:
-    """Per-key LAST operation of an ordered I/U/D changelog — the
+def changelog_latest(changelog: DataFrame) -> DataFrame:
+    """Per-`k` LAST operation of a `seq`-ordered I/U/D changelog — the
     row_number-over-seq-DESC window every CDC consumer runs before
     applying (the S11 upsert discipline extended with an op column).
     `seq` must be unique per key (the standard CDC-log contract: LSN /
@@ -97,7 +95,7 @@ def changelog_latest(
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window as W
 
-    wlast = W.partitionBy(key).orderBy(F.desc(seq))
+    wlast = W.partitionBy("k").orderBy(F.desc("seq"))
     return (
         changelog.withColumn("__rn", F.row_number().over(wlast))
         .filter(F.col("__rn") == 1)
@@ -105,14 +103,9 @@ def changelog_latest(
     )
 
 
-def apply_latest(
-    base: DataFrame,
-    latest: DataFrame,
-    base_key: str = "o_orderkey",
-    base_val: str = "o_totalprice",
-) -> DataFrame:
+def apply_latest(base: DataFrame, latest: DataFrame) -> DataFrame:
     """Apply a per-key-latest changelog frame (k, op, price) onto a
-    2-column base snapshot: untouched base rows carry through (anti-
+    (o_orderkey, o_totalprice) base snapshot: untouched base rows carry through (anti-
     join), deletes drop, inserts/updates survive with provenance.
     Shared by the batch query (cdc_apply_changelog) and the streaming
     drain's readout so 'apply' is one definition. Two uniform-key
@@ -121,16 +114,16 @@ def apply_latest(
 
     untouched = base.join(
         latest.select("k"),
-        base[base_key] == F.col("k"),
+        base["o_orderkey"] == F.col("k"),
         "left_anti",
     ).select(
-        F.col(base_key),
-        F.col(base_val),
+        F.col("o_orderkey"),
+        F.col("o_totalprice"),
         F.lit("kept").alias("provenance"),
     )
     applied = latest.filter(F.col("op") != "D").select(
-        F.col("k").alias(base_key),
-        F.col("price").alias(base_val),
+        F.col("k").alias("o_orderkey"),
+        F.col("price").alias("o_totalprice"),
         F.when(F.col("op") == "I", "inserted")
         .otherwise("updated")
         .alias("provenance"),

@@ -41,6 +41,25 @@ from pyspark.sql.window import Window as W
 
 from ..session import materialize
 
+# MinHash geometry: 8 hash functions in 4 bands of 2 rows.
+NUM_HASHES = 8
+ROWS_PER_BAND = 2
+
+# PPJoin's Jaccard threshold τ = 19/20, shared with the oracle twins.
+PPJOIN_TAU_NUM, PPJOIN_TAU_DEN = 19, 20
+
+# Document-frequency stop-gram cap for the exact inverted-index join: a
+# shingle appearing in k docs emits ~k²/2 candidate pairs from the self-join,
+# so one boilerplate 3-gram ("terms of service") in 10⁶ docs is a
+# reducer-killing 5·10¹¹-pair key at 100 TB. Dropping shingles with df >
+# MAX_SHINGLE_DF from CANDIDATE GENERATION ONLY (the Jaccard verify still
+# counts every shingle, so reported values stay exact) is the standard
+# stop-gram move: a true near-dup pair at threshold 0.5 shares half its
+# shingles, and the chance that ALL shared shingles are corpus-boilerplate is
+# negligible at any sane cap. Bounds candidate blowup at MAX_SHINGLE_DF²/2
+# pairs per shingle. The oracle twins read the same cap for exact parity.
+MAX_SHINGLE_DF = 100
+
 
 def dedup_hash_backend() -> str:
     """The hash backend the SPARK_GRAFT_DEDUP_HASH env var names: "md5"
@@ -52,11 +71,10 @@ def dedup_hash_backend() -> str:
     return backend
 
 
-def hash32(c: Column, seed: int | None = None) -> Column:
+def hash32(c: Column) -> Column:
     """Portable 32-bit hash: first 8 hex chars of md5 as bigint.
     DuckDB twin: CAST('0x' || substr(md5(x), 1, 8) AS BIGINT)."""
-    x = F.concat(F.lit(f"{seed}:"), c) if seed is not None else c
-    return F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint")
+    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
 
 
 def hash64(c: Column) -> Column:
@@ -75,25 +93,24 @@ def hash64(c: Column) -> Column:
     return signed_hi * F.lit(4294967296) + lo
 
 
-def shingle_docs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                 n: int = 3, distinct: bool = True) -> DataFrame:
-    """Word n-gram shingles per document. One narrow explode — linear in
+def shingle_docs(docs: DataFrame, distinct: bool = True) -> DataFrame:
+    """Word 3-gram shingles per document. One narrow explode — linear in
     corpus size, no shuffle until the consumer aggregates.
 
     distinct=False skips the dedup shuffle — correct for consumers that are
     duplicate-insensitive (min-hash aggregation); set semantics (Jaccard
     counting) need distinct=True."""
-    words = F.split(F.lower(F.col(text_col)), "\\s+")
+    words = F.split(F.lower(F.col("text")), "\\s+")
     nw = F.size(words)
-    idx = F.when(nw >= n, F.sequence(F.lit(1), nw - (n - 1))).otherwise(
+    idx = F.when(nw >= 3, F.sequence(F.lit(1), nw - 2)).otherwise(
         F.array().cast("array<int>")
     )
     gram = F.concat_ws(
-        " ", *[F.element_at(F.col("__w"), F.col("i") + j) for j in range(n)]
+        " ", *[F.element_at(F.col("__w"), F.col("i") + j) for j in range(3)]
     )
     out = (
-        docs.select(id_col, F.explode(idx).alias("i"), words.alias("__w"))
-        .select(id_col, gram.alias("shingle"))
+        docs.select("doc_id", F.explode(idx).alias("i"), words.alias("__w"))
+        .select("doc_id", gram.alias("shingle"))
     )
     return out.distinct() if distinct else out
 
@@ -117,8 +134,7 @@ def _minhash_fn(c: Column, i: int, backend: str) -> Column:
     raise ValueError(f"unknown dedup hash backend: {backend!r}")
 
 
-def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id",
-                       num_hashes: int = 8, backend: str = "md5") -> DataFrame:
+def minhash_signatures(shingles: DataFrame, backend: str = "md5") -> DataFrame:
     """k min-hashes per doc in ONE groupBy, single shuffle on doc id.
     Under the md5 backend each seeded digest yields FOUR hash functions
     (hex chunks), so k hashes cost ⌈k/4⌉ md5 evaluations per shingle —
@@ -140,22 +156,19 @@ def minhash_signatures(shingles: DataFrame, id_col: str = "doc_id",
     literals are unaffected — simhash_fingerprints' 16 bit-vote filters
     are oracle-pinned correct. Until the engine fixes lambda binding,
     the explode+groupBy shape is the one whose results we can trust.)"""
-    return shingles.groupBy(id_col).agg(
+    return shingles.groupBy("doc_id").agg(
         *[
             F.min(_minhash_fn(F.col("shingle"), i, backend)).alias(f"mh{i}")
-            for i in range(num_hashes)
+            for i in range(NUM_HASHES)
         ]
     )
 
 
-def lsh_band_signatures(minhashes: DataFrame, id_col: str = "doc_id",
-                        rows_per_band: int = 2, num_hashes: int = 8,
-                        backend: str = "md5") -> DataFrame:
+def lsh_band_signatures(minhashes: DataFrame, backend: str = "md5") -> DataFrame:
     """Banded LSH signatures: a hash over each band's minhash tuple
     (md5 hex under the parity backend, xxhash64 bigint under production —
     the sig is only ever used as a join key, so its type is free).
     Docs agreeing on ANY band become candidates."""
-    num_bands = num_hashes // rows_per_band
 
     def band_sig(cols):
         joined = F.concat_ws(",", *cols)
@@ -170,20 +183,20 @@ def lsh_band_signatures(minhashes: DataFrame, id_col: str = "doc_id",
                 F.lit(b).alias("band_id"),
                 band_sig(
                     [
-                        F.col(f"mh{b * rows_per_band + r}").cast("string")
-                        for r in range(rows_per_band)
+                        F.col(f"mh{b * ROWS_PER_BAND + r}").cast("string")
+                        for r in range(ROWS_PER_BAND)
                     ]
                 ).alias("sig"),
             )
-            for b in range(num_bands)
+            for b in range(NUM_HASHES // ROWS_PER_BAND)
         ]
     )
-    return minhashes.select(id_col, F.explode(sigs).alias("__bs")).select(
-        id_col, F.col("__bs.band_id").alias("band_id"), F.col("__bs.sig").alias("sig")
+    return minhashes.select("doc_id", F.explode(sigs).alias("__bs")).select(
+        "doc_id", F.col("__bs.band_id").alias("band_id"), F.col("__bs.sig").alias("sig")
     )
 
 
-def lsh_candidate_pairs(band_sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def lsh_candidate_pairs(band_sigs: DataFrame) -> DataFrame:
     """Self-join on (band_id, sig): the candidate pairs. The join key is a
     128-bit signature → uniform, no skew; output is near-linear for
     non-pathological corpora.
@@ -199,10 +212,10 @@ def lsh_candidate_pairs(band_sigs: DataFrame, id_col: str = "doc_id") -> DataFra
     unpinned deliberately; the verify starvation is bounded by the
     candidate count, which LSH banding keeps near-linear."""
     a = band_sigs.select(
-        F.col(id_col).alias("doc_a"), "band_id", "sig"
+        F.col("doc_id").alias("doc_a"), "band_id", "sig"
     )
     b = band_sigs.select(
-        F.col(id_col).alias("doc_b"), "band_id", "sig"
+        F.col("doc_id").alias("doc_b"), "band_id", "sig"
     )
     return (
         a.join(b, ["band_id", "sig"])
@@ -213,8 +226,7 @@ def lsh_candidate_pairs(band_sigs: DataFrame, id_col: str = "doc_id") -> DataFra
 
 
 def jaccard_verify(candidates: DataFrame, shingles: DataFrame,
-                   id_col: str = "doc_id", threshold: float = 0.6,
-                   pruned: bool = False) -> DataFrame:
+                   threshold: float = 0.6, pruned: bool = False) -> DataFrame:
     """Exact Jaccard over candidate pairs via per-doc shingle SETS:
     one groupBy collapses the (distinct) shingle rows to an array per
     doc, the candidate frame joins that compact table twice on the id,
@@ -245,8 +257,8 @@ def jaccard_verify(candidates: DataFrame, shingles: DataFrame,
         # the distinct was a redundant exchange (its own input shuffle
         # moves the same id rows the join's build now shuffles once)
         cand_ids = candidates.select(
-            F.col("doc_a").alias(id_col)
-        ).unionByName(candidates.select(F.col("doc_b").alias(id_col)))
+            F.col("doc_a").alias("doc_id")
+        ).unionByName(candidates.select(F.col("doc_b").alias("doc_id")))
         # prune the shingle frame to docs that actually appear in a pair
         # BEFORE the per-doc set aggregation — callers that pass the full
         # corpus index (ngram_jaccard_pairs) would otherwise pay the
@@ -254,7 +266,7 @@ def jaccard_verify(candidates: DataFrame, shingles: DataFrame,
         # the candidate-id frame is collision-bounded but not
         # size-bounded at corpus scale, so the planner/AQE decides from
         # its measured size (r11 verdict item 5).
-        sh = shingles.join(cand_ids, id_col, "left_semi")
+        sh = shingles.join(cand_ids, "doc_id", "left_semi")
     # The explicit-N repartition on the id is the groupBy's own
     # exchange (reused, not an extra shuffle), pinned so AQE's
     # byte-based coalescing doesn't run the row-expensive collect_set
@@ -263,16 +275,16 @@ def jaccard_verify(candidates: DataFrame, shingles: DataFrame,
     # interleaved best-of-6 — the _ppjoin_candidates starvation fix).
     arrs = (
         sh.repartition(
-            shingles.sparkSession.sparkContext.defaultParallelism, id_col
+            shingles.sparkSession.sparkContext.defaultParallelism, "doc_id"
         )
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.collect_set("shingle").alias("__toks"))
     )
     aa = arrs.select(
-        F.col(id_col).alias("doc_a"), F.col("__toks").alias("__ta")
+        F.col("doc_id").alias("doc_a"), F.col("__toks").alias("__ta")
     )
     ab = arrs.select(
-        F.col(id_col).alias("doc_b"), F.col("__toks").alias("__tb")
+        F.col("doc_id").alias("doc_b"), F.col("__toks").alias("__tb")
     )
     return (
         candidates.join(aa, "doc_a")
@@ -299,10 +311,9 @@ def jaccard_verify(candidates: DataFrame, shingles: DataFrame,
     )
 
 
-def minhash_lsh_dedup(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", threshold: float = 0.6,
-                      backend: str = "md5") -> DataFrame:
-    """Full MinHash-LSH near-dup pipeline: (doc_a, doc_b, jaccard).
+def minhash_lsh_dedup(docs: DataFrame, backend: str = "md5") -> DataFrame:
+    """Full MinHash-LSH near-dup pipeline: (doc_a, doc_b, jaccard) pairs
+    at Jaccard >= 0.6.
     `backend` picks the signature hash (module docstring): "md5" for
     oracle parity, "xxhash64" for production throughput; the exact-
     Jaccard verify is backend-independent.
@@ -317,8 +328,7 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str = "doc_id",
       some candidate pair (semi-join pre-filter) — at production scale
       candidates ≪ corpus, so the heavy set-intersection join touches a
       tiny slice instead of the whole shingle index."""
-    mh = minhash_signatures(shingle_docs(docs, id_col, text_col, distinct=False),
-                            id_col, backend=backend)
+    mh = minhash_signatures(shingle_docs(docs, distinct=False), backend=backend)
     # the signature table is one row per doc — tiny next to the corpus;
     # materialize it so the LSH self-join's two sides don't each recompute
     # the full shingle+hash DAG (in production this IS the persisted index).
@@ -326,34 +336,33 @@ def minhash_lsh_dedup(docs: DataFrame, id_col: str = "doc_id",
     # it completes, so the self-join's two stages would each re-run the
     # whole shingle+md5 lineage (measured 3.3× slower at sf0.1).
     mh = materialize(mh, "minhash_lsh_dedup.mh")
-    cand = lsh_candidate_pairs(lsh_band_signatures(mh, id_col, backend=backend), id_col)
+    cand = lsh_candidate_pairs(lsh_band_signatures(mh, backend=backend))
     cand = materialize(cand, "minhash_lsh_dedup.cand")
     # no distinct: the left-semi join below dedupes its build side —
     # the distinct was one redundant exchange over the candidate ids
-    cand_ids = cand.select(F.col("doc_a").alias(id_col)).unionByName(
-        cand.select(F.col("doc_b").alias(id_col))
+    cand_ids = cand.select(F.col("doc_a").alias("doc_id")).unionByName(
+        cand.select(F.col("doc_b").alias("doc_id"))
     )
     # shingle ONLY candidate docs for the verify — the heavy set-
     # intersection join touches a tiny slice instead of the whole
     # corpus. No broadcast hint: cand_ids is collision-bounded but not
     # size-bounded at 100 TB; AQE broadcasts it when it measures small
     # (r11 verdict item 5).
-    docs_cand = docs.join(cand_ids, id_col, "left_semi")
+    docs_cand = docs.join(cand_ids, "doc_id", "left_semi")
     # distinct=False: jaccard_verify's collect_set dedupes shingles
     # per doc anyway — the explicit distinct would be one more
     # full shuffle of the candidate shingles for nothing.
     # pruned=True: docs are already candidate-only, so the verify's
     # own semi-join prune would be a no-op filter — skipped.
-    sh_cand = shingle_docs(docs_cand, id_col, text_col, distinct=False)
-    return jaccard_verify(cand, sh_cand, id_col, threshold, pruned=True)
+    sh_cand = shingle_docs(docs_cand, distinct=False)
+    return jaccard_verify(cand, sh_cand, 0.6, pruned=True)
 
 
 def minhash_lsh_incremental(new_docs: DataFrame, indexed_docs: DataFrame,
-                            id_col: str = "doc_id", text_col: str = "text",
-                            threshold: float = 0.6,
                             backend: str = "md5") -> DataFrame:
     """INCREMENTAL near-dup detection: today's batch against the already-
-    indexed corpus — (new_id, indexed_id, jaccard) pairs only, never
+    indexed corpus — (new_id, indexed_id, jaccard) pairs at Jaccard
+    >= 0.6 only, never
     indexed×indexed. This is how a production pipeline actually runs
     dedup: the full self-join happens once at bootstrap; every
     subsequent day LSH-joins only the delta's band signatures against
@@ -366,23 +375,21 @@ def minhash_lsh_incremental(new_docs: DataFrame, indexed_docs: DataFrame,
     the exact-Jaccard verify over shingles of candidate docs only."""
     mh_new = materialize(
         minhash_signatures(
-            shingle_docs(new_docs, id_col, text_col, distinct=False),
-            id_col, backend=backend,
+            shingle_docs(new_docs, distinct=False), backend=backend
         ),
         "minhash_lsh_incremental.mh_new",
     )
     mh_idx = materialize(
         minhash_signatures(
-            shingle_docs(indexed_docs, id_col, text_col, distinct=False),
-            id_col, backend=backend,
+            shingle_docs(indexed_docs, distinct=False), backend=backend
         ),
         "minhash_lsh_incremental.mh_idx",
     )
-    bands_new = lsh_band_signatures(mh_new, id_col, backend=backend).select(
-        F.col(id_col).alias("doc_a"), "band_id", "sig"
+    bands_new = lsh_band_signatures(mh_new, backend=backend).select(
+        F.col("doc_id").alias("doc_a"), "band_id", "sig"
     )
-    bands_idx = lsh_band_signatures(mh_idx, id_col, backend=backend).select(
-        F.col(id_col).alias("doc_b"), "band_id", "sig"
+    bands_idx = lsh_band_signatures(mh_idx, backend=backend).select(
+        F.col("doc_id").alias("doc_b"), "band_id", "sig"
     )
     cand = materialize(
         bands_new.join(bands_idx, ["band_id", "sig"])
@@ -391,26 +398,25 @@ def minhash_lsh_incremental(new_docs: DataFrame, indexed_docs: DataFrame,
         "minhash_lsh_incremental.cand",
     )
     # no distinct: left-semi joins dedupe their build sides
-    a_ids = cand.select(F.col("doc_a").alias(id_col))
-    b_ids = cand.select(F.col("doc_b").alias(id_col))
+    a_ids = cand.select(F.col("doc_a").alias("doc_id"))
+    b_ids = cand.select(F.col("doc_b").alias("doc_id"))
     # distinct=False: jaccard_verify's collect_set dedupes per doc.
     # No broadcast hints (candidate-id frames are not size-bounded at
     # scale; AQE broadcasts when measured small) and pruned=True (both
     # sides already candidate-only, the verify's own prune is a no-op).
     sh = shingle_docs(
-        new_docs.join(a_ids, id_col, "left_semi"),
-        id_col, text_col, distinct=False,
+        new_docs.join(a_ids, "doc_id", "left_semi"),
+        distinct=False,
     ).unionByName(
         shingle_docs(
-            indexed_docs.join(b_ids, id_col, "left_semi"),
-            id_col, text_col, distinct=False,
+            indexed_docs.join(b_ids, "doc_id", "left_semi"),
+            distinct=False,
         )
     )
-    return jaccard_verify(cand, sh, id_col, threshold, pruned=True)
+    return jaccard_verify(cand, sh, 0.6, pruned=True)
 
 
-def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text", bits: int = 16) -> DataFrame:
+def simhash_fingerprints(docs: DataFrame, bits: int = 16) -> DataFrame:
     """SimHash: tokens vote ±1 per bit of their hash; positive-sum bits
     set the fingerprint bit (a bit is set when set-votes outnumber
     clear-votes: 2·|set| > |tokens|).
@@ -443,9 +449,9 @@ def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
 
     if bits <= 32:
         staged = docs.select(
-            id_col,
+            "doc_id",
             F.transform(
-                F.split(F.lower(F.col(text_col)), "\\s+"), lambda w: hash32(w)
+                F.split(F.lower(F.col("text")), "\\s+"), lambda w: hash32(w)
             ).alias("__h"),
         )
         fp_sql = " + ".join(
@@ -454,14 +460,14 @@ def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
             for b in range(bits)
         )
         return staged.select(
-            id_col, F.expr(f"CAST({fp_sql} AS BIGINT)").alias("simhash")
+            "doc_id", F.expr(f"CAST({fp_sql} AS BIGINT)").alias("simhash")
         )
 
     hashed = docs.select(
-        id_col,
-        F.explode(F.split(F.lower(F.col(text_col)), "\\s+")).alias("__w"),
-    ).select(id_col, hash64(F.col("__w")).alias("__h"))
-    votes = hashed.groupBy(id_col).agg(
+        "doc_id",
+        F.explode(F.split(F.lower(F.col("text")), "\\s+")).alias("__w"),
+    ).select("doc_id", hash64(F.col("__w")).alias("__h"))
+    votes = hashed.groupBy("doc_id").agg(
         *[
             F.expr(
                 f"sum(CASE WHEN (shiftright(__h, {b}) & 1) = 1"
@@ -475,30 +481,28 @@ def simhash_fingerprints(docs: DataFrame, id_col: str = "doc_id",
         for b in range(bits)
     )
     return votes.select(
-        id_col, F.expr(f"CAST({fp_sql} AS BIGINT)").alias("simhash")
+        "doc_id", F.expr(f"CAST({fp_sql} AS BIGINT)").alias("simhash")
     )
 
 
-def containment_verify(candidates: DataFrame, shingles: DataFrame,
-                       id_col: str = "doc_id",
-                       threshold: float = 0.8) -> DataFrame:
+def containment_verify(candidates: DataFrame, shingles: DataFrame) -> DataFrame:
     """Exact CONTAINMENT C(A,B) = |A∩B| / min(|A|,|B|) over candidate
     pairs — the asymmetric near-dup measure that catches
     quotation/subset duplicates (a doc embedded inside a larger one)
     which Jaccard misses when sizes differ (J = ni/(na+nb-ni) → 0 as
     the host grows, C stays 1). Same inverted-index intersection plan as
     jaccard_verify; integer ratio, engine-reproducible."""
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("n"))
-    sa = shingles.select(F.col(id_col).alias("doc_a"), "shingle")
-    sb = shingles.select(F.col(id_col).alias("doc_b"), "shingle")
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    sa = shingles.select(F.col("doc_id").alias("doc_a"), "shingle")
+    sb = shingles.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
         candidates.join(sa, "doc_a")
         .join(sb, ["doc_b", "shingle"])
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("ni"))
     )
-    na = sizes.select(F.col(id_col).alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n").alias("nb"))
+    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
+    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     return (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
@@ -511,46 +515,40 @@ def containment_verify(candidates: DataFrame, shingles: DataFrame,
                 / F.least(F.col("na"), F.col("nb"))
             ).alias("containment"),
         )
-        .filter(F.col("containment") >= threshold)
+        .filter(F.col("containment") >= 0.8)
     )
 
 
-def containment_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    max_shingle_df: int = 100,
-) -> DataFrame:
-    """Near-containment pairs via the df-capped inverted-index candidate
-    join (identical bounded-blowup guard to ngram_jaccard_pairs) +
-    exact containment verify over FULL shingle sets."""
-    sh = materialize(shingle_docs(docs, id_col, text_col), "containment_pairs.sh")
+def containment_pairs(docs: DataFrame) -> DataFrame:
+    """Near-containment pairs (containment >= 0.8) via the df-capped
+    inverted-index candidate join (identical bounded-blowup guard to
+    ngram_jaccard_pairs) + exact containment verify over FULL shingle
+    sets."""
+    sh = materialize(shingle_docs(docs), "containment_pairs.sh")
     rare = sh.join(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_shingle_df)
+        .filter(F.col("df") <= MAX_SHINGLE_DF)
         .select("shingle"),
         "shingle",
-    ).select(id_col, "shingle")
+    ).select("doc_id", "shingle")
     pairs = (
         rare.alias("sa")
         .join(
             rare.alias("sb"),
             (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
+            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
         )
         .select(
-            F.col(f"sa.{id_col}").alias("doc_a"),
-            F.col(f"sb.{id_col}").alias("doc_b"),
+            F.col("sa.doc_id").alias("doc_a"),
+            F.col("sb.doc_id").alias("doc_b"),
         )
         .distinct()
     )
-    return containment_verify(pairs, sh, id_col, threshold)
+    return containment_verify(pairs, sh)
 
 
-def simhash_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
-                          bits: int = 64, band_bits: int = 16,
+def simhash_hamming_pairs(fp: DataFrame, bits: int = 64, band_bits: int = 16,
                           max_hamming: int = 3) -> DataFrame:
     """Near-dup pairs at hamming distance ≤ max_hamming via BAND
     BLOCKING (Manku et al.'s web-dedup configuration at the 64/16
@@ -577,7 +575,7 @@ def simhash_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
     mask = (1 << band_bits) - 1
     fp = materialize(fp, "simhash_hamming_pairs.fp")  # feeds both sides of the join
     bands = fp.select(
-        id_col,
+        "doc_id",
         "simhash",
         F.posexplode(
             F.array(
@@ -596,12 +594,12 @@ def simhash_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
             bands.alias("y"),
             (F.col("x.band") == F.col("y.band"))
             & (F.col("x.bval") == F.col("y.bval"))
-            & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")),
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
         )
         .select(
-            F.col(f"x.{id_col}").alias("doc_a"),
+            F.col("x.doc_id").alias("doc_a"),
             F.col("x.simhash").alias("sim_a"),
-            F.col(f"y.{id_col}").alias("doc_b"),
+            F.col("y.doc_id").alias("doc_b"),
             F.col("y.simhash").alias("sim_b"),
         )
         .distinct()
@@ -619,11 +617,7 @@ def simhash_hamming_pairs(fp: DataFrame, id_col: str = "doc_id",
 
 
 def ngram_jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-    max_shingle_df: int = 100,
+    docs: DataFrame, threshold: float = 0.5, max_shingle_df: int = MAX_SHINGLE_DF
 ) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via the shingle inverted
     index, with the document-frequency stop-gram cap on CANDIDATE
@@ -633,24 +627,24 @@ def ngram_jaccard_pairs(
     Jaccard verify still scores FULL shingle sets, so emitted values are
     exact. tests/test_dedup_backends.py pins the bounded-blowup property
     on a worst-case corpus where every document shares one shingle."""
-    sh = materialize(shingle_docs(docs, id_col, text_col), "ngram_jaccard_pairs.sh")
+    sh = materialize(shingle_docs(docs), "ngram_jaccard_pairs.sh")
     rare = sh.join(
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") <= max_shingle_df)
         .select("shingle"),
         "shingle",
-    ).select(id_col, "shingle")
+    ).select("doc_id", "shingle")
     pairs = materialize(
         rare.alias("sa")
         .join(
             rare.alias("sb"),
             (F.col("sa.shingle") == F.col("sb.shingle"))
-            & (F.col(f"sa.{id_col}") < F.col(f"sb.{id_col}")),
+            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
         )
         .select(
-            F.col(f"sa.{id_col}").alias("doc_a"),
-            F.col(f"sb.{id_col}").alias("doc_b"),
+            F.col("sa.doc_id").alias("doc_a"),
+            F.col("sb.doc_id").alias("doc_b"),
         )
         # same two fixes as the PPJoin/minhash candidate frames: pin
         # the distinct at cluster parallelism (byte-small pair rows,
@@ -666,12 +660,10 @@ def ngram_jaccard_pairs(
         .distinct(),
         "ngram_jaccard_pairs.pairs",
     )
-    return jaccard_verify(pairs, sh, id_col, threshold)
+    return jaccard_verify(pairs, sh, threshold)
 
 
-def ppjoin_set_groups(
-    tok: DataFrame, id_col: str = "doc_id", token_col: str = "token"
-) -> DataFrame:
+def ppjoin_set_groups(tok: DataFrame) -> DataFrame:
     """Collapse identical token-SETS into groups: one row per input id
     with its group key (`fp`, md5 of the JSON-encoded sorted token
     array — injective for string arrays, so no false merges), the
@@ -682,20 +674,18 @@ def ppjoin_set_groups(
     k²/2 pairs through verification; after collapsing, the pair
     machinery sees ONE representative per distinct set and clique
     width is capped at the distinct-set count."""
-    tsets = tok.groupBy(id_col).agg(
-        F.sort_array(F.collect_set(token_col)).alias("toks")
+    tsets = tok.groupBy("doc_id").agg(
+        F.sort_array(F.collect_set("token")).alias("toks")
     )
     g = tsets.withColumn("fp", F.md5(F.to_json("toks")))
     reps = g.groupBy("fp").agg(
-        F.min(id_col).alias("rid"),
+        F.min("doc_id").alias("rid"),
         F.count(F.lit(1)).cast("bigint").alias("mult"),
     )
-    return g.select("fp", F.col(id_col).alias("mid")).join(reps, "fp")
+    return g.select("fp", F.col("doc_id").alias("mid")).join(reps, "fp")
 
 
-def _ppjoin_candidates(
-    tok: DataFrame, id_col: str, token_col: str, tau_num: int, tau_den: int
-) -> DataFrame:
+def _ppjoin_candidates(tok: DataFrame, tau_num: int, tau_den: int) -> DataFrame:
     """Prefix-filter candidate pairs (da < db, with set sizes) over one
     (id, token)-per-distinct-element frame, with PPJoin's lossless
     length + positional prunes applied inside the join. Shared by the
@@ -703,25 +693,25 @@ def _ppjoin_candidates(
     both."""
     tn, td = tau_num, tau_den
     nd = tn + td
-    dfreq = tok.groupBy(token_col).agg(
+    dfreq = tok.groupBy("token").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
     )
-    order_w = W.partitionBy(id_col).orderBy("df", token_col)
+    order_w = W.partitionBy("doc_id").orderBy("df", "token")
     ranked = (
-        tok.join(dfreq, token_col)
+        tok.join(dfreq, "token")
         .withColumn("r", F.row_number().over(order_w))
-        .withColumn("sz", F.count(F.lit(1)).over(W.partitionBy(id_col)))
+        .withColumn("sz", F.count(F.lit(1)).over(W.partitionBy("doc_id")))
     )
     prefix = ranked.filter(
         F.col("r")
         <= F.col("sz") - F.expr(f"({tn} * sz + {td - 1}) div {td}") + 1
     )
     pa = prefix.select(
-        F.col(id_col).alias("da"), F.col(token_col).alias("token"),
+        F.col("doc_id").alias("da"), "token",
         F.col("r").alias("ra"), F.col("sz").alias("sa"),
     )
     pb = prefix.select(
-        F.col(id_col).alias("db"), F.col(token_col).alias("token"),
+        F.col("doc_id").alias("db"), "token",
         F.col("r").alias("rb"), F.col("sz").alias("sb"),
     )
     sess = tok.sparkSession
@@ -757,31 +747,26 @@ def _ppjoin_candidates(
 
 
 def _ppjoin_verify(
-    cand: DataFrame,
-    tok: DataFrame,
-    id_col: str,
-    token_col: str,
-    tau_num: int,
-    tau_den: int,
+    cand: DataFrame, tok: DataFrame, tau_num: int, tau_den: int
 ) -> DataFrame:
     """Pair-local exact verification: candidates join the per-id
     token-ARRAY table twice and count one vectorized array_intersect —
     never a candidate×token explode."""
     tn, td = tau_num, tau_den
     nd = tn + td
-    tsets = tok.groupBy(id_col).agg(
-        F.sort_array(F.collect_list(token_col)).alias("toks")
+    tsets = tok.groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("token")).alias("toks")
     )
     return (
         cand.join(
             tsets.select(
-                F.col(id_col).alias("da"), F.col("toks").alias("ta")
+                F.col("doc_id").alias("da"), F.col("toks").alias("ta")
             ),
             "da",
         )
         .join(
             tsets.select(
-                F.col(id_col).alias("db"), F.col("toks").alias("tb")
+                F.col("doc_id").alias("db"), F.col("toks").alias("tb")
             ),
             "db",
         )
@@ -798,11 +783,7 @@ def _ppjoin_verify(
 
 
 def ppjoin_pairs(
-    tok: DataFrame,
-    id_col: str = "doc_id",
-    token_col: str = "token",
-    tau_num: int = 19,
-    tau_den: int = 20,
+    tok: DataFrame, tau_num: int = PPJOIN_TAU_NUM, tau_den: int = PPJOIN_TAU_DEN
 ) -> DataFrame:
     """EXACT Jaccard-threshold set-similarity self-join via prefix
     filtering with PPJoin's positional + length prunes (SSJoin,
@@ -844,13 +825,11 @@ def ppjoin_pairs(
       J ≥ τ             ⟺ (tau_num+tau_den)·i ≥ tau_num·(sa+sb)
       α = ceil(τ/(1+τ)·s) = (tau_num·s + num+den − 1) div (num+den)
     """
-    members = ppjoin_set_groups(tok, id_col, token_col)
-    rep_ids = members.select(F.col("rid").alias(id_col)).distinct()
-    rtok = tok.join(rep_ids, id_col)
-    cand = _ppjoin_candidates(rtok, id_col, token_col, tau_num, tau_den)
-    rep_pairs = _ppjoin_verify(
-        cand, rtok, id_col, token_col, tau_num, tau_den
-    )
+    members = ppjoin_set_groups(tok)
+    rep_ids = members.select(F.col("rid").alias("doc_id")).distinct()
+    rtok = tok.join(rep_ids, "doc_id")
+    cand = _ppjoin_candidates(rtok, tau_num, tau_den)
+    rep_pairs = _ppjoin_verify(cand, rtok, tau_num, tau_den)
     mem_a = members.select(
         F.col("rid").alias("da"), F.col("mid").alias("ma")
     )
@@ -878,13 +857,7 @@ def ppjoin_pairs(
     return same.unionByName(cross)
 
 
-def ppjoin_audit(
-    tok: DataFrame,
-    id_col: str = "doc_id",
-    token_col: str = "token",
-    tau_num: int = 19,
-    tau_den: int = 20,
-) -> DataFrame:
+def ppjoin_audit(tok: DataFrame) -> DataFrame:
     """One-row overshoot audit for the PPJoin plan — the operator's own
     scale instrumentation: how many candidate pairs the prefix+length+
     positional prunes let through versus how many are true, over the
@@ -899,16 +872,16 @@ def ppjoin_audit(
     itself falls over. All five numbers are global aggregates: the
     doc-stats row carries the other four as scalar subqueries, so there
     is no driver-side collect loop."""
-    tn, td = tau_num, tau_den
-    members = ppjoin_set_groups(tok, id_col, token_col)
+    tn, td = PPJOIN_TAU_NUM, PPJOIN_TAU_DEN
+    members = ppjoin_set_groups(tok)
     groups = members.groupBy("rid").agg(F.first("mult").alias("mult"))
-    rep_ids = groups.select(F.col("rid").alias(id_col))
-    rtok = tok.join(rep_ids, id_col)
+    rep_ids = groups.select(F.col("rid").alias("doc_id"))
+    rtok = tok.join(rep_ids, "doc_id")
     cand = materialize(
-        _ppjoin_candidates(rtok, id_col, token_col, tn, td), "ppjoin_audit.cand"
+        _ppjoin_candidates(rtok, tn, td), "ppjoin_audit.cand"
     )
     rep_pairs = materialize(
-        _ppjoin_verify(cand, rtok, id_col, token_col, tn, td),
+        _ppjoin_verify(cand, rtok, tn, td),
         "ppjoin_audit.rep_pairs",
     )
     doc_stats = members.agg(
@@ -933,14 +906,9 @@ def ppjoin_audit(
         )
         .scalar()
     )
-    within_mult = 1 if tn <= td else 0  # τ > 1: identical sets fail too
     within_pairs = groups.agg(
         (
-            F.coalesce(
-                F.sum(F.col("mult") * (F.col("mult") - 1)), F.lit(0)
-            )
-            / 2
-            * within_mult
+            F.coalesce(F.sum(F.col("mult") * (F.col("mult") - 1)), F.lit(0)) / 2
         ).cast("bigint")
     ).scalar()
     n_rows = F.count(F.lit(1)).cast("bigint")

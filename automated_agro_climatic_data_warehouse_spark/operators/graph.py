@@ -40,11 +40,13 @@ from pyspark.sql.window import Window as W
 
 from ..session import materialize
 
+# The integer score grid of the power-iteration loops: every node starts
+# at (and HITS normalizes to) SCORE_TOTAL = 2^20.
+SCORE_TOTAL = 1 << 20
 
-def lsh_pair_graph(
-    pairs: DataFrame, a: str = "doc_a", b: str = "doc_b"
-) -> tuple[DataFrame, DataFrame]:
-    """(edges, deg) from an undirected near-dup pair list: the
+
+def lsh_pair_graph(pairs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(edges, deg) from an undirected (doc_a, doc_b) near-dup pair list: the
     symmetric-union distinct edge list (checkpointed — the two union
     branches would otherwise re-run the whole upstream LSH pipeline,
     the connected_components rationale above) and the per-node degree
@@ -54,8 +56,8 @@ def lsh_pair_graph(
     whole link-prediction trio: one definition, one cost envelope
     (|edges| = 2·|pairs|, both collision-bounded by the LSH bands)."""
     edges = materialize(
-        pairs.select(F.col(a).alias("a"), F.col(b).alias("b"))
-        .union(pairs.select(F.col(b).alias("a"), F.col(a).alias("b")))
+        pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .union(pairs.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
         .distinct(),
         "lsh_pair_graph.edges",
     )
@@ -301,9 +303,7 @@ def pagerank_loop(
     src: str = "src",
     dst: str = "dst",
     k: int = 10,
-    total: int = 1 << 20,
-    damp_num: int = 17,
-    damp_den: int = 20,
+    total: int = SCORE_TOTAL,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Fixed-k PageRank power iterations on an integer rank grid —
@@ -314,8 +314,9 @@ def pagerank_loop(
     N-step chain replays bit-identically on any engine/partitioning:
 
       contrib(u→v) = r(u) div deg(u)          (per-edge floor share)
-      r'(v) = (Σ contrib) * damp_num div damp_den
-              + total * (damp_den - damp_num) div damp_den
+      r'(v) = (Σ contrib) * 17 div 20 + total * 3 div 20
+
+    (damping 17/20)
 
     Floor division agrees across engines only on non-negative
     operands — ranks and degrees are always positive here.
@@ -347,7 +348,7 @@ def pagerank_loop(
         edges.withColumn("d", F.count(F.lit(1)).over(W.partitionBy("u"))),
         "pagerank_loop.adj",
     )
-    teleport = total * (damp_den - damp_num) // damp_den
+    teleport = total * 3 // 20
     if init_ranks is None:
         ranks = (
             adj.select(F.col("u").alias("node"))
@@ -365,7 +366,7 @@ def pagerank_loop(
         ).select("v", F.expr("r div d").cast("bigint").alias("w"))
         ranks = contrib.groupBy(F.col("v").alias("node")).agg(
             (
-                F.expr(f"(sum(w) * {damp_num}) div {damp_den}")
+                F.expr("(sum(w) * 17) div 20")
                 + F.lit(teleport)
             )
             .cast("bigint")
@@ -447,28 +448,22 @@ def label_propagation(
     return lab
 
 
-def hits_loop(
-    edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
-    k: int = 4,
-    total: int = 1 << 20,
-) -> DataFrame:
+def hits_loop(edges: DataFrame, k: int = 4) -> DataFrame:
     """Fixed-k HITS power iterations (Kleinberg, JACM 1999) on an
-    integer score grid — hubs on the `src` side, authorities on the
-    `dst` side of a DIRECTED edge list (no symmetrization: the
+    integer score grid — hubs on the `u` side, authorities on the
+    `v` side of a DIRECTED (u, v) edge list (no symmetrization: the
     bipartite orientation IS the semantics, unlike pagerank_loop's
     undirected requirement).
 
     Per round, in exact int64 arithmetic:
 
-      a_raw(v) = sum_{u->v} h(u);  a(v) = a_raw(v)*total div max(a_raw)
-      h_raw(u) = sum_{u->v} a(v);  h(u) = h_raw(u)*total div max(h_raw)
+      a_raw(v) = sum_{u->v} h(u);  a(v) = a_raw(v)*2^20 div max(a_raw)
+      h_raw(u) = sum_{u->v} a(v);  h(u) = h_raw(u)*2^20 div max(h_raw)
 
     The L-infinity normalization replaces HITS' usual L2 norm — a
     sqrt-free choice that keeps every round on the grid (the iterate
     direction converges identically; only the scale convention
-    differs, and scores are reported normalized to max=total anyway).
+    differs, and scores are reported normalized to max=2^20 anyway).
     Requires k >= 1 — the authority side only exists after a round.
     All operands are nonnegative, so truncating div replays on any
     engine. Scale shape per round: two shuffle joins (scores ×
@@ -484,15 +479,13 @@ def hits_loop(
     is a free projection over the checkpoint."""
     if k < 1:
         raise ValueError(f"hits_loop needs k >= 1 rounds, got {k}")
-    e = materialize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "hits_loop.e"
-    )
+    e = materialize(edges.select("u", "v"), "hits_loop.e")
     h = (
         e.select("u")
         .distinct()
         .select(
             F.col("u").alias("node"),
-            F.lit(total).cast("bigint").alias("s"),
+            F.lit(SCORE_TOTAL).cast("bigint").alias("s"),
         )
     )
 
@@ -506,12 +499,12 @@ def hits_loop(
         )
         # The max is NULL only on the empty graph, whose frames are all
         # empty, so any divisor works there. It is never 0: the previous
-        # round's top node is normalized to `total` and has an edge, so
-        # any non-empty round has a max of at least `total`.
+        # round's top node is normalized to SCORE_TOTAL and has an edge,
+        # so any non-empty round has a max of at least SCORE_TOTAL.
         mx = 1 if probe["mx"] is None else probe["mx"]
         return raw.select(
             F.col(out_key).alias("node"),
-            F.expr(f"cast((raw * {total}) div {mx} as bigint)").alias("s"),
+            F.expr(f"cast((raw * {SCORE_TOTAL}) div {mx} as bigint)").alias("s"),
         )
 
     for _ in range(k):
@@ -528,19 +521,16 @@ def hits_loop(
 
 def katz_loop(
     edges: DataFrame,
-    src: str = "u",
-    dst: str = "v",
     k: int = 4,
-    total: int = 1 << 20,
     alpha_den: int = 1 << 10,
     in_covered: bool = False,
 ) -> DataFrame:
     """Fixed-k Katz centrality iterations (Katz, Psychometrika 1953)
-    on an integer score grid: x_{t+1}(v) = alpha * sum_{u->v} x_t(u)
-    + beta with beta = `total` and alpha = 1/alpha_den, i.e. in exact
-    int64 arithmetic
+    on an integer score grid over a (u, v) edge list: x_{t+1}(v) =
+    alpha * sum_{u->v} x_t(u) + beta with beta = 2^20 and alpha =
+    1/alpha_den, i.e. in exact int64 arithmetic
 
-      x'(v) = (sum_{u->v} x(u)) div alpha_den + total
+      x'(v) = (sum_{u->v} x(u)) div alpha_den + 2^20
 
     Unlike PageRank there is NO degree division — Katz credits a node
     for the attenuated count of ALL walks reaching it, so high-degree
@@ -549,10 +539,10 @@ def katz_loop(
     replays on any engine. alpha must be < 1/lambda_max for the series
     to be meaningful; the default 2^-10 sits far under the purchase
     graph's spectral radius. int64 headroom COMPOUNDS over rounds
-    (r9 ADVICE): scores grow as ~total*(d/alpha_den)^t for a hub of
+    (r9 ADVICE): scores grow as ~2^20*(d/alpha_den)^t for a hub of
     in-degree d, and the binding operand is the round-k PRE-div
-    neighbor sum ~total*d^k/alpha_den^(k-1), so at the defaults
-    (k=4, alpha_den=2^10, total=2^20) the walk is int64-exact only to
+    neighbor sum ~2^20*d^k/alpha_den^(k-1), so at the defaults
+    (k=4, alpha_den=2^10) the walk is int64-exact only to
     hub in-degrees of ~3e5 (d^4 < 2^73); the often-quoted ~1e12
     single-round bound applies only at k=1. Past that, Spark
     (non-ANSI) wraps silently while a HUGEINT oracle raises — for
@@ -569,15 +559,13 @@ def katz_loop(
     (node, score_q)."""
     if k < 1:
         raise ValueError(f"katz_loop needs k >= 1 rounds, got {k}")
-    e = materialize(
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")), "katz_loop.e"
-    )
+    e = materialize(edges.select("u", "v"), "katz_loop.e")
     if in_covered:
         nodes = None
         x = (
             e.select(F.col("u").alias("node"))
             .distinct()
-            .select("node", F.lit(total).cast("bigint").alias("s"))
+            .select("node", F.lit(SCORE_TOTAL).cast("bigint").alias("s"))
         )
     else:
         nodes = materialize(
@@ -587,7 +575,7 @@ def katz_loop(
             .select(F.col("u").alias("node")),
             "katz_loop.nodes",
         )
-        x = nodes.select("node", F.lit(total).cast("bigint").alias("s"))
+        x = nodes.select("node", F.lit(SCORE_TOTAL).cast("bigint").alias("s"))
     # final-only localCheckpoint (same rationale as pagerank_loop):
     # each round's x has a single consumer — the next round's join —
     # so intermediate materialization only adds a job barrier per
@@ -603,7 +591,7 @@ def katz_loop(
         if nodes is None:
             x = summed.select(
                 "node",
-                (F.expr(f"sm div {alpha_den}") + F.lit(total))
+                (F.expr(f"sm div {alpha_den}") + F.lit(SCORE_TOTAL))
                 .cast("bigint")
                 .alias("s"),
             )
@@ -612,7 +600,7 @@ def katz_loop(
                 "node",
                 (
                     F.expr(f"coalesce(sm, 0) div {alpha_den}")
-                    + F.lit(total)
+                    + F.lit(SCORE_TOTAL)
                 )
                 .cast("bigint")
                 .alias("s"),

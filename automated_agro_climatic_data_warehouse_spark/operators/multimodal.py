@@ -27,14 +27,6 @@ from pyspark.sql import types as T
 
 FEATURE_DIM = 4
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("media_type", T.StringType()),
-    ]
-)
-
 FEATURES_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -54,14 +46,6 @@ def _fake_decode(payload: bytes) -> list[float]:
         int.from_bytes(digest[4 * i : 4 * i + 4], "big") / 2**32
         for i in range(FEATURE_DIM)
     ]
-
-
-def decode_real(payload: bytes, media_type: str):  # pragma: no cover
-    """Real decode — requires codec libs absent from this container."""
-    raise NotImplementedError(
-        f"no codec for {media_type} in this environment; "
-        "_fake_decode provides the deterministic test path"
-    )
 
 
 def extract_features(media: DataFrame) -> DataFrame:

@@ -23,20 +23,19 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 
-def capture_gate(id_col: Column, seed: str, percent: int = 30) -> Column:
+def capture_gate(id_col: Column, seed: str) -> Column:
     """The capture-recapture family's deterministic capture gate: a
-    seeded md5 hash admits `percent`% of ids, replay-identically on
+    seeded md5 hash admits 30% of ids, replay-identically on
     re-run. ONE definition shared by the batch query
     (dq_capture_recapture) and the streaming monitor
     (streaming/capture_recapture.py) so the two capture samples can
     never drift apart — the wres_state single-definition pattern.
     DuckDB twin: (CAST('0x' || substr(md5('<seed>:' || CAST(id AS
-    VARCHAR)), 1, 8) AS BIGINT) % 100 < <percent>)."""
+    VARCHAR)), 1, 8) AS BIGINT) % 100 < 30)."""
     from .dedup import hash32
 
     return (
-        hash32(F.concat(F.lit(f"{seed}:"), id_col.cast("string"))) % 100
-        < percent
+        hash32(F.concat(F.lit(f"{seed}:"), id_col.cast("string"))) % 100 < 30
     )
 
 
@@ -363,8 +362,8 @@ def lb_daily_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     )
 
 
-def lb_readout(daily: DataFrame, max_lag: int = 7) -> DataFrame:
-    """Ljung-Box readout over the daily-volume state (day, x): n and
+def lb_readout(daily: DataFrame) -> DataFrame:
+    """Ljung-Box readout at lags 1..7 over the daily-volume state (day, x): n and
     S ride whole-frame window aggregates on the calendar-bounded
     frame, mean-centering on the n-scaled integer grid d_t = n*x_t -
     S (exact int64), lag-k autocorrelation numerators and the
@@ -374,6 +373,7 @@ def lb_readout(daily: DataFrame, max_lag: int = 7) -> DataFrame:
     dq_ljung_box arithmetic, shared so the batch query and the
     streaming monitor are one definition. A constant series (den = 0)
     reads NULL r_k/q_cum; lags >= n drop out."""
+    lags = range(1, 8)
     wg = W.partitionBy()
     d = daily.select(
         "day",
@@ -391,7 +391,7 @@ def lb_readout(daily: DataFrame, max_lag: int = 7) -> DataFrame:
         "dd",
         *[
             F.lead("dd", k).over(w).alias(f"l{k}")
-            for k in range(1, max_lag + 1)
+            for k in lags
         ],
     )
     agg = ld.agg(
@@ -401,16 +401,16 @@ def lb_readout(daily: DataFrame, max_lag: int = 7) -> DataFrame:
             F.sum(F.expr(f"cast(dd as decimal(38,0)) * l{k}")).alias(
                 f"m{k}"
             )
-            for k in range(1, max_lag + 1)
+            for k in lags
         ],
     )
     stack_args = ", ".join(
-        f"{k}, m{k}" for k in range(1, max_lag + 1)
+        f"{k}, m{k}" for k in lags
     )
     stacked = agg.selectExpr(
         "n",
         "den_q",
-        f"stack({max_lag}, {stack_args}) as (lag_k, num)",
+        f"stack(7, {stack_args}) as (lag_k, num)",
     )
     base = stacked.filter(F.col("lag_k") < F.col("n")).select(
         F.col("lag_k").cast("bigint").alias("lag_k"),

@@ -247,7 +247,6 @@ def interleave_rank(
     df: DataFrame,
     group_col: str,
     order_cols: list[str],
-    leg_col: str = "leg",
     out_col: str = "interleave_rank",
     leg_bucket_rows: int = 65536,
 ) -> DataFrame:
@@ -285,21 +284,21 @@ def interleave_rank(
     otherwise be nondeterministic.
     """
     w_g = W.partitionBy(group_col).orderBy(*order_cols)
-    ranked = df.withColumn(leg_col, F.row_number().over(w_g).cast("bigint"))
-    w_leg = W.partitionBy(leg_col).orderBy(group_col)
+    ranked = df.withColumn("leg", F.row_number().over(w_g).cast("bigint"))
+    w_leg = W.partitionBy("leg").orderBy(group_col)
     ranked = ranked.withColumn(
         "_ril", F.row_number().over(w_leg).cast("bigint")
     )
-    leg_counts = ranked.groupBy(leg_col).agg(
+    leg_counts = ranked.groupBy("leg").agg(
         F.count(F.lit(1)).cast("bigint").alias("_c")
     )
     leg_counts = leg_counts.withColumn(
-        "_lbkt", ((F.col(leg_col) - 1) / F.lit(leg_bucket_rows))
+        "_lbkt", ((F.col("leg") - 1) / F.lit(leg_bucket_rows))
         .cast("bigint"),
     )
     w_in = (
         W.partitionBy("_lbkt")
-        .orderBy(leg_col)
+        .orderBy("leg")
         .rowsBetween(W.unboundedPreceding, -1)
     )
     leg_counts = leg_counts.withColumn(
@@ -317,10 +316,10 @@ def interleave_rank(
         .agg(F.coalesce(F.sum("b._bcnt"), F.lit(0)).alias("_bb"))
     )
     off = leg_counts.join(F.broadcast(bcum), "_lbkt").select(
-        leg_col, (F.col("_bb") + F.col("_cin")).cast("bigint").alias("_off")
+        "leg", (F.col("_bb") + F.col("_cin")).cast("bigint").alias("_off")
     )
     return (
-        ranked.join(off, leg_col)
+        ranked.join(off, "leg")
         .withColumn(out_col, F.col("_off") + F.col("_ril"))
         .drop("_off", "_ril")
     )

@@ -22,9 +22,6 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-SCD2_COLS = ("effective_date", "expiration_date", "is_current")
-
-
 def _differs(a: Column, b: Column) -> Column:
     """Null-safe inequality: NULL vs value counts as a change."""
     return ~a.eqNullSafe(b)

@@ -34,6 +34,12 @@ from ..session import local_frame, materialize
 # ties then break deterministically by neighbor id.
 SCORE_DECIMALS = 12
 
+# The IVF family's fixed geometry, read by the plans and their DuckDB
+# twins alike: IVF_K neighbours per query, a quantizer seeded by the
+# first IVF_LISTS vectors by id, and corpus vectors spilled into their
+# IVF_SPILL nearest lists.
+IVF_K, IVF_LISTS, IVF_SPILL = 5, 16, 2
+
 # numpy dtype + Spark DDL name per supported id column type
 _ID_TYPES = {
     LongType(): (np.int64, "long"),
@@ -42,15 +48,15 @@ _ID_TYPES = {
 }
 
 
-def _id_dtype(corpus: DataFrame, id_col: str):
-    """(numpy dtype, spark ddl type) for the id column, or raise."""
-    spark_type = corpus.schema[id_col].dataType
+def _id_dtype(corpus: DataFrame):
+    """(numpy dtype, spark ddl type) for the vec_id column, or raise."""
+    spark_type = corpus.schema["vec_id"].dataType
     try:
         return _ID_TYPES[spark_type]
     except KeyError:
         raise TypeError(
             f"brute_force_topk: unsupported id column type "
-            f"{spark_type.simpleString()} for {id_col!r}; "
+            f"{spark_type.simpleString()} for 'vec_id'; "
             f"expected one of {[t.simpleString() for t in _ID_TYPES]}"
         ) from None
 
@@ -76,23 +82,8 @@ def l2_normalize(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double") / norm)
 
 
-def int8_quantize(vec: Column, scale: Column | None = None) -> Column:
-    """Symmetric int8 quantization with per-vector absmax scale: returns
-    array<bigint> of round(x / (absmax/127)). Pair with
-    `int8_scale(vec)` to keep the dequantization factor.
-
-    Pass a precomputed `scale` column whenever it is already projected:
-    a scale expression referenced INSIDE the transform lambda is
-    re-evaluated per element, turning the absmax scan into O(dim²)
-    per vector (the r4 bench regression — 0.14 s → 0.54 s at sf0.1)."""
-    s = int8_scale(vec) if scale is None else scale
-    return F.transform(
-        vec, lambda x: F.round(x.cast("double") / s, 0).cast("bigint")
-    )
-
-
 def int8_scale(vec: Column) -> Column:
-    """absmax/127 dequantization scale for `int8_quantize`."""
+    """Per-vector absmax/127 scale of symmetric int8 quantization."""
     return F.array_max(
         F.transform(vec, lambda x: F.abs(x.cast("double")))
     ) / F.lit(127.0)
@@ -115,13 +106,32 @@ def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(num / den)
 
 
+def _top_k(scored: DataFrame, k: int, *cols: str | Column) -> DataFrame:
+    """The k best `neighbor_id`s per `query_id` by rounded cosine `__cos`,
+    ties broken by neighbor id: `cols` plus the 1-based `rank`."""
+    w = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*cols, "rank")
+    )
+
+
+def _join_scored(q: DataFrame, c: DataFrame, keys: list[str]) -> DataFrame:
+    """Probe rows (query_id, __qv) equi-joined on `keys` to candidate rows
+    (neighbor_id, __cv), self pairs dropped, scored by rounded cosine."""
+    return (
+        q.join(c, keys)
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .withColumn(
+            "__cos",
+            F.round(cosine_pandas(F.col("__qv"), F.col("__cv")), SCORE_DECIMALS),
+        )
+    )
+
+
 def brute_force_topk(
-    corpus: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_probe: int = 10_000,
+    corpus: DataFrame, query_pred: Column, k: int = 5, max_probe: int = 10_000
 ) -> DataFrame:
     """Exact cosine top-k for every row matching query_pred, over the whole
     corpus (self excluded).
@@ -140,11 +150,11 @@ def brute_force_topk(
     is capped at `max_probe` rows: a broader query_pred raises with a
     pointer to `bucketed_topk` (the probe side there stays distributed).
     An empty probe set returns an empty result frame."""
-    np_id, ddl_id = _id_dtype(corpus, id_col)
+    np_id, ddl_id = _id_dtype(corpus)
     out_schema = f"query_id {ddl_id}, neighbor_id {ddl_id}, rank int"
     q_rows = (
         corpus.filter(query_pred)
-        .select(id_col, vec_col)
+        .select("vec_id", "embedding")
         .limit(max_probe + 1)  # bound the driver transfer before collect
         .collect()
     )
@@ -167,9 +177,9 @@ def brute_force_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            nid = pdf[id_col].to_numpy(dtype=np_id)
+            nid = pdf["vec_id"].to_numpy(dtype=np_id)
             cm = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col].values]
+                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"].values]
             )
             cn = np.sqrt(np.einsum("ij,ij->i", cm, cm))
             # round before any ranking so the batch-local top-k and the
@@ -199,15 +209,10 @@ def brute_force_topk(
     # batch matmul runs on 1 task (measured 0.8 s/1t in the recall-eval
     # profile; the r11 fan_out class — embedding rows are compact, so
     # the round-robin shuffle is noise next to the per-row compute)
-    partials = fan_out(corpus.select(id_col, vec_col)).mapInPandas(
+    partials = fan_out(corpus.select("vec_id", "embedding")).mapInPandas(
         partial_topk, f"query_id {ddl_id}, neighbor_id {ddl_id}, __cos double"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(partials, k, "query_id", "neighbor_id")
 
 
 def sign_bucket(vec: Column, bits: int = 3) -> Column:
@@ -220,53 +225,28 @@ def sign_bucket(vec: Column, bits: int = 3) -> Column:
     return code
 
 
-def bucketed_topk(
-    corpus: DataFrame,
-    query_pred: Column,
-    k: int = 3,
-    bits: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Approximate top-k: candidates restricted to the query's sign bucket.
-    The bucket equi-join replaces the cross join — this is the plan whose
-    cost survives a 100× corpus scale-up."""
-    with_bucket = corpus.withColumn("__bkt", sign_bucket(F.col(vec_col), bits))
+def bucketed_topk(corpus: DataFrame, query_pred: Column) -> DataFrame:
+    """Approximate top-3: candidates restricted to the query's 3-bit sign
+    bucket. The bucket equi-join replaces the cross join — this is the
+    plan whose cost survives a 100× corpus scale-up."""
+    with_bucket = corpus.withColumn("__bkt", sign_bucket(F.col("embedding"), 3))
     q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "__bkt"
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"), "__bkt"
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"), "__bkt"
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"), "__bkt"
     )
-    scored = (
-        q.join(c, "__bkt")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "__cos",
-            F.round(cosine_pandas(F.col("__qv"), F.col("__cv")), SCORE_DECIMALS),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", F.col("__bkt").alias("bucket"), "neighbor_id", "rank")
-    )
+    scored = _join_scored(q, c, ["__bkt"])
+    return _top_k(scored, 3, "query_id", F.col("__bkt").alias("bucket"), "neighbor_id")
 
 
 def filtered_topk(
-    corpus: DataFrame,
-    query_pred: Column,
-    filter_cols: list[str],
-    k: int = 3,
-    bits: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    corpus: DataFrame, query_pred: Column, filter_cols: list[str], k: int = 3
 ) -> DataFrame:
     """FILTERED approximate top-k: candidates must match the query on
     every `filter_cols` attribute (tenant / language / label scoping —
     the metadata-filtered vector search every serving stack needs) AND
-    share its sign bucket. The filter participates in the join KEY
+    share its 2-bit sign bucket. The filter participates in the join KEY
     (composite equi-join on filter_cols + bucket), not as a
     post-ranking predicate — post-filtering an unfiltered top-k loses
     recall whenever fewer than k of the global neighbors satisfy the
@@ -278,53 +258,38 @@ def filtered_topk(
 
     Sparse-cell caveat: a query whose cell holds < k other vectors
     returns fewer than k rows (exactly the candidate set) rather than
-    silently widening the search — callers wanting guaranteed k raise
-    `bits` granularity or fall back to a (filter_cols)-only join.
+    silently widening the search — callers wanting guaranteed k fall
+    back to a (filter_cols)-only join.
     """
-    with_bucket = corpus.withColumn("__bkt", sign_bucket(F.col(vec_col), bits))
+    with_bucket = corpus.withColumn("__bkt", sign_bucket(F.col("embedding"), 2))
     q = with_bucket.filter(query_pred).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
         "__bkt",
         *filter_cols,
     )
     c = with_bucket.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
         "__bkt",
         *filter_cols,
     )
-    scored = (
-        q.join(c, [*filter_cols, "__bkt"])
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "__cos",
-            F.round(cosine_pandas(F.col("__qv"), F.col("__cv")), SCORE_DECIMALS),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", *filter_cols, "neighbor_id", "rank")
-    )
+    scored = _join_scored(q, c, [*filter_cols, "__bkt"])
+    return _top_k(scored, k, "query_id", *filter_cols, "neighbor_id")
 
 
 def nearest_centroids(
-    vectors: DataFrame,
-    centroids: DataFrame,
-    nprobe: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    vectors: DataFrame, centroids: DataFrame, nprobe: int
 ) -> DataFrame:
     """Top-`nprobe` centroids per vector: broadcast the (tiny) centroid
     table, score with the bit-reproducible fold `cosine` (assignment flips
     would cascade into different candidate sets, so the assignment score
     must be engine-exact, not just tolerance-rounded), rank with the usual
-    round + centroid-id tiebreak. Output: (id, vec, centroid_id, probe_rank).
+    round + centroid-id tiebreak. Output: (vec_id, embedding, centroid_id,
+    probe_rank).
     """
     c = centroids.select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("__cv")
+        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("__cv")
     )
     # The probe-rank window below needs hashpartitioning(id) anyway —
     # repartitioning HERE is that same exchange pulled below the
@@ -334,15 +299,15 @@ def nearest_centroids(
     # is single-row-group: measured 0.8 s/1-task assignment stages in
     # the IVF family profiles). Zero extra exchanges at any scale.
     vectors = vectors.repartition(
-        vectors.sparkSession.sparkContext.defaultParallelism, id_col
+        vectors.sparkSession.sparkContext.defaultParallelism, "vec_id"
     )
     scored = vectors.join(F.broadcast(c)).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         "centroid_id",
-        F.round(cosine(F.col(vec_col), F.col("__cv")), SCORE_DECIMALS).alias("__cs"),
+        F.round(cosine(F.col("embedding"), F.col("__cv")), SCORE_DECIMALS).alias("__cs"),
     )
-    w = W.partitionBy(id_col).orderBy(F.desc("__cs"), F.asc("centroid_id"))
+    w = W.partitionBy("vec_id").orderBy(F.desc("__cs"), F.asc("centroid_id"))
     return (
         scored.withColumn("probe_rank", F.row_number().over(w))
         .filter(F.col("probe_rank") <= nprobe)
@@ -350,14 +315,37 @@ def nearest_centroids(
     )
 
 
+def _ivf(
+    corpus: DataFrame,
+    query_pred: Column,
+    k: int,
+    centroids: DataFrame,
+    nprobe: int,
+    spill: int,
+) -> DataFrame:
+    """IVF top-k: each corpus vector is listed under its `spill` nearest
+    centroids, each query probes its `nprobe` nearest lists, and the
+    candidates are the equi-join of the two on centroid_id."""
+    lists = nearest_centroids(corpus, centroids, spill).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("__cv"),
+        "centroid_id",
+    )
+    probes = nearest_centroids(corpus.filter(query_pred), centroids, nprobe).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("__qv"),
+        "centroid_id",
+    )
+    scored = _join_scored(probes, lists, ["centroid_id"])
+    return _top_k(scored, k, "query_id", "neighbor_id")
+
+
 def ivf_topk(
     corpus: DataFrame,
     query_pred: Column,
-    k: int = 5,
-    n_centroids: int = 16,
+    k: int = IVF_K,
+    n_centroids: int = IVF_LISTS,
     nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVF approximate top-k: coarse-quantize the corpus into
@@ -368,103 +356,38 @@ def ivf_topk(
     bounded-cardinality and uniform. This is the FAISS IVF-Flat plan as
     DataFrames.
 
-    `centroids` defaults to the deterministic seed (the first
-    `n_centroids` corpus vectors by id) so the oracle can replay the
-    quantizer exactly; production passes `train_centroids(...)` output
-    instead — the probe/list plumbing is identical.
+    Without `centroids` the quantizer is the deterministic seed (the
+    first `n_centroids` corpus vectors by id), which the oracle replays
+    exactly; `train_centroids(...)` output plugs in with identical
+    probe/list plumbing.
     """
     if centroids is None:
-        centroids = corpus.filter(F.col(id_col) < n_centroids)
-    elif id_col not in centroids.columns and "centroid_id" in centroids.columns:
-        # accept train_centroids() output (centroid_id, vec) directly
-        centroids = centroids.withColumnRenamed("centroid_id", id_col)
-    lists = nearest_centroids(corpus, centroids, 1, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        "centroid_id",
-    )
-    probes = nearest_centroids(
-        corpus.filter(query_pred), centroids, nprobe, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "centroid_id"
-    )
-    scored = (
-        probes.join(lists, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "__cos",
-            F.round(cosine_pandas(F.col("__qv"), F.col("__cv")), SCORE_DECIMALS),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+        centroids = corpus.filter(F.col("vec_id") < n_centroids)
+    elif "vec_id" not in centroids.columns:
+        # train_centroids() output names its id centroid_id
+        centroids = centroids.withColumnRenamed("centroid_id", "vec_id")
+    return _ivf(corpus, query_pred, k, centroids, nprobe, spill=1)
 
 
-def ivf_spill_topk(
-    corpus: DataFrame,
-    query_pred: Column,
-    k: int = 5,
-    n_centroids: int = 16,
-    spill: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """IVF top-k with SPILLED (replicated) corpus assignment — the
+def ivf_spill_topk(corpus: DataFrame, query_pred: Column) -> DataFrame:
+    """IVF top-`IVF_K` with SPILLED (replicated) corpus assignment — the
     memory-for-recall dual of ivf_topk's probe-side fan-out: each
-    corpus vector is indexed under its `spill` nearest centroids
+    corpus vector is indexed under its `IVF_SPILL` nearest centroids
     (ScaNN's SOAR-style spilling: boundary vectors — the ones a
     1-probe search misses — are exactly the ones near a second
     centroid), and queries probe ONE list. Index size grows by
-    `spill`x; query-time candidate traffic stays at one list per
+    `IVF_SPILL`x; query-time candidate traffic stays at one list per
     query, so at 100 TB this shifts cost from the latency-critical
     probe join to the build-once assignment pass. Same deterministic
-    id-seeded quantizer contract as ivf_topk; the probed list is a
-    set of (neighbor, centroid) rows, so no per-query dedup is
-    needed — a neighbor appears at most once per list."""
-    if centroids is None:
-        centroids = corpus.filter(F.col(id_col) < n_centroids)
-    elif id_col not in centroids.columns and "centroid_id" in centroids.columns:
-        centroids = centroids.withColumnRenamed("centroid_id", id_col)
-    lists = nearest_centroids(
-        corpus, centroids, spill, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        "centroid_id",
-    )
-    probes = nearest_centroids(
-        corpus.filter(query_pred), centroids, 1, id_col, vec_col
-    ).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"), "centroid_id"
-    )
-    scored = (
-        probes.join(lists, "centroid_id")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "__cos",
-            F.round(cosine_pandas(F.col("__qv"), F.col("__cv")), SCORE_DECIMALS),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("__cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    id-seeded quantizer as ivf_topk (the first `IVF_LISTS` vectors);
+    the probed list is a set of (neighbor, centroid) rows, so no
+    per-query dedup is needed — a neighbor appears at most once per
+    list."""
+    centroids = corpus.filter(F.col("vec_id") < IVF_LISTS)
+    return _ivf(corpus, query_pred, IVF_K, centroids, nprobe=1, spill=IVF_SPILL)
 
 
-def train_centroids(
-    corpus: DataFrame,
-    k: int,
-    rounds: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def train_centroids(corpus: DataFrame, k: int, rounds: int = 2) -> DataFrame:
     """Lloyd iterations for the IVF coarse quantizer (production path —
     float-mean summation order is engine-specific, so trained centroids
     are NOT oracle-replayable; the parity queries use the seeded
@@ -477,17 +400,16 @@ def train_centroids(
     one groupBy on (centroid_id, dim) — both scale-safe; centroids are
     localCheckpoint'ed per round to truncate the iterative lineage
     (same lesson as operators/graph.py)."""
-    centroids = corpus.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("centroid_id"), F.col(vec_col).alias(vec_col)
+    centroids = corpus.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("centroid_id"), "embedding"
     )
     for _ in range(rounds):
         assigned = nearest_centroids(
-            corpus, centroids.withColumnRenamed("centroid_id", id_col), 1,
-            id_col, vec_col,
+            corpus, centroids.withColumnRenamed("centroid_id", "vec_id"), 1
         )
         centroids = materialize(
             assigned.select(
-                "centroid_id", F.posexplode(F.col(vec_col)).alias("__dim", "__val")
+                "centroid_id", F.posexplode(F.col("embedding")).alias("__dim", "__val")
             )
             .groupBy("centroid_id", "__dim")
             .agg(F.avg("__val").alias("__m"))
@@ -496,7 +418,7 @@ def train_centroids(
                 F.transform(
                     F.array_sort(F.collect_list(F.struct("__dim", "__m"))),
                     lambda s: s["__m"].cast("float"),
-                ).alias(vec_col)
+                ).alias("embedding")
             ),
             "train_centroids.centroids",
         )

@@ -270,10 +270,10 @@ def kmv_bottomk(
 
 def quantiles_from_sample(
     samp: DataFrame,
-    value_col: str = "value",
     percentiles: tuple[int, ...] = (1, 5, 25, 50, 75, 95, 99),
 ) -> DataFrame:
-    """Percentile estimates from a (small, ≤k-row) uniform sample:
+    """Percentile estimates from a (small, ≤k-row) uniform sample of
+    `value`:
     sort the sample once into an array, then read the order statistic
     at rank max(1, ceil(p·m/100)) per requested integer percentile.
     One 1-row aggregation + a 7-way explode — no window functions, no
@@ -283,7 +283,7 @@ def quantiles_from_sample(
     from pyspark.sql import functions as F
 
     arr = samp.groupBy().agg(
-        F.sort_array(F.collect_list(value_col)).alias("vs"),
+        F.sort_array(F.collect_list("value")).alias("vs"),
         F.count(F.lit(1)).cast("bigint").alias("m"),
     )
     ps = F.array(*[F.lit(p) for p in percentiles])
@@ -359,12 +359,16 @@ def kmv_flags_bottomk(flags: DataFrame, k: int) -> DataFrame:
 
 # ---------------------------------------------------------------- digest
 
+# Sub-buckets per dyadic band: DIGEST_DELTA in the shard-local digests,
+# DIGEST_DELTA2 in the re-cluster merge. The oracle twins read both.
+DIGEST_DELTA, DIGEST_DELTA2 = 16, 32
+
+
 def biased_digest_local(
     df: DataFrame,
     shard_col: str,
     value_col: str,
     id_col: str,
-    delta: int = 16,
     group_cols: tuple[str, ...] = (),
     weight_col: str | None = None,
 ) -> DataFrame:
@@ -379,20 +383,20 @@ def biased_digest_local(
     rank rows by (value, id); let d = min(r, m+1-r) be the distance to
     the nearest tail and l = floor(log2 d) its dyadic level (computed
     as length(bin(d))-1 — no floats). Each dyadic band [2^l, 2^(l+1))
-    is split into ``delta`` equal sub-buckets; a centroid keeps
+    is split into ``DIGEST_DELTA`` equal sub-buckets; a centroid keeps
     (cnt, sum, min, max) per (shard, side, l, sub) bucket.
 
-    Accuracy: a bucket at tail-distance d spans <= 2^l/delta <= d/delta
+    Accuracy: a bucket at tail-distance d spans <= 2^l/DIGEST_DELTA <= d/DIGEST_DELTA
     ranks, so the within-shard rank uncertainty at quantile q is a
-    RELATIVE d/delta — the biased-quantiles guarantee (Cormode et al.
+    RELATIVE d/DIGEST_DELTA — the biased-quantiles guarantee (Cormode et al.
     SIGMOD'05; the same invariant t-digest's scale function encodes),
     vs the uniform bottom-k sample's ADDITIVE DKW bound. State per
-    shard is <= 2 * delta * log2(m) centroids.
+    shard is <= 2 * DIGEST_DELTA * log2(m) centroids.
 
     Scale: ONE shuffle (the shard-partitioned rank window); shard count
     should track input partitions (thousands at 100 TB) so each sort is
     partition-local in spirit. The output frame is
-    O(shards * delta * log m) — the merge input, never corpus-sized.
+    O(shards * DIGEST_DELTA * log m) — the merge input, never corpus-sized.
 
     ``group_cols``: optional grouping keys (e.g. event_type) — one
     independent digest per group, all windows partitioned by
@@ -460,7 +464,7 @@ def biased_digest_local(
         "side",
         "l",
         F.expr(
-            f"({delta} * (d - shiftleft(1L, cast(l as int))))"
+            f"({DIGEST_DELTA} * (d - shiftleft(1L, cast(l as int))))"
             " div shiftleft(1L, cast(l as int))"
         ).alias("sub"),
     )
@@ -477,21 +481,20 @@ def biased_digest_local(
 
 def biased_digest_merge(
     centroids: DataFrame,
-    delta: int = 32,
     group_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Re-cluster a (possibly multi-source) centroid frame into one
     digest by GLOBAL weighted tail-distance: order centroids by
     (min_qv, max_qv, tiebreak), take each centroid's weighted midpoint
     rank, and re-bucket with the same dyadic/sub-bucket rule at
-    resolution ``delta``. Adds <= d/delta rank uncertainty on top of
+    resolution ``DIGEST_DELTA2``. Adds <= d/DIGEST_DELTA2 rank uncertainty on top of
     the inputs' — error composes additively per merge, independent of
     how the data was sharded or micro-batched.
 
     The input needs columns (cnt, sum_qv, min_qv, max_qv, tb) with tb a
     unique tiebreak. With ``group_cols`` empty the windows are GLOBAL
     but over the centroid frame only — bounded by construction
-    (O(shards * delta * log m)), never corpus-sized; with group keys
+    (O(shards * DIGEST_DELTA * log m)), never corpus-sized; with group keys
     (one digest per group) every window is partitioned by them — the
     million-group shape needs no allowlist at all."""
     from pyspark.sql import functions as F
@@ -544,7 +547,7 @@ def biased_digest_merge(
         "side",
         "l",
         F.expr(
-            f"({delta} * (d - shiftleft(1L, cast(l as int))))"
+            f"({DIGEST_DELTA2} * (d - shiftleft(1L, cast(l as int))))"
             " div shiftleft(1L, cast(l as int))"
         ).alias("sub"),
     )

@@ -28,23 +28,21 @@ from pyspark.sql import functions as F
 
 from .dedup import hash32
 
+# S, the number of sub-keys each hot key spreads over
+NUM_SALTS = 8
+
 
 def salted_join(
-    large: DataFrame,
-    small: DataFrame,
-    on: str,
-    salt_from: Column,
-    num_salts: int = 8,
-    how: str = "inner",
+    large: DataFrame, small: DataFrame, on: str, salt_from: Column
 ) -> DataFrame:
-    """Equi-join `large ⋈ small` on column `on`, salted S ways.
+    """Inner equi-join `large ⋈ small` on column `on`, salted NUM_SALTS ways.
     `salt_from` is a deterministic per-row discriminator on the large side
     (e.g. the row's unique id) used to derive its salt bucket."""
     salted_large = large.withColumn(
-        "__salt", (hash32(salt_from.cast("string")) % num_salts).cast("int")
+        "__salt", (hash32(salt_from.cast("string")) % NUM_SALTS).cast("int")
     )
     replicated_small = small.withColumn(
         "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(num_salts - 1))),
+        F.explode(F.sequence(F.lit(0), F.lit(NUM_SALTS - 1))),
     )
-    return salted_large.join(replicated_small, [on, "__salt"], how).drop("__salt")
+    return salted_large.join(replicated_small, [on, "__salt"], "inner").drop("__salt")

@@ -24,7 +24,7 @@ from pyspark.sql import Window as W
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
-def km_subjects(ev: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
+def km_subjects(ev: DataFrame) -> DataFrame:
     """Sessionize events into KM subjects: one row per 30-min-gap
     session with its whole-minute lifetime and the right-censoring
     flag (session still open within one gap of the global max
@@ -38,7 +38,7 @@ def km_subjects(ev: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
         | (
             F.unix_micros(F.col("ts"))
             - F.unix_micros(F.lag("ts").over(w))
-            > gap_us
+            > SESSION_GAP_US
         ),
         1,
     ).otherwise(0)
@@ -58,7 +58,7 @@ def km_subjects(ev: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
     tmax = per_sess.agg(F.max("t1")).scalar()
     return per_sess.select(
         F.expr("cast((t1 - t0) div 60000000 as bigint)").alias("dur"),
-        F.when(F.col("t1") >= tmax - F.lit(gap_us), 1)
+        F.when(F.col("t1") >= tmax - F.lit(SESSION_GAP_US), 1)
         .otherwise(0)
         .alias("censored"),
     )

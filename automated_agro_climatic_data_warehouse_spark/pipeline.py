@@ -21,10 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from .session import local_frame
 
 
-def mint_batch_id(pipeline: str, now: float | None = None) -> str:
-    """`{pipeline}_{YYYYmmdd_HHMMSS}_{8-hex}` (reference
-    etl/utils/logger.py:12-15)."""
-    stamp = time.strftime("%Y%m%d_%H%M%S", time.gmtime(now))
+def mint_batch_id(pipeline: str) -> str:
+    """`{pipeline}_{YYYYmmdd_HHMMSS}_{8-hex}` at the current UTC time
+    (reference etl/utils/logger.py:12-15)."""
+    stamp = time.strftime("%Y%m%d_%H%M%S", time.gmtime())
     return f"{pipeline}_{stamp}_{uuid.uuid4().hex[:8]}"
 
 

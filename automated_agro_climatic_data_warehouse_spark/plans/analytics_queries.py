@@ -135,9 +135,7 @@ def j8_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = ev.select("hot_key").distinct().select(
         "hot_key", F.concat(F.lit("grp_"), F.col("hot_key")).alias("grp")
     )
-    joined = salted_join(
-        ev, dim, on="hot_key", salt_from=F.col("event_id"), num_salts=8
-    )
+    joined = salted_join(ev, dim, on="hot_key", salt_from=F.col("event_id"))
     return joined.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n_events"),
         dsum("value").alias("total_value"),

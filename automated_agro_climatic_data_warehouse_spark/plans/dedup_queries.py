@@ -12,6 +12,11 @@ from pyspark.sql.window import Window as W
 
 from ..functions import keys as K
 from ..operators.dedup import (
+    MAX_SHINGLE_DF,
+    NUM_HASHES,
+    PPJOIN_TAU_DEN,
+    PPJOIN_TAU_NUM,
+    ROWS_PER_BAND,
     containment_pairs,
     dedup_hash_backend,
     hash32,
@@ -162,10 +167,9 @@ def _expanded_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fan_out(docs.unionByName(mutated))
 
 
-def _h32_sql(expr: str, seed: int | None = None) -> str:
+def _h32_sql(expr: str) -> str:
     """DuckDB twin of operators.dedup.hash32."""
-    x = f"'{seed}:' || {expr}" if seed is not None else expr
-    return f"CAST(('0x' || substr(md5({x}), 1, 8)) AS BIGINT)"
+    return f"CAST(('0x' || substr(md5({expr}), 1, 8)) AS BIGINT)"
 
 
 def _h32_chunk_sql(expr: str, seed: int, chunk: int) -> str:
@@ -199,16 +203,19 @@ def minhash_pairs_with_list(expanded_sql: str, threshold: float) -> str:
     mh AS (SELECT doc_id, """
         + ", ".join(
             f"min({_h32_chunk_sql('shingle', i // 4, i % 4)}) AS mh{i}"
-            for i in range(8)
+            for i in range(NUM_HASHES)
         )
         + """
           FROM shingles GROUP BY doc_id),
     bands AS ("""
         + "\n UNION ALL ".join(
-            f"SELECT doc_id, {b} AS band_id, "
-            f"md5(CAST(mh{2*b} AS VARCHAR) || ',' || CAST(mh{2*b+1} AS VARCHAR)) AS sig "
-            f"FROM mh"
-            for b in range(4)
+            f"SELECT doc_id, {b} AS band_id, md5("
+            + " || ',' || ".join(
+                f"CAST(mh{ROWS_PER_BAND * b + r} AS VARCHAR)"
+                for r in range(ROWS_PER_BAND)
+            )
+            + ") AS sig FROM mh"
+            for b in range(NUM_HASHES // ROWS_PER_BAND)
         )
         + """),
     cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -253,21 +260,9 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     var, so the oracle always compares against the md5 path."""
     backend = dedup_hash_backend()
     return minhash_lsh_dedup(
-        _expanded_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _expanded_docs(spark, sf_dir), backend=backend
     )
 
-
-# Document-frequency stop-gram cap for the exact inverted-index join: a
-# shingle appearing in k docs emits ~k²/2 candidate pairs from the self-join,
-# so one boilerplate 3-gram ("terms of service") in 10⁶ docs is a
-# reducer-killing 5·10¹¹-pair key at 100 TB. Dropping shingles with df >
-# MAX_SHINGLE_DF from CANDIDATE GENERATION ONLY (the Jaccard verify still
-# counts every shingle, so reported values stay exact) is the standard
-# stop-gram move: a true near-dup pair at threshold 0.5 shares half its
-# shingles, and the chance that ALL shared shingles are corpus-boilerplate is
-# negligible at any sane cap. Bounds candidate blowup at MAX_SHINGLE_DF²/2
-# pairs per shingle. The oracle mirrors the same cap for exact parity.
-MAX_SHINGLE_DF = 100
 
 _NGRAM_ORACLE = (
     "WITH expanded AS (" + _EXPANDED_DOCS_SQL + "),\n" + _SHINGLES_SQL + f""",
@@ -299,7 +294,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs via the shingle inverted index
     (pairs sharing ≥1 shingle) — exact but heavier than LSH; the verify
     stage of MinHash run standalone at threshold 0.5. Candidate generation
-    is guarded by the MAX_SHINGLE_DF stop-gram cap (see constant above);
+    is guarded by the MAX_SHINGLE_DF stop-gram cap (operators/dedup.py);
     Jaccard values are still computed over the full shingle sets. The
     guarded pipeline lives in operators/dedup.py ngram_jaccard_pairs
     (checkpointed shingle index feeding all plan branches, df-capped
@@ -308,7 +303,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ngram_jaccard_pairs(
         _expanded_docs(spark, sf_dir),
         threshold=0.5,
-        max_shingle_df=MAX_SHINGLE_DF,
     )
 
 
@@ -352,9 +346,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets, so emitted containments are exact integer ratios
     (operators/dedup.py containment_pairs)."""
     return containment_pairs(
-        _expanded_docs(spark, sf_dir),
-        threshold=0.8,
-        max_shingle_df=MAX_SHINGLE_DF,
+        _expanded_docs(spark, sf_dir)
     )
 
 
@@ -607,7 +599,7 @@ def dedup_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return minhash_lsh_incremental(
-        new_batch, fan_out(docs), threshold=0.6, backend=backend
+        new_batch, fan_out(docs), backend=backend
     )
 
 
@@ -723,13 +715,17 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# PPJoin's τ as the integer pair the oracle twins below spell out
+_TN, _TD = PPJOIN_TAU_NUM, PPJOIN_TAU_DEN
+
+
 @query(
     "dedup_ppjoin_prefix",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, unnest(list_distinct(
                regexp_split_to_array(lower(text), '\\s+'))) AS token
-      FROM read_parquet('{sf}/documents.parquet')
+      FROM read_parquet('{{sf}}/documents.parquet')
     ), sizes AS (
       SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
       FROM tok GROUP BY doc_id
@@ -744,7 +740,7 @@ def dedup_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM inter
       JOIN sizes sa ON sa.doc_id = da
       JOIN sizes sb ON sb.doc_id = db
-      WHERE 39 * i >= 19 * (sa.sz + sb.sz)
+      WHERE {_TN + _TD} * i >= {_TN} * (sa.sz + sb.sz)
     ), mx AS (
       SELECT da, db, j_e4,
              max(j_e4) OVER (PARTITION BY da) AS mxj
@@ -809,7 +805,7 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct(F.split(F.lower(F.col("text")), "\\s+"))
         ).alias("token"),
     )
-    pairs = ppjoin_pairs(tok, tau_num=19, tau_den=20)
+    pairs = ppjoin_pairs(tok)
     mx = pairs.withColumn("mxj", F.max("j_e4").over(W.partitionBy("da")))
     return mx.groupBy("da").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
@@ -822,11 +818,11 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_ppjoin_audit",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
       SELECT doc_id, unnest(list_distinct(
                regexp_split_to_array(lower(text), '\\s+'))) AS token
-      FROM read_parquet('{sf}/documents.parquet')
+      FROM read_parquet('{{sf}}/documents.parquet')
     ), tsets AS (
       SELECT doc_id, list_sort(list(token)) AS toks
       FROM tok GROUP BY doc_id
@@ -849,21 +845,21 @@ def dedup_ppjoin_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM rtok r JOIN dfreq d ON r.token = d.token
     ), pfx AS (
       SELECT doc_id, token, r, sz FROM ranked
-      WHERE r <= sz - ((19 * sz + 19) // 20) + 1
+      WHERE r <= sz - (({_TN} * sz + {_TD - 1}) // {_TD}) + 1
     ), cand AS (
       SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
              a.sz AS sa, b.sz AS sb
       FROM pfx a JOIN pfx b ON a.token = b.token AND a.doc_id < b.doc_id
-      WHERE 19 * a.sz <= 20 * b.sz AND 19 * b.sz <= 20 * a.sz
+      WHERE {_TN} * a.sz <= {_TD} * b.sz AND {_TN} * b.sz <= {_TD} * a.sz
         AND 1 + least(a.sz - a.r, b.sz - b.r)
-            >= (19 * (a.sz + b.sz) + 38) // 39
+            >= ({_TN} * (a.sz + b.sz) + {_TN + _TD - 1}) // {_TN + _TD}
     ), rep_pairs AS (
       SELECT c.da, c.db
       FROM cand c
       JOIN rtok x ON x.doc_id = c.da
       JOIN rtok y ON y.doc_id = c.db AND y.token = x.token
       GROUP BY c.da, c.db, c.sa, c.sb
-      HAVING 39 * count(*) >= 19 * (c.sa + c.sb)
+      HAVING {_TN + _TD} * count(*) >= {_TN} * (c.sa + c.sb)
     )
     SELECT
       (SELECT CAST(count(*) AS BIGINT) FROM tsets) AS n_docs,
@@ -903,7 +899,7 @@ def dedup_ppjoin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array_distinct(F.split(F.lower(F.col("text")), "\\s+"))
         ).alias("token"),
     )
-    return ppjoin_audit(tok, tau_num=19, tau_den=20)
+    return ppjoin_audit(tok)
 
 
 _RECALL_SAMPLE_SQL = (
@@ -992,12 +988,12 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reuses at runtime, so eager checkpoints only serialize the job
     # into barriers. Left in the single-action form deliberately.
     truth = ngram_jaccard_pairs(
-        sample, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF
+        sample, threshold=0.5
     ).select("doc_a", "doc_b")
     sh = shingle_docs(sample, distinct=False)
     cand = lsh_candidate_pairs(
         lsh_band_signatures(
-            minhash_signatures(sh, num_hashes=8, backend="md5")
+            minhash_signatures(sh, backend="md5")
         )
     )
     n_rows = F.count(F.lit(1)).cast("bigint")

@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import dsum
+from ..operators.sketches import DIGEST_DELTA, DIGEST_DELTA2
+from ..operators.sketches import DIGEST_DELTA, DIGEST_DELTA2
 from ..session import local_frame, materialize
 from ..sources import load_table
 from .registry import query
@@ -154,7 +156,7 @@ def ev_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.asof import asof_join
 
     return asof_join(
-        clicks, quotes, on=["user_id"], ts_col="ts", value_cols=["view_value"]
+        clicks, quotes, on=["user_id"], value_cols=["view_value"]
     ).select("event_id", "user_id", "ts", "click_value", "view_value")
 
 
@@ -1114,7 +1116,6 @@ def ev_asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         clicks,
         quotes,
         on=["user_id"],
-        ts_col="ts",
         value_cols=["next_view_value"],
         direction="forward",
     ).select("event_id", "user_id", "ts", "click_value", "next_view_value")
@@ -1492,7 +1493,6 @@ def ev_asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
         clicks,
         quotes,
         on=["user_id"],
-        ts_col="ts",
         value_cols=["view_value"],
         tolerance_sec=7200,
     ).select("event_id", "user_id", "ts", "click_value", "view_value")
@@ -2633,14 +2633,14 @@ def ev_asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "user_id", "ts", F.col("value").alias("click_value")
     )
     back = asof_join(
-        clicks, quotes, on=["user_id"], ts_col="ts",
+        clicks, quotes, on=["user_id"],
         value_cols=["view_ts", "view_value"], direction="backward",
     ).select(
         "event_id", "user_id", "ts", "click_value",
         F.col("view_ts").alias("bts"), F.col("view_value").alias("bv"),
     )
     fwd = asof_join(
-        clicks, quotes, on=["user_id"], ts_col="ts",
+        clicks, quotes, on=["user_id"],
         value_cols=["view_ts", "view_value"], direction="forward",
     ).select(
         "event_id",
@@ -3235,7 +3235,7 @@ def ev_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull()
     )
     samp = kmv_state(ev, "event_id", "value", 1024)
-    return quantiles_from_sample(samp, "value")
+    return quantiles_from_sample(samp)
 
 
 @query(
@@ -4561,8 +4561,6 @@ def ev_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TD_SHARDS = 8
-_TD_DELTA1 = 16
-_TD_DELTA2 = 32
 
 
 @query(
@@ -4589,7 +4587,7 @@ _TD_DELTA2 = 32
       SELECT shard, qv, side, d, length(bin(d)) - 1 AS l FROM bd
     ), bs AS (
       SELECT shard, qv, side, l,
-             ({_TD_DELTA1} * (d - (CAST(1 AS BIGINT) << l)))
+             ({DIGEST_DELTA} * (d - (CAST(1 AS BIGINT) << l)))
                // (CAST(1 AS BIGINT) << l) AS sub
       FROM bl
     ), c1 AS (
@@ -4623,7 +4621,7 @@ _TD_DELTA2 = 32
       FROM m2
     ), m4 AS (
       SELECT cnt, sum_qv, min_qv, max_qv, side, l,
-             ({_TD_DELTA2} * (d - (CAST(1 AS BIGINT) << l)))
+             ({DIGEST_DELTA2} * (d - (CAST(1 AS BIGINT) << l)))
                // (CAST(1 AS BIGINT) << l) AS sub
       FROM m3
     ), c2 AS (
@@ -4661,8 +4659,8 @@ def ev_quantile_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     weakest) but built deterministically so the FULL sketch is
     hash-verified by the DuckDB twin: per-shard rank bucketing on
     dyadic tail-distance bands (operators/sketches.biased_digest_local,
-    delta=16, 8 shards), a weighted re-cluster merge
-    (biased_digest_merge, delta=32), and an exact-integer centroid-mean
+    16 sub-buckets per band, 8 shards), a weighted re-cluster merge
+    (biased_digest_merge, 32 sub-buckets), and an exact-integer centroid-mean
     readout at p in {{500, 950, 990, 999}} permille. All arithmetic is
     on the e6 integer grid; log2 is length(bin(d))-1 — no floats
     anywhere, which is what classic KLL (coin flips) and t-digest
@@ -4702,7 +4700,7 @@ def ev_quantile_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("shard"),
         )
     )
-    c1 = biased_digest_local(ev, "shard", "qv", "id", delta=_TD_DELTA1)
+    c1 = biased_digest_local(ev, "shard", "qv", "id")
     c1 = c1.withColumn(
         "tb",
         F.concat_ws(
@@ -4713,7 +4711,7 @@ def ev_quantile_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sub").cast("string"),
         ),
     )
-    digest = biased_digest_merge(c1, delta=_TD_DELTA2)
+    digest = biased_digest_merge(c1)
     return biased_digest_quantiles(digest, permille=(500, 950, 990, 999))
 
 
@@ -4738,7 +4736,7 @@ _TDG_SHARDS = 4
       FROM ev
     ), bs AS (
       SELECT event_type, shard, qv, side, l,
-             ({_TD_DELTA1} * (d - (CAST(1 AS BIGINT) << l)))
+             ({DIGEST_DELTA} * (d - (CAST(1 AS BIGINT) << l)))
                // (CAST(1 AS BIGINT) << l) AS sub
       FROM (SELECT event_type, shard, qv, side, d,
                    length(bin(d)) - 1 AS l
@@ -4766,7 +4764,7 @@ _TDG_SHARDS = 4
             FROM c1)
     ), m4 AS (
       SELECT event_type, cnt, sum_qv, min_qv, max_qv, side, l,
-             ({_TD_DELTA2} * (d - (CAST(1 AS BIGINT) << l)))
+             ({DIGEST_DELTA2} * (d - (CAST(1 AS BIGINT) << l)))
                // (CAST(1 AS BIGINT) << l) AS sub
       FROM (SELECT event_type, cnt, sum_qv, min_qv, max_qv, side, d,
                    length(bin(d)) - 1 AS l
@@ -4842,8 +4840,7 @@ def ev_quantile_tdigest_by_type(
         )
     )
     c1 = biased_digest_local(
-        ev, "shard", "qv", "id", delta=_TD_DELTA1,
-        group_cols=("event_type",),
+        ev, "shard", "qv", "id", group_cols=("event_type",),
     )
     c1 = c1.withColumn(
         "tb",
@@ -4856,7 +4853,7 @@ def ev_quantile_tdigest_by_type(
         ),
     )
     digest = biased_digest_merge(
-        c1, delta=_TD_DELTA2, group_cols=("event_type",)
+        c1, group_cols=("event_type",)
     )
     return biased_digest_quantiles(
         digest, permille=(500, 990), group_cols=("event_type",)
@@ -4934,8 +4931,8 @@ def layout_hilbert_vs_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hilbert's unit-step curve keeps every range one compact blob —
     tests pin hilbert.sum_bbox_area <= zorder's. The oracle replays
     both integer recurrences bit-for-bit as chained CTEs. At 100 TB
-    this decides the repartitionByRange key for the write path
-    (functions/hilbert.write_hilbert_clustered); the audit itself is
+    this decides the repartitionByRange key for the write path; the
+    audit itself is
     two hash aggregations after a single scan — no shuffle wider than
     (curve, bucket)."""
     from ..functions.hilbert import with_hilbert

@@ -88,7 +88,7 @@ def _lsh_chain_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the connected_components rationale in operators/graph.py)."""
     backend = dedup_hash_backend()
     return materialize(
-        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), backend=backend),
         "_lsh_chain_pairs",
     )
 
@@ -123,7 +123,7 @@ def dedup_cc_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same parity-vs-production hash switch as dedup_minhash_lsh
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     )
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
     return labels.select(
@@ -170,7 +170,7 @@ def dedup_cluster_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     both final aggregations are uniform single shuffles."""
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     )
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
     sizes = labels.groupBy("component").agg(
@@ -288,7 +288,7 @@ def split_cluster_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     output, making the leakage guard nearly free."""
     backend = dedup_hash_backend()
     corpus = _chain_docs(spark, sf_dir)
-    pairs = minhash_lsh_dedup(corpus, threshold=0.6, backend=backend)
+    pairs = minhash_lsh_dedup(corpus, backend=backend)
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
     asg = corpus.select("doc_id").join(
         labels.select(
@@ -358,7 +358,7 @@ def dedup_keeper_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     no other plan change — survivorship is a one-line strategy knob."""
     backend = dedup_hash_backend()
     corpus = _chain_docs(spark, sf_dir)
-    pairs = minhash_lsh_dedup(corpus, threshold=0.6, backend=backend)
+    pairs = minhash_lsh_dedup(corpus, backend=backend)
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
     sized = labels.select(
         F.col("node").alias("doc_id"),
@@ -501,7 +501,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark does no cross-branch subplan sharing)."""
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     )
     e = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
@@ -603,7 +603,7 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs. Output: every node of the pair graph with its in_core flag."""
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     )
     e = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
@@ -698,7 +698,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the symmetric union consumes `pairs` on two branches; checkpoint
     # so the LSH pipeline runs once, not once per branch
     pairs = materialize(
-        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), backend=backend),
         "graph_bfs_hops.pairs",
     )
     edges = materialize(
@@ -858,7 +858,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two consumers fan out from `pairs` (CC labels + the edge union);
     # checkpoint so the LSH pipeline runs once, not once per branch
     pairs = materialize(
-        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), backend=backend),
         "graph_modularity.pairs",
     )
     # edges_materialized: pairs are checkpointed right above (for the
@@ -962,7 +962,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph. cc is one double division of exact ints per node."""
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     )
     e = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
@@ -1070,7 +1070,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fixed-iteration contract, as PageRank/k-core)."""
     backend = dedup_hash_backend()
     pairs = materialize(
-        minhash_lsh_dedup(_chain_docs(spark, sf_dir), threshold=0.6, backend=backend),
+        minhash_lsh_dedup(_chain_docs(spark, sf_dir), backend=backend),
         "graph_label_propagation.pairs",
     )
     nodes = (
@@ -1136,7 +1136,7 @@ def graph_edge_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughout."""
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     )
     e = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b")),
@@ -1301,7 +1301,7 @@ def sample_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded aggregations (clusters, then 5 folds)."""
     backend = dedup_hash_backend()
     corpus = _chain_docs(spark, sf_dir)
-    pairs = minhash_lsh_dedup(corpus, threshold=0.6, backend=backend)
+    pairs = minhash_lsh_dedup(corpus, backend=backend)
     labels = connected_components(pairs, src="doc_a", dst="doc_b")
     asg = corpus.select("doc_id").join(
         labels.select(

@@ -168,7 +168,7 @@ def pipe_training_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same lesson as connected_components / dedup_ngram_jaccard); this is
     # also where a production build persists the cleaned corpus
     uniq = materialize(fan_out(uniq), "pipe_training_prep.uniq")
-    pairs = minhash_lsh_dedup(uniq, threshold=0.6, backend=backend)
+    pairs = minhash_lsh_dedup(uniq, backend=backend)
     purge = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     final = uniq.join(purge, "doc_id", "left_anti")
     p = _pct(F.col("doc_id"), "split")
@@ -549,7 +549,6 @@ def pipe_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs,
         group_col="source",
         order_cols=["difficulty", "doc_id"],
-        leg_col="leg",
         out_col="curriculum_rank",
     ).select("doc_id", "source", "difficulty", "leg", "curriculum_rank")
 

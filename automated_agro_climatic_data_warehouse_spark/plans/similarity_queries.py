@@ -15,6 +15,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators.similarity import (
+    IVF_K,
+    IVF_LISTS,
+    IVF_SPILL,
     brute_force_topk,
     bucketed_topk,
     cosine,
@@ -157,7 +160,7 @@ def ann_bucketed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no fan_out: the bucket equi-join shuffles on __bkt anyway, so a
     # prior repartition is a second exchange that redistributes nothing
     emb = load_table(spark, sf_dir, "embeddings")
-    return bucketed_topk(emb, F.col("vec_id") < 50, k=3, bits=3)
+    return bucketed_topk(emb, F.col("vec_id") < 50)
 
 
 _CENT_COS_SQL = (
@@ -173,7 +176,7 @@ _CENT_COS_SQL = (
     WITH emb AS (SELECT vec_id, embedding
                  FROM read_parquet('{{sf}}/embeddings.parquet')),
     cent AS (SELECT vec_id AS centroid_id, embedding FROM emb
-             WHERE vec_id < 16),
+             WHERE vec_id < {IVF_LISTS}),
     assign AS (
       SELECT e.vec_id, e.embedding, c.centroid_id,
              row_number() OVER (PARTITION BY e.vec_id
@@ -199,7 +202,7 @@ _CENT_COS_SQL = (
                                 ORDER BY cos DESC, neighbor_id) AS rank
       FROM scored
     )
-    SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5
+    SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= {IVF_K}
     """,
     tags=("similarity", "ann", "ivf"),
 )
@@ -211,9 +214,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly; production swaps in train_centroids() (Lloyd iterations,
     not engine-replayable) with identical probe/list plumbing."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_topk(
-        emb, F.col("vec_id") < 30, k=5, n_centroids=16, nprobe=2
-    )
+    return ivf_topk(emb, F.col("vec_id") < 30)
 
 
 @query(
@@ -274,8 +275,7 @@ def emb_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory cut that makes billion-vector ANN serving fit in RAM. Pure
     map-side array math, zero shuffles and zero joins; the oracle
     recomputes the same scale/round chain (both engines round half away
-    from zero, and the double quotients are never exact halves). Library
-    form (operators/similarity.py int8_quantize) keeps the array; the
+    from zero, and the double quotients are never exact halves). The
     driver-checked shape posexplodes to scalar rows — list cells crash
     the driver's pandas canonicalizer."""
     from ..operators.similarity import int8_scale
@@ -285,8 +285,7 @@ def emb_int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # computed once per vector in the projection below the Generate
     # (never inside a transform lambda, where it would re-evaluate per
     # element — the r4 bench regression), and no intermediate quantized
-    # array is ever allocated. Library form (operators/similarity.py
-    # int8_quantize) keeps the array for downstream vector ops.
+    # array is ever allocated.
     pre = emb.select(
         "vec_id", int8_scale(F.col("embedding")).alias("scale"), "embedding"
     )
@@ -516,7 +515,6 @@ def emb_gram_column(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sums at most 8 such terms — nowhere near int64 limits at any corpus
 # size (the key space carries ≤ dims terms per group, not corpus rows).
 _PQ_GRID = 1 << 12
-_PQ_SUBS = 8  # 64 dims → 8 subspaces of 8
 _PQ_CODES = 16
 
 
@@ -1387,7 +1385,7 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = brute_force_topk(emb, F.col("vec_id") < 20, k=3).select(
         "query_id", "neighbor_id"
     )
-    approx = bucketed_topk(emb, F.col("vec_id") < 20, k=3, bits=3).select(
+    approx = bucketed_topk(emb, F.col("vec_id") < 20).select(
         "query_id", "neighbor_id"
     )
     hits = (
@@ -2275,9 +2273,7 @@ def ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("label").cast("bigint").alias("label"), "embedding"
     )
-    return filtered_topk(
-        emb, F.col("vec_id") < 60, filter_cols=["label"], k=3, bits=2
-    )
+    return filtered_topk(emb, F.col("vec_id") < 60, filter_cols=["label"], k=3)
 
 
 @query(
@@ -3819,7 +3815,7 @@ def ann_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH emb AS (SELECT vec_id, embedding
                  FROM read_parquet('{{sf}}/embeddings.parquet')),
     cent AS (SELECT vec_id AS centroid_id, embedding FROM emb
-             WHERE vec_id < 16),
+             WHERE vec_id < {IVF_LISTS}),
     assign AS (
       SELECT e.vec_id, e.embedding, c.centroid_id,
              row_number() OVER (PARTITION BY e.vec_id
@@ -3828,7 +3824,7 @@ def ann_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM emb e, cent c
     ),
     lists AS (SELECT vec_id AS neighbor_id, embedding, centroid_id
-              FROM assign WHERE probe_rank <= 2),
+              FROM assign WHERE probe_rank <= {IVF_SPILL}),
     probes AS (SELECT vec_id AS query_id, embedding, centroid_id
                FROM assign WHERE probe_rank = 1 AND vec_id < 30),
     scored AS (
@@ -3845,7 +3841,7 @@ def ann_srp_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ORDER BY cos DESC, neighbor_id) AS rank
       FROM scored
     )
-    SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5
+    SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= {IVF_K}
     """,
     tags=("similarity", "ann", "ivf", "spilled-assignment"),
 )
@@ -3868,9 +3864,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.similarity import ivf_spill_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return ivf_spill_topk(
-        emb, F.col("vec_id") < 30, k=5, n_centroids=16, spill=2
-    )
+    return ivf_spill_topk(emb, F.col("vec_id") < 30)
 
 
 @query(
@@ -3879,7 +3873,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH emb AS (SELECT vec_id, embedding
                  FROM read_parquet('{{sf}}/embeddings.parquet')),
     cent AS (SELECT vec_id AS centroid_id, embedding FROM emb
-             WHERE vec_id < 16),
+             WHERE vec_id < {IVF_LISTS}),
     assign AS (
       SELECT e.vec_id, e.embedding, c.centroid_id,
              row_number() OVER (PARTITION BY e.vec_id
@@ -3890,7 +3884,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
     l1 AS (SELECT vec_id AS neighbor_id, embedding, centroid_id
            FROM assign WHERE probe_rank = 1),
     l2 AS (SELECT vec_id AS neighbor_id, embedding, centroid_id
-           FROM assign WHERE probe_rank <= 2),
+           FROM assign WHERE probe_rank <= {IVF_SPILL}),
     p1 AS (SELECT vec_id AS query_id, embedding, centroid_id
            FROM assign WHERE probe_rank = 1 AND vec_id < 30),
     p2 AS (SELECT vec_id AS query_id, embedding, centroid_id
@@ -3905,7 +3899,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY cos DESC, neighbor_id) AS rank
-        FROM truth_scored) WHERE rank <= 5
+        FROM truth_scored) WHERE rank <= {IVF_K}
     ),
     spill_scored AS (
       SELECT p.query_id, l.neighbor_id,
@@ -3920,7 +3914,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY cos DESC, neighbor_id) AS rank
-        FROM spill_scored) WHERE rank <= 5
+        FROM spill_scored) WHERE rank <= {IVF_K}
     ),
     probe_scored AS (
       SELECT p.query_id, l.neighbor_id,
@@ -3935,7 +3929,7 @@ def ann_ivf_spill(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT query_id, neighbor_id,
                row_number() OVER (PARTITION BY query_id
                                   ORDER BY cos DESC, neighbor_id) AS rank
-        FROM probe_scored) WHERE rank <= 5
+        FROM probe_scored) WHERE rank <= {IVF_K}
     ),
     spill_hits AS (
       SELECT t.query_id, count(s.neighbor_id) AS n_hit
@@ -3994,10 +3988,10 @@ def ann_ivf_recall_matched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     qpred = F.col("vec_id") < 30
-    truth = brute_force_topk(emb, qpred, k=5).select(
+    truth = brute_force_topk(emb, qpred, k=IVF_K).select(
         "query_id", "neighbor_id"
     )
-    cent = emb.filter(F.col("vec_id") < 16)
+    cent = emb.filter(F.col("vec_id") < IVF_LISTS)
 
     def traffic(nlist: int, nprobe: int) -> Column:
         lists = nearest_centroids(emb, cent, nlist).select(
@@ -4039,8 +4033,8 @@ def ann_ivf_recall_matched(spark: SparkSession, sf_dir: str) -> DataFrame:
             candidate_rows.alias("candidate_rows"),
         )
 
-    spill = ivf_spill_topk(emb, qpred, k=5, n_centroids=16, spill=2)
-    probe = ivf_topk(emb, qpred, k=5, n_centroids=16, nprobe=2)
-    return leg("spill2_probe1", spill, traffic(2, 1)).unionByName(
+    spill = ivf_spill_topk(emb, qpred)
+    probe = ivf_topk(emb, qpred)
+    return leg("spill2_probe1", spill, traffic(IVF_SPILL, 1)).unionByName(
         leg("spill1_probe2", probe, traffic(1, 2))
     )

@@ -119,19 +119,6 @@ def f17_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---- constructed agro text: the planted values are recoverable in closed
 # form, so the oracle states the EXPECTED extraction arithmetically.
 
-_CROP_TEXT_SQL = """
-    'Plant ' || p_name || ' requires temperatures between '
-    || CAST(p_size % 30 AS VARCHAR) || '°C and '
-    || CAST(p_size % 30 + 7 AS VARCHAR)
-    || '°C. It needs ' || CAST(1 + p_partkey % 12 AS VARCHAR)
-    || ' mm of water per day. It prefers full sun exposure of '
-    || CAST(4 + p_size % 8 AS VARCHAR) || ' to '
-    || CAST(6 + p_size % 8 AS VARCHAR) || ' hours daily.'
-    || CASE WHEN p_partkey % 3 > 0
-            THEN ' Soil pH between 5.5 and 7.5 is ideal.' ELSE '' END
-"""
-
-
 def _crop_text():
     return F.concat(
         F.lit("Plant "),

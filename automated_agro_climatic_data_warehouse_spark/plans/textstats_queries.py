@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..operators.dedup import hash32
+from ..operators.sketches import DIGEST_DELTA, DIGEST_DELTA2
 from ..sources import fan_out, load_table
 from .registry import query
 
@@ -2526,7 +2527,6 @@ def ts_source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _TSW_SHARDS = 8
-_TSW_D1, _TSW_D2 = 16, 32
 
 
 @query(
@@ -2551,7 +2551,7 @@ _TSW_D1, _TSW_D2 = 16, 32
       FROM ranked
     ), bs AS (
       SELECT shard, qv, wt, side, l,
-             ({_TSW_D1} * (d - (CAST(1 AS BIGINT) << l)))
+             ({DIGEST_DELTA} * (d - (CAST(1 AS BIGINT) << l)))
                // (CAST(1 AS BIGINT) << l) AS sub
       FROM (SELECT shard, qv, wt, side, d, length(bin(d)) - 1 AS l
             FROM (SELECT shard, qv, wt,
@@ -2576,7 +2576,7 @@ _TSW_D1, _TSW_D2 = 16, 32
             FROM c1)
     ), m4 AS (
       SELECT cnt, sum_qv, min_qv, max_qv, side, l,
-             ({_TSW_D2} * (d - (CAST(1 AS BIGINT) << l)))
+             ({DIGEST_DELTA2} * (d - (CAST(1 AS BIGINT) << l)))
                // (CAST(1 AS BIGINT) << l) AS sub
       FROM (SELECT cnt, sum_qv, min_qv, max_qv, side, d,
                    length(bin(d)) - 1 AS l
@@ -2656,7 +2656,7 @@ def ts_tdigest_token_weighted_len(
         )
     )
     c1 = biased_digest_local(
-        docs, "shard", "qv", "id", delta=_TSW_D1, weight_col="wt"
+        docs, "shard", "qv", "id", weight_col="wt"
     )
     c1 = c1.withColumn(
         "tb",
@@ -2668,7 +2668,7 @@ def ts_tdigest_token_weighted_len(
             F.col("sub").cast("string"),
         ),
     )
-    digest = biased_digest_merge(c1, delta=_TSW_D2)
+    digest = biased_digest_merge(c1)
     out = biased_digest_quantiles(digest, permille=(500, 900, 990))
     return out.select(
         "p_permille",

@@ -18,13 +18,15 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 
-def get_spark(app_name: str = "agro_dwh_spark", cpus: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "agro_dwh_spark") -> SparkSession:
     """Build (or reuse) the session.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores)
+    and ``SPARK_GRAFT_DRIVER_MEM`` the driver heap (default: half of
+    physical memory).
     """
-    if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or os.cpu_count() or 4
+    half_mem_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -33,7 +35,10 @@ def get_spark(app_name: str = "agro_dwh_spark", cpus: int | None = None) -> Spar
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", f"{half_mem_mb}m"),
+        )
         # UTC so timestamp values hash identically to DuckDB's naive-UTC
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -16,16 +16,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def date_dimension(
-    spark: SparkSession,
-    start: str = "2020-01-01",
-    end: str = "2030-12-31",
-) -> DataFrame:
+def date_dimension(spark: SparkSession, start: str = "2020-01-01") -> DataFrame:
+    """One row per day from `start` through 2030-12-31."""
     d = F.col("full_date")
     month = F.month(d)
     return (
         spark.sql(
-            f"SELECT explode(sequence(to_date('{start}'), to_date('{end}'), "
+            f"SELECT explode(sequence(to_date('{start}'), to_date('2030-12-31'), "
             "interval 1 day)) AS full_date"
         )
         .select(

@@ -112,11 +112,11 @@ def soil_property(parsed: Column, prop: str) -> Column:
     return F.try_element_at(layer["depths"], F.lit(1))["values"]["mean"]
 
 
-def parse_soil_payload(df: DataFrame, json_col: str = "payload") -> DataFrame:
-    """S2: raw JSON string column → typed soil property columns."""
-    parsed = F.from_json(F.col(json_col), SOIL_PAYLOAD_SCHEMA)
+def parse_soil_payload(df: DataFrame) -> DataFrame:
+    """S2: raw JSON string column `payload` → typed soil property columns."""
+    parsed = F.from_json(F.col("payload"), SOIL_PAYLOAD_SCHEMA)
     return df.withColumn("__p", parsed).select(
-        *[c for c in df.columns if c != json_col],
+        *[c for c in df.columns if c != "payload"],
         soil_property(F.col("__p"), "clay").alias("clay_0_5cm"),
         soil_property(F.col("__p"), "sand").alias("sand_0_5cm"),
         soil_property(F.col("__p"), "silt").alias("silt_0_5cm"),

@@ -39,7 +39,6 @@ def anova_moments_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "group string, x bigint",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (group, x) as an
     availableNow stream through the additive moment merge; returns the
@@ -48,7 +47,7 @@ def anova_moments_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "group string, x bigint",
         state_dir,
         checkpoint_dir,
         anova_moments_merge,

@@ -75,8 +75,6 @@ def capture_recapture_drain(
     schema: str,
     state_dir: str,
     checkpoint_dir: str,
-    id_col: str = "doc_id",
-    source_col: str = "source",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
     the additive capture-counter merge; returns the final per-source
@@ -88,7 +86,7 @@ def capture_recapture_drain(
         schema,
         state_dir,
         checkpoint_dir,
-        lambda batch, prev: _capture_merge(batch, prev, id_col, source_col),
+        lambda batch, prev: _capture_merge(batch, prev, "doc_id", "source"),
         empty_schema=(
             "source string, n_true bigint, n1 bigint, n2 bigint, m bigint"
         ),

@@ -62,14 +62,7 @@ def cdc_apply_drain(
     )
 
 
-def cdc_apply_readout(
-    state: DataFrame,
-    base: DataFrame,
-    base_key: str = "o_orderkey",
-    base_val: str = "o_totalprice",
-) -> DataFrame:
+def cdc_apply_readout(state: DataFrame, base: DataFrame) -> DataFrame:
     """Apply the drained latest-op state onto a base snapshot — the
     shared batch/stream application (operators/cdc.apply_latest)."""
-    return apply_latest(
-        base, state.select("k", "op", "price"), base_key, base_val
-    )
+    return apply_latest(base, state.select("k", "op", "price"))

@@ -30,7 +30,6 @@ def ct_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "event_type string, dow bigint",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (event_type, dow)
     as an availableNow stream through the additive cell merge; returns
@@ -40,7 +39,7 @@ def ct_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "event_type string, dow bigint",
         state_dir,
         checkpoint_dir,
         ct_merge,

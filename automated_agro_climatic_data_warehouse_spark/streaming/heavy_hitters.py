@@ -103,7 +103,6 @@ def heavy_hitters_drain(
     checkpoint_dir: str,
     key_col: str,
     k: int = 32,
-    key_type: str = "long",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files as an availableNow stream through
     the MG merge; returns the final summary (key, c) — a guaranteed
@@ -118,5 +117,5 @@ def heavy_hitters_drain(
         state_dir,
         checkpoint_dir,
         lambda batch, prev: _mg_merge(batch, prev, key_col, k),
-        empty_schema=f"key {key_type}, c long",
+        empty_schema="key long, c long",
     )

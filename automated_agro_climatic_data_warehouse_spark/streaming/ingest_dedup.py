@@ -126,10 +126,10 @@ def dedup_gate_batch(
     batch: DataFrame,
     accepted_dir: str,
     commit_id: str,
-    threshold: float = 0.6,
     backend: str = "md5",
 ) -> None:
-    """Accept the non-duplicate subset of `batch` into `accepted_dir`.
+    """Accept the non-duplicate subset of `batch` into `accepted_dir`
+    (near-duplicates at MinHash Jaccard >= 0.6).
 
     Two-stage gate in SEQUENTIAL-GREEDY order (index docs arrived
     before every batch doc, so they always win): (1) batch-vs-index
@@ -151,14 +151,10 @@ def dedup_gate_batch(
     index_paths = _committed_parquet_paths(accepted_dir)
     if index_paths:
         index = s.read.parquet(*index_paths)
-        hits = minhash_lsh_incremental(
-            survivors, index, threshold=threshold, backend=backend
-        )
+        hits = minhash_lsh_incremental(survivors, index, backend=backend)
         dup_new = hits.select(F.col("doc_a").alias("doc_id")).distinct()
         survivors = survivors.join(dup_new, "doc_id", "left_anti")
-    intra = minhash_lsh_dedup(
-        survivors, threshold=threshold, backend=backend
-    )
+    intra = minhash_lsh_dedup(survivors, backend=backend)
     rejected = _greedy_reject_by_id(intra)
     survivors = survivors.join(rejected, "doc_id", "left_anti")
     # no checkpoint before the write: it is the plan's only consumer, and
@@ -173,7 +169,6 @@ def dedup_ingest_drain(
     schema: str,
     accepted_dir: str,
     checkpoint_dir: str,
-    threshold: float = 0.6,
     backend: str = "md5",
 ) -> DataFrame:
     """Drain the parquet files in `src_dir` as a stream (availableNow,
@@ -199,7 +194,6 @@ def dedup_ingest_drain(
         dedup_gate_batch(
             batch,
             accepted_dir,
-            threshold=threshold,
             backend=backend,
             commit_id=f"{token}-{batch_id:06d}",
         )

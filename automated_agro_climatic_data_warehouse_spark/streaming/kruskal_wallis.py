@@ -31,7 +31,6 @@ def kw_histogram_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "grp string, cents bigint",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (grp, cents) as an
     availableNow stream through the additive histogram merge; returns
@@ -40,7 +39,7 @@ def kw_histogram_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "grp string, cents bigint",
         state_dir,
         checkpoint_dir,
         kw_histogram_merge,

@@ -33,7 +33,6 @@ def lb_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "day date",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (day) as an
     availableNow stream through the additive daily-volume merge;
@@ -42,7 +41,7 @@ def lb_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "day date",
         state_dir,
         checkpoint_dir,
         lb_daily_merge,

@@ -34,7 +34,6 @@ def mw_histogram_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "cents bigint, g1 int",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (cents, g1) as an
     availableNow stream through the additive histogram merge; returns
@@ -43,7 +42,7 @@ def mw_histogram_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "cents bigint, g1 int",
         state_dir,
         checkpoint_dir,
         mw_histogram_merge,

@@ -194,7 +194,6 @@ def page_hinkley_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "event_type string, day date, x bigint",
 ) -> DataFrame:
     """Drain `src_dir`'s DAY-ORDERED parquet daily-rollup files as an
     availableNow stream through the ordered fold; returns the final
@@ -203,7 +202,7 @@ def page_hinkley_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "event_type string, day date, x bigint",
         state_dir,
         checkpoint_dir,
         ph_fold,

@@ -30,7 +30,6 @@ def srm_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "day date, in_a int",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet assignment files (day, in_a) as an
     availableNow stream through the additive counter merge; returns
@@ -39,7 +38,7 @@ def srm_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "day date, in_a int",
         state_dir,
         checkpoint_dir,
         srm_daily_merge,

@@ -104,12 +104,11 @@ def stateful_sessionize_stream(
     spark: SparkSession,
     stage_dir: str,
     checkpoint_dir: str,
-    gap_minutes: int = 30,
 ) -> tuple[DataFrame, int]:
-    """Closed gap-sessions per user; the open tail session stays in
+    """Closed 30-minute-gap sessions per user; the open tail session stays in
     GroupState (start_us, last_us, n_events) across batches and is never
     emitted. Returns (sessions DataFrame, n_batches)."""
-    gap_us = gap_minutes * 60 * 1_000_000
+    gap_us = 30 * 60 * 1_000_000
     stream = (
         spark.readStream.schema(SESSION_SCHEMA)
         .format("parquet")
@@ -168,9 +167,9 @@ def stateful_sessionize_stream(
 
 
 def watermarked_hourly_counts(
-    spark: SparkSession, stage_dir: str, checkpoint_dir: str, delay: str = "1 hour"
+    spark: SparkSession, stage_dir: str, checkpoint_dir: str
 ) -> tuple[DataFrame, int]:
-    """Append-mode tumbling-hour counts under a `delay` watermark: a
+    """Append-mode tumbling-hour counts under a 1-hour watermark: a
     window is emitted only once the watermark passes its end, and events
     arriving after that are DROPPED — the bounded-state contract that
     lets a 100 TB stream run forever without unbounded window state.
@@ -186,7 +185,7 @@ def watermarked_hourly_counts(
 
     agg = (
         stream.withColumn("ts", F.timestamp_micros((F.col("ts") / 1000).cast("long")))
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
@@ -203,12 +202,12 @@ WM_DEDUP_SCHEMA = T.StructType(
 
 
 def watermarked_dedup_stream(
-    spark: SparkSession, stage_dir: str, checkpoint_dir: str, delay: str = "1 hour"
+    spark: SparkSession, stage_dir: str, checkpoint_dir: str
 ) -> tuple[DataFrame, int]:
     """Built-in bounded-state streaming dedup
     (``dropDuplicatesWithinWatermark``): a key is emitted once and
     suppressed for as long as its dedup state lives, and the state is
-    EVICTED once the watermark passes its event time + delay — so an
+    EVICTED once the 1-hour watermark passes its event time + 1 hour — so an
     infinite stream deduplicates forever in O(keys-per-delay-window)
     memory. Contrast ``stateful_dedup_stream``: NoTimeout GroupState is
     truly exactly-once over ALL history but its state grows with the key
@@ -227,7 +226,7 @@ def watermarked_dedup_stream(
         stream.withColumn(
             "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
         )
-        .withWatermark("ts", delay)
+        .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["key"])
     )
     return _drain(spark, out, checkpoint_dir)

@@ -49,14 +49,14 @@ STATE_SCHEMA = (
 )
 
 
-def _local_digest(batch: DataFrame, shard_col: str, delta: int) -> DataFrame:
-    return biased_digest_local(batch, shard_col, "qv", "id", delta=delta)
+def _local_digest(batch: DataFrame) -> DataFrame:
+    return biased_digest_local(batch, "shard", "qv", "id")
 
 
 COMPACTED_SHARD = -1  # pseudo-shard tagging recompressed centroids
 
 
-def _compact(state: DataFrame, delta2: int) -> DataFrame:
+def _compact(state: DataFrame) -> DataFrame:
     """Recompress an accumulated centroid state through the weighted
     re-cluster merge, back into STATE_SCHEMA shape under the reserved
     COMPACTED_SHARD. At most one compacted generation exists at a time
@@ -76,7 +76,7 @@ def _compact(state: DataFrame, delta2: int) -> DataFrame:
             F.col("sub").cast("string"),
         ),
     )
-    return biased_digest_merge(tagged, delta=delta2).select(
+    return biased_digest_merge(tagged).select(
         F.lit(COMPACTED_SHARD).cast("bigint").alias("shard"),
         F.col("side").cast("int").alias("side"),
         F.col("l").cast("int").alias("l"),
@@ -94,13 +94,10 @@ def tdigest_drain(
     schema: str,
     state_dir: str,
     checkpoint_dir: str,
-    shard_col: str = "shard",
-    delta: int = 16,
-    delta2: int = 32,
     max_state_rows: int | None = None,
 ) -> DataFrame:
     """Drain `src_dir`'s parquet files (must carry columns `id`, `qv`,
-    and `shard_col`; shard values must not straddle micro-batch
+    and `shard`; shard values must not straddle micro-batch
     boundaries — use an ingest-file ordinal composite) as an
     availableNow stream; state accumulates each batch's local-digest
     centroids. Returns the final centroid state; feed it through
@@ -108,7 +105,7 @@ def tdigest_drain(
 
     ``max_state_rows`` bounds the state for UNBOUNDED streams: when the
     accumulated frame exceeds it, the state recompresses through the
-    re-cluster merge (one more composable d/delta2 of rank error per
+    re-cluster merge (one more composable d/DIGEST_DELTA2 of rank error per
     compaction — the same compaction/accuracy trade KLL makes on level
     overflow; tests/test_round8_ops.py pins the state bound AND the
     composed error bound after forced compactions). Compaction makes
@@ -117,12 +114,12 @@ def tdigest_drain(
     the error bound applies always."""
 
     def merge(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        nxt = _local_digest(batch, shard_col, delta)
+        nxt = _local_digest(batch)
         if prev is None:
             return nxt
         state = prev.unionByName(nxt)
         if max_state_rows is not None and state.count() > max_state_rows:
-            state = _compact(state, delta2)
+            state = _compact(state)
         return state
 
     return chain_drain(
@@ -138,7 +135,6 @@ def tdigest_drain(
 
 def tdigest_readout(
     state: DataFrame,
-    delta2: int = 32,
     permille: tuple[int, ...] = (500, 950, 990, 999),
 ) -> DataFrame:
     """Merged-digest quantile estimates from an accumulated centroid
@@ -159,5 +155,5 @@ def tdigest_readout(
         ),
     )
     return biased_digest_quantiles(
-        biased_digest_merge(tagged, delta=delta2), permille=permille
+        biased_digest_merge(tagged), permille=permille
     )

@@ -47,7 +47,6 @@ def vhist_drain(
     src_dir: str,
     state_dir: str,
     checkpoint_dir: str,
-    schema: str = "event_type string, cents bigint",
 ) -> DataFrame:
     """Drain `src_dir`'s parquet observation files (event_type, cents)
     as an availableNow stream through the additive histogram merge;
@@ -57,7 +56,7 @@ def vhist_drain(
     return chain_drain(
         spark,
         src_dir,
-        schema,
+        "event_type string, cents bigint",
         state_dir,
         checkpoint_dir,
         vhist_merge,

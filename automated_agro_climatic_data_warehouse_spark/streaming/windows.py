@@ -102,8 +102,7 @@ def streaming_tumbling_hourly(
 
 
 def streaming_session_window(
-    spark: SparkSession, sf_dir: str, checkpoint_dir: str,
-    gap: str = "30 minutes",
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str
 ) -> DataFrame:
     """Native session_window sessionization as an availableNow stream —
     the SAME MergingSessions physical operator the batch
@@ -112,11 +111,11 @@ def streaming_session_window(
     stream≡batch equality test (tests/test_streaming.py) is a real
     operator-identity check, not a reimplementation that happens to
     agree. Watermark bounds session state: sessions older than
-    (max event time − gap − delay) finalize and evict."""
+    (max event time − 30-minute gap − 1-hour delay) finalize and evict."""
     stream = events_readstream(spark, sf_dir, f"{checkpoint_dir}/input")
     agg = (
         stream.withWatermark("ts", "1 hour")
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             "user_id",

@@ -92,8 +92,7 @@ def build_dim_soil(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def build_fact_weather(spark: SparkSession, sf_dir: str,
-                       batch_id: str = "build") -> DataFrame:
+def build_fact_weather(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily weather rows: one per (order date, derived location) from
     orders — a dense multi-year time series with realistic seasonality
     from pure column math."""
@@ -114,7 +113,7 @@ def build_fact_weather(spark: SparkSession, sf_dir: str,
         (40.0 + (F.col("o_orderkey") % 60).cast("double")).alias("humidity_percent"),
         ((F.col("o_orderkey") % 20).cast("double") / 2.0).alias("wind_speed_ms"),
         (F.col("o_orderkey") % 100).cast("int").alias("weather_code"),
-        F.lit(batch_id).alias("batch_id"),
+        F.lit("build").alias("batch_id"),
         F.year(d).alias("year"),
         F.month(d).alias("month"),
     ).dropDuplicates(["date_key", "location_key"])
@@ -143,7 +142,7 @@ def write_warehouse(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str,
         "dim_location": (build_dim_location(spark, sf_dir), ()),
         "dim_crop": (build_dim_crop(spark), ()),
         "dim_soil": (build_dim_soil(spark, sf_dir), ()),
-        "dim_date": (date_dimension(spark, start="1995-01-01", end="2030-12-31"), ()),
+        "dim_date": (date_dimension(spark, start="1995-01-01"), ()),
         "fact_weather": (build_fact_weather(spark, sf_dir), ("year", "month")),
     }
 
@@ -167,7 +166,6 @@ def write_bucketed(
     table: str,
     bucket_keys: list[str],
     num_buckets: int = 32,
-    sort_keys: list[str] | None = None,
 ) -> None:
     """Persist a table BUCKETED by its join/agg key — the co-located-join
     path: two tables bucketed on their join keys with the same bucket
@@ -177,10 +175,8 @@ def write_bucketed(
     at 100 TB it is the difference between re-shuffling a fact table per
     query and never shuffling it again.
 
-    `sort_keys` additionally sorts within buckets (sorted-merge joins
-    skip the sort too). Registered through the session catalog
-    (saveAsTable) because bucket metadata lives in the catalog, not in
-    the parquet files.
+    Registered through the session catalog (saveAsTable) because bucket
+    metadata lives in the catalog, not in the parquet files.
 
     The local in-memory catalog forgets tables across sessions while the
     warehouse dir persists, so a stale location blocks `overwrite`; drop
@@ -192,12 +188,9 @@ def write_bucketed(
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     shutil.rmtree(f"{wh}/{table}", ignore_errors=True)
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
+    df.write.mode("overwrite").format("parquet").bucketBy(
         num_buckets, *bucket_keys
-    )
-    if sort_keys:
-        w = w.sortBy(*sort_keys)
-    w.saveAsTable(table)
+    ).saveAsTable(table)
 
 
 def compact_parquet_dir(

@@ -18,7 +18,7 @@ def _pairs(spark, sf_dir, backend):
     docs = _expanded_docs(spark, sf_dir)
     return {
         (r.doc_a, r.doc_b): r.jaccard
-        for r in minhash_lsh_dedup(docs, threshold=0.6, backend=backend).collect()
+        for r in minhash_lsh_dedup(docs, backend=backend).collect()
     }
 
 

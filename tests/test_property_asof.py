@@ -67,7 +67,7 @@ def test_asof_matches_pandas_merge_asof(spark, left, right, direction):
     got = {
         (r["k"], r["ts"]): r["v"]
         for r in asof_join(
-            ldf, rdf, on=["k"], ts_col="ts", direction=direction
+            ldf, rdf, on=["k"], direction=direction
         ).collect()
     }
     ref = _reference(left, right, direction)

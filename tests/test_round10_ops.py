@@ -428,7 +428,7 @@ def test_jaccard_links_matches_python(spark, sf_dir):
 
     backend = dedup_hash_backend()
     pairs = minhash_lsh_dedup(
-        _chain_docs(spark, sf_dir), threshold=0.6, backend=backend
+        _chain_docs(spark, sf_dir), backend=backend
     ).collect()
     adj = {}
     for r in pairs:

@@ -519,7 +519,7 @@ def test_common_neighbors_excludes_direct_edges(spark):
     edges = {
         (min(p.doc_a, p.doc_b), max(p.doc_a, p.doc_b))
         for p in minhash_lsh_dedup(
-            _chain_docs(spark, SF001), threshold=0.6
+            _chain_docs(spark, SF001)
         ).collect()
     }
     for r in out:

@@ -114,7 +114,7 @@ def test_quantile_sketch_exact_when_n_le_k(spark):
     samp = kmv_state(df, "event_id", "value", 1024)
     got = {
         r.p: (r.est_value, r.sample_m)
-        for r in quantiles_from_sample(samp, "value").collect()
+        for r in quantiles_from_sample(samp).collect()
     }
     vs = sorted(v for _, v in rows)
     m = len(vs)

@@ -44,7 +44,7 @@ def _digest_estimates(spark, rows):
         "shard",
         hash32(F.concat(F.lit("td:"), F.col("id").cast("string"))) % 8,
     )
-    c1 = biased_digest_local(ev, "shard", "qv", "id", delta=16)
+    c1 = biased_digest_local(ev, "shard", "qv", "id")
     c1 = c1.withColumn(
         "tb",
         F.concat_ws(
@@ -52,7 +52,7 @@ def _digest_estimates(spark, rows):
             *[F.col(c).cast("string") for c in ("shard", "side", "l", "sub")],
         ),
     )
-    digest = biased_digest_merge(c1, delta=32)
+    digest = biased_digest_merge(c1)
     return (
         {r.p_permille: r.est_e6
          for r in biased_digest_quantiles(digest, permille=PERMILLE).collect()},
@@ -99,7 +99,7 @@ def test_tdigest_beats_bottomk_sample_at_tails(spark):
     sq = {
         r.p: r.est_value
         for r in quantiles_from_sample(
-            samp, "value", percentiles=(50, 99)
+            samp, percentiles=(50, 99)
         ).collect()
     }
     samp_p99_err = _rank_err(sv, sq[99], max(1, (99 * N + 99) // 100))
@@ -147,7 +147,7 @@ def test_tdigest_stream_equals_batch(spark, tmp_path):
         tuple(r) for r in tdigest_readout(state, permille=PERMILLE).collect()
     }
     batch = spark.createDataFrame(full, "id long, qv long, shard long")
-    bc = biased_digest_local(batch, "shard", "qv", "id", delta=16)
+    bc = biased_digest_local(batch, "shard", "qv", "id")
     batched = {
         tuple(r) for r in tdigest_readout(bc, permille=PERMILLE).collect()
     }

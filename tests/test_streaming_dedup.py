@@ -78,7 +78,7 @@ def test_streaming_dedup_gate_contract(spark, tmp_path, staged):
     assert rej_ids, "the planted dups must reject something"
     # all six distinct base docs survive in some representative
     full = spark.createDataFrame(rows, SCHEMA)
-    pairs = minhash_lsh_dedup(full, threshold=0.6).collect()
+    pairs = minhash_lsh_dedup(full).collect()
     dup_of = {}
     for p in pairs:
         dup_of.setdefault(p.doc_a, set()).add(p.doc_b)
@@ -128,7 +128,7 @@ def test_intra_batch_chain_keeps_endpoints(spark, tmp_path):
     # the construction must actually be a chain under the operator
     pairs = {
         (p.doc_a, p.doc_b)
-        for p in minhash_lsh_dedup(df, threshold=0.6).collect()
+        for p in minhash_lsh_dedup(df).collect()
     }
     assert (1, 2) in pairs and (2, 3) in pairs and (1, 3) not in pairs, (
         f"fixture drifted: pair topology {pairs}"
@@ -198,7 +198,7 @@ def test_gate_contract_holds_on_production_hash_backend(spark, tmp_path):
     assert rej_ids, "the planted dups must reject something"
     full = spark.createDataFrame(rows, SCHEMA)
     pairs = minhash_lsh_dedup(
-        full, threshold=0.6, backend="xxhash64"
+        full, backend="xxhash64"
     ).collect()
     dup_of = {}
     for p in pairs:

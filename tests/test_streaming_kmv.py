@@ -75,14 +75,14 @@ def test_stream_state_equals_batch_any_partitioning(
     # and the percentile readout (shared operator) matches batch too
     streamed_q = {
         r.p: r.est_value
-        for r in quantiles_from_sample(state, "value").collect()
+        for r in quantiles_from_sample(state).collect()
     }
     batch_samp = kmv_state(
         spark.createDataFrame(rows, SCHEMA), "event_id", "value", K
     )
     batch_q = {
         r.p: r.est_value
-        for r in quantiles_from_sample(batch_samp, "value").collect()
+        for r in quantiles_from_sample(batch_samp).collect()
     }
     assert streamed_q == batch_q
 

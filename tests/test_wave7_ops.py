@@ -31,7 +31,7 @@ def test_filtered_topk_scopes_to_filter_value(spark):
         (4, 1, [1.0, 1.0, 0.0, 0.5]),
     ]
     out = filtered_topk(
-        _emb(spark, rows), F.col("vec_id") == 0, ["label"], k=3, bits=2
+        _emb(spark, rows), F.col("vec_id") == 0, ["label"], k=3
     ).collect()
     assert {r.neighbor_id for r in out} == {3, 4}
     assert all(r.label == 1 for r in out)
@@ -53,7 +53,7 @@ def test_filtered_topk_beats_post_filtering(spark):
         (4, 1, [1.0, 0.2, 0.0, 0.0]),
     ]
     out = filtered_topk(
-        _emb(spark, rows), F.col("vec_id") == 0, ["label"], k=1, bits=2
+        _emb(spark, rows), F.col("vec_id") == 0, ["label"], k=1
     ).collect()
     assert [(r.query_id, r.neighbor_id, r.rank) for r in out] == [(0, 4, 1)]
 
@@ -67,7 +67,7 @@ def test_filtered_topk_sparse_cell_underfills(spark):
         (5, 0, [1.0, 1.0, 0.3, 0.0]),
     ]
     out = filtered_topk(
-        _emb(spark, rows), F.col("vec_id") == 0, ["label"], k=5, bits=2
+        _emb(spark, rows), F.col("vec_id") == 0, ["label"], k=5
     ).collect()
     assert len(out) == 1 and out[0].neighbor_id == 4
 

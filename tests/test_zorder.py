@@ -102,7 +102,6 @@ def test_zorder_shrinks_per_file_spans(spark, tmp_path):
         ["x", "y"],
         bounds={"x": (0, side - 1), "y": (0, side - 1)},
         bits=7,
-        num_files=8,
     )
     assert len(glob.glob(f"{zpath}/part-*")) > 1
 

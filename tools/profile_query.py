@@ -3,10 +3,14 @@ first). Runs the query at $SPARK_GRAFT_SF_DIR with the event log on,
 then parses the log to attribute wall-clock to jobs and stages —
 the local[N] stand-in for the Spark UI's stage page.
 
+Both the sf0.001 warm-up pass and the timed run fetch the full result
+(`toArrow()`, as perfbench does): `count()` lets the optimizer prune
+work that feeds only projected columns, scalar subqueries included, so
+it times a different plan than a consumer runs.
+
 Usage: python tools/profile_query.py <query> [more queries...]
 Env:   SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
        SPARK_GRAFT_CPUS   (default all cores)
-       PROFILE_WARM=0     skip the sf0.001 warm-up pass
 """
 
 from __future__ import annotations
@@ -62,14 +66,13 @@ def profile(names: list[str]) -> None:
     spark = get_profiling_spark()
     warm_dir = "/root/testdata/sf0.001"
     for name in names:
-        if os.environ.get("PROFILE_WARM", "1") != "0":
-            QUERIES[name].spark_fn(spark, warm_dir).count()
-            drop_checkpoint_blocks(spark)
+        QUERIES[name].spark_fn(spark, warm_dir).toArrow()
+        drop_checkpoint_blocks(spark)
         # a job group, not a description: materialize() appends its own
         # name to the description of every checkpoint job it runs
         spark.sparkContext.setJobGroup(f"TIMED::{name}", f"TIMED::{name}")
         t0 = time.time()
-        n = QUERIES[name].spark_fn(spark, sf_dir).count()
+        n = QUERIES[name].spark_fn(spark, sf_dir).toArrow().num_rows
         wall = time.time() - t0
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         spark.sparkContext.setJobDescription(None)
