@@ -5,272 +5,67 @@ mv_location_crop_compatibility analog) on sf0.001. ``queries()`` exposes one
 named DataFrame builder per implemented operator from SURVEY.md §2;
 ``oracle_sql()`` exposes the DuckDB twin for each (omitted for genuinely
 non-SQL-expressible operators → rows-only check).
+
+The driver checks the first 50 names of ``queries()`` each round, so
+their order is derived from the driver's own verdicts
+(``CORRECTNESS_rN.json``; a query's verdict round is the latest round
+with a row for it) and from ``PLAN_BUDGET.json`` (``since``: the round
+in which the query's plan counts last changed):
+
+1. queries whose plan changed after their verdict round;
+2. queries the driver has never checked;
+3. queries whose latest row is not green;
+4. green queries;
+5. last, rows-only queries (no oracle twin), whose row cannot go green.
+
+Within a rule, the stalest verdict comes first, then registry order.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Mapping
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from automated_agro_climatic_data_warehouse_spark.plans import QUERIES
+from automated_agro_climatic_data_warehouse_spark.plans import QUERIES, QuerySpec
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-# Queries with a trustworthy green driver verdict, ordered STALEST
-# verdict first (regenerated each round from CORRECTNESS_r0N: a query's
-# round is its LATEST driver row). The driver checks the FIRST 50
-# registry entries per round; verified queries yield their window slots
-# to whatever still lacks a current-green row, and the stalest greens
-# lead the re-confirmation ballast. From r7 on this IS the permanent
-# rotation: with the backlog drained, the window is simply
-# [modified-this-round] + [new additions] + stalest-green ballast.
-_VERIFIED_BY_AGE = (
-    # latest driver verdict: r4 (49)
-    "s16_corrupt_json_recovery", "j14_geo_grid_nearest", "f25_nlp_confidence",
-    "quality_suite", "dq_zscore_outliers", "dq_key_skew_profile",
-    "dq_mad_outliers", "dedup_containment_pairs", "dedup_simhash64_hamming",
-    "dedup_cluster_histogram", "sample_temperature_mix", "emb_l2_normalize",
-    "pipe_kmeans_step", "emb_gram_column", "ts_bigram_novelty",
-    "ts_accent_fold", "ts_tfidf_topk", "ts_feature_hashing",
-    "ev_sessionization", "w8_time_weighted_avg", "ev_props_json_extract",
-    "j11_interval_overlap", "w10_cume_dist_tail", "w9_cumulative_reach",
-    "w11_ewma", "emb_label_centroids", "a11_grouping_sets",
-    "w7_ntile_deciles", "a12_pivot_event_types", "j9_nullsafe_join",
-    "s17_high_watermark_scan", "s18_set_ops", "j12_bloom_prefilter_join",
-    "q7_volume_shipping", "q8_market_share", "q10_returned_items",
-    "q13_customer_distribution", "q14_promo_effect", "q15_top_supplier",
-    "q17_small_qty_revenue", "q19_discounted_revenue", "q2_min_cost_supplier",
-    "q9_product_profit", "q11_important_stock", "q12_priority_shipping",
-    "q16_supplier_cnt", "q20_excess_suppliers", "q21_waiting_suppliers",
-    "q22_global_sales",
-    # latest driver verdict: r5 (49; the rows-only HLL sketch row is
-    # demoted to the tail below)
-    "j15_market_basket", "a13_revenue_concentration", "f27_sentence_udtf",
-    "j13_scd2_pointintime", "dq_dup_rate_by_source", "dq_volume_anomaly", "dq_cusum_shift", "dq_null_rates_unpivot",
-    "dq_table_digest", "agro_gdd_accumulation", "agro_frost_runs",
-    "agro_heat_index", "dedup_incremental_batch", "dedup_minhash_calibration",
-    "graph_pagerank_step", "split_cluster_aware", "dedup_keeper_by_quality",
-    "sample_importance_weighted", "emb_int8_quantize", "emb_pq_assign",
-    "ann_pq_adc_topk", "emb_norm_outliers", "emb_dup_clusters",
-    "ann_ivfpq_topk", "emb_matryoshka_overlap", "emb_kmeans_inertia",
-    "emb_residual_energy", "ts_dedup_lines_global", "ts_ppl_buckets",
-    "ts_bpe_first_merges", "ts_bigram_logprob", "ts_code_detect",
-    "ts_heavy_hitters", "ts_ecdf_normalize", "ts_quality_logit",
-    "ts_dup_ngram_coverage", "ts_gopher_rules", "ts_median_len_by_source",
-    "w12_rank_family", "ev_churned_users", "ev_ab_test_lift",
-    "ev_asof_join_forward", "ev_activity_islands",
-    "ev_seasonality_profile", "ev_cohort_value_curve", "ev_top_trigram_paths",
-    "ev_merge_intervals", "ev_mau_rolling_28d",
-    # latest driver verdict: r6 (50)
-    "ev_rfm_scores", "ev_stickiness_dau_wau", "ev_user_features",
-    "ev_time_to_convert", "ev_behavior_gini", "ev_interarrival_median",
-    "ev_activity_bitmask", "ev_burst_detection", "ev_asof_join_tolerance",
-    "mm_audio_energy", "mm_phash_dedup", "pipe_dataset_card",
-    "dq_benford_first_digit", "dq_id_gap_audit",
-    "dq_weekday_seasonal_anomaly", "agro_et0_hargreaves",
-    "agro_season_scorecard", "graph_pagerank_k10", "graph_triangle_count",
-    "graph_kcore_membership", "sample_kcenter_coreset", "ann_recall_eval",
-    "ann_srp_bucketed", "emb_power_iteration", "emb_variance_explained",
-    "ev_bounce_rate", "ev_window_funnel", "layout_zorder_stats",
-    "ev_peak_concurrency_daily", "w13_grouped_ntile",
-    "w14_weighted_ntile_histogram", "cdc_apply_changelog", "mm_scene_cuts",
-    "s19_union_by_name_evolution", "dq_ks_two_sample",
-    "dq_metadata_consistency", "dq_join_size_estimate",
-    "dq_watermark_lateness", "agro_gdd_trend", "agro_station_correlation",
-    "agro_chill_hours", "agro_mann_kendall",
-    "graph_bfs_hops", "graph_modularity",
-    "graph_clustering_coefficient", "graph_label_propagation",
-    "graph_edge_support", "sample_balanced_class_downsample",
-    # latest driver verdict: r7 (49; dedup_ppjoin_prefix re-confirmed
-    # after the quasi-clique guard and moved here from the r6 block;
-    # sample_poisson_bootstrap re-verified r8 after the sign-split fix)
-    "dedup_ppjoin_prefix", "dedup_ppjoin_audit", "sample_epoch_mixture",
-    "sample_quota_largest_remainder", "sample_systematic_pps",
-    "emb_pca_deflation", "ann_two_stage_rerank", "emb_centroid_drift",
-    "emb_knn_classifier_eval", "ann_filtered_topk", "emb_ivf_balance_audit",
-    "emb_cosine_pair_histogram", "ts_simpson_diversity",
-    "pipe_shard_manifest", "ts_winnowing_fingerprint",
-    "ts_vocab_growth_heaps", "ts_bpe_iterative_merges",
-    "ts_bpe_compression", "ev_hll_weekly_rollup_exact",
-    "ev_sliding_3h_counts", "ev_autocorr_lag1", "ev_asof_join_nearest",
-    "layout_minmax_skipping", "ev_ab_lift_by_decile", "ev_cms_user_counts",
-    "ev_bloom_fpr_audit", "layout_compaction_planner",
-    "ev_cuped_adjusted_lift", "ev_quantile_sketch", "ev_kmv_distinct",
-    "ev_quantile_sketch_by_type", "j17_pareto_skyline",
-    "pipe_gate_ablation", "pipe_curriculum_order", "dq_theil_sen_slope",
-    "dq_fano_burstiness", "dedup_lsh_recall_eval",
-    "sample_group_kfold", "sample_neyman_allocation",
-    "emb_silhouette_sample",
-    "ts_bpe_fertility_by_source", "ts_zipf_fit", "ts_char_trigram_entropy",
-    "ts_source_vocab_jaccard", "ev_seasonal_naive_mape", "ev_lorenz_curve",
-    "ev_conversion_wilson_ci",
-    # latest driver verdict: r8 (50; CORRECTNESS_r08 50/50 green — 2
-    # re-verified modified plans, the 7 r7-overflow queries, all 35 r8
-    # additions, and 6 re-anchored r1 ballast entries)
-    "f13_clean_pipeline", "sample_poisson_bootstrap", "dq_k_anonymity",
-    "graph_degree_assortativity", "graph_hits_k4", "sample_time_series_cv",
-    "sample_ht_estimator", "sample_weighted_reservoir", "dedup_semdedup",
-    "emb_jl_projection_audit", "ann_bitvector_hamming_topk",
-    "emb_triplet_margin", "emb_mmr_diversified_topk", "ann_rank_fusion_rrf",
-    "emb_mutual_knn_graph", "ts_tdigest_token_weighted_len",
-    "ts_kneser_ney_bigram", "ts_rake_keywords", "ts_bm25_topk",
-    "ts_jsd_source_drift", "ts_textrank_keywords", "ev_kmv_jaccard_types",
-    "ev_markov_stationary", "ev_power_analysis", "ev_attribution_removal",
-    "ev_did_estimator", "ev_quantile_tdigest",
-    "ev_quantile_tdigest_by_type", "layout_hilbert_vs_zorder",
-    "ev_changepoint_argmax", "ev_sprt_boundary", "ev_cmh_test",
-    "ev_competing_risks_cif", "ev_ipw_ate",
-    "ev_survival_logrank", "layout_partition_skew", "cdc_scd2_rebuild",
-    "pipe_sgd_linear_step", "pipe_token_budget_allocation",
-    "mv_compatibility", "q1_pricing_summary", "j1_star_join_revenue",
-    "s10_date_dimension", "s02_json_payload_parse",
-    "s04_parallel_array_unzip",
-    # latest driver verdict: r9 (50; CORRECTNESS_r09 50/50 green — 4
-    # re-verified modified plans, all 10 r9 additions, and the entire
-    # 36-query r1-stale ballast block re-anchored)
-    "dq_fdr_bh", "dq_capture_recapture", "ev_survival_km",
-    "dq_page_hinkley", "dedup_blocking_audit",
-    "graph_katz_k4", "sample_pareto_pps", "ann_srp_multiprobe",
-    "ts_ocr_garbage_detect", "ev_anova_f",
-    "ev_eb_shrinkage", "ev_stl_weekday_profile",
-    "s08_priority_fallback",
-    "s06_html_text_extract", "p01_projection_reshape", "p02_current_filter",
-    "p03_range_violations", "p04_between_predicate",
-    "p05_cross_column_predicate", "p06_temporal_predicate",
-    "p07_regex_predicate", "p08_membership_predicate", "p09_notnull_counts",
-    "p10_status_filter", "j2_cross_join", "j3_left_anti_orphans",
-    "j4_broadcast_lookup", "j5_semi_join", "j6_range_join",
-    "a1_violation_counters", "a2_freshness_probe", "a3_composition_check",
-    "a5_daily_counts", "a7_confidence_score", "a8_rollup_extension",
-    "a9_approx_distinct_extension", "a10_exact_percentiles",
-    "w3_ordered_topk", "w4_topk_per_group", "f01_md5_natural_key",
-    "f02_sha256_idempotency", "f03_date_key_roundtrip", "f05_case_labeling",
-    "f06_coalesce_defaults", "f07_round_clamp", "f09_minmax_swap",
-    "f12_texture_triangle", "f22_json_metadata",
-    # latest driver verdict: r10 (50; CORRECTNESS_r10 50/50 green — the
-    # 3 re-verified modified plans, all 9 r10 additions, and the entire
-    # 38-query r2-stale ballast block — the upsert/SCD2 write-path
-    # family and the NLP extractors — re-anchored)
-    "ev_hazard_nelson_aalen", "ev_mann_whitney", "dedup_fellegi_sunter",
-    "dq_wasserstein_drift", "dq_cramers_v", "dedup_fs_blocked",
-    "sample_seq_poisson", "ann_ivf_spill",
-    "ts_yule_k", "ev_srm_check",
-    "f23_array_evidence_slice", "f24_round_halfup",
-    "f17_sentence_split", "f18_extract_temp_range", "f19_extract_water",
-    "f20_extract_sunlight", "f21_extract_ph", "s11_upsert_full",
-    "j7_selective_merge", "s12_key_resolution", "s13_insert_if_absent",
-    "scd2_close_and_insert", "crop_suitability", "d2_natural_key_dedup",
-    "d3_distinct_sources", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_cc_purge", "sample_uniform_hash",
-    "sample_stratified", "split_train_val_test", "sim_cosine_neardup",
-    "ann_brute_topk", "ann_bucketed_topk", "ann_ivf_topk", "ts_lang_id",
-    "ts_token_count", "ts_quality_score", "ts_fingerprint", "ts_vocab_topk",
-    "q3_shipping_priority", "q5_nation_revenue", "cdc_snapshot_diff",
-    "mm_binary_meta", "mm_feature_extract", "pipe_training_prep",
-    "ts_pii_scrub",
-    # latest driver verdict: r11 (50; CORRECTNESS_r11 50/50 green — the
-    # 6 re-verified modified plans, all 5 r11 additions, and the entire
-    # 39-query r3-stale ballast block — the windows/eventization family —
-    # re-anchored)
-    "dq_mix_drift_chi2", "ev_kruskal_wallis", "graph_adamic_adar",
-    "graph_common_neighbors", "graph_jaccard_links", "dq_psi_drift",
-    "dq_ljung_box", "dq_cochran_armitage", "ann_ivf_recall_matched",
-    "ts_mattr", "ev_welch_ttest",
-    "a4_completeness_ratio", "a6_pipeline_tally", "w1_lag_spike",
-    "w2_partition_avg_outlier", "w5_running_total", "f08_unit_correction",
-    "f10_nan_inf_scrub", "f11_synonym_canonicalize", "dq_value_histogram",
-    "d1_batch_key_dedup", "dedup_simhash_hamming", "j10_fuzzy_name_match",
-    "pipe_ann_index_build", "ts_chunking", "ts_repetition_filter",
-    "ts_source_mix", "ts_seq_packing", "ts_unigram_logprob", "ts_dedup_lines",
-    "ts_pmi_bigrams", "ev_tumbling_hourly", "ev_daily_active_users",
-    "ev_asof_join", "ev_gap_fill", "ev_purchase_attribution",
-    "ev_funnel_conversion", "ev_retention_cohorts",
-    "ev_session_window_native", "ev_markov_transitions", "j8_salted_join",
-    "w6_rolling_range_window", "q6_revenue_change", "q4_order_priority",
-    "q18_big_spenders", "mv_incremental_refresh", "mm_frame_sample",
-    "mm_resize_pool", "dedup_contamination", "dedup_contamination_ngram",
-    # permanent tail (never leads ballast): the rows-only HLL sketch
-    # row would re-record `err: no_oracle` on every re-check; its
-    # exact-shape twin ev_hll_weekly_rollup_exact is the
-    # hash-checkable anchor that rotates normally (r6 verdict,
-    # What's wrong #2).
-    "ev_hll_weekly_rollup",
-)
-_VERIFIED = frozenset(_VERIFIED_BY_AGE)
+_ROOT = Path(__file__).resolve().parent
 
 
-# PERMANENT STALEST-GREEN ROTATION (from r7 on; the r5-verdict design).
-# Every round's 50-slot window is:
-#   [queries MODIFIED this round]            (_RN_WINDOW, explicit)
-# + [never-driver-checked queries]           (registry order)
-# + [stalest-green ballast]                  (_VERIFIED_BY_AGE order —
-#   the 38 r2 verdicts are now 8 rounds stale and lead).
-# Round-close checklist: fold this round's driver greens into
-# _VERIFIED_BY_AGE as a new "# latest driver verdict: rN" block
-# (removing them from older blocks if re-confirmed), clear _RN_WINDOW,
-# and regenerate COVERAGE.md counts from len(QUERIES) + the
-# CORRECTNESS history — never hand-edit them.
+def _ordered_names(
+    verdicts: Path, budget: Path, registry: Mapping[str, QuerySpec]
+) -> list[str]:
+    """`registry`'s names in window order (module docstring), from the
+    `CORRECTNESS_rN.json` files in `verdicts` and the `budget` file."""
+    latest: dict[str, tuple[int, bool]] = {}
+    for path in verdicts.glob("CORRECTNESS_r*.json"):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        for name, row in json.loads(path.read_text()).items():
+            green = row["err"] is None and all(
+                row[k] for k in ("rows_match", "schema_match", "hash_match")
+            )
+            if rnd > latest.get(name, (0, False))[0]:
+                latest[name] = (rnd, green)
+    since = {n: e["since"] for n, e in json.loads(budget.read_text()).items()}
+    index = {n: i for i, n in enumerate(registry)}
 
-# Round 12 (optimization round 2 of 2): no new queries; the window
-# leads with the 33 r11-OPTIMIZATION-TOUCHED queries whose physical
-# plan changed in r11 but which the frozen _R11_WINDOW never sampled
-# (r11 verdict, What's wrong #1 / Next round #1 — their parity
-# evidence so far is the builder's self-run 384/384 tools/check.py
-# gate only). Queries whose plan changes AGAIN this round are
-# appended as they are touched (most overlap the 33). Remaining
-# slots fall to the stalest-green ballast (the r4 block head).
-_R12_WINDOW: tuple[str, ...] = (
-    # r11 plan-changed, never driver-sampled (VERDICT r11 item 1)
-    "dedup_minhash_lsh", "dedup_cc_purge", "dedup_ngram_jaccard",
-    "dedup_lsh_recall_eval", "dedup_ppjoin_prefix", "dedup_ppjoin_audit",
-    "dedup_simhash64_hamming", "layout_hilbert_vs_zorder",
-    "graph_pagerank_step", "graph_pagerank_k10", "graph_katz_k4",
-    "graph_hits_k4", "graph_degree_assortativity", "emb_power_iteration",
-    "emb_pca_deflation", "emb_mmr_diversified_topk",
-    "emb_matryoshka_overlap", "emb_jl_projection_audit",
-    "emb_triplet_margin", "emb_mutual_knn_graph", "ann_ivfpq_topk",
-    "ann_pq_adc_topk", "ann_two_stage_rerank", "sample_poisson_bootstrap",
-    "ts_bpe_compression", "ts_bpe_fertility_by_source",
-    "ts_bpe_iterative_merges", "ts_char_trigram_entropy",
-    "ts_dup_ngram_coverage", "pipe_training_prep", "split_cluster_aware",
-    "sample_group_kfold", "dedup_keeper_by_quality",
-    # plan changed THIS round (r12 optimization edits), not already in
-    # the 33 above. Slots prioritize queries carrying a UNIQUE r12
-    # rewrite (one-scan psi, IVF/brute scan spread + kmeans assignment,
-    # FS single-pass estimates, attribution two-level agg, loop-body
-    # cuts); pure LSH-chain riders whose operator diff is byte-shared
-    # with in-window twins (dedup_minhash_lsh / dedup_cc_purge /
-    # dedup_ngram_jaccard verify the same code) overflow to the
-    # builder's full 384-query self-run gate: graph_edge_support,
-    # emb_dup_clusters, dedup_cluster_histogram, graph_kcore_membership,
-    # ann_brute_topk/ann_ivf_topk/ann_ivf_spill (legs of
-    # ann_ivf_recall_matched below), ts_textrank_keywords
-    # (pagerank_loop, via graph_pagerank_k10), dedup_fs_blocked
-    # (_fs_band_histogram, via dedup_fellegi_sunter).
-    "dq_psi_drift", "graph_label_propagation", "graph_modularity",
-    "dedup_minhash_calibration", "dedup_incremental_batch",
-    "graph_triangle_count", "graph_bfs_hops", "graph_common_neighbors",
-    "graph_clustering_coefficient",
-    "graph_adamic_adar", "graph_jaccard_links",
-    "ann_ivf_recall_matched", "dedup_fellegi_sunter",
-    "ev_attribution_removal", "pipe_kmeans_step",
-)
+    def key(name: str) -> tuple[int, int, int]:
+        rnd, green = latest.get(name, (0, False))
+        if registry[name].oracle is None:
+            rule = 5
+        elif name not in latest:
+            rule = 2
+        elif since.get(name, 0) > rnd:
+            rule = 1
+        else:
+            rule = 4 if green else 3
+        return rule, rnd, index[name]
 
-
-def _ordered_names() -> list[str]:
-    """Window-priority names first, then other driver-unverified
-    queries (registry order), then verified queries (oldest verdict
-    first) as re-confirmation ballast for any leftover first-50
-    slots."""
-    names = list(QUERIES)
-    window = [n for n in _R12_WINDOW if n in QUERIES]
-    rest = [n for n in names if n not in set(window)]
-    return (
-        window
-        + [n for n in rest if n not in _VERIFIED]
-        + [n for n in _VERIFIED_BY_AGE if n in rest]
-    )
+    return sorted(registry, key=key)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -280,7 +75,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: QUERIES[name].spark_fn for name in _ordered_names()}
+    names = _ordered_names(_ROOT, _ROOT / "PLAN_BUDGET.json", QUERIES)
+    return {name: QUERIES[name].spark_fn for name in names}
 
 
 def oracle_sql() -> dict[str, str]:
@@ -291,10 +87,8 @@ def oracle_sql() -> dict[str, str]:
     the bare table names as views, we strip the read_parquet wrapper down to
     the view name here.
     """
-    import re
-
     out: dict[str, str] = {}
-    for name in _ordered_names():
+    for name in queries():
         spec = QUERIES[name]
         if spec.oracle is None:
             continue

@@ -291,7 +291,7 @@ def quantiles_from_sample(
         arr.select(F.explode(ps).alias("p"), "vs", "m")
         .select(
             F.col("p").cast("bigint").alias("p"),
-            F.element_at(
+            F.try_element_at(
                 "vs",
                 F.greatest(
                     F.lit(1), F.expr("(p * m + 99) div 100")

@@ -117,7 +117,7 @@ def a4_completeness_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = F.count(F.lit(1))
 
     def ratio(c):
-        return F.count(c) * F.lit(1.0) / n
+        return F.try_divide(F.count(c) * F.lit(1.0), n)
 
     return ev.agg(
         ratio("value").alias("value_completeness"),

@@ -1020,7 +1020,7 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_e4"),
             F.expr(
                 "cast(10000 - (10000 * n_cand)"
-                " div (n_docs * (n_docs - 1) div 2) as bigint)"
+                " div nullif(n_docs * (n_docs - 1) div 2, 0) as bigint)"
             ).alias("rr_e4"),
         )
     )

@@ -4950,6 +4950,10 @@ def layout_hilbert_vs_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("x", (F.col("ymin") % 1024).alias("y"))
     )
+    # On some builds and not others the optimizer inlines y, t0
+    # subquery included, into each of its 13 references in the curve
+    # arithmetic; checkpointing the grid gives every build one plan.
+    base = materialize(base, "layout_hilbert_vs_zorder.grid")
     keyed = base.withColumn(
         "zval", zvalue([F.col("x"), F.col("y")], bits=_HILBERT_BITS).cast("bigint")
     )

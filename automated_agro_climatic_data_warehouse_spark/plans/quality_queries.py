@@ -633,7 +633,8 @@ def dq_null_rates_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table (count per column — map-side partials, one 1-row
     result); the unpivot itself is a zero-cost projection of that
     single row, so profiling N columns costs one scan, not N. The
-    null_frac is one IEEE division of exact integers."""
+    null_frac is one IEEE division of exact integers, NULL over an
+    empty table (the twin's `x / 0`)."""
     ev = load_table(spark, sf_dir, "events")
     n = F.count(F.lit(1))
     counts = ev.agg(
@@ -653,7 +654,7 @@ def dq_null_rates_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "col_name",
         F.col("n_null").cast("bigint").alias("n_null"),
         F.col("n_total").cast("bigint").alias("n_total"),
-        (F.col("n_null").cast("double") / F.col("n_total")).alias(
+        F.try_divide(F.col("n_null").cast("double"), "n_total").alias(
             "null_frac"
         ),
     )

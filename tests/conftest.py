@@ -1,10 +1,6 @@
 from __future__ import annotations
 
-import sys
-
 import pytest
-
-sys.path.insert(0, "/root/repo")
 
 from automated_agro_climatic_data_warehouse_spark.session import get_spark
 

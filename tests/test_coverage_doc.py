@@ -7,8 +7,9 @@ drift silently.
 from __future__ import annotations
 
 import re
+from pathlib import Path
 
-COVERAGE = "/root/repo/COVERAGE.md"
+COVERAGE = Path(__file__).resolve().parents[1] / "COVERAGE.md"
 
 
 def _doc():
@@ -31,51 +32,3 @@ def test_registry_counts_match_doc():
     m2 = re.search(r"Registry: (\d+) queries, (\d+) oracle-twinned", doc)
     assert m2 and (int(m2.group(1)), int(m2.group(2))) == (n, n_oracle)
 
-
-def _current_window(e) -> tuple:
-    """The round's modified-query window, whatever round number it
-    carries (_R7_WINDOW, _R8_WINDOW, ...) — exactly one must exist."""
-    attrs = [a for a in dir(e) if re.fullmatch(r"_R\d+_WINDOW", a)]
-    assert len(attrs) == 1, f"expected exactly one _RN_WINDOW, got {attrs}"
-    return getattr(e, attrs[0])
-
-
-def test_window_arithmetic_matches_doc():
-    """The driver-window note's derivation (window + never-verified +
-    ballast = 50) must reflect _ordered_names reality."""
-    import __spark_entry__ as e
-
-    window = _current_window(e)
-    names = e._ordered_names()
-    n_window = len([n for n in window if n in names])
-    never_all = [
-        n for n in names if n not in e._VERIFIED and n not in window
-    ]
-    # the window is the FIRST 50 names; with an oversubscribed round
-    # some never-verified entries legitimately carry to the next round
-    never_in_window = [n for n in never_all if n in set(names[:50])]
-    n_ballast = 50 - n_window - len(never_in_window)
-    n_overflow = len(never_all) - len(never_in_window)
-    doc = _doc()
-    m = re.search(r"50 − (\d+) − (\d+) − (\d+) = (\d+)", doc)
-    assert m, "COVERAGE.md lost its window-arithmetic line"
-    got = tuple(int(g) for g in m.groups())
-    assert got[0] == n_window
-    assert got[1] + got[2] == len(never_in_window), (
-        f"doc says {got[1]}+{got[2]} never-verified in window, "
-        f"registry has {len(never_in_window)}"
-    )
-    assert got[3] == n_ballast
-    m2 = re.search(r"exactly (\d+)\s+oversubscribed", doc)
-    if n_overflow:
-        assert m2 and int(m2.group(1)) == n_overflow, (
-            f"{n_overflow} never-verified entries overflow the window; "
-            "COVERAGE.md must say so"
-        )
-    else:
-        # r7 ADVICE: the check must be two-sided — a stale
-        # 'oversubscribed' sentence after the overflow drains is drift
-        assert not m2, (
-            "overflow is 0 but COVERAGE.md still claims "
-            f"'exactly {m2.group(1)} oversubscribed'"
-        )

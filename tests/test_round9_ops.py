@@ -437,15 +437,12 @@ def test_bench_history_stats_shape():
     4*IQR) — tight-band queries re-rep at ~1.5x their median, noisy
     ones keep roughly the old 2x bar, and <4 idle samples fall back
     to the flat 2x rule."""
-    import importlib.util
     import json
     import os
+    from pathlib import Path
 
-    spec = importlib.util.spec_from_file_location(
-        "bench", "/root/repo/bench.py"
-    )
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
+    import bench
+
     os.environ["SPARK_GRAFT_SF_DIR"] = "/root/testdata/sf0.1"
     try:
         stats = bench._history_stats()
@@ -456,7 +453,7 @@ def test_bench_history_stats_shape():
     # median must reproduce: odd/even counts both pick a real sample;
     # lines tagged "loaded": true are co-loaded runs and must be
     # skipped (r9 verdict, What's wrong #2)
-    with open("/root/repo/BENCH_FULL.jsonl") as fh:
+    with open(Path(bench.__file__).with_name("BENCH_FULL.jsonl")) as fh:
         lines = [json.loads(x) for x in fh if x.strip()]
     assert any(l.get("loaded") for l in lines), (
         "the tagged co-loaded r9 line went missing — the loaded-skip "

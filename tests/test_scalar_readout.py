@@ -150,11 +150,21 @@ def empty_sf(tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "name", ["q11_important_stock", "q15_top_supplier", "ts_vocab_growth_heaps"]
+    "name",
+    [
+        "q11_important_stock",
+        "q15_top_supplier",
+        "ts_vocab_growth_heaps",
+        "a4_completeness_ratio",
+        "dq_null_rates_unpivot",
+        "dedup_lsh_recall_eval",
+        "ev_quantile_sketch",
+    ],
 )
 def test_scalar_readout_over_empty_input_matches_oracle(spark, empty_sf, name):
     """A global aggregate over zero rows is still one row (NULL sums,
-    zero counts); read as a scalar subquery it must give the oracle's
-    answer."""
+    zero counts), and a ratio or order statistic over it is NULL, as
+    DuckDB's `x / 0` is; read as a scalar subquery or not, it must give
+    the oracle's answer."""
     problems = compare(spark, QUERIES[name], empty_sf)
     assert not problems, f"{name}: {problems}"

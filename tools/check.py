@@ -7,8 +7,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from automated_agro_climatic_data_warehouse_spark.oracle import compare, duckdb_conn  # noqa: E402
 from automated_agro_climatic_data_warehouse_spark.plans import QUERIES  # noqa: E402
@@ -55,14 +56,9 @@ if __name__ == "__main__":
     sf = next((a for a in args if "/" in a), "/root/testdata/sf0.01")
     qnames = [a for a in args if "/" not in a and a != "--first50"] or None
     if "--first50" in args:
-        # replicate the driver's verification window exactly: the first 50
-        # entries of __spark_entry__.queries() in its priority ordering
-        import importlib.util
+        # the driver's verification window: the first 50 entries of
+        # __spark_entry__.queries() in its priority ordering
+        import __spark_entry__
 
-        spec = importlib.util.spec_from_file_location(
-            "__spark_entry__", "/root/repo/__spark_entry__.py"
-        )
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        qnames = list(mod.queries())[:50]
+        qnames = list(__spark_entry__.queries())[:50]
     raise SystemExit(check(sf, qnames))

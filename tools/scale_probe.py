@@ -15,8 +15,10 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 os.environ.setdefault("SPARK_GRAFT_DEDUP_HASH", "xxhash64")
 
@@ -326,7 +328,7 @@ def main() -> None:
             f"| {t1 / t0:.1f}x | {t2 / t1:.1f}x |"
         )
     lines.append("")
-    with open("/root/repo/SCALING.md", "w") as f:
+    with open(ROOT / "SCALING.md", "w") as f:
         f.write("\n".join(lines))
     print(f"wrote SCALING.md ({len(PROBED)} queries)")
 

@@ -9,7 +9,7 @@ echo "== 2/5 full oracle-parity gate (sf0.01) =="
 python tools/check.py /root/testdata/sf0.01
 # optional but recommended before a round closes (slower):
 #   python tools/check.py /root/testdata/sf0.1
-echo "== 3/5 driver first-50 window replica =="
+echo "== 3/5 driver first-50 window (list(__spark_entry__.queries())[:50]) =="
 python tools/check.py /root/testdata/sf0.01 --first50
 echo "== 4/5 driver contract (vanilla session) =="
 python - <<'PYEOF'
