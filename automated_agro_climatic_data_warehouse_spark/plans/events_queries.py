@@ -5965,9 +5965,10 @@ def ev_survival_logrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("e1_term").cast("bigint").alias("e1_q"),
         F.sum("v_term").cast("bigint").alias("v_q"),
     )
+    # counts, not sums of the 0/1 flag: 0 (not NULL) over zero sessions
     base = subj.agg(
-        F.sum("grp1").cast("bigint").alias("n_converted"),
-        F.sum(F.lit(1) - F.col("grp1")).cast("bigint").alias("n_other"),
+        F.count(F.when(F.col("grp1") == 1, 1)).alias("n_converted"),
+        F.count(F.when(F.col("grp1") == 0, 1)).alias("n_other"),
     ).select(F.struct("*")).scalar()
     return sums.withColumn("base", base).select(
         "base.*",

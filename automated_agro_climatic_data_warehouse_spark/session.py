@@ -7,6 +7,39 @@ DuckDB oracle (UTC session timezone, Arrow) and for local[N] throughput
 At cluster scale the same builder works — only master/memory change; the
 partitioning knobs (`spark.sql.shuffle.partitions`) should then be set to
 ~2-3x total cores or left to AQE coalescing.
+
+Rule: the codegen cache holds the engine's working set. Spark compiles
+each whole-stage-codegen pipeline and generated projection with Janino
+and caches the class by its source, in `spark.sql.codegen.cache.maxEntries`
+entries (default 100). The engine compiles far more distinct classes
+than that, so at the default every warm query recompiled what it had
+compiled one pass earlier and the JVM JIT-compiled the fresh classes
+again. Measured on 4 cores (compiles = CodegenMetrics'
+compilation-time count), default → 4096 entries with stage-free class
+names:
+  - the 203 bench.py headline queries at sf0.001, full fetch: 5,503 →
+    2,888 classes compiled in the first pass, 5,500 → 56 in the second;
+    driver Metaspace after the two passes 185 → 208 MB, +23 MB to hold
+    the ~2,900 classes;
+  - perfbench olap_sf0.1: 6-28 classes per warm pass → 0 from the
+    first warm pass on (90 classes in all);
+  - perfbench ingest_sf0.01: 127-140 per warm pass → 3 in the first
+    warm pass, then 0 (129 classes).
+4096 is the smallest power of two above the headline set with stage ids
+in class names (3,502 classes, 179 recompiled in the second pass).
+`spark.sql.codegen.useIdInClassName=false` drops the codegen stage id
+from generated class names, so one pipeline planned at another stage
+position (after an adaptive re-plan, or in another query) is the same
+source and the same cached class; the cost is that a class name in a
+JVM profile no longer names its stage. What still compiles in a warm
+pass is a plan that run-time choices changed: adaptive execution picks
+a broadcast join's build side (and with it a unique-key or a multi-row
+hash lookup) or a sort-merge join from measured shuffle sizes, which
+vary slightly between runs, e.g. the connected-components join of
+adjacency and labels, whose sides are of similar size (graph_*, the
+dedup gate); and Spark's split aggregate methods list their parameters
+in an order that varies between runs (ts_winnowing_fingerprint). Each
+such variant compiles once and then stays cached.
 """
 
 from __future__ import annotations
@@ -53,6 +86,11 @@ def get_spark(app_name: str = "agro_dwh_spark") -> SparkSession:
         # heaviest join-shaped queries: -14% total (pagerank -32%,
         # modularity -33%, ivfpq -25%), no confirmed regression.
         .config("spark.sql.join.preferSortMergeJoin", "false")
+        # Static conf: hold the engine's whole generated-class working
+        # set, and name classes without their stage id so one pipeline
+        # is one class wherever it is planned (module docstring).
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # bucketed managed tables (warehouse.write_bucketed) land here;
         # session-scoped in-memory catalog, parquet files on disk
         .config(

@@ -9,6 +9,8 @@ never pre-materialize a filtered copy; express the filter on the scan.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -105,15 +107,35 @@ EXPECTED_SCHEMAS: dict[str, dict[str, set[str]]] = {
     },
 }
 
-_SCHEMA_CHECKED: set[tuple[str, str]] = set()
+# (sf_dir, table) -> the file stamp the gate passed (see _stamp)
+_SCHEMA_CHECKED: dict[tuple[str, str], tuple[int, int]] = {}
 
 # Lazy-scan reuse (see load_table): per-session so a stopped session's
 # plans can never leak into a new one; weak keys so dead sessions drop.
+# Per session, (sf_dir, table) -> (file stamp, DataFrame).
 import weakref
 
 _DF_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+def _stamp(sf_dir: str, name: str) -> tuple[int, int] | None:
+    """`(mtime_ns, size)` of a table's parquet path, None when missing.
+
+    Both caches assume the fixture tables are static while a process
+    runs, and check that with this stamp: a table rewritten in place (a
+    regenerated fixture directory) gets a new stamp, so it is gated and
+    scanned afresh instead of served from a plan built over the old
+    file. For a directory-style table the stamp is the directory's,
+    which changes when its part files are replaced. A same-size rewrite
+    within one tick of the file system's clock keeps its stamp."""
+    try:
+        st = os.stat(f"{sf_dir}/{name}.parquet")
+    except FileNotFoundError:
+        return None
+    return st.st_mtime_ns, st.st_size
+
 
 # Tables whose pinned timestamp columns get the dtype-branch ns→µs
 # normalization in load_table. Every column the schema gate allows as
@@ -127,9 +149,11 @@ _NS_NORMALIZED_COLS: dict[str, tuple[str, ...]] = {
 
 def _assert_testdata_schema(sf_dir: str, name: str) -> None:
     """Metadata-only (parquet footer) schema gate; one clear message naming
-    every drifted column. Cached per (sf_dir, table) — runs once a session."""
+    every drifted column. Cached per (sf_dir, table) and file stamp — runs
+    once a session unless the file is rewritten."""
     key = (sf_dir, name)
-    if key in _SCHEMA_CHECKED or name not in EXPECTED_SCHEMAS:
+    stamp = _stamp(sf_dir, name)
+    if name not in EXPECTED_SCHEMAS or _SCHEMA_CHECKED.get(key) == stamp:
         return
     import pyarrow.parquet as pq
 
@@ -157,7 +181,7 @@ def _assert_testdata_schema(sf_dir: str, name: str) -> None:
             "testdata with a new encoding — update EXPECTED_SCHEMAS and the "
             "normalization in load_table (sources/readers.py) for this column."
         )
-    _SCHEMA_CHECKED.add(key)
+    _SCHEMA_CHECKED[key] = stamp
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -170,16 +194,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     persisted or computed here, every consumer still scans parquet, and
     Catalyst applies pushdown/pruning per consumer plan (never
     `.cache()` here — that would defeat pushdown and the bench's
-    compute-from-parquet contract)."""
+    compute-from-parquet contract). An entry is reused only while the
+    file's stamp (`_stamp`) is unchanged."""
     per = _DF_CACHE.get(spark)
     if per is None:
         per = {}
         _DF_CACHE[spark] = per
     key = (sf_dir, name)
-    df = per.get(key)
-    if df is None:
-        df = _load_table_fresh(spark, sf_dir, name)
-        per[key] = df
+    stamp = _stamp(sf_dir, name)
+    hit = per.get(key)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
+    df = _load_table_fresh(spark, sf_dir, name)
+    per[key] = (stamp, df)
     return df
 
 

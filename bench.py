@@ -379,7 +379,13 @@ def main() -> None:
     #     data work, identical plan shapes). Measured: the first execution
     #     of a complex multi-stage shape costs 3-5× its steady state purely
     #     in compilation/JIT, e.g. dedup_minhash_lsh 17s cold vs 4s warm
-    #     at sf0.1.
+    #     at sf0.1. The compiled classes are kept only because
+    #     session.get_spark sizes the codegen cache to hold the whole
+    #     headline set: at Spark's default of 100 entries a second pass
+    #     over the 203 queries recompiled 5,500 of the first pass's 5,503
+    #     classes; with the cache sized (and no stage ids in class names)
+    #     it compiles 56, each a plan variant that run-time choices
+    #     produce (session.py module docstring).
     warm_dir = "/root/testdata/sf0.001"
     warm_dir = warm_dir if os.path.isdir(warm_dir) else sf_dir
     for name in names:

@@ -159,6 +159,7 @@ def empty_sf(tmp_path_factory):
         "dq_null_rates_unpivot",
         "dedup_lsh_recall_eval",
         "ev_quantile_sketch",
+        "ev_survival_logrank",
     ],
 )
 def test_scalar_readout_over_empty_input_matches_oracle(spark, empty_sf, name):

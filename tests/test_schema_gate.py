@@ -116,3 +116,32 @@ def test_ns_encoded_table_loads_as_timestamp(spark, tmp_path):
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("d")
     ).collect()
     assert row.d == "2024-01-01 00:00:00.123456"
+
+
+def test_rewritten_table_is_rescanned(spark, tmp_path):
+    """The lazy-frame cache and the gate are keyed on the file's stamp:
+    a table rewritten in place must come back with its new rows (a plan
+    built over the old file reads the new one with the old file length,
+    and returned 0 rows here), and a drifted rewrite must meet the gate
+    again."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = tmp_path / "region.parquet"
+
+    def write(keys, key_type=pa.int32()):
+        names = pa.array([f"region {k}" for k in keys], pa.string())
+        pq.write_table(
+            pa.table({"r_regionkey": pa.array(keys, key_type), "r_name": names}),
+            path,
+        )
+
+    write([1, 2])
+    first = readers.load_table(spark, str(tmp_path), "region")
+    assert first.count() == 2
+    assert readers.load_table(spark, str(tmp_path), "region") is first
+    write(list(range(5000)))
+    assert readers.load_table(spark, str(tmp_path), "region").count() == 5000
+    write([1], pa.int64())
+    with pytest.raises(RuntimeError, match="testdata drifted.*'r_regionkey'"):
+        readers.load_table(spark, str(tmp_path), "region")

@@ -3,6 +3,11 @@ first). Runs the query at $SPARK_GRAFT_SF_DIR with the event log on,
 then parses the log to attribute wall-clock to jobs and stages —
 the local[N] stand-in for the Spark UI's stage page.
 
+Each timed run also reports its Janino compiles (count and compile
+time), read from the JVM's codegen counters around the run: after the
+warm-up every generated class should be a cache hit, so a timed run that
+still compiles names a plan whose generated source changes between runs.
+
 Both the sf0.001 warm-up pass and the timed run fetch the full result
 (`toArrow()`, as perfbench does): `count()` lets the optimizer prune
 work that feeds only projected columns, scalar subqueries included, so
@@ -57,6 +62,14 @@ def get_profiling_spark():
     return spark
 
 
+def codegen_counters(spark) -> tuple[int, float]:
+    """(classes compiled, compile ms) since the JVM started."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n.getCount(), ns / 1e6
+
+
 def profile(names: list[str]) -> None:
     from automated_agro_climatic_data_warehouse_spark.plans import QUERIES
     from automated_agro_climatic_data_warehouse_spark.session import (
@@ -66,25 +79,29 @@ def profile(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_profiling_spark()
     warm_dir = "/root/testdata/sf0.001"
+    compiles: dict[str, tuple[int, float]] = {}
     for name in names:
         QUERIES[name].spark_fn(spark, warm_dir).toArrow()
         drop_checkpoint_blocks(spark)
         # a job group, not a description: materialize() appends its own
         # name to the description of every checkpoint job it runs
         spark.sparkContext.setJobGroup(f"TIMED::{name}", f"TIMED::{name}")
+        c0, ms0 = codegen_counters(spark)
         t0 = time.time()
         n = QUERIES[name].spark_fn(spark, sf_dir).toArrow().num_rows
         wall = time.time() - t0
+        c1, ms1 = codegen_counters(spark)
+        compiles[name] = (c1 - c0, ms1 - ms0)
         spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
         spark.sparkContext.setJobDescription(None)
         drop_checkpoint_blocks(spark)
         print(f"\n=== {name}: {n} rows, wall {wall:.2f}s ===")
     spark.stop()
     time.sleep(1.0)
-    report(names)
+    report(names, compiles)
 
 
-def report(names: list[str]) -> None:
+def report(names: list[str], compiles: dict[str, tuple[int, float]]) -> None:
     logs = glob.glob(EVDIR + "/*")
     assert logs, "no event log written"
     path = max(logs, key=os.path.getmtime)
@@ -137,7 +154,11 @@ def report(names: list[str]) -> None:
     for name in names:
         tagged = [j for j in jobs.values() if j["group"] == f"TIMED::{name}"]
         total_ms = sum(j.get("t1", j["t0"]) - j["t0"] for j in tagged)
-        print(f"\n##### {name}: {len(tagged)} jobs, {total_ms/1000:.2f}s in jobs")
+        n_cls, cms = compiles[name]
+        print(
+            f"\n##### {name}: {len(tagged)} jobs, {total_ms/1000:.2f}s in jobs, "
+            f"{n_cls} classes compiled in {cms:.0f} ms"
+        )
         for j in sorted(tagged, key=lambda j: j["t0"]):
             dur = (j.get("t1", j["t0"]) - j["t0"]) / 1000
             sts = [
