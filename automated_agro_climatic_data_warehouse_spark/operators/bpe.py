@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..session import materialize
+from ..session import iterate, materialize, release
 
 _MERGE_FOLD = """
 aggregate(
@@ -67,7 +67,8 @@ def bpe_train(words: DataFrame, k: int) -> DataFrame:
     (round, s1, s2, n) — the winning adjacent symbol pair and its
     corpus frequency AT THAT ROUND (i.e. after applying all previous
     merges), tie-broken (n desc, s1 asc, s2 asc)."""
-    merges, _ = bpe_train_state(words, k)
+    merges, syms = bpe_train_state(words, k)
+    release(syms)
     return merges
 
 
@@ -105,7 +106,8 @@ def bpe_train_state(
         ).alias("syms"),
     )
     rounds: list[DataFrame] = []
-    for r in range(1, k + 1):
+
+    def step(syms: DataFrame) -> DataFrame:
         counts = (
             syms.filter(F.size("syms") >= 2)
             .select("freq", F.explode(F.expr(_PAIR_EXPLODE)).alias("p"))
@@ -117,20 +119,19 @@ def bpe_train_state(
             best = materialize(best, "bpe_train_state.best")
             rounds.append(
                 best.select(
-                    F.lit(r).cast("bigint").alias("round"), "s1", "s2", "n"
+                    F.lit(len(rounds) + 1).cast("bigint").alias("round"),
+                    "s1",
+                    "s2",
+                    "n",
                 )
             )
-        syms = materialize(
-            syms.crossJoin(
-                F.broadcast(
-                    best.select(
-                        F.col("s1").alias("m1"), F.col("s2").alias("m2")
-                    )
-                )
+        return syms.crossJoin(
+            F.broadcast(
+                best.select(F.col("s1").alias("m1"), F.col("s2").alias("m2"))
             )
-            .select(*keep_cols, "freq", F.expr(_MERGE_FOLD).alias("syms")),
-            "bpe_train_state.syms",
-        )
+        ).select(*keep_cols, "freq", F.expr(_MERGE_FOLD).alias("syms"))
+
+    syms = iterate(syms, step, "bpe_train_state.syms", k)
     if not need_merges:
         return None, syms
     out = rounds[0]

@@ -11,8 +11,8 @@ propagation:
 
 which converges in O(graph diameter) rounds. Near-dup graphs are
 shallow — clusters are small cliques/chains — so 3-5 rounds typically
-suffice; the loop stops at fixpoint (zero labels changed, a cheap count
-aggregate, never a collect of the data itself).
+suffice; the loop stops at fixpoint (an unchanged label sum, a probe on
+the round's checkpoint, never a collect of the data itself).
 
 Scale notes (100 TB shape):
 - Each round is one shuffle join (adjacency × labels on `nbr`) + one
@@ -20,25 +20,19 @@ Scale notes (100 TB shape):
   non-pathological dup graphs. A mega-cluster (e.g. an empty-document
   class colliding everywhere) shows up as a hot `nbr` key; exact-dup
   pre-collapse (d2) removes that class before LSH ever runs.
-- `localCheckpoint` per round truncates the lineage — without it round k
-  replays rounds 1..k-1 (and the plan grows exponentially).
-- For adversarial diameters (long chains), `algorithm="star"` swaps the
-  propagation loop for the alternating large-star/small-star variant
-  (Kiveris et al., "Connected Components in MapReduce and Beyond",
-  SoCC'14), which converges in O(log n) rounds; the per-round plan shape
-  (join + min-agg) is the same family, so the swap is local to this
-  module.
+- The loop runs through `session.iterate`: a checkpoint per round
+  truncates the lineage (without it round k replays rounds 1..k-1 and
+  the plan grows exponentially), the label-sum probe on that checkpoint
+  is the fixpoint test, and each round frees the labels it replaces.
 """
 
 from __future__ import annotations
-
-import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import materialize
+from ..session import checkpoint_id, iterate, materialize, release
 
 # The integer score grid of the power-iteration loops: every node starts
 # at (and HITS normalizes to) SCORE_TOTAL = 2^20.
@@ -97,34 +91,19 @@ def two_hop_nonedges(
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
-    algorithm: str = "propagation",
-    stats: dict | None = None,
-    edges_materialized: bool = False,
+    edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 25
 ) -> DataFrame:
     """Component label per node: (node, component) where component is the
-    smallest node id reachable from `node`. Edges are undirected (either
-    orientation accepted); isolated nodes never appear in `edges` and are
-    their own components by definition (callers treat absence as identity).
-
-    `algorithm`: "propagation" (O(diameter) rounds — right for shallow
-    near-dup graphs) or "star" (large-star/small-star, O(log n) rounds —
-    right for adversarial diameters like long chains).
+    smallest node id reachable from `node`, by min-label propagation
+    (O(diameter) rounds — right for shallow near-dup graphs). Edges are
+    undirected (either orientation accepted); isolated nodes never appear
+    in `edges` and are their own components by definition (callers treat
+    absence as identity).
 
     If the fixpoint is not reached within `max_iter` rounds a UserWarning
     is emitted — the returned labels are then UNCONVERGED (nodes may carry
-    a non-minimal component id). Pass `stats` to receive
-    {"rounds": int, "converged": bool}.
-
-    ``edges_materialized=True`` declares the input already checkpointed /
-    cheap to rescan (graph_modularity checkpoints the pair frame itself
-    because it fans out to its own edge union too): the internal edge
-    materialization below would then copy an already-materialized frame —
-    one full pass of the pair list and a job barrier for nothing.
-    """
+    a non-minimal component id). The rounds run and whether they
+    converged are in `session.iterate`'s log record."""
     # Materialize the edge list ONCE before fanning out: the adjacency /
     # node-set construction below references `edges` up to 4 times, and
     # Spark does no cross-branch subplan sharing — with an expensive
@@ -132,33 +111,13 @@ def connected_components(
     # would re-run the whole pipeline inside one job (measured 4× cost on
     # dedup_cc_purge before this checkpoint). Project to the two id
     # columns first (§2.3): pair frames carry scores (jaccard doubles)
-    # the loop never reads — no reason to materialize those bytes.
+    # the loop never reads — no reason to materialize those bytes. An
+    # input that is itself a checkpoint is cheap to rescan, and copying
+    # it would cost a full pass and a job barrier for nothing.
+    copy = checkpoint_id(edges) is None
     edges = edges.select(src, dst)
-    if not edges_materialized:
+    if copy:
         edges = materialize(edges, "connected_components.edges")
-    if algorithm == "propagation":
-        return _cc_propagation(edges, src, dst, max_iter, stats)
-    if algorithm == "star":
-        return _cc_star(edges, src, dst, max_iter, stats)
-    raise ValueError(f"unknown connected-components algorithm: {algorithm!r}")
-
-
-def _finish(stats: dict | None, rounds: int, converged: bool, algorithm: str):
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    if not converged:
-        warnings.warn(
-            f"connected_components({algorithm}) hit max_iter={rounds} before "
-            f"the fixpoint; returned labels are unconverged",
-            UserWarning,
-            stacklevel=3,
-        )
-
-
-def _cc_propagation(
-    edges: DataFrame, src: str, dst: str, max_iter: int, stats: dict | None
-) -> DataFrame:
     fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
     rev = edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
     # self-loops straight off both orientations (every node appears as
@@ -169,11 +128,11 @@ def _cc_propagation(
         rev.select("node", F.col("node").alias("nbr"))
     )
     adj = materialize(
-        fwd.unionByName(rev)
-        .unionByName(self_loops)
-        .distinct(),
+        fwd.unionByName(rev).unionByName(self_loops).distinct(),
         "_cc_propagation.adj",
     )
+    if copy:
+        release(edges)
 
     # Convergence probe: the self-loop in `adj` makes each propagation
     # pointwise monotone non-increasing (new(u) = min over N(u) ∪ {u} of
@@ -183,17 +142,8 @@ def _cc_propagation(
     # labels checkpoint as a probe, so the test costs neither the
     # labels⋈propagated diff join nor a job of its own; round 1 compares
     # against the init-labels checkpoint's sum.
-    label_sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    labels, probe = materialize(
-        adj.groupBy("node").agg(F.min("nbr").alias("component")),
-        "_cc_propagation.labels",
-        label_sum,
-    )
-    prev_sum = probe["s"]
-    rounds, converged = 0, False
-    for _ in range(max_iter):
-        rounds += 1
-        labels, probe = materialize(
+    def step(labels: DataFrame) -> DataFrame:
+        return (
             adj.join(
                 labels.select(
                     F.col("node").alias("nbr"), F.col("component").alias("nbr_comp")
@@ -201,100 +151,17 @@ def _cc_propagation(
                 "nbr",
             )
             .groupBy("node")
-            .agg(F.min("nbr_comp").alias("component")),
-            "_cc_propagation.labels",
-            label_sum,
+            .agg(F.min("nbr_comp").alias("component"))
         )
-        if probe["s"] == prev_sum:
-            converged = True
-            break
-        prev_sum = probe["s"]
-    _finish(stats, rounds, converged, "propagation")
-    return labels
 
-
-def _cc_star(
-    edges: DataFrame, src: str, dst: str, max_iter: int, stats: dict | None
-) -> DataFrame:
-    """Alternating large-star/small-star min-label contraction.
-
-    Each round rewires every node's strictly-larger neighbors (large-star)
-    and then its smaller-or-self neighborhood (small-star) to the local
-    minimum, halving tree heights — O(log n) rounds on any topology. Both
-    phases are one symmetric-expand + groupBy-min + join, all on uniform
-    id keys; per-round localCheckpoint truncates lineage exactly like the
-    propagation loop."""
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-    all_nodes = materialize(
-        raw.select(F.col("u").alias("node"))
-        .unionByName(raw.select(F.col("v").alias("node")))
-        .distinct(),
-        "_cc_star.all_nodes",
+    labels = iterate(
+        adj.groupBy("node").agg(F.min("nbr").alias("component")),
+        step,
+        "_cc_propagation.labels",
+        max_iter,
+        until=F.sum(F.col("component").cast("decimal(38,0)")),
     )
-    # normalized undirected edge set, self-loops dropped; each edge-set
-    # checkpoint carries its row count as a probe for the fixpoint test
-    n_rows = F.count(F.lit(1)).alias("n")
-    e, probe = materialize(
-        raw.filter(F.col("u") != F.col("v")).distinct(), "_cc_star.e", n_rows
-    )
-    e_n = probe["n"]
-
-    def symmetric(df: DataFrame) -> DataFrame:
-        return df.unionByName(
-            df.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ).filter(F.col("u") != F.col("v"))
-
-    rounds, converged = 0, False
-    for _ in range(max_iter):
-        rounds += 1
-        # ---- large-star: for each u, attach neighbors v > u to
-        #      m(u) = min(N(u) ∪ {u})
-        nbrs = symmetric(e)
-        mins = (
-            nbrs.groupBy("u")
-            .agg(F.min("v").alias("mn"))
-            .select("u", F.least("mn", "u").alias("m"))
-        )
-        large = (
-            nbrs.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # ---- small-star: for each u, attach smaller neighbors (and u
-        #      itself) to m(u) = min of that set
-        nbrs2 = symmetric(large)
-        small_side = nbrs2.filter(F.col("v") < F.col("u"))
-        mins2 = small_side.groupBy("u").agg(F.min("v").alias("m"))
-        small, probe = materialize(
-            small_side.join(mins2, "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .unionByName(mins2.select("u", F.col("m").alias("v")))
-            .filter(F.col("u") != F.col("v"))
-            .distinct(),
-            "_cc_star.small",
-            n_rows,
-        )
-        # fixpoint when the edge set is unchanged (stars already minimal):
-        # small ⊆ e (no new edges in the union) and |small| == |e| → equal
-        union_n = small.unionByName(e).distinct().count()
-        same = union_n == e_n == probe["n"]
-        e, e_n = small, probe["n"]
-        if same:
-            converged = True
-            break
-    labels = (
-        all_nodes.join(
-            symmetric(e).select(F.col("u").alias("node"), F.col("v").alias("nbr")),
-            "node",
-            "left",
-        )
-        .groupBy("node")
-        .agg(F.min("nbr").alias("mn"))
-        .select("node", F.coalesce(F.least("mn", "node"), F.col("node")).alias("component"))
-    )
-    _finish(stats, rounds, converged, "star")
+    release(adj)
     return labels
 
 
@@ -330,7 +197,8 @@ def pagerank_loop(
     Scale shape: each round is ONE shuffle join (ranks × adjacency on
     the source key) + one groupBy-sum on the destination key — the
     same per-round cost envelope as _cc_propagation, uniform id keys.
-    Only the final round is checkpointed (see the loop). k is fixed —
+    Only the final round is checkpointed (`session.iterate`'s
+    `final_only`). k is fixed —
     PageRank convergence is governed by the damping factor, and a
     fixed small k is the production norm (resumable: any round's
     output is a valid restart state, pinned by tests/test_round4_ops.py's
@@ -360,11 +228,12 @@ def pagerank_loop(
         # output is a valid restart state (bit-identical continuation,
         # pinned in tests/test_round5_ops.py)
         ranks = init_ranks.select("node", F.col("r").cast("bigint"))
-    for i in range(k):
+
+    def step(ranks: DataFrame) -> DataFrame:
         contrib = adj.join(
             ranks.withColumnRenamed("node", "u"), "u"
         ).select("v", F.expr("r div d").cast("bigint").alias("w"))
-        ranks = contrib.groupBy(F.col("v").alias("node")).agg(
+        return contrib.groupBy(F.col("v").alias("node")).agg(
             (
                 F.expr("(sum(w) * 17) div 20")
                 + F.lit(teleport)
@@ -372,13 +241,10 @@ def pagerank_loop(
             .cast("bigint")
             .alias("r")
         )
-        # final-only checkpoint: the intermediate rounds have a single
-        # consumer, so the deeper lineage re-executes nothing — it only
-        # defers materialization, and each materialization is a full job
-        # barrier. Measured at sf0.1 for k=10: every-round 7.6 s →
-        # every-5 4.9 s → final-only 4.1 s (in-process best-of-3).
-        if i == k - 1:
-            ranks = materialize(ranks, "pagerank_loop.ranks")
+
+    ranks = iterate(ranks, step, "pagerank_loop.ranks", k, final_only=True)
+    if k:
+        release(edges, adj)
     return ranks
 
 
@@ -404,8 +270,7 @@ def label_propagation(
     Scale shape: each round is one shuffle join (labels × adjacency on
     the neighbor key) + one groupBy vote count + one top-1 window on
     (node) — all uniform id keys, bounded by |E| work per round, with
-    per-round localCheckpoint lineage truncation exactly like the CC
-    and PageRank loops. Fixed `rounds` keeps the chain engine-replayable
+    per-round checkpoints truncating the lineage (`session.iterate`). Fixed `rounds` keeps the chain engine-replayable
     (each round is deterministic given the last, so an unrolled SQL
     oracle reproduces it bit-for-bit)."""
     fwd = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr"))
@@ -419,7 +284,8 @@ def label_propagation(
     # nodes checkpoint: same barrier count, one join fewer per round)
     base = materialize(nodes.join(seeds, "node", "left"), "label_propagation.base")
     lab = base.select("node", F.col("__seed").alias("label"))
-    for _ in range(rounds):
+
+    def step(lab: DataFrame) -> DataFrame:
         votes = (
             adj.join(
                 lab.select(
@@ -438,13 +304,14 @@ def label_propagation(
             .filter(F.col("__rn") == 1)
             .select("node", F.col("nbr_label").alias("__maj"))
         )
-        lab = materialize(
-            base.join(best, "node", "left")
-            .select(
-                "node", F.coalesce("__seed", "__maj").alias("label")
-            ),
-            "label_propagation.lab",
+        return base.join(best, "node", "left").select(
+            "node", F.coalesce("__seed", "__maj").alias("label")
         )
+
+    lab = iterate(lab, step, "label_propagation.lab", rounds)
+    release(adj)
+    if rounds:
+        release(base)
     return lab
 
 
@@ -476,7 +343,10 @@ def hits_loop(edges: DataFrame, k: int = 4) -> DataFrame:
     twice per half-round (ReuseExchange does not fire across a
     broadcast boundary), and a separate max readout (a collect or a
     scalar subquery) costs a job per half-round. The normalized frame
-    is a free projection over the checkpoint."""
+    is a free projection over the checkpoint. Because each half-round
+    reads the previous one's probe, this is the one loop that keeps its
+    own rounds instead of `session.iterate`; it frees each raw frame
+    once the same side's next one exists."""
     if k < 1:
         raise ValueError(f"hits_loop needs k >= 1 rounds, got {k}")
     e = materialize(edges.select("u", "v"), "hits_loop.e")
@@ -489,6 +359,8 @@ def hits_loop(edges: DataFrame, k: int = 4) -> DataFrame:
         )
     )
 
+    raws: dict[str, DataFrame] = {}
+
     def half_round(scores: DataFrame, join_key: str, out_key: str) -> DataFrame:
         raw, probe = materialize(
             e.join(scores.withColumnRenamed("node", join_key), join_key)
@@ -497,6 +369,9 @@ def hits_loop(edges: DataFrame, k: int = 4) -> DataFrame:
             f"hits_loop.{out_key}_raw",
             F.max("raw").alias("mx"),
         )
+        if out_key in raws:
+            release(raws[out_key])
+        raws[out_key] = raw
         # The max is NULL only on the empty graph, whose frames are all
         # empty, so any divisor works there. It is never 0: the previous
         # round's top node is normalized to SCORE_TOTAL and has an edge,
@@ -516,6 +391,7 @@ def hits_loop(edges: DataFrame, k: int = 4) -> DataFrame:
     auths = a.select(
         F.lit("auth").alias("side"), "node", F.col("s").alias("score_q")
     )
+    release(e)
     return hubs.unionByName(auths)
 
 
@@ -554,9 +430,9 @@ def katz_loop(
     (any symmetrized edge list) to skip that frame and its per-round
     join entirely. Scale shape per round: ONE shuffle join (scores x
     adjacency) + one groupBy-sum (+ the optional left join) — the
-    pagerank_loop cost envelope; localCheckpoint per round truncates
-    lineage. Requires k >= 1. Returns the round-k frame
-    (node, score_q)."""
+    pagerank_loop cost envelope; only the final round is checkpointed
+    (`session.iterate`'s `final_only`). Requires k >= 1. Returns the
+    round-k frame (node, score_q)."""
     if k < 1:
         raise ValueError(f"katz_loop needs k >= 1 rounds, got {k}")
     e = materialize(edges.select("u", "v"), "katz_loop.e")
@@ -576,12 +452,8 @@ def katz_loop(
             "katz_loop.nodes",
         )
         x = nodes.select("node", F.lit(SCORE_TOTAL).cast("bigint").alias("s"))
-    # final-only localCheckpoint (same rationale as pagerank_loop):
-    # each round's x has a single consumer — the next round's join —
-    # so intermediate materialization only adds a job barrier per
-    # round. Measured at sf0.1 (k=4, in-process best-of-3, identical
-    # scores): every-round 3.2 s → final-only 2.6 s.
-    for i in range(k):
+
+    def step(x: DataFrame) -> DataFrame:
         summed = (
             e.join(x.withColumnRenamed("node", "u"), "u")
             .groupBy("v")
@@ -589,22 +461,24 @@ def katz_loop(
             .withColumnRenamed("v", "node")
         )
         if nodes is None:
-            x = summed.select(
+            return summed.select(
                 "node",
                 (F.expr(f"sm div {alpha_den}") + F.lit(SCORE_TOTAL))
                 .cast("bigint")
                 .alias("s"),
             )
-        else:
-            x = nodes.join(summed, "node", "left").select(
-                "node",
-                (
-                    F.expr(f"coalesce(sm, 0) div {alpha_den}")
-                    + F.lit(SCORE_TOTAL)
-                )
-                .cast("bigint")
-                .alias("s"),
+        return nodes.join(summed, "node", "left").select(
+            "node",
+            (
+                F.expr(f"coalesce(sm, 0) div {alpha_den}")
+                + F.lit(SCORE_TOTAL)
             )
-        if i == k - 1:
-            x = materialize(x, "katz_loop.x")
+            .cast("bigint")
+            .alias("s"),
+        )
+
+    x = iterate(x, step, "katz_loop.x", k, final_only=True)
+    release(e)
+    if nodes is not None:
+        release(nodes)
     return x.select("node", F.col("s").alias("score_q"))

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, ShortType
 from pyspark.sql.window import Window as W
 
-from ..session import local_frame, materialize
+from ..session import iterate, local_frame
 
 # Scores are rounded to this many decimals before ranking so that
 # near-tied-but-unequal cosines (einsum vs fold summation order differs in
@@ -398,16 +398,17 @@ def train_centroids(corpus: DataFrame, k: int, rounds: int = 2) -> DataFrame:
     mean of its members (posexplode → avg per (centroid, dim) →
     re-assemble ordered by dim). Per-round cost is one broadcast join +
     one groupBy on (centroid_id, dim) — both scale-safe; centroids are
-    localCheckpoint'ed per round to truncate the iterative lineage
-    (same lesson as operators/graph.py)."""
+    checkpointed per round to truncate the iterative lineage
+    (`session.iterate`)."""
     centroids = corpus.filter(F.col("vec_id") < k).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    for _ in range(rounds):
+
+    def step(centroids: DataFrame) -> DataFrame:
         assigned = nearest_centroids(
             corpus, centroids.withColumnRenamed("centroid_id", "vec_id"), 1
         )
-        centroids = materialize(
+        return (
             assigned.select(
                 "centroid_id", F.posexplode(F.col("embedding")).alias("__dim", "__val")
             )
@@ -419,7 +420,7 @@ def train_centroids(corpus: DataFrame, k: int, rounds: int = 2) -> DataFrame:
                     F.array_sort(F.collect_list(F.struct("__dim", "__m"))),
                     lambda s: s["__m"].cast("float"),
                 ).alias("embedding")
-            ),
-            "train_centroids.centroids",
+            )
         )
-    return centroids
+
+    return iterate(centroids, step, "train_centroids.centroids", rounds)

@@ -24,7 +24,7 @@ from ..operators.dedup import (
     minhash_lsh_dedup,
 )
 from ..operators.graph import connected_components, label_propagation
-from ..session import materialize
+from ..session import iterate, materialize, release
 from ..sources import fan_out, load_table
 from .dedup_queries import minhash_pairs_with_list
 from .registry import query
@@ -614,20 +614,21 @@ def graph_kcore_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         "graph_kcore_membership.sym",
     )
     allnodes = sym.select(F.col("a").alias("node")).distinct()
-    cur = sym
-    keep = None
-    for _ in range(8):
+
+    def core(cur: DataFrame) -> DataFrame:
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-        keep = deg.filter(F.col("d") >= 2).select("a")
-        cur = materialize(
-            cur.join(keep, "a", "semi")
-            .join(
-                keep.select(F.col("a").alias("b")),
-                "b",
-                "semi",
-            ),
-            "graph_kcore_membership.cur",
+        return deg.filter(F.col("d") >= 2).select("a")
+
+    def step(cur: DataFrame) -> DataFrame:
+        keep = core(cur)
+        return cur.join(keep, "a", "semi").join(
+            keep.select(F.col("a").alias("b")), "b", "semi"
         )
+
+    # the output reads only the 8th round's core, the degree filter of
+    # the 7th round's edges, so the 8th edge set is never built
+    keep = core(iterate(sym, step, "graph_kcore_membership.cur", 7))
+    release(e)
     return allnodes.join(
         keep.select(F.col("a").alias("node")).withColumn(
             "in_core", F.lit(True)
@@ -715,16 +716,19 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter((F.col("node") >= 0) & (F.col("node") % 10 == 0))
         .select("node", F.lit(0).cast("bigint").alias("dist"))
     )
-    for _ in range(4):
+
+    def step(dist: DataFrame) -> DataFrame:
         prop = dist.join(edges, dist["node"] == edges["a"]).select(
             F.col("b").alias("node"), (F.col("dist") + 1).alias("dist")
         )
-        dist = materialize(
+        return (
             dist.unionByName(prop)
             .groupBy("node")
-            .agg(F.min("dist").cast("bigint").alias("dist")),
-            "graph_bfs_hops.dist",
+            .agg(F.min("dist").cast("bigint").alias("dist"))
         )
+
+    dist = iterate(dist, step, "graph_bfs_hops.dist", 4)
+    release(pairs, edges)
     return dist.select(
         F.col("node").alias("doc_id"), F.col("dist").alias("hops")
     )
@@ -861,12 +865,9 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_dedup(_chain_docs(spark, sf_dir), backend=backend),
         "graph_modularity.pairs",
     )
-    # edges_materialized: pairs are checkpointed right above (for the
-    # edge-union fan-out) — the loop's internal re-checkpoint would
-    # copy an already-materialized frame
-    labels = connected_components(
-        pairs, src="doc_a", dst="doc_b", edges_materialized=True
-    ).select(F.col("node"), F.col("component").alias("cluster_id"))
+    labels = connected_components(pairs, src="doc_a", dst="doc_b").select(
+        F.col("node"), F.col("component").alias("cluster_id")
+    )
     edges = materialize(
         pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .union(
@@ -1085,6 +1086,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.expr("node div 10") % 4).cast("bigint").alias("label"),
     )
     lab = label_propagation(pairs, seeds, rounds=2, src="doc_a", dst="doc_b")
+    release(pairs)
     return lab.select(
         F.col("node").alias("doc_id"),
         F.col("label").cast("bigint").alias("label"),

@@ -23,7 +23,7 @@ from pyspark.sql.window import Window as W
 
 from ..functions import dsum
 from ..operators.dedup import hash32
-from ..session import materialize
+from ..session import iterate, materialize, release
 from ..sources import load_table
 from .registry import query
 
@@ -326,12 +326,14 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     selected = seed.select(
         F.lit(1).cast("bigint").alias("rank"), "cid", "sel_d2"
     )
-    scored = materialize(
+    scored0 = materialize(
         cur.crossJoin(F.broadcast(seed.select("cqv")))
         .select("vec_id", "qv", d2(F.col("qv"), F.col("cqv")).alias("mind2")),
         "sample_kcenter_coreset.scored",
     )
-    for i in range(2, 9):
+    centers: list[DataFrame] = []
+
+    def step(scored: DataFrame) -> DataFrame:
         nxt = (
             scored.orderBy(F.desc("mind2"), F.asc("vec_id"))
             .limit(1)
@@ -347,22 +349,23 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "sample_kcenter_coreset.nxt_full",
         )
-        selected = selected.unionByName(
+        centers.append(
             nxt_full.select(
-                F.lit(i).cast("bigint").alias("rank"), "cid", "sel_d2"
+                F.lit(len(centers) + 2).cast("bigint").alias("rank"),
+                "cid",
+                "sel_d2",
             )
         )
-        scored = materialize(
-            scored.crossJoin(F.broadcast(nxt_full.select("cqv")))
-            .select(
-                "vec_id",
-                "qv",
-                F.least(
-                    F.col("mind2"), d2(F.col("qv"), F.col("cqv"))
-                ).alias("mind2"),
-            ),
-            "sample_kcenter_coreset.scored",
+        return scored.crossJoin(F.broadcast(nxt_full.select("cqv"))).select(
+            "vec_id",
+            "qv",
+            F.least(F.col("mind2"), d2(F.col("qv"), F.col("cqv"))).alias("mind2"),
         )
+
+    # the result reads `cur` (through the seed) and the centers only
+    release(scored0, iterate(scored0, step, "sample_kcenter_coreset.scored", 7))
+    for center in centers:
+        selected = selected.unionByName(center)
     return selected.select(
         "rank", F.col("cid").cast("bigint").alias("center_id"), "sel_d2"
     )

@@ -26,7 +26,7 @@ from ..operators.similarity import (
     nearest_centroids,
     sign_bucket,
 )
-from ..session import local_frame, materialize
+from ..session import iterate, local_frame, materialize, release
 from ..sources import fan_out, load_table
 from .registry import query
 
@@ -1626,11 +1626,8 @@ def _power_iteration_direction(spark, sf_dir):
     from pyspark.sql.window import Window as W
 
     whole = W.partitionBy()
-    # final-only checkpoint: every round is single-consumer, so the
-    # 5-round chain is a LINEAR lazy plan and intermediate
-    # materialization only added a job barrier per round (measured
-    # 2.25s → 1.58s for the loop at sf0.1, identical vectors)
-    for i in range(5):
+
+    def step(v: DataFrame) -> DataFrame:
         w = (
             gram.join(v.withColumnRenamed("pos", "j"), "j")
             .groupBy(F.col("i").alias("pos"))
@@ -1640,14 +1637,15 @@ def _power_iteration_direction(spark, sf_dir):
         nrm = F.sqrt(
             F.sum(F.col("s") * F.col("s")).over(whole).cast("double")
         )
-        v = s.select(
+        return s.select(
             "pos",
             F.round(F.col("s").cast("double") / nrm * _PI_VGRID, 0)
             .cast("bigint")
             .alias("v"),
         )
-        if i == 4:
-            v = materialize(v, "_power_iteration_direction.v")
+
+    # each round has a single consumer: checkpoint only the last one
+    v = iterate(v, step, "_power_iteration_direction.v", 5, final_only=True)
     return gram, v
 
 
@@ -1866,9 +1864,8 @@ def emb_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     whole = W.partitionBy()
-    # final-only checkpoint, same linearity argument as the shared
-    # eigensolve loop: every per-round frame has a single consumer
-    for i in range(5):
+
+    def step(x: DataFrame) -> DataFrame:
         w = (
             gram.join(
                 x.select(F.col("pos").alias("j"), F.col("x").alias("xj")),
@@ -1899,14 +1896,16 @@ def emb_pca_deflation(spark: SparkSession, sf_dir: str) -> DataFrame:
         nrm = F.sqrt(
             F.sum(F.col("s2") * F.col("s2")).over(whole).cast("double")
         )
-        x = s.select(
+        return s.select(
             "pos",
             F.round(F.col("s2").cast("double") / nrm * _PI_VGRID, 0)
             .cast("bigint")
             .alias("x"),
         )
-        if i == 4:
-            x = materialize(x, "emb_pca_deflation.x")
+
+    # each round has a single consumer: checkpoint only the last one
+    x = iterate(x, step, "emb_pca_deflation.x", 5, final_only=True)
+    release(gram, v)
     return x.select(
         F.col("pos").cast("bigint").alias("pos"),
         F.col("x").alias("v2_q"),

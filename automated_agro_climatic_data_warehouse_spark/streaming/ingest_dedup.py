@@ -70,9 +70,7 @@ def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
     import pandas as pd
 
     pairs = materialize(pairs.select("doc_a", "doc_b"), "_greedy_reject_by_id.pairs")
-    labels = connected_components(
-        pairs, src="doc_a", dst="doc_b", edges_materialized=True
-    )
+    labels = connected_components(pairs, src="doc_a", dst="doc_b")
     comp_pairs = pairs.join(
         labels.select(
             F.col("node").alias("doc_a"), F.col("component")

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.upsert import upsert
-from ..session import local_frame, materialize
+from ..session import local_frame, materialize, release
 from .state_chain import foreach_batch_drain
 
 
@@ -53,6 +53,7 @@ def upsert_sink_drain(
         # files; a direct overwrite would read-while-truncating)
         merged = materialize(merged, "upsert_sink_drain.merged")
         merged.write.mode("overwrite").parquet(target_dir)
+        release(merged)
 
     foreach_batch_drain(stream, checkpoint_dir, apply_batch)
     return spark.read.parquet(target_dir)

@@ -4,25 +4,28 @@ join — topology/edge cases the oracle-parity corpus can't force."""
 from __future__ import annotations
 
 import datetime as dt
+import logging
 
 import pytest
 from pyspark.sql import functions as F
 
+from automated_agro_climatic_data_warehouse_spark import session
 from automated_agro_climatic_data_warehouse_spark.operators.asof import asof_join
 from automated_agro_climatic_data_warehouse_spark.operators.graph import connected_components
 
 
 def test_cc_chain_requires_propagation(spark):
     # chain 1-2-3-4 (diameter 3: label must hop, no direct 1-4 edge),
-    # a 2-clique {10,11}, and pair {7,8} listed in reversed orientation
+    # a 2-clique {10,11}, pair {7,8} listed in reversed orientation and
+    # a self-loop {5}
     edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (10, 11), (8, 7)], ["src", "dst"]
+        [(2, 1), (2, 3), (3, 4), (10, 11), (8, 7), (5, 5)], ["src", "dst"]
     )
     got = {
         r["node"]: r["component"]
         for r in connected_components(edges).collect()
     }
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 7: 7, 8: 7}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 7: 7, 8: 7, 5: 5}
 
 
 def test_cc_converges_on_cycle(spark):
@@ -32,47 +35,28 @@ def test_cc_converges_on_cycle(spark):
     assert got == {1: 1, 2: 1, 3: 1}
 
 
-def test_cc_star_matches_propagation_and_is_logarithmic(spark):
-    # planted 1000-node chain (diameter 999): propagation would need ~1000
-    # rounds; large-star/small-star must converge in O(log n) — pin ≤ 15
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(999)], ["src", "dst"]
-    )
-    stats: dict = {}
-    labels = connected_components(
-        edges, max_iter=20, algorithm="star", stats=stats
-    ).collect()
-    assert stats["converged"] and stats["rounds"] <= 15, stats
-    assert len(labels) == 1000
-    assert all(r["component"] == 0 for r in labels)
+def _cc_record(caplog) -> dict:
+    """The `session.iterate` log record of the last CC loop."""
+    return [
+        r.iterate
+        for r in caplog.records
+        if getattr(r, "iterate", {}).get("name") == "_cc_propagation.labels"
+    ][-1]
 
 
-def test_cc_star_agrees_with_propagation_on_mixed_topology(spark):
-    edges = spark.createDataFrame(
-        [(2, 1), (2, 3), (3, 4), (10, 11), (8, 7), (5, 5)], ["src", "dst"]
-    )
-    prop = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, algorithm="propagation").collect()
-    }
-    star = {
-        r["node"]: r["component"]
-        for r in connected_components(edges, algorithm="star").collect()
-    }
-    assert prop == star
-
-
-def test_cc_warns_when_unconverged(spark):
+def test_cc_warns_when_unconverged(spark, caplog):
     import warnings
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], ["src", "dst"]
     )
-    with warnings.catch_warnings(record=True) as caught:
+    with warnings.catch_warnings(record=True) as caught, caplog.at_level(
+        logging.INFO, logger=session.__name__
+    ):
         warnings.simplefilter("always")
-        stats: dict = {}
-        connected_components(edges, max_iter=2, stats=stats).count()
-    assert not stats["converged"]
+        connected_components(edges, max_iter=2).count()
+    record = _cc_record(caplog)
+    assert record["converged"] is False and record["rounds"] == 2
     assert any("unconverged" in str(w.message) for w in caught)
 
 
@@ -149,12 +133,11 @@ def test_cc_purge_keeps_one_per_cluster(spark, sf_dir):
         assert len(members) >= 2
 
 
-@pytest.mark.parametrize("seed", [3, 11])
-@pytest.mark.parametrize("algorithm", ["propagation", "star"])
-def test_cc_matches_union_find_on_random_graphs(spark, seed, algorithm):
-    """Both CC algorithms must agree with an independent union-find on
-    random graphs (the propagation loop and the star contraction share
-    no code with this twin)."""
+# the ids name the algorithm: min-label propagation
+@pytest.mark.parametrize("seed", [3, 11], ids=lambda s: f"propagation-{s}")
+def test_cc_matches_union_find_on_random_graphs(spark, caplog, seed):
+    """CC must agree with an independent union-find on random graphs
+    (the propagation loop shares no code with this twin)."""
     import random
 
     from automated_agro_climatic_data_warehouse_spark.operators.graph import (
@@ -185,12 +168,7 @@ def test_cc_matches_union_find_on_random_graphs(spark, seed, algorithm):
     want = {(v, comp_min[find(v)]) for v in touched}
 
     df = spark.createDataFrame(edges, "src long, dst long")
-    stats = {}
-    got = {
-        (r.node, r.component)
-        for r in connected_components(
-            df, algorithm=algorithm, stats=stats
-        ).collect()
-    }
-    assert stats["converged"]
+    with caplog.at_level(logging.INFO, logger=session.__name__):
+        got = {(r.node, r.component) for r in connected_components(df).collect()}
+    assert _cc_record(caplog)["converged"] is True
     assert got == want

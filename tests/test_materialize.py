@@ -113,6 +113,56 @@ def test_local_checkpoint_appears_only_in_materialize():
     assert inside > 0
 
 
+def _called(node: ast.AST):
+    for n in ast.walk(node):
+        if isinstance(n, ast.Call):
+            f = n.func
+            yield f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def test_unpersist_appears_only_in_session():
+    """Every release of a persisted RDD goes through session.py."""
+    sites = [
+        f"{path.relative_to(PKG)}:{node.lineno}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "session.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "unpersistRDD"
+    ]
+    assert sites == []
+
+
+def test_only_iterate_loops_over_materialize():
+    """No package loop checkpoints outside `session.iterate`: a for/while
+    loop may not call materialize, directly or through any package
+    function that does. hits_loop is the one exception: each half-round
+    reads the previous one's probe."""
+    trees = {p: ast.parse(p.read_text()) for p in sorted(PKG.rglob("*.py"))}
+    defs = [
+        fn
+        for tree in trees.values()
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name != "iterate"
+    ]
+    checkpointing = {"materialize"}
+    while grown := {
+        fn.name
+        for fn in defs
+        if fn.name not in checkpointing and checkpointing & set(_called(fn))
+    }:
+        checkpointing |= grown
+    loops = {
+        (str(path.relative_to(PKG)), fn.name)
+        for path, tree in trees.items()
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name != "iterate"
+        for loop in ast.walk(fn)
+        if isinstance(loop, (ast.For, ast.While))
+        and checkpointing & set(_called(loop))
+    }
+    assert loops == {("operators/graph.py", "hits_loop")}
+
+
 def test_hits_loop_on_empty_edge_list(spark):
     e = local_frame(spark, [], "u bigint, v bigint")
     assert hits_loop(e, k=2).count() == 0

@@ -2,7 +2,8 @@
 
 Two staged micro-batches with overlapping keys: the streamed target must
 equal a single batch upsert of (batch1 then batch2), later batch wins on
-conflicts; a second drain over the same checkpoint must change nothing.
+conflicts; a second drain over the same checkpoint must change nothing;
+the drain leaves no checkpoint persisted.
 """
 
 from __future__ import annotations
@@ -45,9 +46,13 @@ def test_upsert_sink_equals_batch_and_is_exactly_once(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .load(stage)
     )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keySet())
     out = upsert_sink_drain(
         spark, stream, target, ckpt, keys=["k"], order_by=["seq"]
     )
+    # each batch frees its merged checkpoint once the target is written
+    assert set(persisted().keySet()) - before == set()
     got = {r.k: (r.v, r.seq) for r in out.collect()}
     assert got == {1: (10.0, 1), 2: (21.0, 2), 3: (32.0, 3), 4: (40.0, 2)}
 
