@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from ..session import materialize
+from ..session import materialize, release
 
 # MinHash geometry: 8 hash functions in 4 bands of 2 rows.
 NUM_HASHES = 8
@@ -338,6 +338,7 @@ def minhash_lsh_dedup(docs: DataFrame, backend: str = "md5") -> DataFrame:
     mh = materialize(mh, "minhash_lsh_dedup.mh")
     cand = lsh_candidate_pairs(lsh_band_signatures(mh, backend=backend))
     cand = materialize(cand, "minhash_lsh_dedup.cand")
+    release(mh)
     # no distinct: the left-semi join below dedupes its build side —
     # the distinct was one redundant exchange over the candidate ids
     cand_ids = cand.select(F.col("doc_a").alias("doc_id")).unionByName(
@@ -397,6 +398,7 @@ def minhash_lsh_incremental(new_docs: DataFrame, indexed_docs: DataFrame,
         .distinct(),
         "minhash_lsh_incremental.cand",
     )
+    release(mh_new, mh_idx)
     # no distinct: left-semi joins dedupe their build sides
     a_ids = cand.select(F.col("doc_a").alias("doc_id"))
     b_ids = cand.select(F.col("doc_b").alias("doc_id"))

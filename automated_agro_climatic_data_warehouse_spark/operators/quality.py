@@ -214,28 +214,40 @@ def observed_quality_counters(
     return df.observe(obs, *named), obs
 
 
+def add_counts(state: DataFrame, prev: DataFrame | None, *keys: str) -> DataFrame:
+    """One additive monitor step: this batch's counters `state` added
+    onto the persisted state `prev` per `keys`, every other column
+    summed as bigint (the first batch's state is its own counters).
+
+    Exact under any micro-batch split: the counters are int64 sums, and
+    integer addition is commutative and associative, so every
+    partitioning of the stream into batches reaches the bit-identical
+    state the batch query computes in one aggregation."""
+    if prev is None:
+        return state
+    return (
+        state.unionByName(prev)
+        .groupBy(*keys)
+        .agg(
+            *(
+                F.sum(c).cast("bigint").alias(c)
+                for c in state.columns
+                if c not in keys
+            )
+        )
+    )
+
+
 def anova_moments_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     """One additive step of the ANOVA moment state: per-group exact
-    int64 (n, s1, s2) summed onto the persisted state — commutative +
-    associative, so any micro-batch partitioning reaches the
-    bit-identical state (the capture-counter discipline). Input rows
-    are observations (group string, x bigint)."""
+    int64 (n, s1, s2) summed onto the persisted state (add_counts).
+    Input rows are observations (group string, x bigint)."""
     b = obs.groupBy("group").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("s1"),
         F.sum(F.col("x") * F.col("x")).cast("bigint").alias("s2"),
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("group")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("s1").cast("bigint").alias("s1"),
-            F.sum("s2").cast("bigint").alias("s2"),
-        )
-    )
+    return add_counts(b, prev, "group")
 
 
 def anova_f_readout(grp: DataFrame) -> DataFrame:
@@ -347,19 +359,12 @@ def welch_readout(
 def lb_daily_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     """One additive step of the daily-volume state: exact int64 event
     counts per day summed onto the persisted state — calendar-bounded
-    (<= 3650 rows at 10 years), commutative + associative, so any
-    micro-batch partitioning reaches the bit-identical state. Input
-    rows are observations (day date)."""
+    (<= 3650 rows at 10 years). Input rows are observations (day
+    date)."""
     b = obs.groupBy("day").agg(
         F.count(F.lit(1)).cast("bigint").alias("x")
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("day")
-        .agg(F.sum("x").cast("bigint").alias("x"))
-    )
+    return add_counts(b, prev, "day")
 
 
 def lb_readout(daily: DataFrame) -> DataFrame:
@@ -443,13 +448,7 @@ def ct_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     b = obs.groupBy("event_type", "dow").agg(
         F.count(F.lit(1)).cast("bigint").alias("o")
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("event_type", "dow")
-        .agg(F.sum("o").cast("bigint").alias("o"))
-    )
+    return add_counts(b, prev, "event_type", "dow")
 
 
 def cramers_v_readout(cells: DataFrame) -> DataFrame:
@@ -519,13 +518,7 @@ def vhist_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     b = obs.groupBy("event_type", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("event_type", "cents")
-        .agg(F.sum("n").cast("bigint").alias("n"))
-    )
+    return add_counts(b, prev, "event_type", "cents")
 
 
 def w1_readout(hist: DataFrame) -> DataFrame:
@@ -725,13 +718,7 @@ def kw_histogram_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     b = obs.groupBy("grp", "cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("tg")
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("grp", "cents")
-        .agg(F.sum("tg").cast("bigint").alias("tg"))
-    )
+    return add_counts(b, prev, "grp", "cents")
 
 
 def kw_readout(gh: DataFrame) -> DataFrame:
@@ -823,16 +810,7 @@ def srm_daily_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
         F.sum("in_a").cast("bigint").alias("n_a"),
         (F.count(F.lit(1)) - F.sum("in_a")).cast("bigint").alias("n_b"),
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("day")
-        .agg(
-            F.sum("n_a").cast("bigint").alias("n_a"),
-            F.sum("n_b").cast("bigint").alias("n_b"),
-        )
-    )
+    return add_counts(b, prev, "day")
 
 
 def srm_readout(daily: DataFrame) -> DataFrame:
@@ -858,24 +836,13 @@ def mw_histogram_merge(obs: DataFrame, prev: DataFrame | None) -> DataFrame:
     """One additive step of the Mann-Whitney value-domain state: per
     distinct value (cents) the exact int64 pair (t = rows at that
     value, t1 = group-1 rows at that value) summed onto the persisted
-    state — commutative + associative, so any micro-batch partitioning
-    reaches the bit-identical state (the anova_moments_merge
-    discipline; state size is |value domain| rows, never corpus
-    rows). Input rows are observations (cents bigint, g1 int)."""
+    state — |value domain| rows, never corpus rows. Input rows are
+    observations (cents bigint, g1 int)."""
     b = obs.groupBy("cents").agg(
         F.count(F.lit(1)).cast("bigint").alias("t"),
         F.sum("g1").cast("bigint").alias("t1"),
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("cents")
-        .agg(
-            F.sum("t").cast("bigint").alias("t"),
-            F.sum("t1").cast("bigint").alias("t1"),
-        )
-    )
+    return add_counts(b, prev, "cents")
 
 
 def mw_readout(hist: DataFrame) -> DataFrame:

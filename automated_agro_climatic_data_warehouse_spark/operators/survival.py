@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from .quality import add_counts
+
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
 
@@ -78,16 +80,7 @@ def km_histogram_merge(
         F.sum(F.lit(1) - F.col("censored")).cast("bigint").alias("churned"),
         F.sum("censored").cast("bigint").alias("censored_n"),
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("dur")
-        .agg(
-            F.sum("churned").cast("bigint").alias("churned"),
-            F.sum("censored_n").cast("bigint").alias("censored_n"),
-        )
-    )
+    return add_counts(b, prev, "dur")
 
 
 def km_curve(byd: DataFrame) -> DataFrame:

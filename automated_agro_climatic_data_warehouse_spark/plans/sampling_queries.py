@@ -333,7 +333,9 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     centers: list[DataFrame] = []
 
-    def step(scored: DataFrame) -> DataFrame:
+    def pick(scored: DataFrame) -> DataFrame:
+        """Append the farthest point of `scored` as the next center;
+        return its (cid, sel_d2, cqv) row."""
         nxt = (
             scored.orderBy(F.desc("mind2"), F.asc("vec_id"))
             .limit(1)
@@ -356,14 +358,22 @@ def sample_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sel_d2",
             )
         )
+        return nxt_full
+
+    def step(scored: DataFrame) -> DataFrame:
+        nxt_full = pick(scored)
         return scored.crossJoin(F.broadcast(nxt_full.select("cqv"))).select(
             "vec_id",
             "qv",
             F.least(F.col("mind2"), d2(F.col("qv"), F.col("cqv"))).alias("mind2"),
         )
 
-    # the result reads `cur` (through the seed) and the centers only
-    release(scored0, iterate(scored0, step, "sample_kcenter_coreset.scored", 7))
+    # 6 rounds pick centers 2-7; the 8th needs only the 6th round's
+    # distances, not a 7th distance update. The result reads `cur`
+    # (through the seed) and the centers only.
+    last = iterate(scored0, step, "sample_kcenter_coreset.scored", 6)
+    pick(last)
+    release(scored0, last)
     for center in centers:
         selected = selected.unionByName(center)
     return selected.select(

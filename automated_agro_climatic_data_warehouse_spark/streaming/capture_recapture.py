@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.quality import add_counts
 from ..operators.quality import capture_gate as _gate
 from .state_chain import chain_drain
 
@@ -43,15 +44,7 @@ def _capture_merge(
         F.sum(in2.cast("int")).cast("bigint").alias("n2"),
         F.sum((in1 & in2).cast("int")).cast("bigint").alias("m"),
     )
-    if prev is None:
-        return b
-    merged = b.unionByName(prev)
-    return merged.groupBy("source").agg(
-        F.sum("n_true").cast("bigint").alias("n_true"),
-        F.sum("n1").cast("bigint").alias("n1"),
-        F.sum("n2").cast("bigint").alias("n2"),
-        F.sum("m").cast("bigint").alias("m"),
-    )
+    return add_counts(b, prev, "source")
 
 
 def capture_estimate(state: DataFrame) -> DataFrame:

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.quality import add_counts
 from ..operators.sketches import cms_cells
 from .state_chain import chain_drain
 
@@ -37,14 +38,7 @@ from .state_chain import chain_drain
 def _cms_merge(
     batch: DataFrame, prev: DataFrame | None, key: Column
 ) -> DataFrame:
-    cells = cms_cells(batch, key)
-    if prev is None:
-        return cells
-    return (
-        cells.unionByName(prev)
-        .groupBy("j", "bucket")
-        .agg(F.sum("cell").cast("bigint").alias("cell"))
-    )
+    return add_counts(cms_cells(batch, key), prev, "j", "bucket")
 
 
 def cms_drain(

@@ -37,8 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators.quality import add_counts
 from ..session import local_frame
-from .state_chain import chain_drain, commit_state
+from .state_chain import chain_drain
 
 
 def grid_histogram(df: DataFrame, value_col: str, width: float) -> DataFrame:
@@ -56,34 +57,7 @@ def grid_histogram(df: DataFrame, value_col: str, width: float) -> DataFrame:
 def _grid_merge(
     batch: DataFrame, prev: DataFrame | None, value_col: str, width: float
 ) -> DataFrame:
-    hist = grid_histogram(batch, value_col, width)
-    if prev is not None:
-        hist = (
-            hist.unionByName(prev)
-            .groupBy("bin")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
-    return hist
-
-
-def grid_merge_batch(
-    batch: DataFrame,
-    state_dir: str,
-    value_col: str,
-    width: float,
-    batch_id: int,
-    token: str,
-) -> None:
-    """Merge one micro-batch's histogram into the committed state chain.
-    Idempotent per (token, batch_id); merge = groupBy-sum, exact under
-    any partitioning."""
-    commit_state(
-        state_dir,
-        token,
-        batch_id,
-        lambda prev: _grid_merge(batch, prev, value_col, width),
-        batch.sparkSession,
-    )
+    return add_counts(grid_histogram(batch, value_col, width), prev, "bin")
 
 
 def quantile_bounds(hist: DataFrame, width: float, qs: list[float]) -> DataFrame:

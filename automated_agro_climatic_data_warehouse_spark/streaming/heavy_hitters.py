@@ -38,7 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
-from .state_chain import chain_drain, commit_state
+from ..operators.quality import add_counts
+from .state_chain import chain_drain
 
 
 def _mg_merge(
@@ -46,15 +47,10 @@ def _mg_merge(
 ) -> DataFrame:
     """One MG chain step: exact batch counts + previous summary →
     next ≤k-counter summary."""
-    counts = batch.groupBy(F.col(key_col).alias("key")).agg(
+    batch_counts = batch.groupBy(F.col(key_col).alias("key")).agg(
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
-    if prev is not None:
-        counts = (
-            counts.unionByName(prev)
-            .groupBy("key")
-            .agg(F.sum("c").cast("bigint").alias("c"))
-        )
+    counts = add_counts(batch_counts, prev, "key")
     # MG merge step: subtract the (k+1)-th largest counter (0 if the
     # merged table already fits) from all, keep the strictly positive.
     # The ranking window is unpartitioned BY DESIGN: its input is the
@@ -70,28 +66,6 @@ def _mg_merge(
         ranked.withColumn("m", m)
         .filter(F.col("c") > F.col("m"))
         .select("key", (F.col("c") - F.col("m")).cast("bigint").alias("c"))
-    )
-
-
-def mg_merge_batch(
-    batch: DataFrame,
-    state_dir: str,
-    key_col: str,
-    k: int,
-    batch_id: int,
-    token: str,
-) -> None:
-    """Merge one micro-batch's exact key counts into the persisted MG
-    summary and commit the result as this batch's state. Idempotent per
-    (token, batch_id): replays of a committed id return untouched;
-    replays over a crashed half-write recompute from the predecessor
-    state and overwrite."""
-    commit_state(
-        state_dir,
-        token,
-        batch_id,
-        lambda prev: _mg_merge(batch, prev, key_col, k),
-        batch.sparkSession,
     )
 
 

@@ -17,7 +17,8 @@ index, so a restart resumes from what was durably accepted.
 
 Exactly-once is STRUCTURAL, not incidental: foreachBatch alone is only
 at-least-once (a crash between the sink write and the checkpoint commit
-replays the batch), so each micro-batch commits to its own
+replays the batch), so each micro-batch commits — through
+state_chain.commit, the protocol the monitors' state chains use — to its own
 `batch-<drain-token>-<batch_id>` subdirectory inside the corpus — the
 token is derived from the checkpoint path, so a replay of the same
 (checkpoint, batch_id) targets the SAME subdir, skips if its _SUCCESS
@@ -51,6 +52,13 @@ from pyspark.sql import functions as F
 from ..operators.dedup import minhash_lsh_dedup, minhash_lsh_incremental
 from ..operators.graph import connected_components
 from ..session import local_frame, materialize
+from .state_chain import (
+    commit,
+    committed,
+    drain_token,
+    file_stream,
+    foreach_batch_drain,
+)
 
 
 def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
@@ -97,29 +105,6 @@ def _greedy_reject_by_id(pairs: DataFrame) -> DataFrame:
     )
 
 
-def _committed_parquet_paths(accepted_dir: str) -> list[str]:
-    """Durably committed corpus paths: every `batch-*` subdir whose Spark
-    `_SUCCESS` marker exists AND that holds at least one part file (an
-    all-rejected batch commits an empty subdir — it counts for
-    replay-skip but there is nothing to read). A subdir WITHOUT the
-    marker is a crashed half-write: excluded here so a replay can never
-    reject a document against its own partial output, then
-    idempotently overwritten."""
-    if not os.path.isdir(accepted_dir):
-        return []
-    paths: list[str] = []
-    for name in os.listdir(accepted_dir):
-        p = os.path.join(accepted_dir, name)
-        if (
-            os.path.isdir(p)
-            and name.startswith("batch-")
-            and os.path.isfile(os.path.join(p, "_SUCCESS"))
-            and any(f.endswith(".parquet") for f in os.listdir(p))
-        ):
-            paths.append(p)
-    return sorted(paths)
-
-
 def dedup_gate_batch(
     batch: DataFrame,
     accepted_dir: str,
@@ -141,24 +126,27 @@ def dedup_gate_batch(
     already-committed id returns without touching anything, and a
     replay over a crashed half-write recomputes against the
     committed-only index and overwrites the partial subdir."""
-    out_dir = os.path.join(accepted_dir, f"batch-{commit_id}")
-    if os.path.isfile(os.path.join(out_dir, "_SUCCESS")):
-        return  # replay of a committed batch — nothing to redo
-    s = batch.sparkSession
-    survivors = batch
-    index_paths = _committed_parquet_paths(accepted_dir)
-    if index_paths:
-        index = s.read.parquet(*index_paths)
-        hits = minhash_lsh_incremental(survivors, index, backend=backend)
-        dup_new = hits.select(F.col("doc_a").alias("doc_id")).distinct()
-        survivors = survivors.join(dup_new, "doc_id", "left_anti")
-    intra = minhash_lsh_dedup(survivors, backend=backend)
-    rejected = _greedy_reject_by_id(intra)
-    survivors = survivors.join(rejected, "doc_id", "left_anti")
-    # no checkpoint before the write: it is the plan's only consumer, and
-    # the plan reads only committed paths — never the `batch-<id>` subdir
-    # this overwrite replaces (excluded until its _SUCCESS exists)
-    survivors.write.mode("overwrite").parquet(out_dir)
+
+    def survivors() -> DataFrame:
+        out = batch
+        index_paths = [p for _, p in committed(accepted_dir, "batch-")]
+        if index_paths:
+            # the schema is given: an all-rejected batch may commit a
+            # subdir without a part file, which schema inference rejects
+            index = batch.sparkSession.read.schema(batch.schema).parquet(
+                *index_paths
+            )
+            hits = minhash_lsh_incremental(out, index, backend=backend)
+            dup_new = hits.select(F.col("doc_a").alias("doc_id")).distinct()
+            out = out.join(dup_new, "doc_id", "left_anti")
+        intra = minhash_lsh_dedup(out, backend=backend)
+        rejected = _greedy_reject_by_id(intra)
+        # no checkpoint before the write: it is the plan's only consumer,
+        # and the plan reads only committed subdirs — never the one this
+        # overwrite replaces (uncommitted until the write completes)
+        return out.join(rejected, "doc_id", "left_anti")
+
+    commit(os.path.join(accepted_dir, f"batch-{commit_id}"), survivors)
 
 
 def dedup_ingest_drain(
@@ -178,15 +166,7 @@ def dedup_ingest_drain(
     ties commit ids to THIS checkpoint, so successive drains with fresh
     checkpoints (new data into the same corpus) never collide on
     batch_id 0."""
-    from .state_chain import drain_token, foreach_batch_drain
-
     token = drain_token(checkpoint_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        # one file per micro-batch: the batch-twin contract the stream≡batch tests pin
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         dedup_gate_batch(
@@ -196,10 +176,9 @@ def dedup_ingest_drain(
             commit_id=f"{token}-{batch_id:06d}",
         )
 
+    stream = file_stream(spark, src_dir, schema)
     foreach_batch_drain(stream, checkpoint_dir, apply_batch)
-    # an empty source (or an all-rejected drain) may leave no readable
-    # parquet parts behind — an empty corpus, not an error
-    paths = _committed_parquet_paths(accepted_dir)
+    paths = [p for _, p in committed(accepted_dir, "batch-")]
     if not paths:
         return local_frame(spark, [], schema)
-    return spark.read.parquet(*paths)
+    return spark.read.schema(schema).parquet(*paths)

@@ -21,20 +21,11 @@ driver-facing oracle lives on the batch query (DuckDB has no streams).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .state_chain import memory_drain
 from .windows import events_readstream
-
-
-def _event_stream(spark: SparkSession, sf_dir: str, stage_dir: str) -> DataFrame:
-    """Staged availableNow stream over the events parquet with `ts`
-    normalized to TimestampType (streaming/windows.py owns the
-    encoding-aware schema; in production this is the landing path or a
-    Kafka topic)."""
-    return events_readstream(spark, sf_dir, stage_dir)
 
 
 def streaming_purchase_attribution(
@@ -53,7 +44,7 @@ def streaming_purchase_attribution(
     over the same checkpoint is an exactly-once no-op (memory sinks
     cannot recover; Spark refuses their restart)."""
     stage = f"{checkpoint_dir}/input"
-    events = _event_stream(spark, sf_dir, stage)
+    events = events_readstream(spark, sf_dir, stage)
 
     clicks = (
         events.filter(F.col("event_type") == "click")
@@ -103,17 +94,7 @@ def streaming_purchase_attribution(
         q.awaitTermination()
         return spark.read.parquet(output_dir)
 
-    name = f"ev_attr_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{checkpoint_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return memory_drain(joined, f"{checkpoint_dir}/ckpt", "append")[0]
 
 
 def streaming_purchase_attribution_outer(
@@ -131,7 +112,7 @@ def streaming_purchase_attribution_outer(
     purchases for exactly this reason. Same state sizing as the inner
     join: both sides' buffers are bounded by watermark + window."""
     stage = f"{checkpoint_dir}/input"
-    events = _event_stream(spark, sf_dir, stage)
+    events = events_readstream(spark, sf_dir, stage)
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -160,14 +141,4 @@ def streaming_purchase_attribution_outer(
         ),
         "leftOuter",
     ).select("purchase_id", "user_id", "purchase_ts", "click_id")
-    name = f"ev_attr_o_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", f"{checkpoint_dir}/ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return memory_drain(joined, f"{checkpoint_dir}/ckpt", "append")[0]

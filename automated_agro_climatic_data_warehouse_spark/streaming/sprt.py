@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.quality import add_counts
 from .state_chain import chain_drain
 
 # H0/H1 conversion rates and error budget — keep in lockstep with the
@@ -59,16 +60,7 @@ def _sprt_merge(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum(success_col.cast("bigint")).cast("bigint").alias("k"),
     )
-    if prev is None:
-        return b
-    return (
-        b.unionByName(prev)
-        .groupBy("arm")
-        .agg(
-            F.sum("n").cast("bigint").alias("n"),
-            F.sum("k").cast("bigint").alias("k"),
-        )
-    )
+    return add_counts(b, prev, "arm")
 
 
 def sprt_readout(state: DataFrame) -> DataFrame:

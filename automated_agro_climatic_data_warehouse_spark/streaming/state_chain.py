@@ -1,30 +1,39 @@
-"""Committed-state chain: the shared exactly-once protocol for
-foreachBatch sketch sinks (heavy_hitters, grid_quantiles).
+"""The streaming drain: one file source, the two drains that run an
+availableNow query to completion, and the exactly-once commit every
+foreachBatch sink writes through.
 
-A drain is identified by a TOKEN derived from its checkpoint path;
-each micro-batch commits its post-merge state to a
-`state-<token>-<batch_id>` subdir (_SUCCESS-marked, overwrite
-semantics), merging against the newest committed predecessor OF THE
-SAME TOKEN. Token scoping matters: state listing and the final read
-filter on the token, so a fresh drain (new checkpoint → new token)
-over a reused state_dir starts its own chain instead of silently
-merging or reading another drain's history. foreachBatch's
-at-least-once replays are absorbed structurally — a committed
-(token, batch_id) is skipped, a crashed half-write (no _SUCCESS) is
-recomputed from the predecessor and overwritten.
+- Source. `file_stream` reads a staged directory one file per trigger:
+  the batch-twin contract the stream≡batch tests pin.
+- Drains. `memory_drain` runs a query into a memory sink (stateful.py,
+  state_v2.py, windows.py, joins.py); `foreach_batch_drain` runs each
+  micro-batch through a Python function (the monitors, the upsert sink,
+  ingest dedup).
+- Commit. A batch commits to its own subdir, marked by Spark's
+  `_SUCCESS` file and written with overwrite semantics (`commit`);
+  readers list only marked subdirs (`committed`). foreachBatch is only
+  at-least-once, so a replayed batch whose subdir is marked is skipped,
+  and one that crashed half-written (no marker) is recomputed and
+  overwritten.
 
-ingest_dedup.py uses the same discipline with corpus-append semantics
-(`batch-` subdirs that accumulate rather than supersede); its commit
-protocol lives there.
+The monitors chain their commits: batch `batch_id` of a drain writes
+its post-merge state to `state-<token>-<batch_id>`, merging against
+the newest committed predecessor of the SAME token (`commit_state`).
+The token is derived from the checkpoint path, so a fresh drain over a
+reused state_dir starts its own chain instead of merging or reading
+another drain's history. Ingest dedup commits `batch-<token>-<id>`
+subdirs that accumulate into its corpus instead of superseding each
+other.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..session import local_frame
 
@@ -69,22 +78,65 @@ def foreach_batch_drain(
     ).trigger(availableNow=True).start().awaitTermination()
 
 
-def committed_states(state_dir: str, token: str) -> list[tuple[int, str]]:
-    """(batch_id, path) of every _SUCCESS-committed state of THIS
-    token's chain, ascending by batch id."""
-    if not os.path.isdir(state_dir):
+def file_stream(
+    spark: SparkSession, src_dir: str, schema: str | StructType
+) -> DataFrame:
+    """Stream over the parquet files in `src_dir`, one file per
+    micro-batch."""
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+    )
+
+
+def memory_drain(
+    out: DataFrame, checkpoint_dir: str, mode: str
+) -> tuple[DataFrame, int]:
+    """Run `out` availableNow into a memory sink in output `mode`
+    (append, complete or update) to completion; return (result frame,
+    number of non-empty micro-batches)."""
+    name = f"drain_{uuid.uuid4().hex[:8]}"
+    q = (
+        out.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(name)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    return out.sparkSession.sql(f"SELECT * FROM {name}"), batches
+
+
+def committed(root: str, prefix: str) -> list[tuple[str, str]]:
+    """(name after `prefix`, path) of every committed subdir of `root`
+    whose name starts with `prefix`, ascending by name."""
+    if not os.path.isdir(root):
         return []
-    prefix = f"state-{token}-"
-    out: list[tuple[int, str]] = []
-    for name in os.listdir(state_dir):
-        p = os.path.join(state_dir, name)
-        if (
-            os.path.isdir(p)
-            and name.startswith(prefix)
-            and os.path.isfile(os.path.join(p, "_SUCCESS"))
-        ):
-            out.append((int(name[len(prefix):]), p))
+    out = []
+    for name in os.listdir(root):
+        p = os.path.join(root, name)
+        if name.startswith(prefix) and os.path.isfile(os.path.join(p, "_SUCCESS")):
+            out.append((name[len(prefix):], p))
     return sorted(out)
+
+
+def commit(out_dir: str, build: Callable[[], DataFrame]) -> bool:
+    """Commit `build()` to `out_dir` exactly once: if `out_dir` is
+    already committed return False without calling `build`, else
+    overwrite-write it (Spark marks it `_SUCCESS` last) and return True."""
+    if os.path.isfile(os.path.join(out_dir, "_SUCCESS")):
+        return False
+    build().write.mode("overwrite").parquet(out_dir)
+    return True
+
+
+def committed_states(state_dir: str, token: str) -> list[tuple[int, str]]:
+    """(batch_id, path) of every committed state of THIS token's chain,
+    ascending by batch id."""
+    return sorted((int(b), p) for b, p in committed(state_dir, f"state-{token}-"))
 
 
 def commit_state(
@@ -98,15 +150,16 @@ def commit_state(
     already committed, else call `build(prev_state_df_or_None)` with
     the newest committed predecessor of this chain and overwrite-write
     the result to this batch's subdir."""
-    out_dir = os.path.join(state_dir, f"state-{token}-{batch_id:06d}")
-    if os.path.isfile(os.path.join(out_dir, "_SUCCESS")):
-        return
     prev = [
         (b, p) for b, p in committed_states(state_dir, token) if b < batch_id
     ]
-    prev_df = spark.read.parquet(prev[-1][1]) if prev else None
-    build(prev_df).write.mode("overwrite").parquet(out_dir)
-    _prune_superseded(prev)
+    out_dir = os.path.join(state_dir, f"state-{token}-{batch_id:06d}")
+
+    def step() -> DataFrame:
+        return build(spark.read.parquet(prev[-1][1]) if prev else None)
+
+    if commit(out_dir, step):
+        _prune_superseded(prev)
 
 
 def _prune_superseded(states: list[tuple[int, str]]) -> None:
@@ -141,12 +194,6 @@ def chain_drain(
     the next state. Returns the final committed state of THIS drain's
     chain (empty frame of `empty_schema` if nothing committed)."""
     token = drain_token(checkpoint_dir)
-    stream = (
-        spark.readStream.schema(schema)
-        # one file per micro-batch: the batch-twin contract the stream≡batch tests pin
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         commit_state(
@@ -157,6 +204,7 @@ def chain_drain(
             batch.sparkSession,
         )
 
+    stream = file_stream(spark, src_dir, schema)
     foreach_batch_drain(stream, checkpoint_dir, apply_batch)
     states = committed_states(state_dir, token)
     if not states:

@@ -32,8 +32,6 @@ runs as-is.
 
 from __future__ import annotations
 
-import uuid
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -41,6 +39,8 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
 )
+
+from .state_chain import file_stream, memory_drain
 
 SPEND_SCHEMA = T.StructType(
     [
@@ -100,12 +100,7 @@ def running_spend_stream(
     identical per-key state (n, total) and identical update-mode
     emissions, so callers and tests see the same contract either way.
     """
-    stream = (
-        spark.readStream.schema(SPEND_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage_dir)
-    )
+    stream = file_stream(spark, stage_dir, SPEND_SCHEMA)
     if tws_available():
         out = stream.groupBy("user_id").transformWithStateInPandas(
             statefulProcessor=RunningSpendProcessor(),
@@ -133,15 +128,4 @@ def running_spend_stream(
             "update",
             GroupStateTimeout.NoTimeout,
         )
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    return spark.sql(f"SELECT * FROM {name}"), batches
+    return memory_drain(out, checkpoint_dir, "update")

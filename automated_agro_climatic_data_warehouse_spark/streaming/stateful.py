@@ -29,13 +29,13 @@ not rows).
 
 from __future__ import annotations
 
-import uuid
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .state_chain import file_stream, memory_drain
 
 DEDUP_SCHEMA = T.StructType(
     [
@@ -52,37 +52,13 @@ SESSION_SCHEMA = T.StructType(
 )
 
 
-def _drain(
-    spark: SparkSession, out: DataFrame, checkpoint_dir: str
-) -> tuple[DataFrame, int]:
-    """Run an availableNow memory-sink query to completion; return
-    (result DataFrame, number of non-empty micro-batches)."""
-    name = f"st_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-    return spark.sql(f"SELECT * FROM {name}"), batches
-
-
 def stateful_dedup_stream(
     spark: SparkSession, stage_dir: str, checkpoint_dir: str
 ) -> tuple[DataFrame, int]:
     """Exactly-once key emission across micro-batches. Reads staged
     parquet (DEDUP_SCHEMA) one file per trigger so multi-file stages
     exercise cross-batch state; returns (keys DataFrame, n_batches)."""
-    stream = (
-        spark.readStream.schema(DEDUP_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage_dir)
-    )
+    stream = file_stream(spark, stage_dir, DEDUP_SCHEMA)
 
     def first_sight(key, pdfs, state: GroupState):
         seen_rows = any(len(pdf) for pdf in pdfs)
@@ -97,7 +73,7 @@ def stateful_dedup_stream(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return _drain(spark, out, checkpoint_dir)
+    return memory_drain(out, checkpoint_dir, "append")
 
 
 def stateful_sessionize_stream(
@@ -109,12 +85,7 @@ def stateful_sessionize_stream(
     GroupState (start_us, last_us, n_events) across batches and is never
     emitted. Returns (sessions DataFrame, n_batches)."""
     gap_us = 30 * 60 * 1_000_000
-    stream = (
-        spark.readStream.schema(SESSION_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage_dir)
-    )
+    stream = file_stream(spark, stage_dir, SESSION_SCHEMA)
 
     def sessionize(key, pdfs, state: GroupState):
         ts = [pdf["ts"].to_numpy(dtype=np.int64) for pdf in pdfs if len(pdf)]
@@ -163,7 +134,7 @@ def stateful_sessionize_stream(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    return _drain(spark, out, checkpoint_dir)
+    return memory_drain(out, checkpoint_dir, "append")
 
 
 def watermarked_hourly_counts(
@@ -175,12 +146,7 @@ def watermarked_hourly_counts(
     lets a 100 TB stream run forever without unbounded window state.
     Reads staged parquet (SESSION_SCHEMA) one file per trigger so a
     late-arriving second batch exercises the drop path."""
-    stream = (
-        spark.readStream.schema(SESSION_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage_dir)
-    )
+    stream = file_stream(spark, stage_dir, SESSION_SCHEMA)
     from pyspark.sql import functions as F
 
     agg = (
@@ -190,7 +156,7 @@ def watermarked_hourly_counts(
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(F.col("w.start").alias("window_start"), "n_events")
     )
-    return _drain(spark, agg, checkpoint_dir)
+    return memory_drain(agg, checkpoint_dir, "append")
 
 
 WM_DEDUP_SCHEMA = T.StructType(
@@ -214,12 +180,7 @@ def watermarked_dedup_stream(
     universe — right for bounded idempotency windows, unbounded
     otherwise. A key REPLAYED after eviction re-emits; that is the
     documented contract, and the test pins both sides of it."""
-    stream = (
-        spark.readStream.schema(WM_DEDUP_SCHEMA)
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage_dir)
-    )
+    stream = file_stream(spark, stage_dir, WM_DEDUP_SCHEMA)
     from pyspark.sql import functions as F
 
     out = (
@@ -229,4 +190,4 @@ def watermarked_dedup_stream(
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["key"])
     )
-    return _drain(spark, out, checkpoint_dir)
+    return memory_drain(out, checkpoint_dir, "append")

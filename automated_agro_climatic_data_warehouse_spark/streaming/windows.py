@@ -16,11 +16,13 @@ is there exactly-once per run (checkpointed), and the sink becomes
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .state_chain import memory_drain
+
 
 def _events_schema(ts_nanos: bool) -> T.StructType:
     """Streaming sources need an explicit schema; build it to match the
@@ -88,17 +90,7 @@ def streaming_tumbling_hourly(
             "total_value",
         )
     )
-    name = f"ev_hourly_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return memory_drain(agg, checkpoint_dir, "complete")[0]
 
 
 def streaming_session_window(
@@ -124,17 +116,7 @@ def streaming_session_window(
             "n_events",
         )
     )
-    name = f"ev_sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return memory_drain(agg, checkpoint_dir, "complete")[0]
 
 
 def streaming_sliding_3h(
@@ -169,14 +151,4 @@ def streaming_sliding_3h(
             "total_value",
         )
     )
-    name = f"ev_sliding_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql(f"SELECT * FROM {name}")
+    return memory_drain(agg, checkpoint_dir, "complete")[0]

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from automated_agro_climatic_data_warehouse_spark import session
 from automated_agro_climatic_data_warehouse_spark.operators import graph
 from automated_agro_climatic_data_warehouse_spark.operators.bpe import bpe_train_state
+from automated_agro_climatic_data_warehouse_spark.operators.dedup import minhash_lsh_dedup
 from automated_agro_climatic_data_warehouse_spark.operators.graph import (
     connected_components,
     hits_loop,
@@ -63,6 +64,12 @@ def _words(spark):
     return local_frame(spark, rows, "w string, freq bigint")
 
 
+def _docs(spark):
+    text = " ".join(f"word{i:02d}" for i in range(24))
+    rows = [(1, text), (2, text + " tail"), (3, "an unrelated short document")]
+    return local_frame(spark, rows, "doc_id bigint, text string")
+
+
 CASES = {
     "connected_components": lambda s: connected_components(_edges(s)),
     "label_propagation": lambda s: label_propagation(
@@ -76,6 +83,7 @@ CASES = {
     "hits_loop": lambda s: hits_loop(_edges(s, "u bigint, v bigint"), k=2),
     "train_centroids": lambda s: train_centroids(_corpus(s), k=2, rounds=2),
     "bpe_train_state": lambda s: bpe_train_state(_words(s), 3),
+    "minhash_lsh_dedup": lambda s: minhash_lsh_dedup(_docs(s)),
 }
 
 

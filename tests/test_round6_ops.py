@@ -236,9 +236,15 @@ def test_committed_empty_batch_skips_replay(spark, tmp_path):
     still skip it (commit marker, not row count, is the idempotence
     key) and the index reader must not choke on the empty dir."""
     from automated_agro_climatic_data_warehouse_spark.streaming.ingest_dedup import (
-        _committed_parquet_paths,
         dedup_gate_batch,
     )
+    from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import (
+        committed,
+    )
+
+    def corpus():
+        paths = [p for _, p in committed(acc, "batch-")]
+        return spark.read.schema(DOC_SCHEMA).parquet(*paths)
 
     acc = str(tmp_path / "acc")
     text = " ".join(f"word{i:02d}" for i in range(24))
@@ -255,23 +261,16 @@ def test_committed_empty_batch_skips_replay(spark, tmp_path):
         commit_id="tok-000001",
     )
     assert os.path.isfile(f"{acc}/batch-tok-000001/_SUCCESS")
-    paths = _committed_parquet_paths(acc)
-    # the empty commit contributes no rows (0-row part files are fine;
-    # a part-less _SUCCESS dir would be skipped by the path helper)
-    corpus = spark.read.parquet(*paths)
-    assert {r.doc_id for r in corpus.collect()} == {1}
+    # the empty commit contributes no rows, with or without a part
+    # file: the corpus read gives the schema instead of inferring it
+    assert {r.doc_id for r in corpus().collect()} == {1}
     # replaying the empty commit stays a no-op
     dedup_gate_batch(
         spark.createDataFrame([(2, text + " tail")], DOC_SCHEMA),
         acc,
         commit_id="tok-000001",
     )
-    assert {
-        r.doc_id
-        for r in spark.read.parquet(
-            *_committed_parquet_paths(acc)
-        ).collect()
-    } == {1}
+    assert {r.doc_id for r in corpus().collect()} == {1}
 
 
 # ------------------------------------------------- round-6 new queries

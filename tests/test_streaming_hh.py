@@ -111,15 +111,28 @@ def test_redrain_same_checkpoint_is_noop(spark, tmp_path):
     assert first == again
 
 
+def _commit_mg(spark, batch, state_dir, batch_id, token):
+    """One chain step through the real MG merge."""
+    from automated_agro_climatic_data_warehouse_spark.streaming.heavy_hitters import _mg_merge
+    from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import commit_state
+
+    commit_state(
+        state_dir,
+        token,
+        batch_id,
+        lambda prev: _mg_merge(batch, prev, "user_id", K),
+        spark,
+    )
+
+
 def test_replay_of_committed_batch_is_idempotent(spark, tmp_path):
     """Simulate foreachBatch's at-least-once: calling the merge again
     with an already-committed batch_id must change nothing."""
-    from automated_agro_climatic_data_warehouse_spark.streaming.heavy_hitters import mg_merge_batch
     from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import committed_states
 
     state_dir = str(tmp_path / "state_m")
     batch = spark.createDataFrame([(0, 1), (1, 1), (2, 2)], SCHEMA)
-    mg_merge_batch(batch, state_dir, "user_id", K, 0, "tok")
+    _commit_mg(spark, batch, state_dir, 0, "tok")
     before = {
         r.key: r.c
         for r in spark.read.parquet(
@@ -128,7 +141,7 @@ def test_replay_of_committed_batch_is_idempotent(spark, tmp_path):
     }
     # replay the same (token, batch_id) with DIFFERENT data: must skip
     other = spark.createDataFrame([(9, 99)], SCHEMA)
-    mg_merge_batch(other, state_dir, "user_id", K, 0, "tok")
+    _commit_mg(spark, other, state_dir, 0, "tok")
     after = {
         r.key: r.c
         for r in spark.read.parquet(
@@ -142,18 +155,17 @@ def test_state_chains_are_token_scoped(spark, tmp_path):
     """Two drains sharing one state_dir (fresh checkpoint → fresh token)
     must keep independent chains: the second neither merges the first
     chain's history nor reads its states."""
-    from automated_agro_climatic_data_warehouse_spark.streaming.heavy_hitters import mg_merge_batch
     from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import committed_states
 
     state_dir = str(tmp_path / "state_t")
     # chain A: two batches of user 1
     a0 = spark.createDataFrame([(0, 1), (1, 1)], SCHEMA)
-    mg_merge_batch(a0, state_dir, "user_id", K, 0, "tokA")
-    mg_merge_batch(a0, state_dir, "user_id", K, 1, "tokA")
+    _commit_mg(spark, a0, state_dir, 0, "tokA")
+    _commit_mg(spark, a0, state_dir, 1, "tokA")
     # chain B: batch 1 (no batch 0 of its own beyond this) of user 2 —
     # must NOT see chain A's counts
     b1 = spark.createDataFrame([(5, 2)], SCHEMA)
-    mg_merge_batch(b1, state_dir, "user_id", K, 1, "tokB")
+    _commit_mg(spark, b1, state_dir, 1, "tokB")
     sa = {
         r.key: r.c
         for r in spark.read.parquet(

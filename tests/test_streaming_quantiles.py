@@ -10,8 +10,8 @@ import math
 import pytest
 
 from automated_agro_climatic_data_warehouse_spark.streaming.grid_quantiles import (
+    _grid_merge,
     grid_histogram,
-    grid_merge_batch,
     grid_quantiles_drain,
     quantile_bounds,
 )
@@ -85,11 +85,16 @@ def test_quantile_bounds_bracket_truth(spark, tmp_path):
 
 
 def test_grid_merge_replay_idempotent(spark, tmp_path):
-    from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import committed_states
+    from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import (
+        commit_state,
+        committed_states,
+    )
 
     state_dir = str(tmp_path / "qstate_m")
     b0 = spark.createDataFrame([(0, 1.0), (1, 1.2), (2, 9.9)], SCHEMA)
-    grid_merge_batch(b0, state_dir, "value", WIDTH, 0, "tok")
+    commit_state(
+        state_dir, "tok", 0, lambda prev: _grid_merge(b0, prev, "value", WIDTH), spark
+    )
     before = {
         r.bin: r.c
         for r in spark.read.parquet(
@@ -97,9 +102,9 @@ def test_grid_merge_replay_idempotent(spark, tmp_path):
         ).collect()
     }
     # replay of the committed id with different data must be a no-op
-    grid_merge_batch(
-        spark.createDataFrame([(9, 4.0)], SCHEMA),
-        state_dir, "value", WIDTH, 0, "tok",
+    b1 = spark.createDataFrame([(9, 4.0)], SCHEMA)
+    commit_state(
+        state_dir, "tok", 0, lambda prev: _grid_merge(b1, prev, "value", WIDTH), spark
     )
     after = {
         r.bin: r.c
