@@ -40,6 +40,38 @@ adjacency and labels, whose sides are of similar size (graph_*, the
 dedup gate); and Spark's split aggregate methods list their parameters
 in an order that varies between runs (ts_winnowing_fingerprint). Each
 such variant compiles once and then stays cached.
+
+Rule: writing a local file starts no child process. Without the native
+Hadoop library (pyspark ships none, so `NativeIO.isAvailable()` is
+false), Hadoop's local file system runs `chmod` for every file and directory it
+creates with a permission and `readlink` for every link-status lookup,
+which FileContext does on each rename of a streaming checkpoint file.
+Two warm perfbench ingest_sf0.01 passes (8 ops, 4 cores) started 938
+children, 762 `chmod` and 176 `readlink`: 598 from the two star-schema
+writes (299 per `write_warehouse`, most of them for `fact_weather`'s ~80
+part files, their `.crc` files and the `_temporary` directories), 306
+from the upsert and dedup drains' checkpoints (`offsets`, `commits`,
+`sources`, `metadata`) and commit subdirs, and 34 from the MV refresh
+and its audit flush. One `chmod` through Hadoop's `Shell` costs ~2-2.5
+ms of wall time, and reaping the children cost the JVM 213-347 ms of
+CPU per ingest op. `jvm/NioLocalFileSystem.java` (built into
+`jvm/nio-local-fs.jar` by tools/build_jvm.py) is Hadoop's
+`LocalFileSystem` over a raw layer that sets the same mode bits with
+`java.nio` and calls `readlink` only for a path that is a symlink; its
+`Fs` is Hadoop's `LocalFs` over the same layer. Both keep the `.crc`
+checksums, and `Fs` keeps Spark's FileContext checkpoint manager with
+its create-if-absent rename. `get_spark` binds `fs.file.impl` and
+`fs.AbstractFileSystem.file.impl` to them and puts the jar on the
+driver classpath. Rejected:
+  - Spark's FileSystem-based checkpoint manager
+    (`spark.sql.streaming.checkpointFileManagerClass`): it checks the
+    destination first and renames second, which is weaker than
+    FileContext's atomic create-if-absent rename.
+  - plain `RawLocalFileSystem` for `file:`: it drops the checksums and
+    still forks `chmod`; it showed no gain in 3 pairs.
+The binding covers only `file:` (HDFS, S3 and every other scheme keep
+their own implementations). Files and directories keep their modes
+(0644 and 0755 under umask 022) and no plan or output byte changes.
 """
 
 from __future__ import annotations
@@ -49,12 +81,18 @@ import os
 import time
 import warnings
 from collections.abc import Callable, Sequence
+from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 log = logging.getLogger(__name__)
+
+# file: binding that creates local files with no child process (module
+# docstring); built by tools/build_jvm.py from jvm/NioLocalFileSystem.java
+_LOCAL_FS_JAR = Path(__file__).parent / "jvm" / "nio-local-fs.jar"
+_LOCAL_FS = "agrospark.NioLocalFileSystem"
 
 
 def get_spark(app_name: str = "agro_dwh_spark") -> SparkSession:
@@ -97,6 +135,11 @@ def get_spark(app_name: str = "agro_dwh_spark") -> SparkSession:
         # is one class wherever it is planned (module docstring).
         .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # Static confs: file: through the FileSystem and the FileContext
+        # API sets permissions in process (module docstring).
+        .config("spark.driver.extraClassPath", str(_LOCAL_FS_JAR))
+        .config("spark.hadoop.fs.file.impl", _LOCAL_FS)
+        .config("spark.hadoop.fs.AbstractFileSystem.file.impl", f"{_LOCAL_FS}$Fs")
         # bucketed managed tables (warehouse.write_bucketed) land here;
         # session-scoped in-memory catalog, parquet files on disk
         .config(

@@ -12,7 +12,7 @@
    does not depend on how files fall into micro-batches.
 4. The streaming-drain idioms have one implementation each: the file
    source, the memory drain and the commit marker appear in the
-   package only in streaming/state_chain.py.
+   package and its tests only in streaming/state_chain.py.
 """
 
 from __future__ import annotations
@@ -152,13 +152,16 @@ def _drain_idioms(tree: ast.AST):
 
 
 def test_drain_idioms_live_only_in_state_chain():
-    sites, inside = [], set()
-    for path in sorted(PKG.rglob("*.py")):
+    """Scans the package and the tests; this file names the idioms to
+    find them, so it is left out."""
+    root, sites, inside = PKG.parent, [], set()
+    files = [*PKG.rglob("*.py"), *(root / "tests").rglob("*.py")]
+    for path in sorted(set(files) - {pathlib.Path(__file__).resolve()}):
         found = list(_drain_idioms(ast.parse(path.read_text())))
-        if path.relative_to(PKG) == pathlib.Path("streaming/state_chain.py"):
+        if path == PKG / "streaming" / "state_chain.py":
             inside = {idiom for idiom, _ in found}
         else:
-            sites += [f"{path.relative_to(PKG)}:{n} {i}" for i, n in found]
+            sites += [f"{path.relative_to(root)}:{n} {i}" for i, n in found]
     assert sites == []
     assert inside == {"maxFilesPerTrigger", "_SUCCESS", "memory"}
 

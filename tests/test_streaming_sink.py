@@ -15,6 +15,10 @@ import pandas as pd
 from automated_agro_climatic_data_warehouse_spark.streaming.sinks import (
     upsert_sink_drain,
 )
+from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import (
+    file_stream,
+    foreach_batch_drain,
+)
 
 
 def _stage(tmp_path, frames):
@@ -40,12 +44,7 @@ def test_upsert_sink_equals_batch_and_is_exactly_once(spark, tmp_path):
     target = str(tmp_path / "target")
     ckpt = str(tmp_path / "ckpt")
 
-    stream = (
-        spark.readStream.schema("k long, v double, seq long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage)
-    )
+    stream = file_stream(spark, stage, "k long, v double, seq long")
     persisted = spark.sparkContext._jsc.getPersistentRDDs
     before = set(persisted().keySet())
     out = upsert_sink_drain(
@@ -57,12 +56,7 @@ def test_upsert_sink_equals_batch_and_is_exactly_once(spark, tmp_path):
     assert got == {1: (10.0, 1), 2: (21.0, 2), 3: (32.0, 3), 4: (40.0, 2)}
 
     # re-drain with the SAME checkpoint: no new input → target unchanged
-    stream2 = (
-        spark.readStream.schema("k long, v double, seq long")
-        .format("parquet")
-        .option("maxFilesPerTrigger", 1)
-        .load(stage)
-    )
+    stream2 = file_stream(spark, stage, "k long, v double, seq long")
     again = upsert_sink_drain(
         spark, stream2, target, ckpt, keys=["k"], order_by=["seq"]
     )
@@ -74,10 +68,6 @@ def test_drain_batch_jobs_belong_to_the_callers_job_group(spark, tmp_path):
     """Each drain's batch jobs run under the job group its caller had,
     not under the stream's own run-id group: two drains under two
     groups each own their own batch jobs and none of the other's."""
-    from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import (
-        foreach_batch_drain,
-    )
-
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     stage = _stage(
@@ -94,11 +84,7 @@ def test_drain_batch_jobs_belong_to_the_callers_job_group(spark, tmp_path):
             batch.count()
             seen.update(set(tracker.getJobIdsForGroup(group)) - before)
 
-        stream = (
-            spark.readStream.schema("k long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
+        stream = file_stream(spark, stage, "k long")
         sc.setJobGroup(group, f"drain under {group}")
         try:
             foreach_batch_drain(stream, str(tmp_path / group), apply_batch)
