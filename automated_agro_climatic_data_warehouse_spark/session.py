@@ -62,7 +62,10 @@ CPU per ingest op. `jvm/NioLocalFileSystem.java` (built into
 checksums, and `Fs` keeps Spark's FileContext checkpoint manager with
 its create-if-absent rename. `get_spark` binds `fs.file.impl` and
 `fs.AbstractFileSystem.file.impl` to them and puts the jar on the
-driver classpath. Rejected:
+driver classpath; when the JVM is up before `get_spark` (a session built
+without it and stopped, or spark-submit), the JVM was launched without
+the jar, so `get_spark` adds it to the JVM's context class loader,
+through which the new context's Hadoop conf loads the binding. Rejected:
   - Spark's FileSystem-based checkpoint manager
     (`spark.sql.streaming.checkpointFileManagerClass`): it checks the
     destination first and renames second, which is weaker than
@@ -83,6 +86,7 @@ import warnings
 from collections.abc import Callable, Sequence
 from pathlib import Path
 
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -147,6 +151,14 @@ def get_spark(app_name: str = "agro_dwh_spark") -> SparkSession:
             os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"),
         )
     )
+    if SparkContext._jvm is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        # The JVM is up already (a session built without get_spark and
+        # stopped, or spark-submit) and was launched without the jar: put
+        # it on the loader the new context's Hadoop conf resolves classes by.
+        SparkContext._ensure_initialized()
+        jvm = SparkContext._jvm
+        loader = jvm.Thread.currentThread().getContextClassLoader()
+        loader.addURL(jvm.java.io.File(str(_LOCAL_FS_JAR)).toURI().toURL())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -5,7 +5,9 @@
    write, one upsert-drain micro-batch (a FileContext checkpoint) and an
    audit flush run none of them, and the files keep the modes and the
    `.crc` checksums Hadoop's own local file system gives them under
-   umask 022.
+   umask 022. The same holds when the JVM was up before `get_spark`:
+   launched by a session built without it and since stopped, or by
+   spark-submit.
 2. The committed jar was built from the committed Java source: its
    manifest carries the source's SHA-256 (tools/build_jvm.py).
 """
@@ -21,8 +23,12 @@ import subprocess
 import sys
 import zipfile
 
+import pyspark
+import pytest
+
 ROOT = pathlib.Path(__file__).resolve().parents[1]
 JVM = ROOT / "automated_agro_climatic_data_warehouse_spark" / "jvm"
+SPARK_SUBMIT = str(pathlib.Path(pyspark.__file__).parent / "bin" / "spark-submit")
 
 CHILD = """
 import os
@@ -30,6 +36,7 @@ import sys
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import SparkSession
 
 from automated_agro_climatic_data_warehouse_spark.pipeline import PipelineRunner
 from automated_agro_climatic_data_warehouse_spark.session import get_spark, local_frame
@@ -37,6 +44,8 @@ from automated_agro_climatic_data_warehouse_spark.streaming.sinks import upsert_
 from automated_agro_climatic_data_warehouse_spark.streaming.state_chain import file_stream
 
 out = sys.argv[1]
+if sys.argv[2] == "stopped":
+    SparkSession.builder.master("local[1]").getOrCreate().stop()
 spark = get_spark("fork_guard")
 df = local_frame(spark, [(1, "a", 1.0), (2, "b", 2.0)], "k long, part string, v double")
 df.write.partitionBy("part").parquet(f"{out}/parted")
@@ -65,13 +74,25 @@ def _wrappers(bin_dir: pathlib.Path, log: pathlib.Path) -> None:
         wrapper.chmod(0o755)
 
 
-def test_local_writes_fork_no_process(tmp_path):
+@pytest.mark.parametrize(
+    "launcher, jvm_before",
+    [([sys.executable], "fresh"), ([sys.executable], "stopped"),
+     ([SPARK_SUBMIT, "--master", "local[1]"], "spark-submit")],
+    ids=["fresh", "stopped", "spark-submit"],
+)
+def test_local_writes_fork_no_process(tmp_path, launcher, jvm_before):
     log, out = tmp_path / "spawned.log", tmp_path / "out"
     _wrappers(tmp_path / "bin", log)
     out.mkdir()
-    env = {**os.environ, "PATH": f"{tmp_path / 'bin'}:{os.environ['PATH']}"}
+    child = tmp_path / "child.py"
+    child.write_text(CHILD)
+    env = {
+        **os.environ,
+        "PATH": f"{tmp_path / 'bin'}:{os.environ['PATH']}",
+        "PYTHONPATH": os.pathsep.join([str(ROOT), os.environ.get("PYTHONPATH", "")]),
+    }
     subprocess.run(
-        [sys.executable, "-c", CHILD, str(out)],
+        [*launcher, str(child), str(out), jvm_before],
         cwd=ROOT, env=env, umask=0o022, check=True, timeout=600,
     )
     assert (out / "audit").is_dir() and (out / "target").is_dir()
