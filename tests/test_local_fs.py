@@ -74,13 +74,8 @@ def _wrappers(bin_dir: pathlib.Path, log: pathlib.Path) -> None:
         wrapper.chmod(0o755)
 
 
-@pytest.mark.parametrize(
-    "launcher, jvm_before",
-    [([sys.executable], "fresh"), ([sys.executable], "stopped"),
-     ([SPARK_SUBMIT, "--master", "local[1]"], "spark-submit")],
-    ids=["fresh", "stopped", "spark-submit"],
-)
-def test_local_writes_fork_no_process(tmp_path, launcher, jvm_before):
+@pytest.mark.parametrize("jvm_before", ["fresh", "stopped", "spark-submit"])
+def test_local_writes_fork_no_process(tmp_path, jvm_before):
     log, out = tmp_path / "spawned.log", tmp_path / "out"
     _wrappers(tmp_path / "bin", log)
     out.mkdir()
@@ -91,6 +86,9 @@ def test_local_writes_fork_no_process(tmp_path, launcher, jvm_before):
         "PATH": f"{tmp_path / 'bin'}:{os.environ['PATH']}",
         "PYTHONPATH": os.pathsep.join([str(ROOT), os.environ.get("PYTHONPATH", "")]),
     }
+    launcher = [sys.executable]
+    if jvm_before == "spark-submit":
+        launcher = [SPARK_SUBMIT, "--master", "local[1]"]
     subprocess.run(
         [*launcher, str(child), str(out), jvm_before],
         cwd=ROOT, env=env, umask=0o022, check=True, timeout=600,

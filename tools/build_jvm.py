@@ -9,8 +9,8 @@ jvm/nio-local-fs.jar. The jar's manifest records the source's SHA-256,
 which tests/test_local_fs.py checks against the committed source, and the
 Hadoop jar it was compiled against. Entries are written in name order
 with a fixed timestamp, so the same source and JDK rebuild the same
-bytes. Needs a JDK; running the
-engine does not, since the jar is committed.
+bytes. Needs a JDK; running the engine does not, since the jar is
+committed.
 """
 
 from __future__ import annotations
